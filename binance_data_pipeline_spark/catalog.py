@@ -6,6 +6,12 @@ BigQuery warehouse tables. Tables here are partitioned Parquet directories;
 registering them as temp views gives the SQL surface, and Spark's partition
 pruning replaces BigQuery's parameterized-predicate scan reduction
 (``producer/build_fact_fee_tax.py:23-37``).
+
+Table schemas are pinned the way a metastore pins them: the first read of
+a table infers its schema (one Spark job over a parquet footer), later
+reads hand that schema to the reader and run no job at all. The pin lives
+in ``operators/metacache`` keyed on the table's recursive leaf-file listing
+and the parquet-inference conf, so any rewrite or append re-infers.
 """
 
 from __future__ import annotations
@@ -14,6 +20,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .operators.metacache import cached_meta
 
 #: Canonical driver test tables (TESTDATA.md).
 TESTDATA_TABLES = (
@@ -33,6 +41,18 @@ TESTDATA_TABLES = (
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver parquet table. Column pruning and filter pushdown
     reach the scan because nothing materializes in between.
+
+    The schema is pinned: it is inferred once (the Spark job
+    ``spark.read.parquet`` runs to read a footer) and memoized in
+    ``operators/metacache`` under the table path's recursive leaf-file
+    listing — (path, length, mtime) of every file, nested ``date=/hour=``
+    partitions included — and the ``nanosAsLong`` conf, which changes
+    the inferred ``ts`` type. It is re-inferred whenever a file under the
+    path is added, replaced or removed, or the conf flips; otherwise the
+    read is ``spark.read.schema(pinned).parquet(path)``, which costs one
+    FileSystem listing and runs no Spark job. A missing table is never
+    memoized and raises Spark's own ``AnalysisException``
+    (``PATH_NOT_FOUND``).
 
     The ``events`` table's ``ts`` column has shifted physical encodings
     across driver testdata generations, so normalize by the *actual* dtype
@@ -59,7 +79,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # and to_date/date_trunc agree with the TZ-naive oracle even if
         # the caller's session uses a different zone
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
+    schema = cached_meta(
+        spark, path, lambda: spark.read.parquet(path).schema, ns="schema:" + nanos
+    )
+    df = spark.read.schema(schema).parquet(path)
     if name == "events":
         ts_dtype = dict(df.dtypes).get("ts")
         if ts_dtype == "bigint":

@@ -34,7 +34,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .ivf import _hadoop_fs, _read_index_fingerprint, corpus_fingerprint
+from .ivf import _read_index_fingerprint, corpus_fingerprint
+from .metacache import _hadoop_fs, cached_meta, local_relation
 from .vocab import _token_array
 
 from ..session import local_rows
@@ -197,8 +198,6 @@ def _cached_term_idf(spark: SparkSession, index_path: str) -> dict | None:
             for r in spark.read.parquet(terms_path).select("term", "idf").collect()
         }
 
-    from .metacache import cached_meta
-
     return cached_meta(spark, terms_path, load, ns="idf")
 
 
@@ -240,8 +239,6 @@ def bm25_query(
     the stats dir listing (operators/metacache) — repeat queries skip
     the per-call driver jobs a serving tier would never re-pay; appends
     rewrite stats.parquet, so the memo invalidates itself."""
-    from .metacache import cached_meta
-
     stats_path = os.path.join(index_path, "stats.parquet")
     n_docs, avgdl = cached_meta(
         spark,
@@ -262,8 +259,6 @@ def bm25_query(
     # distinct() exchange the distributed fallback pays). Over-large
     # probes (a mis-used API, not a serving call) keep the distributed
     # plan.
-    from .metacache import local_relation
-
     n_buckets = _index_buckets(spark, index_path)
     probe_cap = 100_000
     # probe rows as (query_id, term[, qw], tb) tuples when the batch

@@ -120,7 +120,7 @@ def _resolve_layout(
                 "a state dir — compact into a new dir to change it."
             )
         return recorded
-    from .ivf import _hadoop_fs
+    from .metacache import _hadoop_fs
 
     fs, p = _hadoop_fs(spark, fp_path)
     if state_partitions is not None:

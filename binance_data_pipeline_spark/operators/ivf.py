@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
 
+from .metacache import _hadoop_fs, cached_meta
 from .similarity import _spread, cosine, pair_cosine_udf
 
 from ..session import local_rows
@@ -43,15 +44,6 @@ from ..session import local_rows
 # --------------------------------------------------------------------------
 # Index identity: fingerprint + filesystem helpers
 # --------------------------------------------------------------------------
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path) via the JVM Hadoop FS API — works for any scheme
-    the cluster can reach (file://, hdfs://, s3a://...), unlike
-    os.path.exists which silently answers for the DRIVER's local disk."""
-    jvm = spark.sparkContext._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), jpath
-
 
 def corpus_fingerprint(corpus: DataFrame, params: str, max_status_calls: int = 100) -> str:
     """Identity of (corpus contents, build params): every input file NAME
@@ -86,9 +78,8 @@ def _read_index_fingerprint(spark: SparkSession, index_path: str) -> str | None:
     key self-invalidates; an absent dir is never cached.
 
     Only a MISSING path reads as "index absent" (ADVICE r12): any other
-    listing/loader failure (corrupt meta, transient FS/RPC error)
-    propagates instead of silently triggering a rebuild over a live
-    index."""
+    listing failure (transient FS/RPC error) propagates instead of
+    silently triggering a rebuild over a live index."""
     meta_path = os.path.join(index_path, "meta.parquet")
 
     def load() -> str | None:
@@ -98,26 +89,7 @@ def _read_index_fingerprint(spark: SparkSession, index_path: str) -> str | None:
             return None
         return rows[0]["fingerprint"] if rows else None
 
-    from .metacache import cached_meta
-
-    try:
-        return cached_meta(spark, meta_path, load, ns="fingerprint")
-    except Exception as e:  # the listing's FileNotFound path only
-        if _is_missing_path_error(e):
-            return None
-        raise
-
-
-def _is_missing_path_error(e: Exception) -> bool:
-    """True iff ``e`` is the JVM FileNotFoundException surfacing through
-    py4j (the listStatus of an absent directory)."""
-    je = getattr(e, "java_exception", None)
-    while je is not None:
-        name = je.getClass().getName()
-        if name.endswith("FileNotFoundException"):
-            return True
-        je = je.getCause()
-    return "FileNotFoundException" in str(e)
+    return cached_meta(spark, meta_path, load, ns="fingerprint")
 
 
 def _centroid_array_col(centroids: list[tuple[int, list[float]]]) -> Column:
@@ -303,8 +275,6 @@ def ivf_query(
     The centroid table is memoized per process keyed on its dir listing
     (operators/metacache): a serving tier loads centroids once, not per
     query call; rebuilds swap the dir, so the memo self-invalidates."""
-    from .metacache import cached_meta
-
     cent_path = os.path.join(index_path, "centroids.parquet")
     centroids = cached_meta(
         spark,

@@ -39,7 +39,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .ivf import _hadoop_fs, _read_index_fingerprint, corpus_fingerprint
+from .ivf import _read_index_fingerprint, corpus_fingerprint
+from .metacache import _hadoop_fs, cached_meta
 from ..session import local_rows
 from .similarity import (
     _hyperplanes,
@@ -97,8 +98,6 @@ def _index_meta(spark: SparkSession, index_path: str) -> dict:
     call. With it, a query call never triggers partition DISCOVERY over
     the whole store (192+ dirs listed per call was the dominant serve
     cost): probed buckets are opened by direct path."""
-    from .metacache import cached_meta
-
     meta_path = os.path.join(index_path, "meta.parquet")
     buckets_path = os.path.join(index_path, "buckets.parquet")
 

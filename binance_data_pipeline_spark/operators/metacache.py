@@ -1,4 +1,5 @@
-"""In-process memo for small serve-path index metadata.
+"""In-process memo for small driver-side metadata: serve-path index
+metadata and the catalog's pinned table schemas.
 
 Every query against a persisted index pays a handful of driver-side
 reads before any real work starts — the retrieval manifest, BM25 corpus
@@ -7,15 +8,22 @@ Spark job (~100 ms of scheduling for KBs of data), and a serving tier
 issues them PER QUERY CALL. A deployed search layer loads index
 metadata once and reuses it; this module is that layer's cache, scoped
 to the driver process (the northstar recall-evidence memo precedent).
+``catalog.load_table`` keeps each table's inferred schema here for the
+same reason: inference is one Spark job per read.
 
-Invalidation is by the metadata DIRECTORY LISTING — (name, length,
-mtime) of every file under the path, one FileSystem RPC. Keying on the
-listing rather than the directory's own mtime matters on object stores:
-S3A directories are synthetic (mtime 0 forever), but the files inside
-carry real lengths/mtimes, so an atomic-swap rebuild or an append
+Invalidation is by the RECURSIVE LEAF-FILE LISTING — (path, length,
+mtime) of every file under the path, nested partition directories
+included. Keying on the files rather than any directory's own mtime
+matters twice: S3A directories are synthetic (mtime 0 forever), and a
+file appended under an existing ``date=/hour=`` partition changes no
+top-level entry. So an atomic-swap rebuild or an append at any depth
 always changes the key. A stale hit is therefore impossible as long as
 writers follow the repo's swap/append discipline (new or replaced
 files, never in-place mutation — which parquet cannot do anyway).
+
+A path that does not exist has no key: its loader runs uncached, so
+whatever error the loader raises for a missing path (Spark's
+``PATH_NOT_FOUND``, say) reaches the caller unchanged.
 """
 
 from __future__ import annotations
@@ -23,23 +31,62 @@ from __future__ import annotations
 from collections.abc import Callable
 from typing import Any
 
+from py4j.java_gateway import JavaClass
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
-
-from .ivf import _hadoop_fs
 
 __all__ = ["cached_meta", "invalidate_meta", "local_relation"]
 
 _CACHE: dict[str, tuple[tuple, Any]] = {}
 
 
-def _listing_key(spark: SparkSession, path: str) -> tuple:
-    fs, p = _hadoop_fs(spark, path)
-    return tuple(
-        sorted(
-            (st.getPath().getName(), st.getLen(), st.getModificationTime())
-            for st in fs.listStatus(p)
-        )
-    )
+def _hadoop_fs(spark: SparkSession, path: str):
+    """(FileSystem, Path) via the JVM Hadoop FS API — works for any scheme
+    the cluster can reach (file://, hdfs://, s3a://...), unlike
+    os.path.exists which silently answers for the DRIVER's local disk."""
+    sc = spark.sparkContext
+    # JavaClass by full name: one Py4J call, where ``_jvm.org.apache...``
+    # resolves one package level per call
+    jpath = JavaClass("org.apache.hadoop.fs.Path", sc._gateway._gateway_client)(path)
+    return jpath.getFileSystem(sc._jsc.hadoopConfiguration()), jpath
+
+
+def _is_missing_path_error(e: Py4JJavaError) -> bool:
+    """True iff ``e`` is (or wraps) the JVM FileNotFoundException of the
+    listing of an absent path."""
+    je = e.java_exception
+    while je is not None:
+        if je.getClass().getName().endswith("FileNotFoundException"):
+            return True
+        je = je.getCause()
+    return False
+
+
+def _listing_key(spark: SparkSession, path: str) -> tuple | None:
+    """Sorted (path, length, mtime) of every leaf file under ``path``
+    (``path`` itself when it is a file), or None when it does not exist.
+
+    A ``listStatus`` walk, one call per directory — the listing Spark's
+    own file index makes. ``fs.listFiles(p, True)`` returns the same
+    files, but its ``LocatedFileStatus`` loads permissions per file:
+    on the local filesystem of a 4-vCPU VM that measured ~7 ms a file
+    against ~0.8 ms here (81-file partitioned table: 560 ms vs 65 ms)."""
+    fs, root = _hadoop_fs(spark, path)
+    files, todo = [], [root]
+    try:
+        while todo:
+            for st in fs.listStatus(todo.pop()):
+                if st.isDirectory():
+                    todo.append(st.getPath())
+                else:
+                    files.append(
+                        (st.getPath().toString(), st.getLen(), st.getModificationTime())
+                    )
+    except Py4JJavaError as e:
+        if _is_missing_path_error(e):
+            return None
+        raise
+    return tuple(sorted(files))
 
 
 def cached_meta(
@@ -49,8 +96,11 @@ def cached_meta(
     The loader must return plain driver-side data (rows, dicts, ints) —
     never a DataFrame, whose lineage would outlive the cache entry.
     ``ns`` separates different loaders over the same path (e.g. an
-    index's full meta dict vs just its fingerprint)."""
+    index's full meta dict vs just its fingerprint). A missing ``path``
+    is never cached: ``loader()`` runs on every call until it exists."""
     key = _listing_key(spark, path)
+    if key is None:
+        return loader()
     slot = ns + "\x00" + path
     hit = _CACHE.get(slot)
     if hit is not None and hit[0] == key:

@@ -53,11 +53,11 @@ from pyspark.sql.functions import pandas_udf
 from .ivf import (
     _assign,
     _estimate_rows,
-    _hadoop_fs,
     _read_index_fingerprint,
     corpus_fingerprint,
     train_centroids,
 )
+from .metacache import _hadoop_fs
 from .similarity import _spread, cosine
 
 from ..session import local_rows

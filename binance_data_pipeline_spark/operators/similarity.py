@@ -280,7 +280,7 @@ def _corpus_bytes(df: DataFrame) -> int:
     except Exception:
         return 0
     total = 0
-    from .ivf import _hadoop_fs
+    from .metacache import _hadoop_fs
 
     for f in files[:100]:
         try:

@@ -60,7 +60,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import local_rows
-from .ivf import _hadoop_fs
+from .metacache import _hadoop_fs
 
 __all__ = [
     "commit_snapshot",

@@ -40,7 +40,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.errors import AnalysisException
 
-from .ivf import _hadoop_fs
+from .metacache import _hadoop_fs
 
 from ..session import local_rows
 

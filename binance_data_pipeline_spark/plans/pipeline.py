@@ -37,8 +37,15 @@ _RULES_VALUES_SQL = ", ".join(
 
 
 def _rules_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        FEE_TAX_RULES_ROWS, "event_type string, region string, fee_rate_bps double, tax_rate_bps double"
+    """The rules dimension as an inline VALUES relation — the same rows the
+    oracle SQL uses, scanned by the JVM with no Python workers (unlike
+    ``createDataFrame(list)``, see ``metacache.local_relation``). Bare
+    ``7.5`` literals are DECIMAL, hence the DOUBLE casts."""
+    return spark.sql(
+        "SELECT event_type, region, CAST(fee_rate_bps AS DOUBLE) AS fee_rate_bps,"
+        " CAST(tax_rate_bps AS DOUBLE) AS tax_rate_bps"
+        f" FROM VALUES {_RULES_VALUES_SQL}"
+        " AS rules(event_type, region, fee_rate_bps, tax_rate_bps)"
     )
 
 

@@ -12,10 +12,12 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.errors import AnalysisException
 
 from binance_data_pipeline_spark.catalog import load_table, register_testdata
 
@@ -93,3 +95,88 @@ def test_events_view_matches_load_table(spark):
     df_schema = load_table(spark, SF_SMALL, "events").schema
     assert view_schema == df_schema
     assert dict(spark.table("events").dtypes)["ts"] == "timestamp"
+
+
+# ---- pinned schemas ----------------------------------------------------------
+# load_table memoizes each table's inferred schema (operators/metacache),
+# keyed on the recursive leaf-file listing plus the nanosAsLong conf. The
+# inference read is one Spark job; a pinned read must run none.
+
+
+def _jobs_run(spark, fn):
+    """(fn's result, number of Spark jobs fn started)."""
+    sc = spark.sparkContext
+    group = f"catalog-test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_second_load_table_runs_no_spark_job(spark, tmp_path):
+    """Regression guard for the table-resolution layer: once a table's
+    schema is pinned, resolving it again costs zero Spark jobs."""
+    _write_events(str(tmp_path / "events.parquet"), ENCODINGS["us_ntz"])
+    first, n_first = _jobs_run(spark, lambda: load_table(spark, str(tmp_path), "events"))
+    second, n_second = _jobs_run(spark, lambda: load_table(spark, str(tmp_path), "events"))
+    assert n_first >= 1  # the inference job
+    assert n_second == 0
+    assert second.schema == first.schema
+    assert second.orderBy("event_id").collect() == first.orderBy("event_id").collect()
+
+
+def test_rewrite_with_new_ts_encoding_misses_the_memo(spark, tmp_path):
+    """events.parquet rewritten in place with another physical ts encoding:
+    the pinned schema must not be reused, and the new file still reads
+    back the canonical schema and values."""
+    path = str(tmp_path / "events.parquet")
+    _write_events(path, ENCODINGS["nanos_int64"])
+    before = load_table(spark, str(tmp_path), "events")
+    assert dict(before.dtypes)["ts"] == "timestamp"
+    _write_events(path, ENCODINGS["us_ntz"])
+    after, n_jobs = _jobs_run(spark, lambda: load_table(spark, str(tmp_path), "events"))
+    assert n_jobs >= 1  # re-inferred, not served from the memo
+    assert after.schema == before.schema
+    assert [r["ts"] for r in after.orderBy("event_id").select("ts").collect()] == TS_VALUES
+
+
+def test_pinned_partitioned_read_matches_inference_and_nested_append_misses(
+    spark, tmp_path
+):
+    """A Hive-partitioned directory table: the pinned read carries the
+    same schema, partition column types included, as an unpinned read;
+    a file appended under an existing nested partition re-infers."""
+    path = str(tmp_path / "trades.parquet")
+    spark.createDataFrame(
+        [(1, 1.5, "2024-01-01", 0), (2, 2.5, "2024-01-01", 1), (3, 3.5, "2024-01-02", 0)],
+        "trade_id long, price double, date string, hour int",
+    ).write.partitionBy("date", "hour").parquet(path)
+    load_table(spark, str(tmp_path), "trades")  # infers and pins
+    pinned, n_jobs = _jobs_run(spark, lambda: load_table(spark, str(tmp_path), "trades"))
+    assert n_jobs == 0
+    assert pinned.schema == spark.read.parquet(path).schema
+    assert dict(pinned.dtypes)["date"] == "date"
+    assert dict(pinned.dtypes)["hour"] == "int"
+    assert sorted(pinned.collect()) == sorted(spark.read.parquet(path).collect())
+
+    # one more file under the existing date=2024-01-01/hour=0 partition,
+    # with a column the other files lack: no top-level entry changes
+    pq.write_table(
+        pa.table({
+            "trade_id": pa.array([4], type=pa.int64()),
+            "price": pa.array([4.5]),
+            "venue": pa.array(["binance"]),
+        }),
+        os.path.join(path, "date=2024-01-01", "hour=0", "part-appended.parquet"),
+    )
+    grown, n_jobs = _jobs_run(spark, lambda: load_table(spark, str(tmp_path), "trades"))
+    assert n_jobs >= 1  # the nested append invalidated the pinned schema
+    assert grown.schema == spark.read.parquet(path).schema
+    assert grown.count() == 4
+
+
+def test_missing_table_raises_analysis_exception(spark, tmp_path):
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        load_table(spark, str(tmp_path), "no_such_table")
