@@ -15,7 +15,6 @@ Layout:
     sources/    ingest-side operators (JSON envelope parse, REST grid, CSV dim)
     operators/  relational + pipeline operators (clean, incremental, dedup,
                 similarity, text, as-of join, sessionize)
-    functions/  scalar function helpers
     plans/      the query catalog (drives ``__spark_entry__.queries()``)
     streaming/  Structured Streaming ingest + windowed analytics
     quality     dbt-test-equivalent data-quality assertion runner

@@ -21,8 +21,10 @@ local checkpoint that a pending DataFrame still needs is NOT recoverable
 (lineage is gone), which is why this is an explicit between-queries hook
 (bench.py, job boundaries) rather than something buried inside operators.
 
-``barrier_scope(spark)`` wraps that contract as a context manager for
-job code: everything checkpointed inside the block is released on exit.
+``barrier_scope(spark)`` is the scoped form for job code: it snapshots
+the persistent RDD ids when the block opens and, on exit, releases only
+the RDDs created inside the block — a caller's own .persist() made
+before the scope stays cached.
 
 Cites reference behavior: the reference's pandas pipeline holds each
 intermediate only for the life of one task process
@@ -42,6 +44,15 @@ def persistent_rdd_count(spark: SparkSession) -> int:
     return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
 
 
+def _persistent_rdds(spark: SparkSession) -> list:
+    """JVM handles of every RDD currently holding blocks."""
+    it = spark.sparkContext._jsc.sc().getPersistentRDDs().valuesIterator()
+    rdds = []
+    while it.hasNext():
+        rdds.append(it.next())
+    return rdds
+
+
 def release_barriers(spark: SparkSession, blocking: bool = False) -> int:
     """Unpersist every persistent RDD (eager localCheckpoint barriers and
     any .persist()), returning how many were released.
@@ -49,26 +60,27 @@ def release_barriers(spark: SparkSession, blocking: bool = False) -> int:
     Only call when no un-consumed DataFrame still depends on a
     checkpointed block: a local checkpoint cannot be recomputed after its
     blocks are dropped."""
-    jsc = spark.sparkContext._jsc.sc()
-    it = jsc.getPersistentRDDs().valuesIterator()
-    released = 0
-    while it.hasNext():
-        it.next().unpersist(blocking)
-        released += 1
-    return released
+    rdds = _persistent_rdds(spark)
+    for rdd in rdds:
+        rdd.unpersist(blocking)
+    return len(rdds)
 
 
 @contextmanager
 def barrier_scope(spark: SparkSession):
     """Release all checkpoint/persist blocks created inside the block.
 
-    Usage::
+    RDDs that were already persistent when the block opened are left
+    alone. Usage::
 
         with barrier_scope(spark):
             result = dedup_corpus(docs, ...)
             result.write.parquet(out)   # consume INSIDE the scope
     """
+    before = {rdd.id() for rdd in _persistent_rdds(spark)}
     try:
         yield
     finally:
-        release_barriers(spark)
+        for rdd in _persistent_rdds(spark):
+            if rdd.id() not in before:
+                rdd.unpersist(False)

@@ -53,16 +53,8 @@ skipping         file-level min/max data-skipping index
 snapshots        snapshot-versioned tables (atomic commits, time travel, rollback, vacuum, exactly-once streaming appends)
 mview            incrementally maintained materialized aggregate views (change-feed fold, exactly-once cursor-in-manifest)
 export           sharded manifest-gated training-data export (jsonl[.gz]/parquet/WebDataset tar)
-multimodal       binary-column plumbing; real PPM/PNG/WAV codecs, PIL autodetect
-jpeg             dependency-free JPEG codec (T.81 baseline + progressive, JFIF)
-jpeg_arith       arithmetic-coded JPEG (SOF9/SOF10 QM coder) for jpeg.py
-jpeg_lossless    lossless JPEG (SOF3 predictive, 2-16 bit) for jpeg.py
-gif              GIF87a/89a codec (LZW, interlace, animation compositing, timestamped frames)
+multimodal       binary-column plumbing; real PPM/PNG/WAV codecs (BMP/ICO via bmp/ico), PIL autodetect, decode quarantine
 bmp              BMP codec (palette/16/24/32-bit, BITFIELDS, RLE8/RLE4, top-down/bottom-up)
-tiff             baseline TIFF codec (strips, none/PackBits/LZW + predictor, both byte orders)
-webp             WebP VP8L lossless codec (transforms, color cache, LZ77, meta groups)
-flac             FLAC codec (Rice partitions, fixed+LPC predictors, stereo decorrelation, CRCs)
-avi              MJPEG-AVI container codec (RIFF hdrl/movi/idx1, timestamped JPEG frames)
 media_quality    LAION-style image curation gate (JVM rules over feature vectors, per-source thresholds)
 ico              ICO/favicon codec (PNG + classic doubled-height DIB members, AND-mask/alpha compositing)
 """

@@ -31,8 +31,8 @@ def _mask_shift(mask: int) -> tuple[int, int]:
 
 
 def decode_bmp(payload: bytes):
-    """Decode a BMP to (w, h, HxWx3 uint8) — the decode_jpeg/decode_png
-    contract (alpha, when present, is dropped; features and resize are
+    """Decode a BMP to (w, h, HxWx3 uint8) — the decode_png contract
+    (alpha, when present, is dropped; features and resize are
     RGB-defined)."""
     import numpy as np
 

@@ -2,8 +2,7 @@
 pipeline in this engine (similarity.py / semdedup.py / ivf.py / pq.py
 all consume an ``array<float>`` column that something must produce).
 
-Same stance as ``operators/multimodal.py`` takes for image decoders: the
-MODEL is injectable, the SPARK PLUMBING is real and tested. The encoder
+The MODEL is injectable, the SPARK PLUMBING is real and tested. The encoder
 contract is a plain callable
 
     encoder(texts: list[str]) -> 2-D float array of shape (len(texts), dim)

@@ -104,7 +104,7 @@ def image_flags(
     )
 
 
-#: audio gate defaults (over the WAV/FLAC feature vector
+#: audio gate defaults (over the WAV feature vector
 #: [duration_s, rms, zcr, peak, rate/48k, channels, 0, tag])
 DEFAULT_AUDIO_THRESHOLDS = {
     "min_duration_s": 0.5,
@@ -120,7 +120,7 @@ _A_DUR, _A_RMS, _A_ZCR, _A_PEAK, _A_RATE = 1, 2, 3, 4, 5
 def audio_flags(
     feature: Column | str, thresholds: dict | None = None
 ) -> Column:
-    """Audio counterpart of image_flags over the 8-dim WAV/FLAC vector:
+    """Audio counterpart of image_flags over the 8-dim WAV vector:
     duration band, not-silent (RMS floor), not-clipped (peak below full
     scale), sample-rate floor, decoded. Same fail-closed NULL
     semantics."""

@@ -3,19 +3,16 @@ with typed metadata, processed in Arrow batches via mapInPandas.
 
 Decode support is tiered:
   - REAL, no dependencies: PPM (P6), PNG (the complete 1-16-bit
-    sequential/Adam7 matrix), JPEG (baseline, progressive, arithmetic
-    SOF9/SOF10, lossless SOF3 — operators/jpeg), GIF (incl. animation
-    compositing — operators/gif), BMP, baseline TIFF, WebP lossless
-    VP8L (operators/bmp, operators/tiff, operators/webp) images and
-    PCM WAV audio decode with numpy + stdlib — `baseline_decoder` /
-    `baseline_resizer` run the feature and resize paths end-to-end,
-    un-stubbed, on those formats (synthetic fixture builders included).
+    sequential/Adam7 matrix), BMP and ICO (operators/bmp, operators/ico)
+    images and PCM WAV audio decode with numpy + stdlib —
+    `baseline_decoder` / `baseline_resizer` run the feature and resize
+    paths end-to-end, un-stubbed, on those formats (synthetic fixture
+    builders included).
   - AUTO-DETECTED: `default_decoder()` / `default_resizer()` probe for PIL
-    once at construction and route the residual compressed cases
-    (lossy-VP8 WebP, hierarchical JPEG, tiled/CCITT TIFF) through it
-    when importable — decoding to RGB and reusing the SAME
-    `_rgb_features`, so identical pixels give identical vectors in
-    either container format.
+    once at construction and route the other compressed images (JPEG,
+    GIF, TIFF, WebP, ...) through it when importable — decoding to RGB
+    and reusing the SAME `_rgb_features`, so identical pixels give
+    identical vectors in either container format.
   - STUBBED: without PIL (this container), the remaining formats fall
     back to `decode_stub`'s NotImplementedError; audio/video beyond PCM
     WAV needs libav — inject a real Decoder in production. The
@@ -103,16 +100,10 @@ def deterministic_fake_decoder(dim: int = 8) -> Decoder:
 
 PPM_MIME = "image/x-portable-pixmap"
 WAV_MIME = "audio/wav"
-FLAC_MIME = "audio/flac"
 PNG_MIME = "image/png"
-JPEG_MIME = "image/jpeg"
-GIF_MIME = "image/gif"
 BMP_MIME = "image/bmp"
-TIFF_MIME = "image/tiff"
-WEBP_MIME = "image/webp"
 ICO_MIME = "image/x-icon"
 ICO_MIME_ALT = "image/vnd.microsoft.icon"
-AVI_MIME = "video/x-msvideo"
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
@@ -621,16 +612,10 @@ def baseline_decoder(payload: bytes, mime: str) -> list[float]:
 
     PPM  → _rgb_features (see above)
     PNG  → decode_png (stdlib zlib + unfilter) → the SAME _rgb_features
-    JPEG → decode_jpeg (operators/jpeg: baseline/progressive/
-           arithmetic/lossless) → the SAME _rgb_features
-    GIF  → decode_gif (operators/gif: LZW + compositing, first frame)
-           → the SAME _rgb_features
     BMP  → decode_bmp (operators/bmp: palette/direct/BITFIELDS/RLE)
            → the SAME _rgb_features
-    TIFF → decode_tiff (operators/tiff: strips, none/PackBits/LZW,
-           predictor, gray/RGB/palette) → the SAME _rgb_features
-    WebP → decode_webp (operators/webp: VP8L lossless — transforms,
-           color cache, LZ77, palette) → the SAME _rgb_features
+    ICO  → decode_ico (operators/ico: largest PNG or DIB member)
+           → the SAME _rgb_features
     WAV  → [duration s, RMS, zero-crossing rate, peak, rate/48k, ch, 0, 2.0]
 
     Other mimes raise NotImplementedError (they need PIL/libav)."""
@@ -642,43 +627,18 @@ def baseline_decoder(payload: bytes, mime: str) -> list[float]:
     if mime == PNG_MIME:
         _, _, px = decode_png(payload)
         return _rgb_features(px)
-    if mime == JPEG_MIME:
-        from .jpeg import decode_jpeg
-
-        _, _, px = decode_jpeg(payload)
-        return _rgb_features(px)
-    if mime == GIF_MIME:
-        from .gif import decode_gif
-
-        _, _, px = decode_gif(payload)  # first composited frame
-        return _rgb_features(px)
     if mime == BMP_MIME:
         from .bmp import decode_bmp
 
         _, _, px = decode_bmp(payload)
-        return _rgb_features(px)
-    if mime == TIFF_MIME:
-        from .tiff import decode_tiff
-
-        _, _, px = decode_tiff(payload)  # first page
-        return _rgb_features(px)
-    if mime == WEBP_MIME:
-        from .webp import decode_webp
-
-        _, _, px = decode_webp(payload)  # VP8L; lossy VP8 raises
         return _rgb_features(px)
     if mime in (ICO_MIME, ICO_MIME_ALT):
         from .ico import decode_ico
 
         _, _, px = decode_ico(payload)  # largest member
         return _rgb_features(px)
-    if mime in (WAV_MIME, FLAC_MIME):
-        if mime == WAV_MIME:
-            rate, channels, s = decode_wav(payload)
-        else:
-            from .flac import decode_flac
-
-            rate, channels, s = decode_flac(payload)
+    if mime == WAV_MIME:
+        rate, channels, s = decode_wav(payload)
         n = len(s)
         zcr = float((np.signbit(s[1:]) != np.signbit(s[:-1])).mean()) if n > 1 else 0.0
         return [
@@ -697,37 +657,20 @@ def baseline_decoder(payload: bytes, mime: str) -> list[float]:
 
 
 def baseline_resizer(payload: bytes, mime: str, w: int, h: int) -> bytes:
-    """Real nearest-neighbor resize for PPM, PNG, JPEG and GIF,
-    re-encoded in the source container; other formats need an imaging
-    library. (A PNG with alpha comes back as RGB — features and resize
-    are RGB-defined; JPEG re-encodes at quality 90; an animated GIF
-    resizes its first composited frame to a single-frame GIF.)"""
+    """Real nearest-neighbor resize for PPM, PNG and BMP, re-encoded in
+    the source container; other formats need an imaging library. (A PNG
+    with alpha comes back as RGB — features and resize are
+    RGB-defined.)"""
     import numpy as np
 
     if mime == PPM_MIME:
         src_w, src_h, px = decode_ppm(payload)
     elif mime == PNG_MIME:
         src_w, src_h, px = decode_png(payload)
-    elif mime == JPEG_MIME:
-        from .jpeg import decode_jpeg
-
-        src_w, src_h, px = decode_jpeg(payload)
-    elif mime == GIF_MIME:
-        from .gif import decode_gif
-
-        src_w, src_h, px = decode_gif(payload)  # first composited frame
     elif mime == BMP_MIME:
         from .bmp import decode_bmp
 
         src_w, src_h, px = decode_bmp(payload)
-    elif mime == TIFF_MIME:
-        from .tiff import decode_tiff
-
-        src_w, src_h, px = decode_tiff(payload)  # first page
-    elif mime == WEBP_MIME:
-        from .webp import decode_webp
-
-        src_w, src_h, px = decode_webp(payload)
     else:
         raise NotImplementedError(f"no dependency-free resizer for {mime}")
     ys = (np.arange(h) * src_h // h).clip(0, src_h - 1)
@@ -735,28 +678,10 @@ def baseline_resizer(payload: bytes, mime: str, w: int, h: int) -> bytes:
     resized = px[ys][:, xs]
     if mime == PPM_MIME:
         return encode_ppm(resized)
-    if mime == JPEG_MIME:
-        from .jpeg import encode_jpeg
-
-        return encode_jpeg(resized, quality=90)
-    if mime == GIF_MIME:
-        from .gif import encode_gif
-
-        # NN resize introduces no new colors, so the exact-palette
-        # encoder always applies (single-frame output)
-        return encode_gif(resized)
     if mime == BMP_MIME:
         from .bmp import encode_bmp
 
         return encode_bmp(resized)
-    if mime == TIFF_MIME:
-        from .tiff import encode_tiff
-
-        return encode_tiff(resized, compression="packbits")
-    if mime == WEBP_MIME:
-        from .webp import encode_webp
-
-        return encode_webp(resized)
     return encode_png(resized)
 
 
@@ -812,50 +737,18 @@ def default_decoder() -> Decoder:
         compressed = None
 
     def decode(payload: bytes, mime: str) -> list[float]:
-        if mime in (PPM_MIME, WAV_MIME, FLAC_MIME):
+        if mime in (PPM_MIME, WAV_MIME):
             return baseline_decoder(payload, mime)
         if mime == PNG_MIME:
             # stdlib PNG covers the COMPLETE depth/interlace matrix
             # (1/2/4/8/16-bit, sequential + Adam7) — no PIL fallback
             # needed; corrupt payloads raise ValueError (quarantine)
             return baseline_decoder(payload, mime)
-        if mime in (GIF_MIME, BMP_MIME, ICO_MIME, ICO_MIME_ALT):
-            # GIF: full 87a/89a decode (LZW, interlace, LCTs,
-            # transparency, frame compositing); BMP: palette/direct/
-            # BITFIELDS/RLE; ICO: PNG + classic-DIB members — no PIL
-            # fallback needed; corrupt payloads raise ValueError
-            # (quarantine)
+        if mime in (BMP_MIME, ICO_MIME, ICO_MIME_ALT):
+            # BMP: palette/direct/BITFIELDS/RLE; ICO: PNG + classic-DIB
+            # members — no PIL fallback needed; corrupt payloads raise
+            # ValueError (quarantine)
             return baseline_decoder(payload, mime)
-        if mime == TIFF_MIME:
-            # baseline strips (none/PackBits/LZW, predictor, all
-            # photometrics) decode dependency-free; tiled and
-            # CCITT/JPEG-in-TIFF (NotImplementedError) and payloads
-            # this parser rejects (ValueError) fall through
-            try:
-                return baseline_decoder(payload, mime)
-            except (NotImplementedError, ValueError):
-                if compressed is None:
-                    raise
-        if mime == WEBP_MIME:
-            # lossless (VP8L) decodes dependency-free; lossy VP8
-            # (NotImplementedError) and payloads this parser rejects
-            # (ValueError — PIL sniffs content) fall through to PIL
-            try:
-                return baseline_decoder(payload, mime)
-            except (NotImplementedError, ValueError):
-                if compressed is None:
-                    raise
-        if mime == JPEG_MIME:
-            # baseline, progressive, arithmetic (sequential +
-            # progressive) AND lossless decode dependency-free;
-            # hierarchical (NotImplementedError), corrupt and
-            # mislabeled payloads (ValueError — PIL sniffs content, not
-            # mime) fall through
-            try:
-                return baseline_decoder(payload, mime)
-            except (NotImplementedError, ValueError):
-                if compressed is None:
-                    raise
         if compressed is not None and mime.startswith("image/"):
             return compressed(payload, mime)
         return decode_stub(payload, mime)
@@ -872,17 +765,9 @@ def default_resizer() -> Resizer:
         compressed = None
 
     def resize(payload: bytes, mime: str, w: int, h: int) -> bytes:
-        if mime in (PPM_MIME, PNG_MIME, GIF_MIME, BMP_MIME):
+        if mime in (PPM_MIME, PNG_MIME, BMP_MIME):
             # fully-native formats — no fallback needed
             return baseline_resizer(payload, mime, w, h)
-        if mime in (JPEG_MIME, TIFF_MIME, WEBP_MIME):
-            # residual variants (hierarchical JPEG, tiled TIFF, lossy
-            # VP8) and payloads this parser rejects fall through to PIL
-            try:
-                return baseline_resizer(payload, mime, w, h)
-            except (NotImplementedError, ValueError):
-                if compressed is None:
-                    raise
         if compressed is not None and mime.startswith("image/"):
             return compressed(payload, mime, w, h)
         return resize_stub(payload, mime, w, h)
@@ -936,18 +821,16 @@ def extract_features(
 
     ``on_error="quarantine"`` (VERDICT r10 task 5): a web-scraped corpus
     always contains payloads the configured decoder cannot handle
-    (WebP under the dependency-free decoders,
-    truncated or mislabeled bytes under ANY decoder). One such row must
+    (JPEG or WebP under the dependency-free decoders, truncated or
+    mislabeled bytes under ANY decoder). One such row must
     not fail a 100 TB job: decode errors flow to the output as
     feature=NULL + ``quarantine_reason`` ("ErrorClass: message"), so the
     caller splits decoded from quarantined with one filter and can
     re-drive the quarantine through a heavier decoder later. The default
     stays "raise" — loud for pipelines that expect full decodability.
 
-    Contract tests: tests/test_multimodal_quarantine.py — the split, the
-    injected-decoder drain, raise-mode loudness, AND the two-phase
-    re-drive (quarantine → targeted heavy-decoder pass → union), whose
-    result is pinned bit-identical to an all-heavy-decoder run (r12).
+    Contract tests: the corrupt-payload rows of tests/test_media_quality.py,
+    test_bmp.py and test_ico.py run through ``on_error="quarantine"``.
     """
     if on_error not in ("raise", "quarantine"):
         raise ValueError(f"on_error must be raise|quarantine, got {on_error!r}")
@@ -1037,103 +920,6 @@ def resize_images(
     )
 
 
-SAMPLED_FRAMES_SCHEMA = (
-    "media_id long, frame_idx int, frame_ts_ms long, mime string, "
-    "payload binary"
-)
-
-#: frame extractor: (payload, mime) -> [(ts_ms, frame_bytes, frame_mime)]
-FrameExtractor = Callable[[bytes, str], list]
-
-
-def default_frame_extractor() -> FrameExtractor:
-    """Real, dependency-free frame extraction (r12) for the containers
-    whose codecs live in this package: MJPEG AVI (frames are the
-    embedded JPEG streams — operators/avi.py) and animated GIF
-    (composited frames re-encoded as PNG — operators/gif.py). Other
-    video mimes/codecs raise NotImplementedError — inject a
-    libav-backed FrameExtractor in production."""
-
-    def extract(payload: bytes, mime: str) -> list:
-        if mime == AVI_MIME:
-            from .avi import decode_avi_frames
-            from .jpeg import JPEG_SIG
-
-            _, _, _, fourcc, frames = decode_avi_frames(payload)
-            if fourcc not in (b"MJPG", b"mjpg") and frames and not frames[
-                0
-            ][1].startswith(JPEG_SIG):
-                raise NotImplementedError(
-                    f"AVI codec {fourcc!r} — inject a libav-backed "
-                    "FrameExtractor"
-                )
-            return [(ts, data, JPEG_MIME) for ts, data in frames]
-        if mime == GIF_MIME:
-            from .gif import decode_gif_frames
-
-            _, _, frames = decode_gif_frames(payload)
-            return [(ts, encode_png(fr), PNG_MIME) for ts, fr in frames]
-        raise NotImplementedError(
-            f"no dependency-free frame extractor for {mime}; inject a "
-            "libav-backed FrameExtractor"
-        )
-
-    return extract
-
-
-def extract_video_frames(
-    media: DataFrame, every_ms: int = 1000,
-    extractor: FrameExtractor | None = None,
-) -> DataFrame:
-    """REAL frame sampling (r12): video-kind rows are decoded by the
-    extractor and sampled on an ``every_ms`` grid (last frame at or
-    before each tick — video semantics, a frame persists until the
-    next). Emits one row per sampled tick with the actual frame bytes
-    and their image mime, ready to feed extract_features as images.
-    Arrow-batched like every decode path; the sibling ``sample_frames``
-    keeps the payload-reference grid shape for callers that bring
-    their own decode step."""
-    ex = extractor or default_frame_extractor()
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                frames = ex(bytes(row.payload), row.mime)
-                if not frames:
-                    continue
-                frames.sort(key=lambda f: f[0])
-                last_ts = frames[-1][0]
-                idx = 0
-                fi = 0
-                for tick in range(0, last_ts + every_ms, every_ms):
-                    while idx + 1 < len(frames) and frames[idx + 1][0] <= tick:
-                        idx += 1
-                    ts, data, fmime = frames[idx]
-                    out.append(
-                        {
-                            "media_id": row.media_id,
-                            "frame_idx": fi,
-                            "frame_ts_ms": ts,
-                            "mime": fmime,
-                            "payload": data,
-                        }
-                    )
-                    fi += 1
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "media_id", "frame_idx", "frame_ts_ms", "mime", "payload",
-                ],
-            )
-
-    return (
-        media.where(F.col("kind") == "video")
-        .select("media_id", "mime", "payload")
-        .mapInPandas(run, SAMPLED_FRAMES_SCHEMA)
-    )
-
-
 def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Frame sampling for video rows: emits one row per sampled timestamp.
 
@@ -1141,8 +927,7 @@ def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     actual frame extraction is the stubbed decode step — here each frame
     row carries the source payload reference; a real decoder would replace
     it with the decoded frame bytes in the downstream extract_features
-    pass (extract_video_frames above is the r12 real-decode variant).
-    The Spark-side shape (explode to frame rows, frame_idx/ts
+    pass. The Spark-side shape (explode to frame rows, frame_idx/ts
     schema) is the real contract."""
     grid = media.where(F.col("kind") == "video").select(
         "media_id",

@@ -15,8 +15,8 @@ interpreted — the same CodegenFallback wall as
 similarity.rp_signatures_batch), so the kernel is an Arrow-batched
 ``mapInPandas``: one Python Counter per doc per batch, vectorized I/O,
 never row-at-a-time serialization. The kernel closes only over locals
-and the broadcast handle (driver-contract safe — see
-operators/multimodal.py's pickling note).
+and the broadcast handle, so cloudpickle ships it by value and executors
+can deserialize it without importing this package (driver-contract safe).
 
 Output schema: (id, indices array<bigint> ascending, values
 array<double>) — sklearn/scipy CSR row convention; weights follow

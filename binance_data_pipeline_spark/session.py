@@ -8,8 +8,9 @@ Design notes (100 TB-minded even though tests run on ``local[32]``):
 - ``spark.sql.shuffle.partitions`` defaults small locally (32) but is a
   parameter — on a real cluster you set it ~2-3× total cores and let AQE
   coalesce down.
-- Arrow is enabled for the Pandas-UDF paths (similarity / multimodal stubs);
-  everything in the hot relational path stays JVM-side.
+- Arrow is enabled for the Pandas-UDF paths (similarity / TF-IDF /
+  embedding kernels); everything in the hot relational path stays
+  JVM-side.
 - Parquet remains snappy-compressed (the reference's at-rest format,
   ``producer/kafka_to_s3_bronze.py:66``).
 """

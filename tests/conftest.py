@@ -13,7 +13,7 @@ SF_MED = "/root/testdata/sf0.01"
 # Plain `pytest tests/` is the FAST tier: it must complete inside the
 # driver's single-process verification window (the r12 full suite no
 # longer did — cut off at ~55% with zero failures). Deselected by
-# default: the redundancy tiers below (differential fuzz, codec/window
+# default: the redundancy tiers below (differential fuzz, window
 # differentials, model-based sequences, scale smokes, crash-injection
 # models) plus every test that measured >= 6 s in the round-13 4-worker
 # full run (frozen in slow_tests.txt; oracle-parity and plan-pin modules
@@ -24,7 +24,6 @@ SF_MED = "/root/testdata/sf0.01"
 
 _SLOW_MODULES = {
     "test_differential_fuzz.py",
-    "test_codec_differential.py",
     "test_differential_windows.py",
     "test_manifest_model.py",
     "test_scale.py",

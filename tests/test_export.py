@@ -105,10 +105,14 @@ def test_export_webdataset_tar_shards(spark, tmp_path):
     import tarfile
 
     from binance_data_pipeline_spark.operators.export import export_webdataset
-    from binance_data_pipeline_spark.operators.multimodal import synthetic_ppm
 
     rows = [
-        (i, synthetic_ppm(6, 4, seed=i), f"caption {i}", {"lang": "en", "i": i})
+        (
+            i,
+            hashlib.sha256(str(i).encode()).digest() * 3,
+            f"caption {i}",
+            {"lang": "en", "i": i},
+        )
         for i in range(7)
     ]
     df = spark.createDataFrame(
@@ -117,7 +121,7 @@ def test_export_webdataset_tar_shards(spark, tmp_path):
     out = str(tmp_path / "wds")
     report = export_webdataset(
         df, out, "doc_id",
-        members={"ppm": "payload", "txt": "text", "json": "meta"},
+        members={"bin": "payload", "txt": "text", "json": "meta"},
         n_shards=2,
     )
     assert report["rows"] == 7 and 1 <= report["files"] <= 2
@@ -131,7 +135,7 @@ def test_export_webdataset_tar_shards(spark, tmp_path):
                 seen[m.name] = tar.extractfile(m).read()
     # every sample contributed all three members, regrouped by basename
     for i in range(7):
-        assert seen[f"{i}.ppm"] == bytes(rows[i][1])
+        assert seen[f"{i}.bin"] == rows[i][1]
         assert seen[f"{i}.txt"] == f"caption {i}".encode()
         assert b'"lang"' in seen[f"{i}.json"]
 
@@ -139,7 +143,7 @@ def test_export_webdataset_tar_shards(spark, tmp_path):
     out2 = str(tmp_path / "wds2")
     export_webdataset(
         df.repartition(13), out2, "doc_id",
-        members={"ppm": "payload", "txt": "text", "json": "meta"},
+        members={"bin": "payload", "txt": "text", "json": "meta"},
         n_shards=2,
     )
     h = lambda p: {

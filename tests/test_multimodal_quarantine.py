@@ -1,14 +1,14 @@
 """Multimodal quarantine contract (VERDICT r10 task 5): a corpus
-containing payloads the configured decoder cannot handle — >2x sampling
-factors, corrupt containers, truncated bytes — must
-flow those rows to a quarantine column (id + reason) and decode the
-rest, with ZERO job failure; an injected PIL-style decoder drains the
-quarantine. Since r12 the dependency-free decoders handle Adam7 PNG,
-16-bit PNG AND progressive JPEG natively, so REAL exotic fixtures
-(built by the module's own encoders) sit on the DECODABLE side; the
+containing payloads the configured decoder cannot handle — formats with
+no dependency-free codec, unsupported variants, corrupt containers,
+truncated bytes — must flow those rows to a quarantine column (id +
+reason) and decode the rest, with ZERO job failure; an injected
+PIL-style decoder drains the quarantine. The dependency-free decoders
+handle Adam7 PNG, 16-bit PNG, BMP and ICO natively, so REAL fixtures
+of those (built by the package's own encoders) sit on the DECODABLE
+side; JPEG (no native codec), an unsupported BMP bit depth and the
 header-patched variants (a header that contradicts the stream data)
-stay on the quarantine side as what they really are: corrupt
-containers."""
+stay on the quarantine side."""
 
 from __future__ import annotations
 
@@ -19,9 +19,11 @@ import pytest
 
 sys.path.insert(0, "/root/repo")
 
-from binance_data_pipeline_spark.operators.jpeg import encode_jpeg
+from binance_data_pipeline_spark.operators.bmp import encode_bmp
+from binance_data_pipeline_spark.operators.ico import encode_ico
 from binance_data_pipeline_spark.operators.multimodal import (
-    JPEG_MIME,
+    BMP_MIME,
+    ICO_MIME,
     MEDIA_SCHEMA,
     PNG_MIME,
     PPM_MIME,
@@ -39,17 +41,19 @@ def _px(seed: int) -> np.ndarray:
     return px
 
 
-def _progressive_jpeg() -> bytes:
-    data = bytearray(encode_jpeg(_px(1), 85))
-    i = bytes(data).find(b"\xff\xc0")
-    data[i + 1] = 0xC2  # SOF0 -> SOF2 (progressive)
-    return bytes(data)
+JPEG_MIME = "image/jpeg"  # no dependency-free codec: PIL or quarantine
 
 
-def _oversampled_jpeg() -> bytes:
-    data = bytearray(encode_jpeg(_px(2), 85))
-    i = bytes(data).find(b"\xff\xc0")
-    data[i + 4 + 7] = 0x33  # component 0 sampling factors -> 3x3
+def _jpeg_like() -> bytes:
+    # SOI + APP0 marker then filler: any JPEG payload needs an injected
+    # decoder once PIL is absent
+    return b"\xff\xd8\xff\xe0" + bytes(range(60))
+
+
+def _bmp_12bit() -> bytes:
+    # BITMAPINFOHEADER biBitCount -> 12, a depth BMP does not define
+    data = bytearray(encode_bmp(_px(2)))
+    data[28:30] = (12).to_bytes(2, "little")
     return bytes(data)
 
 
@@ -73,18 +77,17 @@ def mixed_corpus(spark):
         # decodable under the dependency-free decoders
         (1, "image", PPM_MIME, synthetic_ppm(16, 12, seed=9), 16, 12, None),
         (2, "image", PNG_MIME, encode_png(_px(5)), 16, 16, None),
-        (3, "image", JPEG_MIME, encode_jpeg(_px(6), 90), 16, 16, None),
-        # real exotic formats: natively decodable since r12
+        (3, "image", BMP_MIME, encode_bmp(_px(6)), 16, 16, None),
+        # real exotic formats: natively decodable
         (4, "image", PNG_MIME, encode_png(_px(8), interlace=True), 16, 16, None),
         (5, "image", PNG_MIME, encode_png(_px(9), bit_depth=16), 16, 16, None),
-        (6, "image", JPEG_MIME, encode_jpeg(_px(10), 85, progressive=True),
-         16, 16, None),
+        (6, "image", ICO_MIME, encode_ico([_px(10)]), 16, 16, None),
         # quarantine candidates
-        (10, "image", JPEG_MIME, _progressive_jpeg(), 16, 16, None),
-        (11, "image", JPEG_MIME, _oversampled_jpeg(), 16, 16, None),
+        (10, "image", JPEG_MIME, _jpeg_like(), 16, 16, None),
+        (11, "image", BMP_MIME, _bmp_12bit(), 16, 16, None),
         (12, "image", PNG_MIME, _corrupt_adam7_png(), 16, 16, None),
         (13, "image", PNG_MIME, _corrupt_png16(), 16, 16, None),
-        (14, "image", JPEG_MIME, encode_jpeg(_px(7), 85)[:40], 16, 16, None),
+        (14, "image", BMP_MIME, encode_bmp(_px(7))[:40], 16, 16, None),
     ]
     return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
@@ -104,71 +107,18 @@ def test_quarantine_splits_corpus_without_failing(mixed_corpus):
     # decoded rows carry real features; quarantined rows NULL features
     assert all(by_id[i]["feature"] is not None for i in decoded)
     assert all(by_id[i]["feature"] is None for i in quarantined)
-    # reasons name the boundary, so a re-drive can route by cause
-    # the SOF2-patched baseline is a corrupt scan script since r12
-    # (real progressive decodes — id 6); reason still names progressive
-    assert "progressive" in by_id[10]["quarantine_reason"]
-    assert by_id[10]["quarantine_reason"].startswith("ValueError")
-    assert "sampling factors 3x3" in by_id[11]["quarantine_reason"]
+    # reasons name the boundary, so a re-drive can route by cause:
+    # no codec / unsupported variant are NotImplemented, not corrupt
+    assert by_id[10]["quarantine_reason"].startswith("NotImplementedError")
+    assert "inject a real Decoder" in by_id[10]["quarantine_reason"]
+    assert by_id[11]["quarantine_reason"].startswith("NotImplementedError")
+    assert "12-bit BMP" in by_id[11]["quarantine_reason"]
     # header-contradicts-data corpses are VALUE errors, not unsupported
     assert by_id[12]["quarantine_reason"].startswith("ValueError")
     assert by_id[13]["quarantine_reason"].startswith("ValueError")
     assert by_id[14]["quarantine_reason"].split(":")[0] in (
         "ValueError", "error", "IndexError", "struct.error",
     )
-
-
-def test_quarantine_covers_new_format_tier(spark):
-    """r12 formats (GIF/BMP/TIFF/WebP) obey the same contract: clean
-    payloads decode natively (no PIL in this container), truncated or
-    byte-corrupted ones quarantine with attributable reasons — one
-    pass, no job failure."""
-    from binance_data_pipeline_spark.operators.bmp import encode_bmp
-    from binance_data_pipeline_spark.operators.gif import encode_gif
-    from binance_data_pipeline_spark.operators.multimodal import (
-        BMP_MIME,
-        GIF_MIME,
-        TIFF_MIME,
-        WEBP_MIME,
-    )
-    from binance_data_pipeline_spark.operators.tiff import encode_tiff
-    from binance_data_pipeline_spark.operators.webp import encode_webp
-
-    rng = np.random.default_rng(21)
-    pal = rng.integers(0, 256, (16, 3), dtype=np.uint8)
-    img = pal[rng.integers(0, 16, (16, 16))]
-    gif, bmp = encode_gif(img), encode_bmp(img)
-    tif, webp = encode_tiff(img, compression="lzw"), encode_webp(img)
-
-    def corrupt(data: bytes) -> bytes:
-        b = bytearray(data)
-        b[len(b) // 2] ^= 0xFF
-        return bytes(b[: int(len(b) * 0.8)])  # flip + truncate
-
-    rows = [
-        (1, "image", GIF_MIME, gif, 16, 16, None),
-        (2, "image", BMP_MIME, bmp, 16, 16, None),
-        (3, "image", TIFF_MIME, tif, 16, 16, None),
-        (4, "image", WEBP_MIME, webp, 16, 16, None),
-        (11, "image", GIF_MIME, corrupt(gif), 16, 16, None),
-        (12, "image", BMP_MIME, corrupt(bmp), 16, 16, None),
-        (13, "image", TIFF_MIME, corrupt(tif), 16, 16, None),
-        (14, "image", WEBP_MIME, corrupt(webp), 16, 16, None),
-    ]
-    out = extract_features(
-        spark.createDataFrame(rows, MEDIA_SCHEMA),
-        default_decoder(),
-        on_error="quarantine",
-    ).collect()
-    by_id = {r["media_id"]: r for r in out}
-    assert {i for i, r in by_id.items() if r["quarantine_reason"] is None} == {
-        1, 2, 3, 4}
-    for i in (11, 12, 13, 14):
-        assert by_id[i]["feature"] is None
-        assert by_id[i]["quarantine_reason"].split(":")[0] in (
-            "ValueError", "IndexError", "KeyError", "error", "struct.error",
-            "NotImplementedError",
-        ), by_id[i]["quarantine_reason"]
 
 
 def test_injected_decoder_drains_quarantine(mixed_corpus):
@@ -187,8 +137,8 @@ def test_injected_decoder_drains_quarantine(mixed_corpus):
 def test_raise_mode_still_fails_loud(mixed_corpus):
     """The default contract is unchanged: pipelines that expect full
     decodability get the error, not silent NULLs. WHICH exotic row fails
-    first depends on partition scheduling (oversampled -> NotImplemented,
-    corrupt/truncated -> ValueError), so assert only that the job fails
+    first depends on partition scheduling (no codec / 12-bit ->
+    NotImplemented, corrupt/truncated -> ValueError), so assert only that the job fails
     from inside the decode path."""
     with pytest.raises(Exception) as ei:
         extract_features(mixed_corpus, default_decoder()).collect()

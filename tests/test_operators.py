@@ -297,11 +297,13 @@ def test_baseline_decoder_rejects_undecodable_mime():
     # formats beyond the native codec tier stay stubbed
     with pytest.raises(NotImplementedError):
         baseline_decoder(b"????ftypheic", "image/heic")
+    with pytest.raises(NotImplementedError):
+        baseline_decoder(b"\xff\xd8\xff\xe0jfif-but-garbage", "image/jpeg")
     # malformed payloads for SUPPORTED formats are data errors, not stubs
     with pytest.raises(ValueError):
-        baseline_decoder(b"\xff\xd8\xff\xe0jfif-but-garbage", "image/jpeg")
+        baseline_decoder(b"\x89PNG\r\n\x1a\ngarbage", "image/png")
     with pytest.raises(ValueError):
-        baseline_decoder(b"RIFF....WEBP", "image/webp")  # native since r12
+        baseline_decoder(b"BM-but-truncated", "image/bmp")
 
 
 # ------------------------------------------------------------- PNG codec
@@ -542,17 +544,11 @@ def test_default_decoder_autodetect(spark, monkeypatch):
     png = M.encode_png(M.decode_ppm(ppm)[2])
     assert dec(png, M.PNG_MIME) == want_img
 
-    # baseline JPEG is dependency-free now too: decodes in ANY env
-    from binance_data_pipeline_spark.operators.jpeg import encode_jpeg
-
-    jpg = encode_jpeg(M.decode_ppm(ppm)[2], quality=95)
-    got = dec(jpg, M.JPEG_MIME)
-    assert got[0] == want_img[0] and got[1] == want_img[1]  # exact dims
-    assert all(abs(got[i] - want_img[i]) < 1.5 for i in (2, 3, 4))  # lossy means
-
     if importlib.util.find_spec("PIL") is None:
-        # this container: formats beyond the native codec tier hit the
-        # stub (WebP decodes natively since r12 — use HEIC)
+        # this container: formats beyond the native codec tier (JPEG has
+        # no dependency-free decoder) hit the stub
+        with pytest.raises(NotImplementedError):
+            dec(ppm, "image/jpeg")
         with pytest.raises(NotImplementedError):
             dec(ppm, "image/heic")
         with pytest.raises(NotImplementedError):
@@ -640,9 +636,9 @@ def test_png_fully_native_and_lossy_webp_falls_back_to_pil(monkeypatch):
     """Since r12 the stdlib PNG decoder covers the COMPLETE depth/
     interlace matrix (1/2/4/8/16-bit x sequential/Adam7 x gray/palette/
     RGB/alpha forms) — every PNG decodes natively with zero PIL calls.
-    The PIL fallback contract survives for the residual variants —
-    lossy (VP8) WebP: routed through PIL when importable, the native
-    NotImplementedError without it."""
+    The PIL fallback contract covers the formats without a native
+    codec — here lossy (VP8) WebP: routed through PIL when importable,
+    the stub's NotImplementedError without it."""
     import importlib.util
     import struct
     import sys

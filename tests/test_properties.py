@@ -362,30 +362,6 @@ def test_ws_frame_roundtrip_property(payload, opcode, mask, fin):
     assert (op, f, got) == (opcode, fin, payload)
 
 
-@settings(max_examples=15, deadline=None)
-@given(
-    w=st.integers(1, 40),
-    h=st.integers(1, 40),
-    seed=st.integers(0, 2**31 - 1),
-)
-def test_jpeg_roundtrip_property(w, h, seed):
-    """Arbitrary-dimension random images survive the baseline JPEG
-    roundtrip at q95 with bounded mean error and exact dimensions —
-    including 1-pixel edges and non-multiple-of-8 shapes."""
-    import numpy as np
-
-    from binance_data_pipeline_spark.operators.jpeg import (
-        decode_jpeg,
-        encode_jpeg,
-    )
-
-    rng = np.random.default_rng(seed)
-    px = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-    w2, h2, out = decode_jpeg(encode_jpeg(px, quality=95))
-    assert (w2, h2) == (w, h) and out.shape == px.shape
-    assert np.abs(out.astype(int) - px.astype(int)).mean() < 8.0
-
-
 # --------------------------------------------------------------- BPE
 
 @settings(max_examples=200, deadline=None)
