@@ -17,25 +17,26 @@ Contract, mapped onto the DataSource API:
 
 - OFFSETS ARE KAFKA OFFSETS: the stream offset is ``{"<partition>":
   next_unread_offset}`` — exactly the connector's checkpoint shape.
-  ``latestOffset`` polls ListOffsets v1 (no record transfer) and
-  optionally rate-limits with ``maxOffsetsPerTrigger`` (the reference's
-  1000-msg flush bound), distributing the budget across partitions
-  proportionally to lag like the real connector. The Python API gives
-  the reader no view of the checkpointed position, so by default the
-  FIRST micro-batch of each driver incarnation is uncapped (the first
-  poll must return the log end to stay monotone); set ``rateCursorDir``
-  (a driver-local dir, e.g. inside the checkpoint location) and the
-  reader persists its own cursor in ``commit()`` so restarts against a
-  backlog plan CAPPED catch-up batches — see ``_KafkaWireStreamReader``.
-- PARTITIONS ARE KAFKA PARTITIONS: one input partition per topic
-  partition per micro-batch; each executor fetches ITS offset range
-  over its own socket connection (Fetch v4, CRC-verified batches) —
-  records never pass through the driver.
+  The streaming reader is a ``SimpleDataSourceStreamReader``: the
+  engine hands ``read(start)`` its own checkpointed start offset, so
+  ``maxOffsetsPerTrigger`` (the reference's 1000-msg flush bound)
+  caps every micro-batch, the first one after a restart included. The
+  budget is split across partitions proportionally to lag like the
+  real connector.
+- RECORDS PASS THROUGH THE DRIVER: ``read`` polls ListOffsets v1,
+  fetches the capped range (Fetch v4, CRC-verified batches) inside the
+  driver's long-lived Python source runner, and the engine ships the
+  rows to the JVM as Arrow — a micro-batch runs no Python executor
+  task. That fits this tier (small, trigger-bounded batches); past one
+  process's throughput use the jar connector
+  (``streaming/ingest.py::read_raw_stream_from_kafka``). Batch reads
+  (``spark.read``) still fetch one topic partition per executor task.
 - EXACT RANGES: a fetch may start mid-batch (after a rate-limited
   trigger); the broker returns the containing batch and the client
-  filters to ``[start, end)``, so replays after restart are exact and
-  the checkpointed offsets compose to exactly-once with an idempotent
-  sink (upgrade over the reference's commit-after-put at-least-once).
+  filters to ``[start, end)``, so replays after restart
+  (``readBetweenOffsets``) are exact and the checkpointed offsets
+  compose to exactly-once with an idempotent sink (upgrade over the
+  reference's commit-after-put at-least-once).
 
 Kafka protocol references: kafka.apache.org/protocol (public spec);
 precedent for the jar-free pattern: ``sources/snapshot_source.py``.
@@ -46,10 +47,10 @@ from __future__ import annotations
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
-    DataSourceStreamReader,
     DataSourceStreamWriter,
     DataSourceWriter,
     InputPartition,
+    SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
 
@@ -85,14 +86,14 @@ class _RangePartition(InputPartition):
 
 
 def _fetch_range(part: _RangePartition):
-    """One executor's work: fetch [start, end) from its Kafka partition
-    and yield rows in the connector's record schema."""
+    """Fetch [start, end) from one Kafka partition and yield rows in the
+    connector's record schema."""
     from datetime import datetime, timezone
 
     offset = part.start
     while offset < part.end:
         _hwm, records = kafka_fetch(
-            part.host, part.port, part.topic, part.partition, offset
+            part.host, part.port, part.topic, part.partition, offset, part.end
         )
         if not records:
             raise ValueError(
@@ -101,10 +102,6 @@ def _fetch_range(part: _RangePartition):
                 "truncated below the checkpointed offset?"
             )
         for off, key, value, ts_ms in records:
-            if off >= part.end:
-                return
-            if off < offset:
-                continue
             yield (
                 key,
                 value,
@@ -117,190 +114,100 @@ def _fetch_range(part: _RangePartition):
         offset = records[-1][0] + 1
 
 
-class _KafkaWireStreamReader(DataSourceStreamReader):
+def _capped_end(start: dict[str, int], latest: dict[str, int],
+                budget: int | None) -> dict[str, int]:
+    """The batch end: ``latest``, or — when the total lag exceeds
+    ``budget`` — ``start`` plus a budget split proportionally to lag
+    (the connector's rate-limit policy), remainder to the laggiest
+    partitions first. Never below ``start``."""
+    lags = {p: max(latest[p] - start[p], 0) for p in latest}
+    total = sum(lags.values())
+    if budget is None or total <= budget:
+        return {p: start[p] + lag for p, lag in lags.items()}
+    take = {p: int(lag * budget / total) for p, lag in lags.items()}
+    rem = budget - sum(take.values())
+    for p in sorted(lags, key=lags.get, reverse=True):
+        if rem <= 0:
+            break
+        if take[p] < lags[p]:
+            take[p] += 1
+            rem -= 1
+    return {p: start[p] + take[p] for p in latest}
+
+
+class _KafkaWireStreamReader(SimpleDataSourceStreamReader):
+    """Driver-side micro-batch reader: ``read(start)`` plans AND fetches
+    one capped batch from the engine's start offset; the engine replays
+    a planned-but-uncommitted batch through ``readBetweenOffsets``."""
+
     def __init__(self, host: str, port: int, topic: str,
                  starting_offsets: str, max_per_trigger: int | None,
-                 cursor_dir: str | None = None,
                  commit_group: str | None = None):
         self._host, self._port, self._topic = host, port, topic
         self._starting = starting_offsets
         self._max = max_per_trigger
-        self._cursor_dir = cursor_dir
         self._commit_group = commit_group
         self._mirror_warned: set[str] = set()  # once-per-type mirror warnings
-        # Rate-limit anchor: the last offsets handed to the engine.
-        # None until the first poll. The engine chains micro-batch
-        # ranges from our PREVIOUS latestOffset return (observed: it
-        # even calls latestOffset before initialOffset), so a return
-        # that ever goes BACKWARD re-delivers committed offsets. Two
-        # consequences, both enforced below: (1) returns are clamped
-        # monotone non-decreasing; (2) the FIRST poll of an incarnation
-        # must be the true log end — the reader cannot see the
-        # checkpointed position, and log end is the only value provably
-        # >= it. So WITHOUT a cursor dir, maxOffsetsPerTrigger applies
-        # from the second micro-batch of each driver incarnation only.
-        # WITH ``rateCursorDir``, the reader persists its own cursor in
-        # commit() (called strictly AFTER the engine checkpoints the
-        # batch, so the cursor is always <= the checkpointed position)
-        # and reloads it here — a restart against a large backlog then
-        # plans capped catch-up batches instead of one unbounded one
-        # (the jar connector's SupportsAdmissionControl behavior). A
-        # stale cursor (crash between engine checkpoint and our write)
-        # only costs empty micro-batches until the anchor catches up:
-        # fetch ranges always come from the ENGINE's start, never ours.
-        self._last_end: dict[str, int] | None = self._load_cursor()
 
-    def _cursor_path(self) -> str | None:
-        return f"{self._cursor_dir}/offsets.json" if self._cursor_dir else None
+    def _list(self, p: int, earliest: bool = False) -> int:
+        return kafka_list_offsets(
+            self._host, self._port, self._topic, p, earliest=earliest
+        )
 
-    def _load_cursor(self) -> dict[str, int] | None:
-        import json
-        import os
-
-        p = self._cursor_path()
-        if p is None or not os.path.exists(p):
-            return None
-        with open(p) as fh:
-            return {str(k): int(v) for k, v in json.load(fh).items()}
-
-    def _save_cursor(self, end: dict) -> None:
-        import json
-        import os
-        import uuid as _uuid
-
-        p = self._cursor_path()
-        if p is None:
-            return
-        # MONOTONE merge, never a plain overwrite: commit(end) reports
-        # the PREVIOUS batch's end after latestOffset already persisted
-        # a newer poll — letting it regress the file would poison the
-        # next incarnation's anchor (the engine chains batch starts from
-        # the reader's previous return; a regressed return = replay)
-        prev = getattr(self, "_saved", None) or self._load_cursor() or {}
-        norm = {
-            str(k): max(int(v), int(prev.get(str(k), 0)))
-            for k, v in end.items()
-        }
-        for k, v in prev.items():
-            norm.setdefault(str(k), int(v))
-        if norm == prev:
-            return  # idle polls / stale commits: don't churn the file
-        os.makedirs(self._cursor_dir, exist_ok=True)
-        tmp = f"{p}.{_uuid.uuid4().hex[:8]}.tmp"
-        with open(tmp, "w") as fh:
-            json.dump(norm, fh)
-        os.replace(tmp, p)  # atomic: readers see old or new, never torn
-        self._saved = norm
-
-    def _bounds(self, earliest: bool) -> dict[str, int]:
-        parts = kafka_partitions(self._host, self._port, self._topic)
+    def _from_earliest(self, start: dict, parts) -> dict[str, int]:
+        # partitions absent from ``start`` were created after it was
+        # planned: they start at their earliest offset (= 0 for a fresh
+        # partition), the connector's drain-all posture — records
+        # produced to them are picked up, not lost
         return {
-            str(p): kafka_list_offsets(
-                self._host, self._port, self._topic, p, earliest=earliest
-            )
+            p: int(start[p]) if p in start else self._list(int(p), earliest=True)
             for p in parts
         }
 
+    def _rows(self, start: dict[str, int], end: dict[str, int]) -> list[tuple]:
+        return [
+            row
+            for p, e in end.items() if e > start[p]
+            for row in _fetch_range(_RangePartition(
+                self._host, self._port, self._topic, int(p), start[p], int(e)
+            ))
+        ]
+
     def initialOffset(self) -> dict:
-        # must NOT touch the rate-limit anchor: the engine may call this
-        # after latestOffset, and resetting the anchor downward would
-        # regress the offset chain (= replay)
-        return self._bounds(earliest=self._starting != "latest")
+        earliest = self._starting != "latest"
+        return {
+            str(p): self._list(p, earliest)
+            for p in kafka_partitions(self._host, self._port, self._topic)
+        }
 
-    def latestOffset(self) -> dict:
-        latest = self._bounds(earliest=False)
-        cur = self._last_end
-        if cur is not None:
-            # topic partition-set change across polls. Kafka topics only
-            # ever GAIN partitions; a partition disappearing from
-            # metadata means the topic was deleted/recreated — offsets
-            # are meaningless, fail loudly instead of silently replaying
-            # or skipping (the jar connector errors here too).
-            gone = sorted(set(cur) - set(latest))
-            if gone:
-                raise ValueError(
-                    f"kafka_wire: partitions {gone} of topic "
-                    f"{self._topic!r} vanished from broker metadata — "
-                    "topics cannot shrink, so the topic was deleted or "
-                    "recreated; restart the stream with a fresh "
-                    "checkpoint"
-                )
-            # new partitions start at their earliest offset (= 0 for a
-            # freshly created partition), the connector's drain-all
-            # posture — records produced to them are picked up, not lost
-            for p in latest:
-                if p not in cur:
-                    cur = dict(cur)
-                    cur[p] = kafka_list_offsets(
-                        self._host, self._port, self._topic, int(p),
-                        earliest=True,
-                    )
-            self._last_end = cur
-            if self._max is not None:
-                lags = {p: latest[p] - cur.get(p, 0) for p in latest}
-                total = sum(max(v, 0) for v in lags.values())
-                if total > self._max:
-                    # distribute the budget proportionally to lag (the
-                    # connector's rate-limit policy), remainder to the
-                    # laggiest partitions first
-                    scale = self._max / total
-                    take = {p: int(max(lag, 0) * scale) for p, lag in lags.items()}
-                    rem = self._max - sum(take.values())
-                    for p in sorted(lags, key=lags.get, reverse=True):
-                        if rem <= 0:
-                            break
-                        if take[p] < max(lags[p], 0):
-                            take[p] += 1
-                            rem -= 1
-                    latest = {p: cur.get(p, 0) + take[p] for p in latest}
-            # monotone clamp — see the anchor comment in __init__
-            latest = {p: max(v, cur.get(p, 0)) for p, v in latest.items()}
-        self._last_end = dict(latest)
-        # persist per POLL, not just per commit(): the engine's commit
-        # callback fires at the NEXT batch's start, so a run that stops
-        # after its last batch would otherwise leave the cursor a batch
-        # behind — and a single-batch run would never write it at all.
-        # A cursor at most one PLANNED batch ahead of the checkpoint is
-        # safe: fetch ranges always come from the engine's start, so a
-        # crash before the batch commits only means the next
-        # incarnation's first capped batch covers that batch again.
-        self._save_cursor(latest)
-        return latest
+    def read(self, start: dict):
+        latest = {
+            str(p): self._list(p)
+            for p in kafka_partitions(self._host, self._port, self._topic)
+        }
+        # topic partition-set change since ``start``. Kafka topics only
+        # ever GAIN partitions; a partition disappearing from metadata
+        # means the topic was deleted/recreated — offsets are
+        # meaningless, fail loudly instead of silently replaying or
+        # skipping (the jar connector errors here too).
+        gone = sorted(set(start) - set(latest))
+        if gone:
+            raise ValueError(
+                f"kafka_wire: partitions {gone} of topic "
+                f"{self._topic!r} vanished from broker metadata — "
+                "topics cannot shrink, so the topic was deleted or "
+                "recreated; restart the stream with a fresh checkpoint"
+            )
+        start = self._from_earliest(start, latest)
+        end = _capped_end(start, latest, self._max)
+        # a list iterator, not a generator: the engine copies the
+        # iterator it caches for the batch
+        return iter(self._rows(start, end)), end
 
-    def partitions(self, start: dict, end: dict):
-        out = []
-        for p, e in end.items():
-            s = start.get(p, 0)
-            if e < s:
-                # the offset chain regressed: our latestOffset returned
-                # less than the engine's restored position. With the
-                # monotone cursor this only happens on external
-                # tampering (a hand-edited/copied rateCursorDir) — fail
-                # LOUDLY: silently skipping would make the engine chain
-                # the NEXT batch from the regressed end and re-deliver
-                # committed offsets (observed engine behavior)
-                raise ValueError(
-                    f"kafka_wire: batch end {e} < start {s} for "
-                    f"{self._topic}/{p} — the rate cursor regressed "
-                    "below the stream's checkpointed position (stale or "
-                    "foreign rateCursorDir?). The regressed range is "
-                    "already in the engine's offset WAL: restart the "
-                    "stream with a FRESH checkpoint and delete the "
-                    "cursor dir with it"
-                )
-            if e > s:
-                out.append(_RangePartition(
-                    self._host, self._port, self._topic, int(p), int(s), int(e)
-                ))
-        return out
-
-    def read(self, partition):
-        yield from _fetch_range(partition)
+    def readBetweenOffsets(self, start: dict, end: dict):
+        return iter(self._rows(self._from_earliest(start, end), end))
 
     def commit(self, end: dict) -> None:
-        # offsets live in the engine's checkpoint; the sidecar cursor
-        # only re-arms the rate limiter across driver incarnations
-        self._save_cursor(end)
         if self._commit_group:
             # mirror the ENGINE-committed position to the broker
             # (OffsetCommit as a simple consumer) so external lag
@@ -474,9 +381,8 @@ class KafkaWireDataSource(DataSource):
     the public wire protocol. Options: ``bootstrap`` (host:port,
     required), ``topic`` (default binance_trades_raw),
     ``startingOffsets`` (earliest|latest, streaming reads),
-    ``maxOffsetsPerTrigger`` (streaming reads), ``rateCursorDir``
-    (driver-local dir persisting the rate cursor so the limit also
-    caps the first batch after a restart), ``commitToBroker`` (a
+    ``maxOffsetsPerTrigger`` (streaming reads; caps every micro-batch,
+    the first after a restart included), ``commitToBroker`` (a
     consumer-group id; when set, engine-committed offsets are mirrored
     to the broker via OffsetCommit so external lag tooling sees the
     stream's progress — the jar connector's ``kafka.group.id``),
@@ -510,7 +416,7 @@ class KafkaWireDataSource(DataSource):
     def reader(self, schema) -> DataSourceReader:
         return _KafkaWireBatchReader(self._host, self._port, self._topic)
 
-    def streamReader(self, schema) -> DataSourceStreamReader:
+    def simpleStreamReader(self, schema) -> SimpleDataSourceStreamReader:
         mx = self.options.get("maxoffsetspertrigger")
         return _KafkaWireStreamReader(
             self._host,
@@ -518,7 +424,6 @@ class KafkaWireDataSource(DataSource):
             self._topic,
             self.options.get("startingoffsets", "earliest"),
             int(mx) if mx is not None else None,
-            cursor_dir=self.options.get("ratecursordir"),
             commit_group=self.options.get("committobroker"),
         )
 

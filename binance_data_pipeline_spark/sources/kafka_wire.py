@@ -552,11 +552,14 @@ def kafka_produce(
 
 
 def kafka_fetch(
-    host: str, port: int, topic: str, partition: int, fetch_offset: int = 0
+    host: str, port: int, topic: str, partition: int, fetch_offset: int = 0,
+    end: int | None = None,
 ):
     """Fetch v4 from ``fetch_offset``; returns (high_watermark,
     [(offset, key|None, value|None, timestamp_ms)]) with every batch
-    CRC-verified on decode."""
+    CRC-verified on decode. With ``end`` (exclusive) only records in
+    ``[fetch_offset, end)`` are returned, and batches whose base offset
+    is at or past ``end`` are skipped without decoding."""
     body = io.BytesIO()
     body.write(struct.pack(">iiii", -1, 500, 1, 1 << 24))
     body.write(b"\x00")  # isolation READ_UNCOMMITTED
@@ -579,11 +582,14 @@ def kafka_fetch(
     out = []
     data = record_set or b""
     pos = 0
+    stop = end if end is not None else float("inf")
     while pos < len(data):
         base, batch_len = struct.unpack_from(">qi", data, pos)
+        if base >= stop:
+            break  # batches are offset-ordered: the rest is past ``end``
         batch = data[pos : pos + 12 + batch_len]
         _b, records = decode_record_batch(batch)
-        out.extend(r for r in records if r[0] >= fetch_offset)
+        out.extend(r for r in records if fetch_offset <= r[0] < stop)
         pos += 12 + batch_len
     return hwm, out
 

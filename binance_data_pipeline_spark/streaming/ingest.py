@@ -111,7 +111,6 @@ def read_raw_stream_from_kafka_wire(
     topic: str = "binance_trades_raw",
     starting_offsets: str = "earliest",
     max_offsets_per_trigger: int = MAX_OFFSETS_PER_TRIGGER,
-    rate_cursor_dir: str | None = None,
     commit_to_broker: str | None = None,
 ) -> DataFrame:
     """Kafka source (S3) with NO connector jar: the Python-DataSource
@@ -120,15 +119,6 @@ def read_raw_stream_from_kafka_wire(
     interchangeable with `read_raw_stream_from_kafka` — with the same
     consumer contract as the reference (earliest offsets
     kafka_to_s3_bronze.py:22, 1000-msg trigger bound :78).
-
-    Rate-limit caveat: the Python DataSource API hides the checkpointed
-    position from the reader, so WITHOUT ``rate_cursor_dir`` the first
-    micro-batch of each driver incarnation is uncapped — a restart
-    against a large backlog plans one unbounded catch-up batch. Pass
-    ``rate_cursor_dir`` (a driver-local dir; put it inside the stream's
-    checkpoint location so both are deleted together) and the source
-    persists its own cursor, keeping ``max_offsets_per_trigger`` in
-    force across restarts.
 
     ``commit_to_broker``: optional consumer-group id; engine-committed
     offsets are mirrored to the broker (OffsetCommit) so external lag
@@ -146,8 +136,6 @@ def read_raw_stream_from_kafka_wire(
         .option("startingOffsets", starting_offsets)
         .option("maxOffsetsPerTrigger", str(max_offsets_per_trigger))
     )
-    if rate_cursor_dir:
-        reader = reader.option("rateCursorDir", rate_cursor_dir)
     if commit_to_broker:
         reader = reader.option("commitToBroker", commit_to_broker)
     return kafka_records_to_raw(reader.load())
@@ -163,8 +151,8 @@ def _rate_limited_python_source(df: DataFrame) -> bool:
     """True when the stream reads a rate-limited Python DataSource
     (kafka_wire with maxOffsetsPerTrigger): the engine silently
     degrades ``Trigger.AvailableNow`` on Python sources to a SINGLE
-    batch (warning-only), so the rate limit is lost exactly when it
-    matters — draining a backlog."""
+    batch (warning-only), and that batch stops at the cap — a backlog
+    beyond it is not drained but left in Kafka for the next start."""
     try:
         plan = df._jdf.queryExecution().analyzed().toString()
     except Exception:
@@ -184,10 +172,11 @@ def start_bronze_ingest(
     checkpointed. `available_now=True` drains the source then stops
     (test/backfill mode) — refused for a rate-limited ``kafka_wire``
     source unless ``allow_unbounded_drain=True``, because the engine
-    silently runs Python-DataSource availableNow as ONE batch, turning
-    the bounded drain into exactly the unbounded catch-up batch
-    ``maxOffsetsPerTrigger`` exists to prevent; use the processingTime
-    trigger + ``q.processAllAvailable()`` for a bounded drain."""
+    silently runs Python-DataSource availableNow as ONE batch capped at
+    ``maxOffsetsPerTrigger``: a backlog above the cap is NOT drained,
+    the rest stays in Kafka until the next start. Pass the flag when
+    the backlog is known to fit under the cap; use the processingTime
+    trigger + ``q.processAllAvailable()`` to drain a larger one."""
     if (
         available_now
         and not allow_unbounded_drain
@@ -195,10 +184,11 @@ def start_bronze_ingest(
     ):
         raise ValueError(
             "availableNow on a rate-limited kafka_wire stream runs as a "
-            "SINGLE unbounded batch (Python DataSource engine fallback "
-            "drops maxOffsetsPerTrigger). Drain with the processingTime "
-            "trigger + q.processAllAvailable(), or pass "
-            "allow_unbounded_drain=True if the backlog is known-small."
+            "SINGLE batch capped at maxOffsetsPerTrigger (Python "
+            "DataSource engine fallback), so a larger backlog is not "
+            "drained. Drain with the processingTime trigger + "
+            "q.processAllAvailable(), or pass allow_unbounded_drain=True "
+            "if the backlog is known to fit under the cap."
         )
     writer = (
         bronze_stream(raw)

@@ -147,7 +147,6 @@ def main() -> int:
         raw = read_raw_stream_from_kafka_wire(
             spark, bootstrap, topic=TOPIC,
             max_offsets_per_trigger=args.rate * args.trigger_sec * 4,
-            rate_cursor_dir=f"{args.base}/cursor",
             commit_to_broker=GROUP,
         )
         batches: list[dict] = []
@@ -265,8 +264,7 @@ def main() -> int:
         # ---- aggregate -------------------------------------------------
         nonempty = [b for b in batches if b["rows"]]
         # steady state excludes the first two data batches: batch 0 pays
-        # JVM/codegen warmup plus the uncapped first poll (documented
-        # rate-limit caveat), batch 1 its backlog ripple — both reported
+        # JVM/codegen warmup, batch 1 its backlog ripple — both reported
         # separately below, neither representative of hour-N behavior
         steady = nonempty[2:] if len(nonempty) > 4 else nonempty
         lats_p50 = sorted(b["p50_ms"] for b in steady)

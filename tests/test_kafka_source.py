@@ -113,12 +113,12 @@ def test_rate_limit_splits_into_multiple_batches(spark, tmp_path):
     1000-msg flush, scaled down) across several commits, with no replay
     or gap even when the capped ranges cut through RecordBatch
     boundaries (the overlap-fetch + client-filter contract). The cap
-    applies from the SECOND batch of an incarnation — the first poll
-    must return the log end to stay monotone (see kafka_source.py) —
-    so the capped wave is produced while the stream is already running."""
+    applies from the first batch (the reader plans from the engine's
+    start offset); wave B is produced while the stream is already
+    running, so it is drained by a live query rather than a start."""
     out, ckpt = str(tmp_path / "bronze"), str(tmp_path / "ckpt")
     with MiniKafkaBroker() as broker:
-        # wave A: drained by the (uncapped) first batch
+        # wave A: under the cap, drained by the first batch
         _produce_messages(broker.port, FX.raw_ws_messages(n=20, seed=8), batch=1000)
         raw = read_raw_stream_from_kafka_wire(
             spark, f"127.0.0.1:{broker.port}", max_offsets_per_trigger=30
@@ -146,6 +146,113 @@ def test_rate_limit_splits_into_multiple_batches(spark, tmp_path):
     commits = [f for f in os.listdir(f"{ckpt}/commits") if not f.startswith(".")]
     # wave B alone needs >= 200/30 capped batches
     assert len(commits) - n_commits_wave_a >= 200 // 30
+
+
+def test_backlog_is_capped_from_the_first_batch(spark, tmp_path):
+    """A fresh stream against a backlog above maxOffsetsPerTrigger: the
+    reader plans from the engine's start offset, so EVERY micro-batch —
+    the first included — stays at or under the cap, and the capped
+    ranges still compose to an exact, duplicate-free drain."""
+    out, ckpt = str(tmp_path / "bronze"), str(tmp_path / "ckpt")
+    with MiniKafkaBroker() as broker:
+        _produce_messages(broker.port, FX.raw_ws_messages(n=120, seed=51), batch=1000)
+        raw = read_raw_stream_from_kafka_wire(
+            spark, f"127.0.0.1:{broker.port}", max_offsets_per_trigger=50
+        )
+        q = start_bronze_ingest(raw, out, ckpt, trigger_interval="1 seconds")
+        try:
+            q.processAllAvailable()
+            batches = [p["numInputRows"] for p in q.recentProgress]
+        finally:
+            q.stop()
+    assert sum(batches) == 120
+    assert max(batches) <= 50, f"batch above the cap: {batches}"
+    got = spark.read.parquet(out)
+    expected = FX.expected_trade_count(n=120, seed=51)
+    assert got.count() == expected
+    assert got.select("trade_id").distinct().count() == expected
+
+
+def test_available_now_takes_one_capped_batch_per_start(spark, tmp_path):
+    """availableNow on a Python source runs ONE batch, and with this
+    reader that batch stops at maxOffsetsPerTrigger: a backlog above
+    the cap commits exactly one cap, and the next start takes the rest
+    — no loss, no duplicate."""
+    out, ckpt = str(tmp_path / "bronze"), str(tmp_path / "ckpt")
+
+    def drain(bootstrap):
+        q = start_bronze_ingest(
+            read_raw_stream_from_kafka_wire(spark, bootstrap, max_offsets_per_trigger=50),
+            out, ckpt, available_now=True, allow_unbounded_drain=True,
+        )
+        q.awaitTermination(120)
+        return [p["numInputRows"] for p in q.recentProgress]
+
+    with MiniKafkaBroker() as broker:
+        bootstrap = f"127.0.0.1:{broker.port}"
+        _produce_messages(broker.port, FX.raw_ws_messages(n=80, seed=52), batch=1000)
+        assert drain(bootstrap) == [50]
+        assert len([f for f in os.listdir(f"{ckpt}/commits") if f.isdigit()]) == 1
+        assert drain(bootstrap) == [30]
+    got = spark.read.parquet(out)
+    expected = FX.expected_trade_count(n=80, seed=52)
+    assert got.count() == expected
+    assert got.select("trade_id").distinct().count() == expected
+
+
+def test_uncommitted_batch_is_replayed_exactly(spark, tmp_path):
+    """A batch whose offsets are in the WAL but whose commit is missing
+    (a crash between sink write and commit) is re-read on restart
+    through ``readBetweenOffsets``: the replayed batch holds exactly the
+    rows the original run wrote, and nothing else is delivered."""
+    import shutil
+
+    base, ckpt = tmp_path / "sink", str(tmp_path / "ckpt")
+
+    def sink(df, batch_id):
+        # the idempotent foreachBatch shape: one dir per batch id
+        df.write.mode("overwrite").parquet(str(base / f"batch={batch_id}"))
+
+    def run(bootstrap):
+        src = (
+            spark.readStream.format("kafka_wire")
+            .option("bootstrap", bootstrap)
+            .option("maxOffsetsPerTrigger", "30")
+            .load()
+            .selectExpr("partition", "offset", "CAST(value AS STRING) AS value")
+        )
+        q = (
+            src.writeStream.foreachBatch(sink)
+            .option("checkpointLocation", ckpt)
+            .trigger(processingTime="1 seconds")
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    def rows(batch_id):
+        df = spark.read.parquet(str(base / f"batch={batch_id}"))
+        return sorted(tuple(r) for r in df.collect())
+
+    with MiniKafkaBroker() as broker:
+        bootstrap = f"127.0.0.1:{broker.port}"
+        register_kafka_wire_source(spark)
+        _produce_messages(broker.port, [json.dumps({"i": i}) for i in range(70)],
+                          batch=1000)
+        run(bootstrap)
+        last = max(int(f) for f in os.listdir(f"{ckpt}/commits") if f.isdigit())
+        original = rows(last)
+        assert 0 < len(original) <= 30
+        for f in (f"{last}", f".{last}.crc"):  # the commit and its checksum
+            os.remove(f"{ckpt}/commits/{f}")
+        shutil.rmtree(base / f"batch={last}")
+        run(bootstrap)
+        assert os.path.exists(f"{ckpt}/commits/{last}")
+        assert rows(last) == original
+    all_rows = [r for b in range(last + 1) for r in rows(b)]
+    assert len(all_rows) == len(set(all_rows)) == 70
 
 
 def test_batch_read_offsets_and_payloads(spark):
@@ -327,30 +434,27 @@ def test_keyed_routing_uses_kafka_murmur2():
     assert (_murmur2(b"foobar") & 0x7FFFFFFF) % 3 == (-790332482 & 0x7FFFFFFF) % 3
 
 
-def test_restart_after_backlog_is_capped_with_rate_cursor(spark, tmp_path):
-    """rateCursorDir closes the uncapped-first-batch gap: the reader
-    persists its own cursor in commit() (always <= the engine's
-    checkpoint), so a restart against a large backlog plans CAPPED
-    catch-up batches — the exact stall/OOM case maxOffsetsPerTrigger
-    (the reference's 1000-msg bound) exists for."""
+def test_restart_after_backlog_is_capped(spark, tmp_path):
+    """The reader plans each batch from the engine's checkpointed start
+    offset, so a restart against a large backlog plans CAPPED catch-up
+    batches — the exact stall/OOM case maxOffsetsPerTrigger (the
+    reference's 1000-msg bound) exists for."""
     out, ckpt = str(tmp_path / "bronze"), str(tmp_path / "ckpt")
-    cursor = f"{ckpt}/kafka_wire_cursor"
     with MiniKafkaBroker() as broker:
         bootstrap = f"127.0.0.1:{broker.port}"
         _produce_messages(broker.port, FX.raw_ws_messages(n=20, seed=21), batch=1000)
         raw = read_raw_stream_from_kafka_wire(
-            spark, bootstrap, max_offsets_per_trigger=30, rate_cursor_dir=cursor
+            spark, bootstrap, max_offsets_per_trigger=30
         )
         q = start_bronze_ingest(raw, out, ckpt, trigger_interval="1 seconds")
         q.processAllAvailable()
         q.stop()
-        assert os.path.exists(f"{cursor}/offsets.json")  # cursor persisted
 
         # backlog lands while the stream is DOWN — the first batch of
-        # the next incarnation is the one the cursor must cap
+        # the next incarnation is the one the cap must hold on
         _produce_messages(broker.port, FX.raw_ws_messages(n=200, seed=22), batch=1000)
         raw2 = read_raw_stream_from_kafka_wire(
-            spark, bootstrap, max_offsets_per_trigger=30, rate_cursor_dir=cursor
+            spark, bootstrap, max_offsets_per_trigger=30
         )
         q2 = start_bronze_ingest(raw2, out, ckpt, trigger_interval="1 seconds")
         q2.processAllAvailable()
@@ -442,13 +546,13 @@ def test_commit_to_broker_mirrors_checkpoint(spark, tmp_path):
 
 def test_available_now_refused_on_rate_limited_kafka_wire(spark, tmp_path):
     """The engine silently runs Python-DataSource availableNow as ONE
-    batch, dropping maxOffsetsPerTrigger — the ingest helper refuses
-    instead of silently losing the bound (escape hatch for known-small
-    backlogs)."""
+    batch capped at maxOffsetsPerTrigger, so a larger backlog would not
+    be drained — the ingest helper refuses instead of silently leaving
+    it behind (escape hatch for backlogs known to fit under the cap)."""
     with MiniKafkaBroker() as broker:
         _produce_messages(broker.port, FX.raw_ws_messages(n=5, seed=1))
         raw = read_raw_stream_from_kafka_wire(spark, f"127.0.0.1:{broker.port}")
-        with pytest.raises(ValueError, match="unbounded batch"):
+        with pytest.raises(ValueError, match="SINGLE batch capped"):
             start_bronze_ingest(
                 raw, str(tmp_path / "o"), str(tmp_path / "c"), available_now=True
             )
@@ -492,75 +596,5 @@ def test_partition_added_mid_stream_drains_from_earliest(spark, tmp_path):
         kafka_produce("127.0.0.1", broker.port, "t1", 0, [(None, b"x", 0)])
         rdr = _KafkaWireStreamReader("127.0.0.1", broker.port, "t1",
                                      "earliest", None)
-        rdr._last_end = {"0": 1, "1": 1}  # reader believes partition 1 exists
         with pytest.raises(ValueError, match="vanished"):
-            rdr.latestOffset()
-
-
-def test_tampered_rate_cursor_fails_loudly_then_recovers(spark, tmp_path):
-    """The cursor file is persisted MONOTONE (commit() reporting an older
-    batch can never regress it), so a cursor below the checkpoint only
-    arises from external tampering — and then the source must fail
-    LOUDLY instead of silently re-delivering: the engine chains batch
-    starts from the reader's previous return, so a regressed return
-    poisons the chain into replaying committed offsets (observed).
-    Deleting the cursor dir and restarting drains exactly-once."""
-    import json as _json
-
-    out, ckpt = str(tmp_path / "bronze"), str(tmp_path / "ckpt")
-    cursor = f"{ckpt}/kafka_wire_cursor"
-    with MiniKafkaBroker() as broker:
-        bootstrap = f"127.0.0.1:{broker.port}"
-        _produce_messages(broker.port, FX.raw_ws_messages(n=50, seed=41), batch=1000)
-        raw = read_raw_stream_from_kafka_wire(
-            spark, bootstrap, max_offsets_per_trigger=30, rate_cursor_dir=cursor
-        )
-        q = start_bronze_ingest(raw, out, ckpt, trigger_interval="1 seconds")
-        q.processAllAvailable()
-        q.stop()
-        n1 = spark.read.parquet(out).count()
-        assert n1 == FX.expected_trade_count(n=50, seed=41)
-
-        # tamper: regress the cursor to zero, strictly below the checkpoint
-        with open(f"{cursor}/offsets.json") as fh:
-            cur = _json.load(fh)
-        with open(f"{cursor}/offsets.json", "w") as fh:
-            _json.dump({k: 0 for k in cur}, fh)
-
-        _produce_messages(broker.port, FX.raw_ws_messages(n=40, seed=42), batch=1000)
-        raw2 = read_raw_stream_from_kafka_wire(
-            spark, bootstrap, max_offsets_per_trigger=30, rate_cursor_dir=cursor
-        )
-        q2 = start_bronze_ingest(raw2, out, ckpt, trigger_interval="1 seconds")
-        failed = None
-        try:
-            q2.processAllAvailable()
-        except Exception as e:  # loud refusal, not silent replay
-            failed = str(e)
-        finally:
-            q2.stop()
-        assert failed and "regressed below" in failed, failed
-        # nothing was silently replayed into the sink by the poisoned run
-        assert spark.read.parquet(out).count() == n1
-
-        # remediation (as the error instructs): fresh checkpoint + fresh
-        # cursor — the full re-drain lands exactly once in a fresh sink
-        import shutil
-
-        shutil.rmtree(cursor)
-        out2, ckpt2 = str(tmp_path / "bronze2"), str(tmp_path / "ckpt2")
-        raw3 = read_raw_stream_from_kafka_wire(
-            spark, bootstrap, max_offsets_per_trigger=30,
-            rate_cursor_dir=f"{ckpt2}/kafka_wire_cursor",
-        )
-        q3 = start_bronze_ingest(raw3, out2, ckpt2, trigger_interval="1 seconds")
-        q3.processAllAvailable()
-        q3.stop()
-    got = spark.read.parquet(out2)
-    expected = FX.expected_trade_count(n=50, seed=41) + FX.expected_trade_count(
-        n=40, seed=42
-    )
-    assert got.count() == expected  # full re-drain, no loss
-    assert (
-        got.select("trade_id", "price", "quantity").distinct().count() == expected
-    )  # no replay
+            rdr.read({"0": 1, "1": 1})  # start names a partition 1

@@ -92,6 +92,39 @@ def test_produce_fetch_over_real_socket_offsets_and_keys():
         assert [(o, v) for o, _, v, _ in tail] == [(2, b"v2")]
 
 
+def test_fetch_with_end_decodes_only_overlapping_batches(monkeypatch):
+    """``kafka_fetch(..., end)`` returns exactly ``[start, end)`` and
+    stops at the first batch whose base offset is at or past ``end``
+    without decoding it — every returned record still comes from a
+    CRC-verified batch."""
+    from binance_data_pipeline_spark.sources import kafka_wire as KW
+
+    with MiniKafkaBroker() as broker:
+        for b in range(10):  # 10 batches of 5: offsets 5b .. 5b+4
+            kafka_produce(
+                "127.0.0.1", broker.port, "t", 0,
+                [(None, f"v{5 * b + i}".encode(), i) for i in range(5)],
+            )
+        calls = []
+
+        def counting(data, _real=KW.decode_record_batch):
+            calls.append(struct.unpack_from(">q", data, 0)[0])
+            return _real(data)
+
+        monkeypatch.setattr(KW, "decode_record_batch", counting)
+        hwm, recs = kafka_fetch("127.0.0.1", broker.port, "t", 0, 12, 27)
+        assert hwm == 50
+        assert [o for o, *_ in recs] == list(range(12, 27))
+        assert [v for _o, _k, v, _t in recs] == [f"v{o}".encode() for o in range(12, 27)]
+        # the broker returns batches 10..45; only those overlapping
+        # [12, 27) are decoded
+        assert calls == [10, 15, 20, 25]
+
+        calls.clear()
+        _, tail = kafka_fetch("127.0.0.1", broker.port, "t", 0, 45)
+        assert [o for o, *_ in tail] == list(range(45, 50)) and calls == [45]
+
+
 def test_socket_roundtrip_feeds_spark_consumer_chain(spark):
     """End to end minus the connector jar: the reference producer's
     keyed publish (symbol key, JSON envelope value —
@@ -231,7 +264,7 @@ def test_roundtrip_raises_on_immediate_close():
         srv.close()
 
 
-def test_commit_mirror_swallows_malformed_broker_errors(monkeypatch, tmp_path):
+def test_commit_mirror_swallows_malformed_broker_errors(monkeypatch):
     """The broker OffsetCommit mirror is best-effort by contract: a
     truncated response (struct.error) or a malformed one
     (AssertionError) must not escape commit() and fail the streaming
@@ -239,8 +272,7 @@ def test_commit_mirror_swallows_malformed_broker_errors(monkeypatch, tmp_path):
     from binance_data_pipeline_spark.sources import kafka_source as KS
 
     reader = KS._KafkaWireStreamReader(
-        "127.0.0.1", 1, "t", "earliest", None,
-        cursor_dir=str(tmp_path), commit_group="lagmon",
+        "127.0.0.1", 1, "t", "earliest", None, commit_group="lagmon",
     )
 
     for exc in (struct.error("short read"), AssertionError("ntopics"),
