@@ -385,57 +385,68 @@ def emit_result(metric, timings, sf, cal_samples, io_samples,
     print(line)
 
 
-def run_suite(spark, sf_dir, sf, queries, names, metric) -> None:
-    """The headline protocol applied to an alternate query set: untimed
-    warmup of the first query, calibration samples before/between/after,
-    two passes with per-query min, one JSON line."""
+def force(df) -> None:
+    """Full execution through a noop sink: no collect, no output IO."""
+    df.write.format("noop").mode("overwrite").save()
 
-    def force(df) -> None:
-        df.write.format("noop").mode("overwrite").save()
 
-    def time_calibration() -> float:
-        t0 = time.time()
-        force(calibration_query(spark))
-        return round(time.time() - t0, 3)
+def timed(build, *args) -> float:
+    """Seconds to build ``build(*args)`` and force it: the clock includes
+    DataFrame construction (planning, eager checkpoint barriers)."""
+    t0 = time.time()
+    force(build(*args))
+    return round(time.time() - t0, 3)
 
-    def time_io_calibration() -> float:
-        # scan+decode of a fixed real file (page-cache warm after the
-        # first sample): moves with storage/memory-bandwidth tenancy,
-        # which the pure-CPU calibration query cannot see.
+
+def measure(spark, sf_dir, queries, names) -> dict:
+    """The bench protocol shared by every suite: calibration samples
+    (CPU after its own untimed warmup, IO twice, shuffle twice after its
+    own warmup), then two passes over ``names`` keeping the per-query
+    min, with a CPU sample after each pass. Pass 0 runs each query under
+    job group ``bench:<name>`` (read back by ``group_task_count``).
+    Returns ``emit_result``'s measurement arguments."""
+
+    def io_probe():
+        # scan+decode of the sf dir's lineitem file (page-cache warm
+        # after the first sample): moves with storage/memory-bandwidth
+        # tenancy, which the pure-CPU calibration query cannot see.
         from pyspark.sql import functions as F
 
-        t0 = time.time()
-        force(
-            spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-            .agg(F.sum("l_extendedprice"), F.count(F.lit(1)))
+        return spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).agg(
+            F.sum("l_extendedprice"), F.count(F.lit(1))
         )
-        return round(time.time() - t0, 3)
 
-    def time_shuffle_calibration() -> float:
-        t0 = time.time()
-        force(shuffle_calibration_query(spark))
-        return round(time.time() - t0, 3)
-
-    force(queries[names[0]](spark, sf_dir))
-    time_calibration()
-    cal_samples = [time_calibration()]
-    io_samples = [time_io_calibration(), time_io_calibration()]
-    time_shuffle_calibration()  # shuffle probe's own warmup, untimed
-    shuffle_samples = [time_shuffle_calibration(), time_shuffle_calibration()]
+    timed(calibration_query, spark)  # its own codegen warmup, untimed
+    cal_samples = [timed(calibration_query, spark)]
+    io_samples = [timed(io_probe), timed(io_probe)]
+    timed(shuffle_calibration_query, spark)  # its own warmup, untimed
+    shuffle_samples = [timed(shuffle_calibration_query, spark) for _ in range(2)]
     tele0 = host_telemetry()
+    sc = spark.sparkContext
     timings: dict[str, float] = {}
+    # Two passes, report per-query min: the container shows intermittent
+    # multi-second kernel-time stalls (host jitter) that would otherwise
+    # randomly dominate a single measurement. The calibration query is
+    # sampled before, between, and after the passes; its MIN tracks the
+    # best host state the measured mins were taken under.
     for _pass in range(2):
         for name in names:
-            t0 = time.time()
-            force(queries[name](spark, sf_dir))
-            dt = round(time.time() - t0, 3)
-            if name not in timings or dt < timings[name]:
-                timings[name] = dt
-            spark.catalog.clearCache()
-            release_barriers(spark)
-        cal_samples.append(time_calibration())
-    emit_result(metric, timings, sf, cal_samples, io_samples,
-                shuffle_samples, telemetry_delta(tele0, host_telemetry()))
+            if _pass == 0:
+                sc.setJobGroup(f"bench:{name}", name)
+            dt = timed(queries[name], spark, sf_dir)
+            if _pass == 0:
+                sc.setJobGroup(f"bench-cleanup:{name}", name)
+            timings[name] = min(dt, timings.get(name, dt))
+            spark.catalog.clearCache()      # cached tables/DataFrames
+            release_barriers(spark)         # eager localCheckpoint blocks
+        cal_samples.append(timed(calibration_query, spark))
+    return {
+        "timings": timings,
+        "cal_samples": cal_samples,
+        "io_samples": io_samples,
+        "shuffle_samples": shuffle_samples,
+        "telemetry": telemetry_delta(tele0, host_telemetry()),
+    }
 
 
 def main() -> None:
@@ -443,11 +454,10 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else None
 
-    # Optional suites (the driver's per-round run passes no args and gets
-    # the unchanged 25-query headline set): `bench.py --suite tpch` times
-    # the TPC-H completion tier (plans/tpch.py) under the same protocol
-    # (noop sink, two passes, per-query min, calibration normalization)
-    # and prints ONE JSON line with metric "tpch_total_wall".
+    # Optional suites (a run with no args gets the 30-query HEADLINE
+    # set): `bench.py --suite tpch` times the TPC-H completion tier
+    # (plans/tpch.py) under the same protocol (``measure``) and prints
+    # ONE JSON line with metric "tpch_total_wall".
     suite = "headline"
     if "--suite" in sys.argv:
         suite = sys.argv[sys.argv.index("--suite") + 1]
@@ -455,7 +465,18 @@ def main() -> None:
         raise SystemExit(f"unknown suite {suite!r} (headline|tpch)")
 
     spark = get_spark("bdp-bench")
-    spark.sparkContext.setLogLevel("ERROR")
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
+
+    if suite == "tpch":
+        from binance_data_pipeline_spark.plans import tpch as _tpch
+
+        names = sorted(_tpch.QUERIES)
+        force(_tpch.QUERIES[names[0]](spark, sf_dir))  # warmup, untimed
+        emit_result("tpch_total_wall", sf=sf,
+                    **measure(spark, sf_dir, _tpch.QUERIES, names))
+        return
+
     queries = dict(all_queries())
 
     # retrieval serving query: measured leg = the SERVE path (bucket-
@@ -484,18 +505,6 @@ def main() -> None:
         return hybrid_search(s, root, qdf, k=10)
 
     queries["retrieval_hybrid"] = retrieval_hybrid
-
-    def force(df) -> None:
-        df.write.format("noop").mode("overwrite").save()
-
-    if suite == "tpch":
-        from binance_data_pipeline_spark.plans import tpch as _tpch
-
-        run_suite(
-            spark, sf_dir, sf, dict(_tpch.QUERIES), sorted(_tpch.QUERIES),
-            metric="tpch_total_wall",
-        )
-        return
 
     state = tmp_state()  # recorded BEFORE the pre-warm builds anything
     # warmup: exercise parquet reader + codegen before measuring
@@ -527,62 +536,11 @@ def main() -> None:
         )
         release_barriers(spark)
 
-    def time_calibration() -> float:
-        t0 = time.time()
-        force(calibration_query(spark))
-        return round(time.time() - t0, 3)
-
-    # Two passes, report per-query min: the container shows intermittent
-    # multi-second kernel-time stalls (host jitter) that would otherwise
-    # randomly dominate a single measurement. The calibration query is
-    # sampled before, between, and after the passes; its MIN tracks the
-    # best host state the measured mins were taken under.
-    def time_io_calibration() -> float:
-        # scan+decode of the sf dir's lineitem file (page-cache warm
-        # after the first sample): moves with storage/memory-bandwidth
-        # tenancy, which the pure-CPU calibration query cannot see.
-        from pyspark.sql import functions as F
-
-        t0 = time.time()
-        force(
-            spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-            .agg(F.sum("l_extendedprice"), F.count(F.lit(1)))
-        )
-        return round(time.time() - t0, 3)
-
-    def time_shuffle_calibration() -> float:
-        t0 = time.time()
-        force(shuffle_calibration_query(spark))
-        return round(time.time() - t0, 3)
-
-    time_calibration()  # calibration's own codegen warmup, untimed
-    cal_samples = [time_calibration()]
-    io_samples = [time_io_calibration(), time_io_calibration()]
-    time_shuffle_calibration()  # shuffle probe's own warmup, untimed
-    shuffle_samples = [time_shuffle_calibration(), time_shuffle_calibration()]
-    tele0 = host_telemetry()
-    sc = spark.sparkContext
-    timings: dict[str, float] = {}
-    for _pass in range(2):
-        for name in HEADLINE:
-            if _pass == 0:
-                sc.setJobGroup(f"bench:{name}", name)
-            t0 = time.time()
-            force(queries[name](spark, sf_dir))
-            dt = round(time.time() - t0, 3)
-            if _pass == 0:
-                sc.setJobGroup(f"bench-cleanup:{name}", name)
-            if name not in timings or dt < timings[name]:
-                timings[name] = dt
-            spark.catalog.clearCache()      # cached tables/DataFrames
-            release_barriers(spark)         # eager localCheckpoint blocks
-        cal_samples.append(time_calibration())
+    measured = measure(spark, sf_dir, queries, HEADLINE)
 
     # scale probe: timed once, after the measured passes (its 100M-row
     # shuffle would perturb nothing but still runs outside the windows)
-    t0 = time.time()
-    force(scale_probe_query(spark))
-    scale_probe_sec = round(time.time() - t0, 3)
+    scale_probe_sec = timed(scale_probe_query, spark)
 
     extra = {
         "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0)
@@ -592,9 +550,7 @@ def main() -> None:
         "scale_probe_sec": scale_probe_sec,
         "query_tasks": {n: group_task_count(sc, f"bench:{n}") for n in HEADLINE},
     }
-    emit_result("headline_total_wall", timings, sf, cal_samples,
-                io_samples, shuffle_samples,
-                telemetry_delta(tele0, host_telemetry()), extra=extra)
+    emit_result("headline_total_wall", sf=sf, extra=extra, **measured)
 
 
 if __name__ == "__main__":

@@ -22,8 +22,6 @@ quality_rules    Gopher/C4 structural rule bundles + per-domain gate
 quality_classifier  trainable hashed-n-gram logistic quality filter (FineWeb-Edu recipe)
 dsir             DSIR importance resampling (target-distribution matching, Gumbel top-k)
 vocab            token/n-gram frequencies, top-k vocab, IDF
-bpe              trainable byte-pair encoding (distributed counts, Arrow apply)
-unigram          trainable unigram-LM tokenizer (SentencePiece recipe: EM + prune, Viterbi apply)
 bm25             BM25 retrieval + persisted term-bucket index + RRF hybrid fusion
 mining           hard-negative mining (BM25 candidates × embedding ceiling)
 retrieval        serving root: BM25+IVF build + RRF hybrid search + injectable rerank
@@ -31,7 +29,6 @@ graph            PageRank centrality + hierarchy levels / transitive closure (fr
 behavior         funnel conversion + cohort retention over event streams
 scd              SCD Type 2 dimension merge + point-in-time lookup join
 anomaly          rolling z-score / robust IQR / seasonal-residual flags
-langid           trainable language ID (multinomial logistic, char n-grams)
 tfidf            map-only TF-IDF / hashing-trick featurization
 features         fit/transform feature engineering (scaling, binning, one-hot, target encoding)
 sampling         deterministic sampling / token budgets / domain caps / mixing / shuffle / packing / split
@@ -53,8 +50,4 @@ skipping         file-level min/max data-skipping index
 snapshots        snapshot-versioned tables (atomic commits, time travel, rollback, vacuum, exactly-once streaming appends)
 mview            incrementally maintained materialized aggregate views (change-feed fold, exactly-once cursor-in-manifest)
 export           sharded manifest-gated training-data export (jsonl[.gz]/parquet/WebDataset tar)
-multimodal       binary-column plumbing; real PPM/PNG/WAV codecs (BMP/ICO via bmp/ico), PIL autodetect, decode quarantine
-bmp              BMP codec (palette/16/24/32-bit, BITFIELDS, RLE8/RLE4, top-down/bottom-up)
-media_quality    LAION-style image curation gate (JVM rules over feature vectors, per-source thresholds)
-ico              ICO/favicon codec (PNG + classic doubled-height DIB members, AND-mask/alpha compositing)
 """

@@ -74,9 +74,9 @@ def hash_encoder(
 
     ``analyzer="word"`` (default) uses word uni- and bi-grams —
     whitespace languages. ``analyzer="char"`` uses character n-grams in
-    the ``char_ngram`` length range — the langid.py lesson applied to
-    embeddings: scripts without whitespace (CJK, Thai) tokenize to one
-    giant "word", so word mode can't discriminate; char n-grams can."""
+    the ``char_ngram`` length range, for scripts without whitespace (CJK,
+    Thai): they tokenize to one giant "word", so word mode can't
+    discriminate; char n-grams can."""
     if dim < 2:
         raise ValueError("dim must be >= 2")
     if analyzer not in ("word", "char"):

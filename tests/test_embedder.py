@@ -129,7 +129,7 @@ def test_plan_is_map_only_arrow(docs):
 def test_char_analyzer_discriminates_whitespace_free_text(spark):
     """Scripts without whitespace collapse to one word-gram per doc, so
     word mode can't tell near-dups from unrelated docs — char n-grams
-    can (the langid.py design rationale, applied to embeddings)."""
+    can."""
     a = "深度学习模型在大规模数据集上训练效果显著提升性能"
     b = "深度学习模型在大规模数据集上训练效果显著提升表现"   # near-dup
     c = "今天天气晴朗适合户外跑步和登山活动呼吸新鲜空气"     # unrelated

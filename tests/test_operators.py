@@ -1,5 +1,5 @@
 """Operator-level tests: as-of join vs pandas merge_asof, REST backfill
-grid/fetch, multimodal plumbing, LSH recall vs exact baselines."""
+grid/fetch, LSH recall vs exact baselines."""
 
 from __future__ import annotations
 
@@ -15,13 +15,6 @@ from binance_data_pipeline_spark.catalog import load_table
 from binance_data_pipeline_spark.operators.asof import asof_join
 from binance_data_pipeline_spark.operators import dedup as D
 from binance_data_pipeline_spark.operators import similarity as S
-from binance_data_pipeline_spark.operators.multimodal import (
-    decode_stub,
-    deterministic_fake_decoder,
-    extract_features,
-    media_stats,
-    MEDIA_SCHEMA,
-)
 from binance_data_pipeline_spark.sources.rest_backfill import (
     fake_fetcher_from_events,
     fetch_grid,
@@ -199,526 +192,6 @@ def test_fetch_trades_distributed(spark):
         raise RuntimeError("offline")
 
     assert fetch_trades(grid, boom).count() == 0
-
-
-# ------------------------------------------------------------- multimodal
-
-@pytest.fixture(scope="module")
-def media_df(spark):
-    rows = [
-        (i, "image", "image/png", bytes([i % 256] * (100 + i)), 64, 64, None)
-        for i in range(20)
-    ] + [(100 + i, "audio", "audio/wav", bytes([7, i % 256] * 500), None, None, 1000 + i) for i in range(5)]
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def test_extract_features_fake_decoder(media_df):
-    feats = extract_features(media_df, deterministic_fake_decoder(dim=8))
-    rows = feats.collect()
-    assert len(rows) == 25
-    assert all(len(r["feature"]) == 8 for r in rows)
-    # deterministic: same payload → same hash/feature
-    again = extract_features(media_df, deterministic_fake_decoder(dim=8)).collect()
-    assert {r["media_id"]: r["payload_hash"] for r in rows} == {
-        r["media_id"]: r["payload_hash"] for r in again
-    }
-
-
-@pytest.fixture(scope="module")
-def real_media_df(spark):
-    """Media table whose payloads are REAL decodable formats: P6 PPM images
-    and 16-bit PCM WAVs built by the module's own synthetic fixtures."""
-    from binance_data_pipeline_spark.operators.multimodal import (
-        PPM_MIME,
-        WAV_MIME,
-        synthetic_ppm,
-        synthetic_wav,
-    )
-
-    rows = [
-        (i, "image", PPM_MIME, synthetic_ppm(32, 24, seed=i), 32, 24, None)
-        for i in range(6)
-    ] + [
-        (100 + i, "audio", WAV_MIME, synthetic_wav(250, 440.0 * (i + 1), seed=i), None, None, 250)
-        for i in range(3)
-    ]
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def test_extract_features_real_codecs_end_to_end(real_media_df):
-    """The un-stubbed path: PPM + WAV payloads decode inside mapInPandas
-    with the dependency-free baseline_decoder — real pixels/samples, real
-    features, no injected fakes."""
-    from binance_data_pipeline_spark.operators.multimodal import baseline_decoder
-
-    rows = {r["media_id"]: r for r in extract_features(real_media_df, baseline_decoder).collect()}
-    assert len(rows) == 9
-    img = rows[0]
-    # width/height recovered from the actual PPM header
-    assert img["feature"][0] == 32.0 and img["feature"][1] == 24.0
-    # gradient image: mean red ≈ mid-scale, edge energy > 0
-    assert 0.0 < img["feature"][2] < 255.0 and img["feature"][6] > 0.0
-    wav = rows[100]
-    dur, rms, zcr, peak = wav["feature"][:4]
-    assert abs(dur - 0.25) < 1e-6          # 250 ms decoded from frames/rate
-    assert abs(rms - 0.7) < 0.05           # sine RMS ≈ amplitude/√2 ≈ 0.69
-    assert abs(peak - 32000 / 32768) < 0.01
-    # 440 Hz at 8 kHz → ~880 crossings/s → zcr ≈ 0.11
-    assert 0.08 < zcr < 0.14
-    # distinct payloads → distinct features
-    assert rows[100]["feature"] != rows[101]["feature"]
-
-
-def test_resize_real_ppm_roundtrip(real_media_df):
-    """Resize runs the real nearest-neighbor kernel and emits VALID PPM
-    bytes: decodable, right dimensions, colors preserved from the source
-    gradient."""
-    from binance_data_pipeline_spark.operators.multimodal import (
-        baseline_resizer,
-        decode_ppm,
-        resize_images,
-    )
-
-    out = {r["media_id"]: r for r in
-           resize_images(real_media_df, 8, 6, baseline_resizer).collect()}
-    assert len(out) == 6  # only image rows enter the resize pass
-    for r in out.values():
-        w, h, px = decode_ppm(bytes(r["payload"]))
-        assert (w, h) == (8, 6) and px.shape == (6, 8, 3)
-    # nearest-neighbor of the x-gradient keeps monotone red channel
-    _, _, px = decode_ppm(bytes(out[0]["payload"]))
-    reds = px[0, :, 0].astype(int)
-    assert all(reds[i] <= reds[i + 1] for i in range(len(reds) - 1))
-
-
-def test_baseline_decoder_rejects_undecodable_mime():
-    from binance_data_pipeline_spark.operators.multimodal import baseline_decoder
-
-    # formats beyond the native codec tier stay stubbed
-    with pytest.raises(NotImplementedError):
-        baseline_decoder(b"????ftypheic", "image/heic")
-    with pytest.raises(NotImplementedError):
-        baseline_decoder(b"\xff\xd8\xff\xe0jfif-but-garbage", "image/jpeg")
-    # malformed payloads for SUPPORTED formats are data errors, not stubs
-    with pytest.raises(ValueError):
-        baseline_decoder(b"\x89PNG\r\n\x1a\ngarbage", "image/png")
-    with pytest.raises(ValueError):
-        baseline_decoder(b"BM-but-truncated", "image/bmp")
-
-
-# ------------------------------------------------------------- PNG codec
-
-def _reference_png(px, color_type, filters, palette=None):
-    """Hand-rolled PNG writer used ONLY as test input: encodes with a
-    CHOSEN filter type per scanline (the module encoder always uses 0), so
-    decode_png's unfilter paths are each exercised against independently
-    computed filtered bytes."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    px = np.asarray(px, dtype=np.uint8)
-    h = px.shape[0]
-    flat = px.reshape(h, -1).astype(np.int32)
-    stride = flat.shape[1]
-    c = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}[color_type]
-    raw = bytearray()
-    prev = np.zeros(stride, np.int32)
-    for y in range(h):
-        row = flat[y]
-        f = filters[y % len(filters)]
-        out = np.zeros(stride, np.int32)
-        for x in range(stride):
-            left = row[x - c] if x >= c else 0
-            up = prev[x]
-            ul = prev[x - c] if x >= c else 0
-            if f == 0:
-                pred = 0
-            elif f == 1:
-                pred = left
-            elif f == 2:
-                pred = up
-            elif f == 3:
-                pred = (left + up) >> 1
-            else:
-                p = left + up - ul
-                pa, pb, pc = abs(p - left), abs(p - up), abs(p - ul)
-                pred = left if (pa <= pb and pa <= pc) else (up if pb <= pc else ul)
-            out[x] = (row[x] - pred) & 0xFF
-        raw += bytes([f]) + bytes(out.astype(np.uint8))
-        prev = row
-    def chunk(t, d):
-        return struct.pack(">I", len(d)) + t + d + struct.pack(">I", zlib.crc32(t + d) & 0xFFFFFFFF)
-    w = px.shape[1]
-    body = chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0))
-    if palette is not None:
-        body += chunk(b"PLTE", bytes(np.asarray(palette, np.uint8).ravel()))
-    body += chunk(b"IDAT", zlib.compress(bytes(raw))) + chunk(b"IEND", b"")
-    return b"\x89PNG\r\n\x1a\n" + body
-
-
-def test_png_roundtrip_bit_exact():
-    import numpy as np
-
-    from binance_data_pipeline_spark.operators.multimodal import decode_png, encode_png
-
-    rng = np.random.default_rng(7)
-    px = rng.integers(0, 256, size=(13, 9, 3), dtype=np.uint8)
-    w, h, back = decode_png(encode_png(px))
-    assert (w, h) == (9, 13)
-    assert (back == px).all()
-
-
-def test_png_unfilter_all_five_filter_types():
-    """Every PNG filter type (None/Sub/Up/Average/Paeth) decoded against a
-    reference filtering implemented independently in the test."""
-    import numpy as np
-
-    from binance_data_pipeline_spark.operators.multimodal import decode_png
-
-    rng = np.random.default_rng(11)
-    px = rng.integers(0, 256, size=(10, 7, 3), dtype=np.uint8)
-    for filters in ([0], [1], [2], [3], [4], [0, 1, 2, 3, 4]):
-        _, _, got = decode_png(_reference_png(px, 2, filters))
-        assert (got == px).all(), f"filter set {filters} mismatched"
-
-
-def test_png_color_types_normalize_to_rgb():
-    import numpy as np
-
-    from binance_data_pipeline_spark.operators.multimodal import decode_png
-
-    rng = np.random.default_rng(3)
-    # grayscale → replicated channels
-    g = rng.integers(0, 256, size=(5, 4, 1), dtype=np.uint8)
-    _, _, px = decode_png(_reference_png(g, 0, [0, 2]))
-    assert px.shape == (5, 4, 3) and (px[:, :, 0] == g[:, :, 0]).all() and (px[:, :, 1] == g[:, :, 0]).all()
-    # RGBA → alpha dropped
-    rgba = rng.integers(0, 256, size=(5, 4, 4), dtype=np.uint8)
-    _, _, px = decode_png(_reference_png(rgba, 6, [4]))
-    assert px.shape == (5, 4, 3) and (px == rgba[:, :, :3]).all()
-    # palette → expanded through PLTE
-    pal = rng.integers(0, 256, size=(16, 3), dtype=np.uint8)
-    idx = rng.integers(0, 16, size=(6, 5, 1), dtype=np.uint8)
-    _, _, px = decode_png(_reference_png(idx, 3, [1], palette=pal))
-    assert (px == pal[idx[:, :, 0]]).all()
-    # gray+alpha → gray replicated, alpha dropped
-    ga = rng.integers(0, 256, size=(5, 4, 2), dtype=np.uint8)
-    _, _, px = decode_png(_reference_png(ga, 4, [3]))
-    assert (px[:, :, 0] == ga[:, :, 0]).all() and (px[:, :, 2] == ga[:, :, 0]).all()
-
-
-def test_png_feature_parity_with_ppm():
-    """Same pixels, different container → identical feature vector (the
-    format-independence contract _rgb_features promises)."""
-    import numpy as np
-
-    from binance_data_pipeline_spark.operators.multimodal import (
-        baseline_decoder,
-        decode_ppm,
-        encode_png,
-        synthetic_ppm,
-        PNG_MIME,
-        PPM_MIME,
-    )
-
-    ppm = synthetic_ppm(20, 14, seed=5)
-    _, _, px = decode_ppm(ppm)
-    assert baseline_decoder(ppm, PPM_MIME) == baseline_decoder(encode_png(px), PNG_MIME)
-
-
-def test_png_resize_and_extract_in_pipeline(spark):
-    """PNG payloads flow through the Arrow-batched resize + feature passes
-    with the dependency-free default decoder — no PIL in this container."""
-    import numpy as np
-
-    from binance_data_pipeline_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        PNG_MIME,
-        baseline_resizer,
-        decode_png,
-        default_decoder,
-        encode_png,
-        extract_features,
-        resize_images,
-    )
-
-    rng = np.random.default_rng(9)
-    rows = [
-        (i, "image", PNG_MIME, encode_png(rng.integers(0, 256, (24, 32, 3), dtype=np.uint8)), 32, 24, None)
-        for i in range(4)
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    feats = extract_features(media, default_decoder()).collect()
-    assert len(feats) == 4
-    assert all(r["feature"][0] == 32.0 and r["feature"][1] == 24.0 for r in feats)
-    out = resize_images(media, 8, 6, baseline_resizer).collect()
-    for r in out:
-        w, h, px = decode_png(bytes(r["payload"]))
-        assert (w, h) == (8, 6) and px.shape == (6, 8, 3)
-
-
-def test_png_unsupported_shapes_raise():
-    import struct
-    import zlib
-
-    import numpy as np
-
-    from binance_data_pipeline_spark.operators.multimodal import decode_png
-
-    with pytest.raises(ValueError):
-        decode_png(b"not a png at all")
-    # every real depth decodes since r12; what REMAINS invalid is a
-    # spec violation — sub-byte depth on an RGB color type
-    def chunk(t, d):
-        return struct.pack(">I", len(d)) + t + d + struct.pack(">I", zlib.crc32(t + d) & 0xFFFFFFFF)
-    sig = b"\x89PNG\r\n\x1a\n"
-    bad = sig + chunk(b"IHDR", struct.pack(">IIBBBBB", 2, 2, 4, 2, 0, 0, 0)) + chunk(
-        b"IDAT", zlib.compress(b"\x00" * 26)) + chunk(b"IEND", b"")
-    with pytest.raises(ValueError, match="gray/palette"):
-        decode_png(bad)
-    bad3 = sig + chunk(b"IHDR", struct.pack(">IIBBBBB", 2, 2, 3, 0, 0, 0, 0)) + chunk(
-        b"IDAT", zlib.compress(b"\x00" * 4)) + chunk(b"IEND", b"")
-    with pytest.raises(ValueError, match="bit depth"):
-        decode_png(bad3)
-
-
-def test_png_adam7_and_16bit_roundtrip():
-    """r12: the dependency-free decoder covers Adam7 interlacing and
-    16-bit depth natively — encode/decode round-trips bit-exactly for
-    every (interlace, depth) combination, including image sizes where
-    some Adam7 passes are EMPTY (w or h below the pass offsets)."""
-    import numpy as np
-
-    from binance_data_pipeline_spark.operators.multimodal import (
-        decode_png,
-        encode_png,
-    )
-
-    rng = np.random.default_rng(42)
-    for (h, w) in [(16, 16), (13, 7), (8, 9), (3, 2), (2, 2), (1, 1)]:
-        px = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-        plain = decode_png(encode_png(px))[2]
-        for interlace in (False, True):
-            for depth in (8, 16):
-                got_w, got_h, out = decode_png(
-                    encode_png(px, interlace=interlace, bit_depth=depth)
-                )
-                assert (got_w, got_h) == (w, h)
-                # bit-exact with the source AND with the plain decode —
-                # identical pixels give identical features downstream
-                assert np.array_equal(out, px), (h, w, interlace, depth)
-                assert np.array_equal(out, plain)
-
-
-def test_decode_stub_raises(media_df):
-    with pytest.raises(Exception) as exc_info:
-        extract_features(media_df, decode_stub).collect()
-    assert "NotImplementedError" in str(exc_info.value) or "media decoding" in str(exc_info.value)
-
-
-def test_default_decoder_autodetect(spark, monkeypatch):
-    """default_decoder routes by capability: dependency-free formats always
-    decode; compressed images use PIL WHEN importable and fall back to the
-    documented NotImplementedError stub otherwise. Runs the genuinely
-    available branch for this environment, then injects a fake PIL module
-    to exercise the real PIL glue (open → convert("RGB") → _rgb_features)
-    and pin feature parity: same pixels, same vector, either container."""
-    import importlib.util
-    import sys
-    import types
-
-    import numpy as np
-
-    from binance_data_pipeline_spark.operators import multimodal as M
-
-    ppm = M.synthetic_ppm(16, 12, seed=3)
-    wav = M.synthetic_wav(100, 330.0)
-
-    dec = M.default_decoder()
-    want_img = M.baseline_decoder(ppm, M.PPM_MIME)
-    assert dec(ppm, M.PPM_MIME) == want_img
-    assert dec(wav, M.WAV_MIME) == M.baseline_decoder(wav, M.WAV_MIME)
-    # PNG is dependency-free now: decodes through the baseline in ANY env
-    png = M.encode_png(M.decode_ppm(ppm)[2])
-    assert dec(png, M.PNG_MIME) == want_img
-
-    if importlib.util.find_spec("PIL") is None:
-        # this container: formats beyond the native codec tier (JPEG has
-        # no dependency-free decoder) hit the stub
-        with pytest.raises(NotImplementedError):
-            dec(ppm, "image/jpeg")
-        with pytest.raises(NotImplementedError):
-            dec(ppm, "image/heic")
-        with pytest.raises(NotImplementedError):
-            M.default_resizer()(b"x", "image/heic", 4, 4)
-    else:  # environment with a real PIL: the real decode path runs
-        import io
-
-        from PIL import Image
-
-        buf = io.BytesIO()
-        _, _, px = M.decode_ppm(ppm)
-        Image.fromarray(px).save(buf, format="JPEG", quality=100, subsampling=0)
-        got = dec(buf.getvalue(), "image/jpeg")
-        assert got[0] == want_img[0] and got[1] == want_img[1]
-
-    # fake-PIL injection: prove the PIL glue itself (any environment)
-    class _FakeImg:
-        format = "PNG"
-
-        def __init__(self, px):
-            self._px = px
-
-        def convert(self, mode):
-            assert mode == "RGB"
-            return self
-
-        def __array__(self, dtype=None, copy=None):
-            return self._px.astype(dtype) if dtype is not None else self._px
-
-        def resize(self, wh):
-            w, h = wh
-            src_h, src_w, _ = self._px.shape
-            ys = (np.arange(h) * src_h // h).clip(0, src_h - 1)
-            xs = (np.arange(w) * src_w // w).clip(0, src_w - 1)
-            return _FakeImg(self._px[ys][:, xs])
-
-        def save(self, out, format=None):
-            out.write(M.encode_ppm(self._px))
-
-    fake_pil = types.ModuleType("PIL")
-    fake_pil.Image = types.SimpleNamespace(
-        open=lambda fh: _FakeImg(M.decode_ppm(fh.read())[2])
-    )
-    monkeypatch.setitem(sys.modules, "PIL", fake_pil)
-
-    dec_pil = M.default_decoder()
-    # jpeg-mime payload routed through "PIL": same pixels → same features
-    assert dec_pil(ppm, "image/jpeg") == want_img
-    resized = M.default_resizer()(ppm, "image/jpeg", 8, 6)
-    assert M.decode_ppm(resized)[:2] == (8, 6)
-
-
-def test_png_sub_byte_depths_roundtrip():
-    """r12: depths 1/2/4 (gray and palette), sequential AND Adam7 —
-    exact round-trips through the module's own fixture encoders; gray
-    samples scale to the full 8-bit range, palette indexes resolve
-    through PLTE. With 8/16-bit this completes the PNG depth matrix."""
-    import numpy as np
-
-    from binance_data_pipeline_spark.operators.multimodal import (
-        decode_png,
-        encode_png_gray,
-        encode_png_palette,
-    )
-
-    rng = np.random.default_rng(11)
-    for (h, w) in [(16, 16), (13, 7), (3, 2), (1, 1), (9, 17)]:
-        for d in (1, 2, 4):
-            for il in (False, True):
-                g = rng.integers(0, 1 << d, (h, w), dtype=np.uint8)
-                ww, hh, out = decode_png(encode_png_gray(g, d, interlace=il))
-                want = (g.astype(np.int32) * 255 // ((1 << d) - 1)).astype(np.uint8)
-                assert (ww, hh) == (w, h)
-                assert np.array_equal(out, np.repeat(want[:, :, None], 3, 2)), (h, w, d, il)
-        for d in (1, 2, 4, 8):
-            for il in (False, True):
-                n = 1 << d
-                pal = rng.integers(0, 256, (n, 3), dtype=np.uint8)
-                idx = rng.integers(0, n, (h, w), dtype=np.uint8)
-                _, _, out = decode_png(encode_png_palette(idx, pal, d, interlace=il))
-                assert np.array_equal(out, pal[idx]), (h, w, d, il)
-
-
-def test_png_fully_native_and_lossy_webp_falls_back_to_pil(monkeypatch):
-    """Since r12 the stdlib PNG decoder covers the COMPLETE depth/
-    interlace matrix (1/2/4/8/16-bit x sequential/Adam7 x gray/palette/
-    RGB/alpha forms) — every PNG decodes natively with zero PIL calls.
-    The PIL fallback contract covers the formats without a native
-    codec — here lossy (VP8) WebP: routed through PIL when importable,
-    the stub's NotImplementedError without it."""
-    import importlib.util
-    import struct
-    import sys
-    import types
-
-    import numpy as np
-
-    from binance_data_pipeline_spark.operators import multimodal as M
-
-    # a well-formed container whose codec chunk is lossy VP8
-    vp8 = b"VP8 " + struct.pack("<I", 4) + b"\x00\x00\x00\x00"
-    webp = b"RIFF" + struct.pack("<I", 4 + len(vp8)) + b"WEBP" + vp8
-
-    if importlib.util.find_spec("PIL") is None:
-        with pytest.raises(NotImplementedError):
-            M.default_decoder()(webp, "image/webp")
-        with pytest.raises(NotImplementedError):
-            M.default_resizer()(webp, "image/webp", 4, 4)
-
-    px = (np.arange(3 * 4 * 3, dtype=np.uint8) * 7 % 256).reshape(3, 4, 3)
-    pil_calls = []
-
-    class _FakeImg:
-        format = "WEBP"
-
-        def __init__(self, arr):
-            self._px = arr
-
-        def convert(self, mode):
-            return self
-
-        def __array__(self, dtype=None, copy=None):
-            return self._px.astype(dtype) if dtype is not None else self._px
-
-        def resize(self, wh):
-            w, h = wh
-            ys = (np.arange(h) * self._px.shape[0] // h).clip(0, self._px.shape[0] - 1)
-            xs = (np.arange(w) * self._px.shape[1] // w).clip(0, self._px.shape[1] - 1)
-            return _FakeImg(self._px[ys][:, xs])
-
-        def save(self, out, format=None):
-            out.write(M.encode_ppm(self._px))
-
-    fake_pil = types.ModuleType("PIL")
-    fake_pil.Image = types.SimpleNamespace(
-        open=lambda fh: (pil_calls.append(1), _FakeImg(px))[1]
-    )
-    monkeypatch.setitem(sys.modules, "PIL", fake_pil)
-
-    dec, rsz = M.default_decoder(), M.default_resizer()
-    # the full PNG matrix: always the stdlib path, PIL untouched
-    ppm = M.synthetic_ppm(6, 5, seed=1)
-    rgb = M.decode_ppm(ppm)[2]
-    forms = [M.encode_png(rgb), M.encode_png(rgb, interlace=True),
-             M.encode_png(rgb, bit_depth=16),
-             M.encode_png_gray((rgb[:, :, 0] >> 6), 2),
-             M.encode_png_palette(
-                 np.zeros(rgb.shape[:2], np.uint8), [[1, 2, 3]], 1)]
-    for f in forms:
-        dec(f, M.PNG_MIME)
-        rsz(f, M.PNG_MIME, 3, 3)
-    assert not pil_calls
-    # WebP: falls through to the PIL-backed decode/resize
-    assert dec(webp, "image/webp") == M._rgb_features(px)
-    assert pil_calls
-    resized = rsz(webp, "image/webp", 2, 2)
-    assert M.decode_ppm(resized)[:2] == (2, 2)
-
-
-def test_media_stats_prunes_payload(media_df, spark, tmp_path):
-    # pruning is a property of the scan: write to parquet, read back, and
-    # assert the physical scan's ReadSchema excludes the binary payload
-    path = str(tmp_path / "media")
-    media_df.write.parquet(path)
-    on_disk = spark.read.parquet(path)
-    stats = media_stats(on_disk)
-    plan = stats._jdf.queryExecution().executedPlan().toString()
-    assert "payload" not in plan, f"payload column must be pruned from the scan:\n{plan}"
-    rows = {r["kind"]: r for r in stats.collect()}
-    assert rows["image"]["n"] == 20 and rows["audio"]["n"] == 5
 
 
 # ------------------------------------------------------- LSH recall checks
@@ -1127,30 +600,6 @@ def test_ivf_index_rebuilds_on_data_change(spark, tmp_path):
     r3 = ivf_topk(queries2, corpus2, k=2, n_centroids=2, nprobe=2, index_path=idx).collect()
     assert r3 and all(r["sim"] == 1.0 for r in r3), r3
     assert _os.path.getmtime(meta_marker) > built_at  # rebuilt
-
-
-def test_resize_and_frame_sample(media_df, spark):
-    from binance_data_pipeline_spark.operators.multimodal import (
-        fake_resizer,
-        resize_images,
-        resize_stub,
-        sample_frames,
-    )
-    import pytest as _pytest
-
-    resized = resize_images(media_df, 8, 8, fake_resizer).collect()
-    assert len(resized) == 20  # only image rows enter the UDF
-    assert all(len(r["payload"]) == 64 for r in resized)
-
-    with _pytest.raises(Exception):
-        resize_images(media_df, 8, 8, resize_stub).collect()
-
-    video = spark.createDataFrame(
-        [(500, "video", "video/mp4", b"\x00\x01", None, None, 3500)],
-        "media_id long, kind string, mime string, payload binary, width int, height int, duration_ms long",
-    )
-    frames = sample_frames(video, every_ms=1000).collect()
-    assert [f["frame_ts_ms"] for f in frames] == [0, 1000, 2000]
 
 
 def test_simhash_near_dups_equals_all_pairs_hamming(spark):

@@ -321,25 +321,6 @@ def test_mg_summary_error_invariant_any_split(items, cut):
         assert truth[item] - est <= n / k + 1e-9
 
 
-@settings(max_examples=25, deadline=None)
-@given(
-    w=st.integers(min_value=1, max_value=24),
-    h=st.integers(min_value=1, max_value=24),
-    seed=st.integers(min_value=0, max_value=2**31 - 1),
-)
-def test_png_roundtrip_any_shape(w, h, seed):
-    """encode→decode is the identity for every image shape."""
-    import numpy as np
-
-    from binance_data_pipeline_spark.operators.multimodal import decode_png, encode_png
-
-    rng = np.random.default_rng(seed)
-    px = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-    got_w, got_h, back = decode_png(encode_png(px))
-    assert (got_w, got_h) == (w, h)
-    assert (back == px).all()
-
-
 @settings(max_examples=50, deadline=None)
 @given(
     payload=st.binary(max_size=300),
@@ -360,51 +341,3 @@ def test_ws_frame_roundtrip_property(payload, opcode, mask, fin):
     raw = encode_frame(opcode, payload, mask=mask, fin=fin)
     op, f, got = read_frame(io.BytesIO(raw))
     assert (op, f, got) == (opcode, fin, payload)
-
-
-# --------------------------------------------------------------- BPE
-
-@settings(max_examples=200, deadline=None)
-@given(
-    st.text(
-        alphabet=st.characters(blacklist_categories=("Zs", "Cc", "Cs")),
-        min_size=1,
-        max_size=20,
-    ),
-    st.lists(
-        st.tuples(st.text(min_size=1, max_size=3), st.text(min_size=1, max_size=3)),
-        max_size=30,
-    ),
-)
-def test_bpe_encode_word_roundtrip_any_ranks(word, merges):
-    """Merging adjacent pairs preserves concatenation, so for ANY rank
-    table (even nonsense pairs never produced by training) the encoded
-    symbols must concatenate back to word + '</w>'. Pure driver-side —
-    no Spark job per example."""
-    from binance_data_pipeline_spark.operators.bpe import bpe_encode_word
-
-    ranks = {p: i for i, p in enumerate(merges)}
-    toks = bpe_encode_word(word, ranks)
-    assert "".join(toks) == word + "</w>"
-    assert all(t for t in toks)  # no empty symbols
-
-
-@settings(max_examples=5, deadline=None)
-@given(
-    st.lists(
-        st.text(alphabet="abcde", min_size=1, max_size=6),
-        min_size=1,
-        max_size=25,
-    )
-)
-def test_bpe_train_apply_roundtrip_random_corpus(spark, words):
-    """Trained merges on an arbitrary small corpus: distributed
-    tokenization must reproduce every document word-for-word."""
-    from binance_data_pipeline_spark.operators.bpe import bpe_tokenize, train_bpe
-
-    text = " ".join(words)
-    docs = spark.createDataFrame([("d", text)], "doc_id string, text string")
-    merges = train_bpe(docs, num_merges=10)
-    toks = bpe_tokenize(docs, merges).first()["tokens"]
-    restored = [w for w in "".join(toks).split("</w>") if w]
-    assert restored == text.split()
