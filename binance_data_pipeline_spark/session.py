@@ -1,13 +1,17 @@
 """SparkSession factory with scale-aware defaults.
 
-Design notes (100 TB-minded even though tests run on ``local[32]``):
+Design notes (100 TB-minded even though tests run on a host-sized
+``local[N]``):
 
 - AQE is always on: runtime coalescing of shuffle partitions, skew-join
   splitting, and dynamic join-strategy demotion are exactly the knobs that
   keep a 1000-executor job healthy without hand-tuning per query.
-- ``spark.sql.shuffle.partitions`` defaults small locally (32) but is a
-  parameter — on a real cluster you set it ~2-3× total cores and let AQE
-  coalesce down.
+- ``spark.sql.shuffle.partitions`` defaults locally to the core count but
+  is a parameter — on a real cluster you set it ~2-3× total cores and let
+  AQE coalesce down.
+- Local cores and driver heap follow the host (``local_cores``,
+  ``driver_memory``); ``SPARK_GRAFT_CPUS`` and ``SPARK_DRIVER_MEMORY``
+  override them.
 - Arrow is enabled for the Pandas-UDF paths (similarity / TF-IDF /
   embedding kernels); everything in the hot relational path stays
   JVM-side.
@@ -21,7 +25,45 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+MEMINFO = "/proc/meminfo"
+#: Bounds of the host-sized driver heap. Spark refuses a heap below ~470 MB;
+#: the cap keeps big hosts at the 16g long multi-query sessions were sized for.
+MIN_DRIVER_MEMORY_MB = 1024
+MAX_DRIVER_MEMORY_MB = 16 * 1024
+#: Generated classes Spark's JVM-wide codegen cache keeps (its default is
+#: 100). One medallion pass generates ~300 distinct classes and the
+#: extended catalog (``plans.extended_queries``) 944, so at 100 every class
+#: was evicted before its query ran again: each warm medallion pass
+#: recompiled 286-309 classes with Janino, and the catalog's second pass
+#: 944, each then loaded and JIT-compiled anew. At 2048 (~2x the catalog)
+#: a warm medallion pass compiles 8-10 and the catalog's second pass 28,
+#: in 24.1 s instead of 29.3 s, and metaspace grows less (4-core host,
+#: counted by ``CodegenMetrics.METRIC_COMPILATION_TIME``).
+CODEGEN_CACHE_ENTRIES = 2048
+
+
+def local_cores() -> int:
+    """Cores of a local session and its default shuffle partitions:
+    ``$SPARK_GRAFT_CPUS``, else the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def driver_memory() -> str:
+    """``spark.driver.memory``: ``$SPARK_DRIVER_MEMORY``, else half the
+    host's available memory (``MemAvailable``), kept within
+    [MIN_DRIVER_MEMORY_MB, MAX_DRIVER_MEMORY_MB]. In local mode this heap
+    also hosts every executor thread."""
+    override = os.environ.get("SPARK_DRIVER_MEMORY")
+    if override:
+        return override
+    mb = MAX_DRIVER_MEMORY_MB
+    with open(MEMINFO) as f:
+        for line in f:
+            if line.startswith("MemAvailable:"):
+                mb = min(max(int(line.split()[1]) // 2048, MIN_DRIVER_MEMORY_MB),
+                         MAX_DRIVER_MEMORY_MB)
+                break
+    return f"{mb}m"
 
 
 def get_spark(
@@ -32,13 +74,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (32) for local runs;
-    on a cluster, leave it unset and submit via spark-submit.
+    ``master`` defaults to ``local[local_cores()]`` for local runs; on a
+    cluster, leave it unset and submit via spark-submit.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cores()
     builder = (
         SparkSession.builder.appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS))
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -48,15 +90,17 @@ def get_spark(
         # Small dims (fee/tax rules ~10 rows) must broadcast; default 10 MB
         # threshold is fine, keep explicit for documentation.
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
-        # local-mode: driver heap hosts all executor threads — size for the
-        # 128 GiB box so multi-query sessions don't degrade into full-GC
-        # churn (measured: late-bench queries slowed 10-20× at 8g)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.cleaner.periodicGC.interval", "60min")
-        # Long multi-query sessions generate a unique codegen class per
-        # plan; the JVM's default 240 MB code cache fills and HotSpot stops
-        # JIT-compiling → whole-stage "codegen" runs interpreted (measured
-        # 10-70× degradation late in a 18-query bench session).
+        # Static and JVM-wide: it takes effect only in the first session of
+        # the process, which every entry point starts here.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # Long multi-query sessions overflowed the JVM's default 240 MB code
+        # cache, after which HotSpot stops JIT-compiling and whole-stage
+        # "codegen" runs interpreted (measured 10-70× degradation late in an
+        # 18-query bench session). The cause was Spark's 100-entry codegen
+        # cache: evicted generated classes were recompiled and loaded again,
+        # and each reload was JIT-compiled into the code cache anew.
         .config(
             "spark.driver.extraJavaOptions",
             "-XX:ReservedCodeCacheSize=2g -XX:+UseCodeCacheFlushing",
