@@ -2,9 +2,7 @@
 
 cleaning         bronze→staging clean/cast (P1-P6)
 incremental      high-watermark incremental materialization (P8/ST5)
-rollup           continuous aggregate (bucket-granular refresh, late-data repair)
 dedup            exact / MinHash-LSH / SimHash / n-gram-Jaccard dedup + clustering
-incremental_dedup  per-batch dedup vs persisted append-only state
 semdedup         semantic (embedding-cell) dedup, batch + incremental + streaming
 substring        exact-substring span dedup (distributed ExactSubstr)
 similarity       embedding similarity search (brute-force + RP-LSH ANN)
@@ -23,14 +21,10 @@ quality_classifier  trainable hashed-n-gram logistic quality filter (FineWeb-Edu
 dsir             DSIR importance resampling (target-distribution matching, Gumbel top-k)
 vocab            token/n-gram frequencies, top-k vocab, IDF
 bm25             BM25 retrieval + persisted term-bucket index + RRF hybrid fusion
-mining           hard-negative mining (BM25 candidates × embedding ceiling)
 retrieval        serving root: BM25+IVF build + RRF hybrid search + injectable rerank
-graph            PageRank centrality + hierarchy levels / transitive closure (frontier BFS, the WITH RECURSIVE workload with scale controls)
 behavior         funnel conversion + cohort retention over event streams
 scd              SCD Type 2 dimension merge + point-in-time lookup join
 anomaly          rolling z-score / robust IQR / seasonal-residual flags
-tfidf            map-only TF-IDF / hashing-trick featurization
-features         fit/transform feature engineering (scaling, binning, one-hot, target encoding)
 sampling         deterministic sampling / token budgets / domain caps / mixing / shuffle / packing / split
 sketches         HLL distinct + count-min frequency rollups (mergeable)
 quantiles        MRL/KLL quantile sketch rollups (mergeable, streaming exactly-once)
@@ -38,16 +32,11 @@ heavyhitters     Misra-Gries top-k rollups (mergeable, streaming exactly-once)
 state_swap       shared exactly-once merge-state machinery (atomic dir swap)
 metacache        serve-path index-metadata memo (listing-keyed, self-invalidating)
 profile          per-column table profiling (nulls, distinct, range, quantiles, top values)
-gapfill          gap-fill / LOCF / linear interpolation
-interval_join    bucketed interval/range join
 subqueries       IN/NOT IN (single + row-value), EXISTS, ALL/ANY quantified, correlated scalar-agg subquery filters with exact ANSI 3VL null semantics
-bloomjoin        Bloom-prefiltered joins (map-side shuffle reduction for selective joins)
 asof             as-of join (trade × quote style)
 revenue          fee/tax revenue fact (§3.4 flagship)
 scale            compaction, bucketing, salted agg + salted skew join, Z-order path writes
 zorder           Morton keys for snapshot compaction (any orderable type, sampled quantile cuts)
-skipping         file-level min/max data-skipping index
 snapshots        snapshot-versioned tables (atomic commits, time travel, rollback, vacuum, exactly-once streaming appends)
 mview            incrementally maintained materialized aggregate views (change-feed fold, exactly-once cursor-in-manifest)
-export           sharded manifest-gated training-data export (jsonl[.gz]/parquet/WebDataset tar)
 """

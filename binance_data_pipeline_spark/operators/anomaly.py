@@ -1,5 +1,5 @@
 """Time-series anomaly flags — the monitoring layer over the series
-operators (rollup/gapfill build the series; this scores it). Three
+operators (the caller builds a dense series; this scores it). Three
 standard detectors, all single-window-pass, JVM-only:
 
 - ``zscore_anomalies``: rolling mean/std over the PRECEDING ``window``
@@ -110,7 +110,7 @@ def seasonal_residuals(
     group_cols: list[str] | None = None,
 ) -> DataFrame:
     """Adds ``seasonal_baseline`` (the value one season ago, by ROW
-    offset — gapfill first if the series has holes) and ``residual``.
+    offset — fill the series' holes first) and ``residual``.
     First-season rows get NULLs."""
     if season < 1:
         raise ValueError(f"season must be >= 1, got {season}")

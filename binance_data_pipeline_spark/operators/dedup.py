@@ -128,9 +128,9 @@ def _minhash_from_hashes(hash_col: Column, num_perm: int) -> Column:
 def band_hashes(sig_col: Column, num_perm: int, bands: int) -> Column:
     """LSH band keys from a minhash signature: hash of each band's
     signature slice, salted by band index (array<int>, one per band).
-    The SINGLE definition shared by the batch pipeline and the
-    incremental state (operators/incremental_dedup.py) — any divergence
-    would silently stop cross-batch candidates from colliding."""
+    The SINGLE definition of a band key: keys built by a second formula
+    would silently stop colliding with these, and candidates would be
+    lost."""
     rows_per_band = num_perm // bands
     return F.array(
         *[

@@ -27,9 +27,10 @@ never raw values), phase 2 merges per group in ``applyInPandas``. Querying
 a rollup at any coarser grain merges bucket sketches the same way —
 raw data is never rescanned.
 
-Composes with ``operators/rollup.py``'s continuous aggregate exactly like
-the HLL/CMS columns: bucket recompute is a pure overwrite, so incremental
-maintenance carries over (no sketch-subtract problem).
+A bucket's sketch is never adjusted in place: late rows for an old
+bucket are absorbed by rebuilding that bucket's sketch (a pure
+overwrite, no sketch-subtract problem, as for the HLL/CMS columns) or
+by merging a sketch of the late rows (``quantile_rollup_merge_batch``).
 
 At 100 TB: one shuffle at (bucket × dims) grain, map-side partials, ~KB
 rows out. The Python kernel is Arrow-batched; values cross into Python
@@ -264,8 +265,7 @@ def quantile_rollup_merge_batch(
     """Merge one batch into a persisted quantile-rollup state — the
     sketch-native incremental path: the batch is sketched once and MERGED
     with the stored per-group sketches; raw history is never re-read
-    (contrast rollup.refresh_continuous_aggregate, which recomputes
-    touched buckets from raw — sketches merge, so they don't need to).
+    (sketches merge, so touched buckets need no recompute from raw).
 
     State layout (swapped atomically as ONE directory via Hadoop-FS
     rename, the ivf.py build pattern):

@@ -143,8 +143,9 @@ def scd2_lookup(
     warehouse scale dimensions are broadcastable (even with history,
     they are orders of magnitude smaller than facts), so the plan is a
     BroadcastHashJoin with the range as a post-join filter: the fact
-    table is never shuffled. For a dimension too big to broadcast, fall
-    back to operators/interval_join.bucketed_interval_join semantics."""
+    table is never shuffled. The broadcast is hinted, not left to the
+    planner: a dimension too big to broadcast needs a bucketed range
+    join instead of this lookup."""
     from pyspark.sql import functions as F
 
     ts = F.col(f"__f.{fact_ts_col}")

@@ -199,10 +199,9 @@ def semantic_dedup_batch(
     iterations: int = 2,
     sample_target: int | None = 4096,
 ) -> tuple[DataFrame, DataFrame]:
-    """Semantic dedup for ARRIVING batches — the embedding twin of
-    ``incremental_dedup.dedup_batch``, sharing its contract: dedupe the
-    batch within itself and against every doc already admitted, without
-    recomputing anything for the existing corpus. Returns
+    """Semantic dedup for ARRIVING batches: dedupe the batch within
+    itself and against every doc already admitted, without recomputing
+    anything for the existing corpus. Returns
     (kept, mapping) with mapping = (doc_id, kept_doc_id,
     reason ∈ {kept, semantic_dup}); kept_doc_id may be an EXISTING doc.
     Both must be consumed before the next batch runs.
@@ -333,10 +332,9 @@ def streaming_semantic_dedup(
     threshold: float = 0.9,
     **batch_kwargs,
 ):
-    """foreachBatch wrapper around ``semantic_dedup_batch`` — the
-    embedding twin of ``incremental_dedup.streaming_dedup_corpus``, same
-    contract: each micro-batch dedupes against the persisted member
-    state and appends kept docs + audit mapping under ``out_path``.
+    """foreachBatch wrapper around ``semantic_dedup_batch``: each
+    micro-batch dedupes against the persisted member state and appends
+    kept docs + audit mapping under ``out_path``.
     Returns the UNSTARTED writer (caller picks the trigger and calls
     .start()).
 

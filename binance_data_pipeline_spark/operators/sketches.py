@@ -22,10 +22,9 @@ is to store a MERGEABLE SKETCH per bucket:
     `CountMinSketch.mergeInPlace` — O(#buckets × sketch size), the
     standard serving-layer shape.
 
-Both compose with ``operators/rollup.py``'s continuous aggregate: a
-sketch column is recomputed per touched bucket like any other aggregate
-(bucket recompute is a pure overwrite — no sketch-subtract problem),
-so the incremental-maintenance story carries over unchanged.
+Late rows in an old bucket are absorbed by recomputing that bucket's
+sketch like any other aggregate: a pure overwrite, so there is no
+sketch-subtract problem.
 
 At 100 TB: sketch build is one shuffle at (bucket × dims) grain with
 map-side partial aggregation (sketches merge associatively, so partial

@@ -1732,8 +1732,8 @@ def snapshot_diff(
     value column differing — the Delta CDF vocabulary). Unchanged keys
     are not emitted. Keys must be unique within each version — a
     duplicate raises at execution (guard folded into the change-type
-    expression so Catalyst cannot prune it, the interval_join
-    discipline), because a keyed diff over duplicate keys is ambiguous.
+    expression so Catalyst cannot prune it), because a keyed diff over
+    duplicate keys is ambiguous.
 
     Scale: one hash aggregate per side (map-side combine on the key),
     one shuffle each, a single key-partitioned full-outer join, then a

@@ -1,6 +1,6 @@
 """Exactly-once mergeable-state maintenance for foreachBatch sinks.
 
-Append-only streaming states (incremental_dedup, semdedup) are naturally
+Append-only streaming states (semdedup's member state) are naturally
 replay-idempotent: a re-delivered batch re-drops against state it already
 wrote. MERGE states (sketch rollups: quantiles, heavy hitters) are not —
 re-merging a replayed batch double-counts. The standard Structured
@@ -50,7 +50,7 @@ __all__ = ["merge_state_batch", "read_state", "batch_committed", "commit_batch"]
 def batch_committed(spark: SparkSession, commits_path: str, batch_id: int) -> bool:
     """True when ``commit_batch`` has recorded ``batch_id`` under
     ``commits_path`` — the replay guard for APPEND-ONLY streaming states
-    (incremental_dedup / semdedup), whose effects can't ride the dir-swap
+    (semdedup), whose effects can't ride the dir-swap
     protocol the MERGE states use. Check FIRST in foreachBatch; a hit
     means the batch's appends all landed and the replay must skip."""
     fs, p = _hadoop_fs(spark, f"{commits_path.rstrip('/')}/{int(batch_id)}")

@@ -14,8 +14,11 @@ Isolation per worker (the hazards a shared box has):
 - ``SPARK_WAREHOUSE_DIR=/tmp/par_suite_w{i}_wh`` — saveAsTable tests
   (bucketed-join) write disjoint warehouses (session.py honors it);
 - ``SPARK_GRAFT_CPUS`` split so the workers' local[k] threads sum to
-  the box (oversubscription measurably slows the CPU-bound kernels);
-- ``SPARK_DRIVER_MEMORY`` sized so N heaps fit the 128 GiB box;
+  no more than the host's cores, ``session.local_cores``
+  (oversubscription measurably slows the CPU-bound kernels);
+- ``SPARK_DRIVER_MEMORY`` split so the N heaps sum to no more than the
+  heap one session would get on this host (``session.driver_memory``);
+  fewer workers run when the host cannot hold N at Spark's minimum heap;
 - test servers (kafka wire, ws bridge) bind port 0 — already parallel-safe.
 
 Balancing: greedy LPT over per-module wall times measured by the LAST
@@ -42,6 +45,10 @@ import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from binance_data_pipeline_spark import session  # noqa: E402
+
 TESTS = os.path.join(REPO, "tests")
 WEIGHTS_PATH = os.path.join(REPO, "scripts", "suite_weights.json")
 
@@ -55,7 +62,6 @@ _FALLBACK_HEAVY = {
     "test_snapshots.py": 180,
     "test_streaming.py": 150,
     "test_kafka_source.py": 120,
-    "test_incremental_dedup.py": 100,
     "test_manifest_model.py": 100,
     "test_crash_windows.py": 90,
     "test_bpe.py": 90,
@@ -69,6 +75,31 @@ def load_weights() -> dict[str, float]:
         with open(WEIGHTS_PATH) as f:
             return json.load(f)
     return {}
+
+
+_UNIT_MB = {"k": 1 / 1024, "m": 1, "g": 1024, "t": 1024 * 1024}
+
+
+def _mb(mem: str) -> int:
+    """A ``spark.driver.memory`` value (``3906m``, ``2g``; a bare number
+    is MiB) in MiB."""
+    s = mem.strip().lower().rstrip("b")
+    if s[-1] in _UNIT_MB:
+        return int(float(s[:-1]) * _UNIT_MB[s[-1]])
+    return int(s)
+
+
+def worker_sizing(workers: int, cpus_total: int | None = None) -> tuple[int, int, str]:
+    """(workers, cores each, heap each) for ``workers`` concurrent pytest
+    sessions: the host's cores (``cpus_total`` overrides) and the heap
+    budget of one session are split evenly, so the workers together ask
+    for no more threads or heap than one session on this host would. The
+    worker count drops to what the host holds at one core and Spark's
+    minimum heap each."""
+    cores = cpus_total or session.local_cores()
+    budget_mb = _mb(session.driver_memory())
+    n = max(1, min(workers, cores, budget_mb // session.MIN_DRIVER_MEMORY_MB))
+    return n, cores // n, f"{budget_mb // n}m"
 
 
 def partition_modules(mods: list[str], n: int, weights: dict[str, float]):
@@ -117,10 +148,9 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--workers", type=int, default=3)
     ap.add_argument("--log-dir", default="/tmp")
-    ap.add_argument("--cpus-total", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus-total", type=int, default=None)
     args = ap.parse_args()
-    n = args.workers
+    n, cpus_each, mem_each = worker_sizing(args.workers, args.cpus_total)
 
     mods = sorted(
         f for f in os.listdir(TESTS)
@@ -128,8 +158,6 @@ def main() -> int:
     )
     weights = load_weights()
     shards, loads = partition_modules(mods, n, weights)
-    cpus_each = max(4, args.cpus_total // n)
-    mem_each = "12g" if n >= 3 else "16g"
 
     procs, logs = [], []
     t0 = time.time()

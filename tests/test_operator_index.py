@@ -50,19 +50,7 @@ _ROOTS = (
 # Modules only tests reach today. Each is to be wired into an entry point
 # or deleted; the list may only shrink.
 _UNREACHABLE_ALLOWED = {
-    "operators/bloomjoin",
-    "operators/export",
-    "operators/features",
-    "operators/gapfill",
-    "operators/graph",
-    "operators/incremental_dedup",
-    "operators/interval_join",
-    "operators/mining",
-    "operators/rollup",
-    "operators/skipping",
-    "operators/tfidf",
     "sources/ws_bridge",
-    "streaming/stateful",
 }
 
 

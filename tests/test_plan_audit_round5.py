@@ -1,4 +1,4 @@
-"""Scale audit for the round-5 analytics/mining modules: their hot-path
+"""Scale audit for the round-5 analytics modules: their hot-path
 plans must be free of row-at-a-time Python and accidental Cartesian
 pairing (the same contract test_plans.py enforces for the catalog)."""
 
@@ -49,40 +49,3 @@ def test_anomaly_plans_are_scale_clean(spark):
     _clean(zscore_anomalies(ts, "v", "t", group_cols=["series"], window=10))
     _clean(robust_anomalies(ts, "v", "t", group_cols=["series"], window=10))
 
-
-def test_pagerank_result_plan_and_mass_conservation(spark):
-    from binance_data_pipeline_spark.operators.graph import pagerank
-
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "a"), ("a", "c")],
-        "src string, dst string",
-    )
-    ranks = pagerank(edges, iterations=3)
-    _clean(ranks)
-    total = ranks.agg(F.sum("rank")).first()[0]
-    assert abs(total - 1.0) < 1e-6  # probability mass conserved
-
-
-def test_mining_plan_is_scale_clean(spark):
-    from binance_data_pipeline_spark.operators.mining import mine_hard_negatives
-
-    docs = spark.createDataFrame(
-        [("d1", "solar panels convert sunlight"),
-         ("d2", "wind turbines convert air"),
-         ("d3", "medieval knights wore armor")],
-        "doc_id string, text string",
-    )
-    emb = spark.createDataFrame(
-        [("q1", [1.0, 0.0]), ("d1", [0.95, 0.05]),
-         ("d2", [0.9, 0.1]), ("d3", [0.0, 1.0])],
-        "vec_id string, embedding array<double>",
-    )
-    queries = spark.createDataFrame(
-        [("q1", "convert sunlight")], "query_id string, text string"
-    )
-    out = mine_hard_negatives(queries, docs, emb, k_lex=3, neg_max_sim=0.99)
-    # the positive leg rides cosine_topk_brute — a DOCUMENTED broadcast
-    # brute-force baseline whose non-equi broadcast join the auditor
-    # flags by design; the bar here is no row-at-a-time Python anywhere
-    findings = [f for f in audit_plan(out) if f.code == "PY_ROW_EVAL"]
-    assert findings == [], findings

@@ -148,59 +148,6 @@ def test_quantile_matches_percentile_approx_ballpark(spark):
     assert _rank_error(vals, theirs, 0.9) <= 0.05
 
 
-def test_quantile_rollup_composes_with_continuous_aggregate(spark, tmp_path):
-    """The COVERAGE claim made concrete: a continuous aggregate whose
-    per-bucket state is a quantile sketch. A late raw row invalidates only
-    its bucket, the bucket recomputes (pure overwrite — no sketch-subtract
-    problem), and coarser-grain estimates read the repaired state."""
-    from binance_data_pipeline_spark.operators.rollup import (
-        read_rollup,
-        refresh_continuous_aggregate,
-    )
-
-    raw_path = str(tmp_path / "raw")
-    roll_path = str(tmp_path / "roll")
-    rng = np.random.default_rng(3)
-    base = [
-        ("2024-06-01", float(v)) for v in rng.normal(10.0, 2.0, size=5000)
-    ] + [("2024-06-02", float(v)) for v in rng.normal(50.0, 5.0, size=5000)]
-    spark.createDataFrame(base, "day string, value double").write.mode(
-        "overwrite"
-    ).parquet(raw_path)
-
-    agg = lambda df: quantile_rollup(df, ["bucket"], "value", k=128)
-    r1 = refresh_continuous_aggregate(
-        spark, spark.read.parquet(raw_path), roll_path, agg,
-        ts_col="value", bucket_col="bucket", bucket_expr=F.col("day"),
-    )
-    assert r1["touched_buckets"] == 0 or r1["rows_written"] == 2  # first run: full build
-
-    # late rows shift day 1 far upward; day 2 untouched
-    late = [("2024-06-01", 1000.0 + float(v)) for v in rng.normal(size=5000)]
-    spark.createDataFrame(late, "day string, value double").write.mode(
-        "append"
-    ).parquet(raw_path)
-    r2 = refresh_continuous_aggregate(
-        spark, spark.read.parquet(raw_path), roll_path, agg,
-        ts_col="value", bucket_col="bucket", bucket_expr=F.col("day"),
-    )
-    assert r2["touched_buckets"] == 1  # only day 1 recomputed
-
-    # hive partition inference reads the day partition back as DATE
-    est = {
-        str(r["bucket"]): r
-        for r in quantile_estimate(
-            read_rollup(spark, roll_path), ["bucket"], [0.5, 0.9]
-        ).collect()
-    }
-    assert est["2024-06-01"]["n_rows"] == 10_000
-    # repaired day-1 median sits between the two modes; p90 in the late mass
-    assert 10.0 < est["2024-06-01"]["p50"] < 1000.0
-    assert est["2024-06-01"]["p90"] > 990.0
-    assert est["2024-06-02"]["n_rows"] == 5000
-    assert 48.0 < est["2024-06-02"]["p50"] < 52.0
-
-
 # ----------------------------------------------------- streaming / merge state
 
 def test_merge_batch_exactly_once_and_replay_skip(spark, tmp_path):

@@ -1,7 +1,6 @@
 """Sketch rollups: HLL per-bucket sketches merge to the same answer as a
 direct scan (within the sketch's error bound, exact at these
-cardinalities), survive a parquet round-trip, and maintain correctly
-through the continuous-aggregate refresh; CMS estimates only ever
+cardinalities) and survive a parquet round-trip; CMS estimates only ever
 overcount, bounded by ε·N, and bucket merges equal the direct sketch."""
 
 from __future__ import annotations
@@ -13,10 +12,6 @@ sys.path.insert(0, "/root/repo")
 import pytest
 from pyspark.sql import functions as F
 
-from binance_data_pipeline_spark.operators.rollup import (
-    read_rollup,
-    refresh_continuous_aggregate,
-)
 from binance_data_pipeline_spark.operators.sketches import (
     cms_query,
     cms_rollup,
@@ -88,34 +83,6 @@ def test_hll_sketch_survives_parquet(spark, lineitem, tmp_path):
     est = hll_estimate(back, [], ["l_orderkey"]).first()["l_orderkey_distinct"]
     exact = lineitem.select("l_orderkey").distinct().count()
     assert abs(est - exact) / exact < 0.05
-
-
-def test_hll_through_continuous_aggregate(spark, tmp_path):
-    raw_path = str(tmp_path / "raw.parquet")
-    rollup_path = str(tmp_path / "ca")
-    rows = [(i, (i % 3) * 100, f"u{i % 7}") for i in range(50)]
-    spark.createDataFrame(rows, "ts long, bucket long, user string").write.mode(
-        "append"
-    ).parquet(raw_path)
-
-    def agg_fn(df):
-        return hll_rollup(df, ["bucket"], ["user"])
-
-    refresh_continuous_aggregate(
-        spark, spark.read.parquet(raw_path), rollup_path, agg_fn, ts_col="ts"
-    )
-    # late row lands in an old bucket with a NEW user: the bucket is
-    # recomputed, and the merged estimate sees the new user
-    spark.createDataFrame(
-        [(1000, 0, "newcomer")], "ts long, bucket long, user string"
-    ).write.mode("append").parquet(raw_path)
-    stats = refresh_continuous_aggregate(
-        spark, spark.read.parquet(raw_path), rollup_path, agg_fn, ts_col="ts"
-    )
-    assert stats["touched_buckets"] == 1
-    est = hll_estimate(read_rollup(spark, rollup_path), [], ["user"]).first()
-    assert est["user_distinct"] == 8  # u0..u6 + newcomer (exact at this size)
-    assert est["n_rows"] == 51
 
 
 def test_cms_overcounts_within_bound(spark, lineitem):

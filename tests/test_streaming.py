@@ -137,50 +137,6 @@ def test_session_bursts_batch(spark, raw_dir):
         assert r["n_trades"] > 0
 
 
-def test_running_vwap_stateful(spark, raw_dir):
-    """applyInPandasWithState custom operator: running VWAP must equal the
-    batch-computed VWAP after the stream drains."""
-    from binance_data_pipeline_spark.streaming.stateful import running_vwap
-
-    stream_staged = bronze_to_staging(
-        raw_to_bronze(parse_envelope(read_raw_stream_from_files(spark, raw_dir)))
-    ).where(F.col("price").isNotNull() & F.col("quantity").isNotNull())
-    q = (
-        running_vwap(stream_staged)
-        .writeStream.format("memory")
-        .queryName("vwap_state")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    # take the LAST emitted row per symbol (update mode emits per batch)
-    got = {
-        r["symbol"]: r
-        for r in spark.table("vwap_state")
-        .withColumn("rn", F.row_number().over(
-            __import__("pyspark.sql.window", fromlist=["Window"]).Window
-            .partitionBy("symbol").orderBy(F.col("n_trades").desc())))
-        .where(F.col("rn") == 1)
-        .collect()
-    }
-    batch = bronze_to_staging(raw_to_bronze(parse_envelope(spark.read.text(raw_dir))))
-    batch = batch.where(F.col("price").isNotNull() & F.col("quantity").isNotNull())
-    exp = {
-        r["symbol"]: r
-        for r in batch.groupBy("symbol")
-        .agg(
-            (F.sum(F.col("price") * F.col("quantity")) / F.sum("quantity")).alias("vwap"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .collect()
-    }
-    assert set(got) == set(exp)
-    for sym in exp:
-        assert got[sym]["n_trades"] == exp[sym]["n"]
-        assert abs(got[sym]["running_vwap"] - exp[sym]["vwap"]) < 1e-6
-
-
 def test_watermark_drops_late_rows(spark, tmp_path):
     """ST5 streaming-side: with a watermark, rows arriving far behind the
     stream's max event time are excluded from finalized windows. File 1
@@ -313,56 +269,3 @@ def test_stream_stream_interval_join(spark, tmp_path):
     assert {r["price"] for r in got} == {103.0, 104.0, 105.0, 106.0, 107.0, 108.0}
     assert all(r["bid"] == 99.0 for r in got)  # ancient quote never matched
 
-
-def test_session_tracker_timeout_eviction(spark, tmp_path):
-    """Event-time-timeout stateful op: a session closes (emits ONCE, state
-    evicted) only after the watermark passes last_event + gap; in-flight
-    sessions emit nothing. Three single-file micro-batches advance the
-    watermark deterministically."""
-    import datetime as dt
-
-    from binance_data_pipeline_spark.streaming.stateful import session_tracker
-
-    src = str(tmp_path / "events")
-    t0 = dt.datetime(2024, 6, 10, 10, 0, 0)
-
-    def write_file(name, rows):
-        spark.createDataFrame(rows, "user_id long, ts timestamp, value double") \
-            .coalesce(1).write.mode("append").parquet(src)
-
-    # batch 1: user 1's whole session (10:00:00-10:00:10), user 2 starts
-    write_file("f1", [
-        (1, t0, 5.0),
-        (1, t0 + dt.timedelta(seconds=10), 7.0),
-        (2, t0 + dt.timedelta(seconds=5), 1.0),
-    ])
-    # batch 2: far-future activity for user 2 → advances max event time
-    write_file("f2", [(2, t0 + dt.timedelta(minutes=30), 2.0)])
-    # batch 3: nudges the watermark past user 1's timeout so it fires
-    write_file("f3", [(2, t0 + dt.timedelta(minutes=31), 3.0)])
-
-    stream = (
-        spark.readStream.schema("user_id long, ts timestamp, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        session_tracker(stream, gap_ms=30_000, watermark="10 seconds")
-        .writeStream.format("memory")
-        .queryName("closed_sessions")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    closed = {r["user_id"]: r for r in spark.table("closed_sessions").collect()}
-    # user 1 closed exactly once with the full session; user 2 still open
-    assert set(closed) == {1}
-    s = closed[1]
-    assert s["n_events"] == 2
-    assert abs(s["total_value"] - 12.0) < 1e-9
-    assert s["duration_ms"] == 10_000
-    # restartable: a new query over the same checkpointless memory sink is
-    # out of scope here; state eviction is observable via the single emit
-    assert spark.table("closed_sessions").count() == 1
