@@ -37,6 +37,7 @@ asof             as-of join (trade × quote style)
 revenue          fee/tax revenue fact (§3.4 flagship)
 scale            compaction, bucketing, salted agg + salted skew join, Z-order path writes
 zorder           Morton keys for snapshot compaction (any orderable type, sampled quantile cuts)
+skipping         file-level min/max data-skipping index
 snapshots        snapshot-versioned tables (atomic commits, time travel, rollback, vacuum, exactly-once streaming appends)
 mview            incrementally maintained materialized aggregate views (change-feed fold, exactly-once cursor-in-manifest)
 """
