@@ -117,22 +117,3 @@ def append_with_schema_evolution(df: DataFrame, path: str) -> DataFrame:
     df.write.mode("append").parquet(path)
     spark = df.sparkSession
     return spark.read.option("mergeSchema", "true").parquet(path)
-
-
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str] | None = None,
-    mode: str = "append",
-) -> None:
-    """Write a partitioned Parquet table (snappy by session default).
-
-    Mirrors the reference's bronze layout (date=/hour= Hive keys) but derives
-    the partition per-row via ``partitionBy`` — strictly more correct than the
-    reference's first-record-of-batch approximation
-    (``producer/kafka_to_s3_bronze.py:63-64``).
-    """
-    writer = df.write.mode(mode)
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(path)

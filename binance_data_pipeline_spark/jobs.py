@@ -208,41 +208,6 @@ def corpus_report(
     }
 
 
-def materialize_dedup_corpus(
-    spark: SparkSession,
-    docs_path: str,
-    out_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.85,
-    max_bucket_size: int | None = 5000,
-) -> tuple[int, int]:
-    """The training-data-corpus DAG (extension — no reference equivalent):
-    read documents → exact + near-dup dedup with transitive clustering →
-    write `{out}/corpus.parquet` (kept docs) and `{out}/mapping.parquet`
-    (doc_id → kept_doc_id + reason, the removal audit trail). Returns
-    (kept_count, input_count). Mapping is written first so a crash between
-    the writes never leaves kept docs unexplained."""
-    from .lifecycle import barrier_scope
-    from .operators.dedup import dedup_corpus
-
-    docs = spark.read.parquet(docs_path)
-    # barrier_scope: dedup's eager-checkpoint intermediates (shingle/
-    # signature/label tables) are released once both outputs are written,
-    # so a chained multi-corpus job doesn't accumulate executor storage.
-    with barrier_scope(spark):
-        kept, mapping = dedup_corpus(
-            docs, id_col=id_col, text_col=text_col, threshold=threshold,
-            max_bucket_size=max_bucket_size,
-        )
-        mapping.write.mode("overwrite").parquet(f"{out_path.rstrip('/')}/mapping.parquet")
-        kept.write.mode("overwrite").parquet(f"{out_path.rstrip('/')}/corpus.parquet")
-    return (
-        spark.read.parquet(f"{out_path.rstrip('/')}/corpus.parquet").count(),
-        docs.count(),
-    )
-
-
 def build_training_corpus(
     spark: SparkSession,
     docs_path: str,

@@ -2,8 +2,8 @@
 
 cleaning         bronze→staging clean/cast (P1-P6)
 incremental      high-watermark incremental materialization (P8/ST5)
-dedup            exact / MinHash-LSH / SimHash / n-gram-Jaccard dedup + clustering
-semdedup         semantic (embedding-cell) dedup, batch + incremental + streaming
+dedup            MinHash-LSH / SimHash / n-gram-Jaccard dedup + clustering
+semdedup         semantic (embedding-cell) dedup
 substring        exact-substring span dedup (distributed ExactSubstr)
 similarity       embedding similarity search (brute-force + RP-LSH ANN)
 embedder         text → embedding generation (hash encoder default, model-injectable)
@@ -19,25 +19,24 @@ lm_score         CCNet-style n-gram LM fluency scoring (broadcast-join cross-ent
 quality_rules    Gopher/C4 structural rule bundles + per-domain gate
 quality_classifier  trainable hashed-n-gram logistic quality filter (FineWeb-Edu recipe)
 dsir             DSIR importance resampling (target-distribution matching, Gumbel top-k)
-vocab            token/n-gram frequencies, top-k vocab, IDF
+vocab            token/n-gram frequency tables
 bm25             BM25 retrieval + persisted term-bucket index + RRF hybrid fusion
 retrieval        serving root: BM25+IVF build + RRF hybrid search + injectable rerank
 behavior         funnel conversion + cohort retention over event streams
 scd              SCD Type 2 dimension merge + point-in-time lookup join
 anomaly          rolling z-score / robust IQR / seasonal-residual flags
-sampling         deterministic sampling / token budgets / domain caps / mixing / shuffle / packing / split
+sampling         deterministic stratified sampling + shuffle
 sketches         HLL distinct + count-min frequency rollups (mergeable)
-quantiles        MRL/KLL quantile sketch rollups (mergeable, streaming exactly-once)
-heavyhitters     Misra-Gries top-k rollups (mergeable, streaming exactly-once)
-state_swap       shared exactly-once merge-state machinery (atomic dir swap)
+quantiles        MRL/KLL quantile sketch rollups (mergeable)
+heavyhitters     Misra-Gries top-k rollups (mergeable)
+state_swap       exactly-once batch markers for append-only foreachBatch sinks
 metacache        serve-path index-metadata memo (listing-keyed, self-invalidating)
 profile          per-column table profiling (nulls, distinct, range, quantiles, top values)
-subqueries       IN/NOT IN (single + row-value), EXISTS, ALL/ANY quantified, correlated scalar-agg subquery filters with exact ANSI 3VL null semantics
+subqueries       correlated scalar-agg subquery filter with exact ANSI empty-group semantics
 asof             as-of join (trade × quote style)
 revenue          fee/tax revenue fact (§3.4 flagship)
-scale            compaction, bucketing, salted agg + salted skew join, Z-order path writes
+scale            hot-key detection + salted skew join
 zorder           Morton keys for snapshot compaction (any orderable type, sampled quantile cuts)
-skipping         file-level min/max data-skipping index
 snapshots        snapshot-versioned tables (atomic commits, time travel, rollback, vacuum, exactly-once streaming appends)
 mview            incrementally maintained materialized aggregate views (change-feed fold, exactly-once cursor-in-manifest)
 """

@@ -3,7 +3,7 @@ c-TF-IDF cluster keywords (the BERTopic recipe, Grootendorst 2022,
 re-expressed as DataFrame aggregates).
 
 Why it belongs in a training-data engine: domain/topic composition
-drives mixing weights (operators/sampling.mix_corpora), per-domain
+drives mixing weights, per-domain
 quality gates (operators/quality_rules) and dedup cell layouts — and a
 crawl rarely arrives with usable domain labels. Clustering synthesises
 them from content.

@@ -24,26 +24,11 @@ Arrow-batched SimHash kernel (vectorized per batch, never per row).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .similarity import _spread
 from .text import tokens
-
-
-# --------------------------------------------------------------------------
-# Exact dedup
-# --------------------------------------------------------------------------
-
-def exact_dedup(df: DataFrame, key_cols: list[str], order_cols: list[str]) -> DataFrame:
-    """Keep a deterministic first row per key (row_number over order_cols).
-
-    Spark's dropDuplicates keeps an arbitrary row; a reproducible pipeline
-    wants a defined winner (same motivation as the reference's
-    unique_key merge, dbt_project/models/marts/fact_trades.sql:4).
-    """
-    w = Window.partitionBy(*key_cols).orderBy(*order_cols)
-    return df.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") == 1).drop("__rn")
 
 
 # --------------------------------------------------------------------------
@@ -953,66 +938,5 @@ def contamination_report_bloom(
             "matched_shingles",
             F.col("p_n").alias("probe_shingles"),
             "overlap",
-        )
-    )
-
-
-# --------------------------------------------------------------------------
-# Cross-document paragraph dedup (boilerplate stripping)
-# --------------------------------------------------------------------------
-
-def dedup_paragraphs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_occurrences: int = 1,
-    sep: str = "\n\n",
-) -> DataFrame:
-    """Strip paragraphs that occur verbatim in MORE THAN ``max_occurrences``
-    distinct docs — the line/paragraph-level dedup of the published web-
-    corpus recipes (headers, footers, cookie banners survive doc-level
-    dedup because the docs around them differ). Whole-doc near-dup removal
-    (minhash_near_dups) and this operator are complementary passes.
-
-    Returns (id, text, n_paras, n_removed) with each doc's text rebuilt
-    from its surviving paragraphs IN ORIGINAL ORDER; docs whose every
-    paragraph was boilerplate come back with empty text (drop or re-score
-    downstream — they carry no unique content).
-
-    Scale shape: posexplode paragraphs → count DISTINCT docs per paragraph
-    hash (one shuffle, map-side partial agg) → anti-join the over-limit
-    hashes (AQE broadcasts the usually-tiny blocklist) → rebuild per doc
-    with array_sort over (pos, para) structs (second shuffle). Matching is
-    on xxhash64 of the whitespace-trimmed paragraph; 64-bit collisions are
-    negligible at corpus scale."""
-    paras = df.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(F.split(F.col(text_col), sep)).alias("pos", "para"),
-    ).withColumn("ph", F.xxhash64(F.trim(F.col("para"))))
-    over = (
-        paras.groupBy("ph")
-        .agg(F.count_distinct(F.col("id")).alias("docs"))
-        .where(F.col("docs") > max_occurrences)
-        .select("ph")
-    )
-    kept = paras.join(over, "ph", "left_anti")
-    rebuilt = kept.groupBy("id").agg(
-        F.concat_ws(
-            sep,
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "para"))),
-                lambda x: x["para"],
-            ),
-        ).alias(text_col),
-        F.count(F.lit(1)).alias("n_kept"),
-    )
-    totals = paras.groupBy("id").agg(F.count(F.lit(1)).alias("n_paras"))
-    return (
-        totals.join(rebuilt, "id", "left")
-        .select(
-            F.col("id").alias(id_col),
-            F.coalesce(F.col(text_col), F.lit("")).alias(text_col),
-            F.col("n_paras").cast("long").alias("n_paras"),
-            (F.col("n_paras") - F.coalesce("n_kept", F.lit(0))).cast("long").alias("n_removed"),
         )
     )

@@ -175,7 +175,7 @@ def dsir_resample(
     any cluster. Returns the selected docs with ``dsir_logw`` and
     ``dsir_key`` attached.
 
-    Hybrid selection by k (the cap_per_group posture — a DSIR run over
+    Hybrid selection by k (a DSIR run over
     a crawl selects k in the hundreds of millions, and a TakeOrdered
     merges k rows ON THE DRIVER):
 

@@ -134,75 +134,6 @@ def heavy_hitters_rollup(
     return partial.groupBy(*gcols).applyInPandas(merge, schema)
 
 
-def _merge_summary_rows(rollups: DataFrame, group_cols: list[str]) -> DataFrame:
-    """Collapse a union of summary rows (several MG summaries per group)
-    to one per group — shared by the rollup reduce and the streaming
-    state merge."""
-    gcols = list(group_cols)
-    schema = StructType(
-        [rollups.schema[c] for c in gcols]
-        + [StructField("mg", BinaryType()), StructField("n_rows", LongType())]
-    )
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = _loads(pdf["mg"].iloc[0])
-        for b in pdf["mg"].iloc[1:]:
-            sk = mg_merge(sk, _loads(b))
-        out = pdf.iloc[[0]][gcols].copy()
-        out["mg"] = [_dumps(sk)]
-        out["n_rows"] = [int(pdf["n_rows"].sum())]
-        return out
-
-    return rollups.groupBy(*gcols).applyInPandas(merge, schema)
-
-
-def heavy_hitters_merge_batch(
-    batch: DataFrame,
-    state_path: str,
-    group_cols: list[str],
-    item_col: str,
-    k: int = 64,
-    batch_id: int | None = None,
-) -> None:
-    """Fold one batch's MG summaries into persisted per-group state —
-    exactly-once under foreachBatch replays via the shared
-    operators/state_swap machinery (batch id committed atomically with
-    the swapped state directory)."""
-    from .state_swap import merge_state_batch
-
-    merge_state_batch(
-        batch.sparkSession,
-        state_path,
-        build_batch_rows=lambda: heavy_hitters_rollup(batch, group_cols, item_col, k),
-        merge_rows=lambda union: _merge_summary_rows(union, group_cols),
-        batch_id=batch_id,
-    )
-
-
-def streaming_heavy_hitters(
-    stream: DataFrame,
-    state_path: str,
-    checkpoint: str,
-    group_cols: list[str],
-    item_col: str,
-    k: int = 64,
-):
-    """foreachBatch wrapper over heavy_hitters_merge_batch — streaming
-    top-k state read back with heavy_hitters_estimate(
-    state_swap.read_state(...)). Returns the UNSTARTED writer."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        heavy_hitters_merge_batch(
-            batch_df, state_path, group_cols, item_col, k, batch_id=batch_id
-        )
-
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(process)
-    )
-
-
 def heavy_hitters_estimate(
     rollup: DataFrame,
     group_cols: list[str],

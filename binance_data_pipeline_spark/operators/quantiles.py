@@ -30,7 +30,7 @@ raw data is never rescanned.
 A bucket's sketch is never adjusted in place: late rows for an old
 bucket are absorbed by rebuilding that bucket's sketch (a pure
 overwrite, no sketch-subtract problem, as for the HLL/CMS columns) or
-by merging a sketch of the late rows (``quantile_rollup_merge_batch``).
+by merging a sketch of the late rows into it (``sketch_merge``).
 
 At 100 TB: one shuffle at (bucket × dims) grain, map-side partials, ~KB
 rows out. The Python kernel is Arrow-batched; values cross into Python
@@ -230,95 +230,6 @@ def quantile_rollup(
 
     partial = df.select(*gcols, value_col).mapInPandas(partials, schema)
     return partial.groupBy(*gcols).applyInPandas(merge, schema)
-
-
-def _merge_rollup_rows(rollups: DataFrame, group_cols: list[str]) -> DataFrame:
-    """Merge a union of rollup rows (several sketches per group) down to
-    one sketch per group — the reduce kernel shared by quantile_rollup and
-    the streaming state merge."""
-    gcols = list(group_cols)
-    schema = StructType(
-        [rollups.schema[c] for c in gcols]
-        + [StructField("qsketch", BinaryType()), StructField("n_rows", LongType())]
-    )
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = _loads(pdf["qsketch"].iloc[0])
-        for b in pdf["qsketch"].iloc[1:]:
-            sk = sketch_merge(sk, _loads(b))
-        out = pdf.iloc[[0]][gcols].copy()
-        out["qsketch"] = [_dumps(sk)]
-        out["n_rows"] = [int(pdf["n_rows"].sum())]
-        return out
-
-    return rollups.groupBy(*gcols).applyInPandas(merge, schema)
-
-
-def quantile_rollup_merge_batch(
-    batch: DataFrame,
-    state_path: str,
-    group_cols: list[str],
-    value_col: str,
-    k: int = 256,
-    batch_id: int | None = None,
-) -> None:
-    """Merge one batch into a persisted quantile-rollup state — the
-    sketch-native incremental path: the batch is sketched once and MERGED
-    with the stored per-group sketches; raw history is never re-read
-    (sketches merge, so touched buckets need no recompute from raw).
-
-    State layout (swapped atomically as ONE directory via Hadoop-FS
-    rename, the ivf.py build pattern):
-        {state_path}/table.parquet   (group_cols..., qsketch, n_rows)
-        {state_path}/meta.parquet    (last_batch_id)
-
-    ``batch_id`` makes replays EXACTLY-ONCE: a merge-state double-counts a
-    replayed batch (unlike the append-only dedup states, re-merging is not
-    idempotent), so the applied batch id is committed inside the same
-    atomic swap and an already-applied id is skipped. Pass the foreachBatch
-    batch id; None disables the guard (ad-hoc batch use). Machinery shared
-    with every merge-state sink via operators/state_swap."""
-    from .state_swap import merge_state_batch
-
-    merge_state_batch(
-        batch.sparkSession,
-        state_path,
-        build_batch_rows=lambda: quantile_rollup(batch, group_cols, value_col, k),
-        merge_rows=lambda union: _merge_rollup_rows(union, group_cols),
-        batch_id=batch_id,
-    )
-
-
-def streaming_quantile_rollup(
-    stream: DataFrame,
-    state_path: str,
-    checkpoint: str,
-    group_cols: list[str],
-    value_col: str,
-    k: int = 256,
-):
-    """foreachBatch wrapper over quantile_rollup_merge_batch — streaming
-    percentile state that any coarser-grain query reads with
-    quantile_estimate(read_quantile_state(...)). Returns the UNSTARTED
-    writer (caller picks trigger and calls .start()). Exactly-once per
-    batch: the applied batch id commits atomically with the merged
-    sketches, so checkpoint replays skip instead of double-counting."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        quantile_rollup_merge_batch(
-            batch_df, state_path, group_cols, value_col, k, batch_id=batch_id
-        )
-
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(process)
-    )
-
-
-def read_quantile_state(spark, state_path: str) -> DataFrame:
-    """The current streaming/batch-merged rollup state table."""
-    return spark.read.parquet(f"{state_path.rstrip('/')}/table.parquet")
 
 
 def quantile_estimate(

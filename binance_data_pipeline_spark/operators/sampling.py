@@ -1,14 +1,15 @@
-"""Deterministic corpus sampling, mixing, and shuffling — the composition
-stage of a training-data pipeline (no reference equivalent; LLM-pipeline
-extension alongside dedup/text/similarity).
+"""Deterministic corpus sampling and shuffling for the training-corpus
+job (`jobs.build_training_corpus`): per-stratum sampling
+(`stratified_sample`) and a reproducible global order
+(`shuffle_deterministic`). No reference equivalent; LLM-pipeline
+extension alongside dedup/text/similarity.
 
-Everything keys off xxhash64(id, seed) rather than Spark's RNG-based
+Both key off xxhash64(id, seed) rather than Spark's RNG-based
 `sample`/`sampleBy`: a hash threshold gives the SAME row set under any
 partitioning, any executor count, and re-runs — reproducibility is the
 point for training corpora (`df.sample` draws per split boundary, so the
-selection changes when the file layout does). All map-side, no shuffle
-except the explicit ones: `shuffle_deterministic`'s range exchange and
-`pack_sequences`' hash-group exchange.
+selection changes when the file layout does). Sampling is map-side; the
+only shuffle is `shuffle_deterministic`'s range exchange.
 
 Rates are approximate to ~1/sqrt(n·rate) like any Bernoulli sample, but
 the DRAW is exact: a row's fate depends only on (id, seed).
@@ -27,14 +28,6 @@ def _unit_hash(id_col: Column | str, seed: int) -> Column:
     """Deterministic uniform draw in [0, 1) per (id, seed)."""
     c = F.col(id_col) if isinstance(id_col, str) else id_col
     return F.pmod(F.xxhash64(c, F.lit(seed)), F.lit(_GRAIN)) / F.lit(float(_GRAIN))
-
-
-def hash_sample(df: DataFrame, id_col: str, rate: float, seed: int = 0) -> DataFrame:
-    """Keep ~rate of rows, deterministically per (id, seed). Same id, same
-    seed → same decision, regardless of partitioning or cluster size."""
-    if not 0.0 <= rate <= 1.0:
-        raise ValueError(f"rate must be in [0, 1], got {rate}")
-    return df.where(_unit_hash(id_col, seed) < F.lit(rate))
 
 
 def stratified_sample(
@@ -59,211 +52,6 @@ def stratified_sample(
     return df.where(_unit_hash(id_col, seed) < rate)
 
 
-def mix_corpora(
-    sources: dict[str, tuple[DataFrame, float]],
-    id_col: str,
-    seed: int = 0,
-) -> DataFrame:
-    """Weighted corpus mix: `sources` maps source name → (df, keep_rate);
-    each source is hash-sampled at its rate, tagged with a `mix_source`
-    column, and unioned by name. The standard way to re-weight domains
-    (code/web/books/...) into one training corpus; rates > 1.0 express
-    upsampling by integer repetition + fractional remainder (epoch-style:
-    rate 2.5 = every doc twice, half the docs a third time, chosen
-    deterministically per id; repeats carry `mix_epoch` 0..n so downstream
-    shuffling separates them).
-
-    Each source is scanned ONCE however large its rate: per-row repeat
-    count = whole epochs + the fractional draw, exploded to epoch rows —
-    not one union leg per epoch, which would re-read a 100 TB source
-    ceil(rate) times."""
-    if all(rate == 0 for _, rate in sources.values()):
-        raise ValueError("mix_corpora needs at least one source with rate > 0")
-    legs = []
-    for name, (df, rate) in sources.items():
-        if rate < 0:
-            raise ValueError(f"rate for source {name!r} must be >= 0, got {rate}")
-        whole, frac = int(rate), rate - int(rate)
-        n_rep = F.lit(whole) + F.when(
-            _unit_hash(id_col, seed + whole) < F.lit(float(frac)), 1
-        ).otherwise(0)
-        epochs = F.when(n_rep > 0, F.sequence(F.lit(0), n_rep - 1)).otherwise(
-            F.array().cast("array<int>")
-        )
-        legs.append(
-            df.withColumn("mix_source", F.lit(name)).withColumn(
-                "mix_epoch", F.explode(epochs)
-            )
-        )
-    out = legs[0]
-    for leg in legs[1:]:
-        out = out.unionByName(leg)
-    return out
-
-
-def sample_token_budget(
-    df: DataFrame,
-    id_col: str,
-    domain_col: str,
-    budgets: dict[str, int],
-    tokens_col: str | Column | None = None,
-    seed: int = 0,
-    refine_iters: int = 1,
-    tolerance: float = 0.02,
-) -> tuple[DataFrame, dict[str, dict]]:
-    """Token-budgeted domain mixing: keep a deterministic subset of each
-    domain totalling ≈ its token budget — "2B tokens of code, 500M of
-    books" — the unit training mixes are actually specified in (doc-count
-    rates can't express it when domains have different doc lengths).
-
-    Scale shape deliberately avoids the obvious construction (per-domain
-    hash-ordered running token sum cut at the budget: a window that SORTS
-    EVERY DOMAIN — a 100 TB domain lands on one sort). Instead a hash
-    THRESHOLD per domain is solved for: token mass is uniform in the hash
-    draw, so rate ≈ budget/total after one aggregate, and ``refine_iters``
-    measurement passes (one small agg each) correct any heavy-tail error:
-    measure tokens below the current threshold, rescale by budget/achieved,
-    stop early inside ``tolerance``. The final selection is ONE map-side
-    filter — same determinism contract as every sampler here (a row's fate
-    depends only on (id, seed, final rate)).
-
-    ``tokens_col``: column/expr of per-doc token counts (default: the
-    whitespace token count of ``text``). Domains missing from ``budgets``
-    pass through whole. Budget ≥ domain total keeps the domain whole.
-
-    Returns (sampled_df, report) — report per budgeted domain:
-    {total_tokens, target, achieved_est, rate}. Driver state is one row
-    per domain (bounded metadata, not a data path). Achieved totals are
-    approximate to the Bernoulli draw (~1/√n_docs relative); pass more
-    ``refine_iters`` for tighter fits on heavy-tailed domains."""
-    if not budgets:
-        return df, {}
-    if tokens_col is None:
-        tokens_col = F.size(F.split(F.trim(F.col("text")), r"\s+"))
-    tok = F.col(tokens_col) if isinstance(tokens_col, str) else tokens_col
-    work = df.withColumn("__tok", tok.cast("double"))
-
-    # filter to budgeted domains BEFORE the collect: the driver sees one
-    # row per BUDGETED domain (user-sized), never one per distinct domain
-    # (hostname-grained on a crawl = millions)
-    totals = {
-        r[domain_col]: r["__t"]
-        for r in work.where(F.col(domain_col).isin(list(budgets)))
-        .groupBy(domain_col)
-        .agg(F.sum("__tok").alias("__t"))
-        .collect()
-    }
-    rates: dict[str, float] = {}
-    for dom, budget in budgets.items():
-        total = totals.get(dom, 0.0) or 0.0
-        rates[dom] = 1.0 if total <= budget else budget / total
-
-    u = _unit_hash(id_col, seed)
-    for _ in range(max(0, refine_iters)):
-        pending = {d: r for d, r in rates.items() if r < 1.0}
-        if not pending:
-            break
-        rate_map = F.create_map(
-            *[x for d, r in pending.items() for x in (F.lit(d), F.lit(float(r)))]
-        )
-        achieved = {
-            r[domain_col]: r["__a"]
-            for r in work.where(F.col(domain_col).isin(list(pending)))
-            .where(u < rate_map[F.col(domain_col)])
-            .groupBy(domain_col)
-            .agg(F.sum("__tok").alias("__a"))
-            .collect()
-        }
-        done = True
-        for dom in pending:
-            got = achieved.get(dom, 0.0) or 0.0
-            target = float(budgets[dom])
-            if got > 0 and abs(got - target) / target > tolerance:
-                rates[dom] = min(1.0, rates[dom] * target / got)
-                done = False
-        if done:
-            break
-
-    keep_map = F.create_map(
-        *[x for d, r in rates.items() for x in (F.lit(d), F.lit(float(r)))]
-    )
-    # unlisted domains: rate 1 (pass through whole)
-    rate_col = F.coalesce(keep_map[F.col(domain_col)], F.lit(1.0))
-    sampled = work.where(u < rate_col).drop("__tok")
-
-    report = {
-        dom: {
-            "total_tokens": float(totals.get(dom, 0.0) or 0.0),
-            "target": float(budgets[dom]),
-            "achieved_est": float(
-                min(totals.get(dom, 0.0) or 0.0, rates[dom] * (totals.get(dom, 0.0) or 0.0))
-            ),
-            "rate": rates[dom],
-        }
-        for dom in budgets
-    }
-    return sampled, report
-
-
-def cap_per_group(
-    df: DataFrame,
-    id_col: str,
-    group_col: str,
-    max_rows: int,
-    seed: int = 0,
-    exact_threshold: int = 100_000,
-) -> DataFrame:
-    """Cap each group at ~``max_rows`` rows — the per-domain cap of web
-    corpora (a handful of hosts otherwise dominate a crawl; RefinedWeb,
-    C4 and Gopher all apply one).
-
-    Hybrid strategy by group size (one counts agg decides):
-      - groups ≤ ``exact_threshold`` rows: EXACT — row_number over the
-        hash order within the group, keep rank ≤ cap. The window sorts
-        only these small groups.
-      - larger groups: hash-threshold rate = max_rows/count — a map-side
-        filter, approximate to ~1/√cap, no global sort of a giant domain
-        (the all-window formulation would sort every mega-domain on one
-        partition at 100 TB).
-    Both paths draw from the same xxhash64(id, seed) order, so the kept
-    set is deterministic under any partitioning. Groups under the cap
-    pass through whole.
-
-    Driver state is O(1): the over-cap groups stay IN THE PLAN as a
-    broadcast-joined ``(group, __n)`` counts frame, never driver
-    literals — a crawl with millions of over-cap hosts neither ships
-    rows to the driver nor builds a megabyte ``isin`` plan, and the
-    group column keeps its real type (int ids, dates) instead of being
-    forced through a string schema. The broadcast side is small by
-    construction: a group must exceed ``max_rows`` rows to appear, so
-    over-cap groups number at most n_rows/max_rows."""
-    from pyspark.sql import Window as W
-
-    counts = (
-        df.groupBy(group_col)
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .where(F.col("__n") > F.lit(max_rows))
-    )
-    if counts.isEmpty():  # bounded probe (a boolean, not per-group rows)
-        return df
-    joined = df.join(F.broadcast(counts), group_col, "left")
-    u = _unit_hash(id_col, seed)
-    under = joined.where(F.col("__n").isNull())
-    w = W.partitionBy(group_col).orderBy(u.asc(), F.col(id_col).asc())
-    small = (  # null __n fails the <= predicate, so this is over-cap only
-        joined.where(F.col("__n") <= F.lit(exact_threshold))
-        .withColumn("__rk", F.row_number().over(w))
-        .where(F.col("__rk") <= max_rows)
-        .drop("__rk")
-    )
-    big = joined.where(F.col("__n") > F.lit(exact_threshold)).where(
-        u < F.lit(float(max_rows)) / F.col("__n")
-    )
-    return (
-        under.unionByName(small).unionByName(big).select(*df.columns)
-    )
-
-
 def shuffle_deterministic(df: DataFrame, id_col: str, seed: int = 0, num_partitions: int | None = None) -> DataFrame:
     """Global deterministic shuffle for training export: rows ordered by
     xxhash64(id, seed) — repartitionByRange on the hash + in-partition
@@ -278,120 +66,3 @@ def shuffle_deterministic(df: DataFrame, id_col: str, seed: int = 0, num_partiti
         .sortWithinPartitions("__shuffle_key")
         .drop("__shuffle_key")
     )
-
-
-def pack_sequences(
-    chunks: DataFrame,
-    id_col: str,
-    tokens_col: str,
-    budget: int,
-    num_groups: int | None = None,
-    seed: int = 0,
-) -> DataFrame:
-    """Greedy token-budget packing: assemble chunks into packs whose token
-    totals stay ≤ budget — the sequence-packing prep that turns a chunked
-    corpus into fixed-context training rows with minimal padding.
-
-    Distributed shape: rows are salted into `num_groups` hash groups
-    (deterministic per (id, seed), like every draw in this module), and
-    first-fit-decreasing runs INDEPENDENTLY per group inside one
-    applyInPandas pass — bin packing is inherently sequential, so this is
-    the legitimate Arrow-batched Python case (a pure-DataFrame form would
-    need an iterative loop of window scans). Packing quality loses nothing
-    measurable: FFD inside any group of thousands of chunks is within a
-    few percent of global FFD, and groups keep every pack's state in one
-    task's memory no matter the corpus size.
-
-    Oversized chunks (> budget) get a singleton pack flagged
-    `oversize=true` rather than being dropped silently.
-
-    Returns (pack_id string, members array<id>, total_tokens long,
-    oversize boolean); pack_id is deterministic: "<group>-<local index>".
-    """
-    if budget <= 0:
-        raise ValueError(f"budget must be positive, got {budget}")
-    spark = chunks.sparkSession
-    groups = num_groups or int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    base = chunks.select(
-        F.col(id_col).alias("id"),
-        F.col(tokens_col).cast("long").alias("n"),
-        F.pmod(F.xxhash64(F.col(id_col), F.lit(seed)), F.lit(groups)).alias("grp"),
-    )
-
-    def pack(pdf):
-        import pandas as pd
-
-        grp = int(pdf["grp"].iloc[0])
-        # first-fit-decreasing, deterministic: sort by (tokens desc, id)
-        items = sorted(
-            zip(pdf["id"], pdf["n"]), key=lambda t: (-int(t[1]), t[0])
-        )
-        packs: list[tuple[list, int]] = []
-        for i, n in items:
-            n = int(n)
-            if n > budget:
-                packs.append(([i], n))  # oversize singleton
-                continue
-            placed = False
-            for idx, (members, tot) in enumerate(packs):
-                if tot > budget:
-                    continue  # never co-pack with an oversize singleton
-                if tot + n <= budget:
-                    members.append(i)
-                    packs[idx] = (members, tot + n)
-                    placed = True
-                    break
-            if not placed:
-                packs.append(([i], n))
-        return pd.DataFrame(
-            {
-                "pack_id": [f"{grp}-{k}" for k in range(len(packs))],
-                "members": [m for m, _ in packs],
-                "total_tokens": [t for _, t in packs],
-                "oversize": [t > budget for _, t in packs],
-            }
-        )
-
-    out_schema = (
-        "pack_id string, members array<"
-        + dict(base.dtypes)["id"]
-        + ">, total_tokens long, oversize boolean"
-    )
-    return base.groupBy("grp").applyInPandas(pack, out_schema)
-
-
-def split_corpus(
-    df: DataFrame,
-    id_col: str,
-    fractions: dict[str, float],
-    seed: int = 0,
-    group_col: str | None = None,
-) -> DataFrame:
-    """Deterministic train/val/test split: adds a ``split`` column drawn
-    from ``fractions`` (name -> share, must sum to 1) by hashing
-    ``group_col`` if given, else ``id_col``.
-
-    ``group_col`` is the leakage guard: hash the dedup cluster keeper
-    (mapping.kept_doc_id), the source domain, or any unit that must not
-    straddle splits, and every row of that unit lands on the same side —
-    near-duplicates of a training doc can never leak into test. A plain
-    random split re-drawn per row has no such guarantee.
-
-    Map-only (one hash per row, no shuffle); same (unit, seed) → same
-    split under any partitioning, cluster size, or re-run."""
-    if not fractions:
-        raise ValueError("fractions must name at least one split")
-    if any(f < 0 for f in fractions.values()) or abs(sum(fractions.values()) - 1.0) > 1e-9:
-        raise ValueError(f"fractions must be ≥0 and sum to 1, got {fractions}")
-    u = _unit_hash(group_col or id_col, seed)
-    expr = None
-    acc = 0.0
-    names = list(fractions)
-    for name in names[:-1]:
-        acc += fractions[name]
-        expr = F.when(u < F.lit(acc), name) if expr is None else expr.when(
-            u < F.lit(acc), name
-        )
-    last = F.lit(names[-1])
-    return df.withColumn("split", last if expr is None else expr.otherwise(last))

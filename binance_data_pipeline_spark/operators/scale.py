@@ -1,201 +1,17 @@
-"""Scale-path operators: approximate aggregates, small-file compaction,
-bucketed co-located joins, skew salting.
+"""Skew handling for joins: find the hot keys of a skewed join side
+(``detect_hot_keys``) and salt around them (``skew_join``).
 
-These address the SURVEY §7.3 risk items and the optimizer techniques a
-100 TB deployment leans on beyond what Catalyst does automatically:
-
-- approx sketches trade exactness for one-pass/mergeable state (HLL,
-  quantile sketches) — the right default for monitoring rollups at scale.
-- compaction bounds the small-file blowup of 5 s streaming micro-batches
-  (kafka_to_s3_bronze.py writes one object per flush — at 200 events/s
-  that's ~17k objects/day/partition; the reference has no answer to this).
-- bucketing pre-shuffles fact tables on the join key at write time so
-  repeated joins run exchange-free.
-- salting splits hot keys before a skewed aggregation (``salted_agg``)
-  or join (``skew_join``): AQE's skew-join split covers sort-merge joins
-  at partition granularity; explicit salting is for the cases AQE can't
-  reach — a single key too big for one task, hash joins, deterministic
-  splits. ``skew_report`` / ``detect_hot_keys`` supply the diagnosis.
+AQE's skew-join split covers sort-merge joins at partition granularity;
+explicit salting is for the cases AQE can't reach — a single key too big
+for one task, hash joins, deterministic splits. This addresses the
+SURVEY §7.3 skew risk item; ``scripts/skew_smoke.py`` drives both at
+scale.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-# ---------------------------------------------------------------- sketches
-
-def approx_stats(df: DataFrame, group_cols: list[str], value_col: str, rsd: float = 0.05) -> DataFrame:
-    """One-pass approximate rollup: HLL distinct + quantile sketch.
-    Mergeable partial state → single shuffle, constant memory per group."""
-    return df.groupBy(*group_cols).agg(
-        F.approx_count_distinct(value_col, rsd=rsd).alias("approx_distinct"),
-        F.percentile_approx(value_col, [0.5, 0.95, 0.99], 10_000).alias("approx_quantiles"),
-        F.count(F.lit(1)).alias("n"),
-    )
-
-
-# -------------------------------------------------------------- compaction
-
-def compact_partitions(
-    spark: SparkSession,
-    table_path: str,
-    partition_cols: list[str],
-    target_files_per_partition: int = 1,
-) -> int:
-    """Rewrite a partitioned parquet table with bounded files per partition
-    (the periodic compaction job for streaming sinks). Returns file count
-    after compaction. Overwrite is dynamic-partition-safe via a staged
-    rewrite (read-all → repartition by partition cols → overwrite)."""
-    import os
-    import shutil
-
-    old = table_path.rstrip("/") + "__compact_old"
-    # crash recovery: a previous run hard-killed between its two renames
-    # leaves the data parked at __compact_old with table_path absent —
-    # restore it before doing anything else
-    if not os.path.exists(table_path) and os.path.exists(old):
-        shutil.move(old, table_path)
-
-    df = spark.read.parquet(table_path)
-    compacted = df.repartition(target_files_per_partition, *[F.col(c) for c in partition_cols])
-    tmp = table_path.rstrip("/") + "__compact_tmp"
-    compacted.write.mode("overwrite").partitionBy(*partition_cols).parquet(tmp)
-    # Promote-then-delete: move the old table ASIDE first (posix rename),
-    # promote the compacted copy, delete the old copy last. An IN-PROCESS
-    # failure at any point leaves either the old or the new complete table
-    # at table_path (the except below rolls back); a HARD crash (kill,
-    # power loss) between the two renames leaves table_path briefly absent
-    # with the data intact at __compact_old — recovered by the restore
-    # step above on the next invocation. Object-store deployments need a
-    # manifest commit (Iceberg/Delta-style) instead of renames; out of
-    # scope for the parquet-warehouse stand-in.
-    shutil.rmtree(old, ignore_errors=True)
-    shutil.move(table_path, old)
-    try:
-        shutil.move(tmp, table_path)
-    except BaseException:
-        shutil.move(old, table_path)  # roll back: restore the original
-        raise
-    shutil.rmtree(old)
-    import glob
-
-    return len(glob.glob(os.path.join(table_path, "**", "*.parquet"), recursive=True))
-
-
-# --------------------------------------------------------------- bucketing
-
-def write_bucketed(
-    df: DataFrame, table_name: str, bucket_col: str, n_buckets: int = 8, sort_col: str | None = None
-) -> None:
-    """Persist as a bucketed managed table: co-locates rows by join key at
-    write time, so subsequent equi-joins between tables bucketed on the
-    same key skip the exchange entirely (verified in tests)."""
-    w = df.write.mode("overwrite").bucketBy(n_buckets, bucket_col)
-    if sort_col:
-        w = w.sortBy(sort_col)
-    w.saveAsTable(table_name)
-
-
-# ---------------------------------------------------------- skew diagnosis
-
-def skew_report(df: DataFrame, key_cols: list[str], top_k: int = 20) -> DataFrame:
-    """Key-distribution diagnosis BEFORE committing to a join/agg strategy
-    at scale: one row per heavy hitter (top_k keys by count) plus a
-    ``__summary__`` row carrying corpus-level stats — total rows, distinct
-    keys, max/p50/p99 group sizes, and the share of all rows held by the
-    single hottest key (the number that decides between a plain shuffle,
-    AQE skew split, or explicit salting).
-
-    Cost: ONE hash aggregation on the key (map-side partial combine soaks
-    the skew being measured) + an O(top_k) TakeOrdered and an O(1) stats
-    agg over the per-key counts. Nothing corpus-sized reaches the driver."""
-    counts = df.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("key_count"))
-    key_repr = F.concat_ws("|", *[F.col(c).cast("string") for c in key_cols])
-    top = (
-        counts.select(key_repr.alias("key"), "key_count")
-        .orderBy(F.desc("key_count"), F.asc("key"))
-        .limit(top_k)
-    )
-    stats = counts.agg(
-        F.sum("key_count").alias("n_rows"),
-        F.count(F.lit(1)).alias("n_keys"),
-        F.max("key_count").alias("max_group"),
-        F.percentile_approx("key_count", 0.5, 10_000).alias("p50_group"),
-        F.percentile_approx("key_count", 0.99, 10_000).alias("p99_group"),
-    ).select(
-        F.lit("__summary__").alias("key"),
-        F.col("n_rows").alias("key_count"),
-        "n_keys",
-        "max_group",
-        "p50_group",
-        "p99_group",
-        F.round(F.col("max_group") / F.col("n_rows"), 6).alias("max_key_share"),
-    )
-    return top.unionByName(stats, allowMissingColumns=True)
-
-
-def recommend_salt_buckets(
-    df: DataFrame, key_cols: list[str], target_rows_per_group: int = 1_000_000
-) -> int:
-    """Salt-bucket count for ``salted_agg``: ceil(max group size /
-    target), 1 when nothing exceeds the target (no salting needed).
-    One aggregation pass; the scalar is the only driver data."""
-    row = (
-        df.groupBy(*key_cols)
-        .agg(F.count(F.lit(1)).alias("c"))
-        .agg(F.max("c").alias("mx"))
-        .first()
-    )
-    mx = row["mx"] or 0
-    return max(1, -(-mx // target_rows_per_group))
-
-
-# ----------------------------------------------------------------- salting
-
-def salted_agg(
-    df: DataFrame,
-    group_cols: list[str],
-    aggs: dict,
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Two-phase aggregation for skewed keys: salt → partial agg on
-    (key, salt) → final agg on key. The partial phase spreads a hot key
-    over `salt_buckets` reducers; the final phase merges `salt_buckets`
-    rows per key.
-
-    `aggs` maps output name → (partial_expr, merge_fn), where merge_fn is
-    applied to the partial column in the final phase — each aggregate
-    declares its own merge, so non-decomposable uses can't silently merge
-    wrong (the old list API summed every partial, which corrupted
-    MIN/MAX)::
-
-        salted_agg(df, ["k"], {
-            "total": (F.sum("x"), F.sum),          # sum of sums
-            "n":     (F.count(F.lit(1)), F.sum),   # count merges as sum
-            "hi":    (F.max("x"), F.max),          # max of maxes
-        })
-
-    AVG and other non-decomposable aggregates must be expressed as
-    decomposable partials (sum + count, divide after).
-    """
-    if not isinstance(aggs, dict):
-        raise TypeError(
-            "salted_agg takes aggs as {name: (partial_expr, merge_fn)}; "
-            "a bare expression list cannot declare per-column merges "
-            "(summing MIN/MAX partials silently corrupts results)"
-        )
-    for name, pair in aggs.items():
-        if not (isinstance(pair, tuple) and len(pair) == 2 and callable(pair[1])):
-            raise TypeError(f"aggs[{name!r}] must be (partial_expr, merge_fn)")
-    salted = df.withColumn("__salt", F.pmod(F.spark_partition_id() + F.monotonically_increasing_id(), F.lit(salt_buckets)))
-    partial = salted.groupBy(*group_cols, "__salt").agg(
-        *[expr.alias(name) for name, (expr, _) in aggs.items()]
-    )
-    return partial.groupBy(*group_cols).agg(
-        *[merge(name).alias(name) for name, (_, merge) in aggs.items()]
-    )
 
 
 def detect_hot_keys(
@@ -250,8 +66,8 @@ def skew_join(
     sizes post-shuffle. Explicit salting is the tool when (a) a SINGLE
     key exceeds what one task can hold (AQE cannot split one key's rows
     for a hash join build side), (b) the join is hash-based, or (c) you
-    need the split deterministic across runs. ``skew_report`` /
-    ``detect_hot_keys`` supply the diagnosis.
+    need the split deterministic across runs. ``detect_hot_keys``
+    supplies the diagnosis.
 
     - ``on``: equi-key column name(s) present in both frames.
     - ``how``: ``inner`` or ``left`` (big side preserved). Right/full
@@ -297,116 +113,3 @@ def skew_join(
     )
     hot = big_salted.join(other_replicated, keys + ["__salt"], how).drop("__salt")
     return cold.unionByName(hot)
-
-
-# ---------------------------------------------------------------- Z-order
-
-def z_value(cols: list, bits: int = 8):
-    """Interleave the low `bits` of pre-quantized integer columns into one
-    Z-curve (Morton) value — bit j of dimension d lands at position
-    j*ndims + d. Pure shift/mask expressions: whole-stage codegen, no UDF."""
-    ndims = len(cols)
-    out = F.lit(0).cast("long")
-    for d, c in enumerate(cols):
-        cl = F.col(c).cast("long") if isinstance(c, str) else c.cast("long")
-        for j in range(bits):
-            out = out.bitwiseOR(
-                F.shiftleft(F.shiftright(cl, j).bitwiseAND(F.lit(1)), j * ndims + d)
-            )
-    return out
-
-
-def zorder_write(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    bits: int = 8,
-    num_files: int = 16,
-    quantize: str = "minmax",
-) -> None:
-    """Write `df` clustered along a Z-curve over `cols`: each column is
-    quantized to ≤2^bits cells, the cell ids are bit-interleaved, and the
-    data is range-partitioned + sorted by the Z-value before writing.
-
-    Why: a sort on ONE column gives tight parquet min/max stats (→ row-group
-    /file pruning) for that column only; the Z-curve gives *every* listed
-    column locality ∝ 2^(-bits/ndims) per file, so selective filters on ANY
-    of them prune files. This is the standard lakehouse Z-ORDER.
-
-    ``quantize``:
-      - "minmax": uniform cells between the column min/max (one tiny agg).
-        Skew-sensitive — a heavy-hitter value squeezes everything else
-        into few cells.
-      - "rank": cells are approximate QUANTILES (equal row mass per cell),
-        so skewed columns still spread across the curve. Boundaries come
-        from one approxQuantile pass per column; each row's cell is a
-        count of boundaries ≤ value over the (≤2^bits-element) literal
-        boundary array — an interpreted HOF per row, fine for a write-time
-        batch job; keep ``bits`` ≤ 8. NULLs land in cell 0 either way.
-
-    Degenerate inputs (empty df, all-NULL z-column, or a constant column
-    under "rank") fall back to a plain unclustered write with a warning —
-    the table still lands complete at ``path`` with overwrite semantics.
-
-    Scale shape: one bounds/quantile agg (scan), one range exchange, local
-    sorts — no driver data movement beyond ≤ndims×2^bits boundary values."""
-    import warnings
-
-    cells = []
-    n_cells = (1 << bits) - 1
-    if quantize == "minmax":
-        bounds = df.agg(
-            *[F.min(c).alias(f"__min_{c}") for c in cols],
-            *[F.max(c).alias(f"__max_{c}") for c in cols],
-        ).first()
-        degenerate = bounds is None or any(
-            bounds[f"__min_{c}"] is None or bounds[f"__max_{c}"] is None for c in cols
-        )
-        if not degenerate:
-            for c in cols:
-                lo, hi = float(bounds[f"__min_{c}"]), float(bounds[f"__max_{c}"])
-                span = (hi - lo) or 1.0
-                cells.append(
-                    F.least(
-                        F.lit(n_cells),
-                        F.greatest(
-                            F.lit(0),
-                            F.floor(
-                                (F.col(c).cast("double") - F.lit(lo)) / F.lit(span) * n_cells
-                            ).cast("long"),
-                        ),
-                    )
-                )
-    elif quantize == "rank":
-        qs = [i / (n_cells + 1) for i in range(1, n_cells + 1)]
-        degenerate = False
-        for c in cols:
-            boundaries = df.where(F.col(c).isNotNull()).stat.approxQuantile(c, qs, 0.001)
-            uniq = sorted(set(boundaries))
-            if len(uniq) < 2:  # empty, all-NULL, or constant column
-                degenerate = True
-                break
-            arr = F.array(*[F.lit(float(b)) for b in uniq])
-            v = F.col(c).cast("double")
-            cells.append(F.size(F.filter(arr, lambda b: b <= v)).cast("long"))
-    else:
-        raise ValueError(f"quantize must be 'minmax' or 'rank', got {quantize!r}")
-
-    if degenerate:
-        warnings.warn(
-            f"zorder_write({cols}): degenerate input (empty/all-NULL/constant "
-            "z-column) — writing unclustered",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-        df.repartition(num_files).write.mode("overwrite").parquet(path)
-        return
-
-    zed = df.withColumn("__z", z_value(cells, bits))
-    (
-        zed.repartitionByRange(num_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

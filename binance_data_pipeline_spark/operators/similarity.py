@@ -679,21 +679,6 @@ def _hyperplanes(n_planes: int, dim: int) -> list[list[float]]:
     return planes
 
 
-def rp_signature(vec: Column, planes: list[list[float]]) -> Column:
-    """Random-projection bit signature: sign(plane · vec) per hyperplane,
-    folded to a BIGINT. Map-side only."""
-    bits = []
-    for i, p in enumerate(planes):
-        plane = F.array(*[F.lit(x) for x in p])
-        bits.append(
-            F.when(_dot(vec, plane) > 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(F.lit(0).cast("long"))
-        )
-    out = bits[0]
-    for b in bits[1:]:
-        out = out.bitwiseXOR(b)
-    return out
-
-
 def rp_signatures_batch(n_planes: int, n_tables: int, dim: int):
     """Arrow-batched signature computation: ONE numpy matmul per batch
     ((batch × dim) @ (dim × planes)) replaces n_tables × n_planes

@@ -1485,7 +1485,7 @@ def streaming_snapshot_append(
     """foreachBatch writer streaming micro-batches into a snapshot table
     — every batch becomes a time-travelable version, exactly once across
     checkpoint loss. Returns the UNSTARTED writer (caller picks trigger
-    and calls .start()), the streaming_quantile_rollup convention.
+    and calls .start()).
 
     ``refresh_views`` chains incrementally maintained rollups onto the
     ingest (each dict = ``mview_refresh`` kwargs minus spark/src_table:

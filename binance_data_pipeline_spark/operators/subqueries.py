@@ -1,62 +1,19 @@
-"""Relational subquery filters as DataFrame compositions with exact ANSI
-three-valued-logic semantics.
+"""Correlated scalar-aggregate subquery as a DataFrame filter, with
+exact ANSI semantics (`scalar_agg_filter`).
 
-Spark SQL text supports `IN (subquery)` / `NOT IN` / `EXISTS` natively
-(Catalyst plans a null-aware anti join for NOT IN), but the DataFrame
-API has no subquery expression — users composing plans programmatically
-end up hand-rolling `left_anti` joins that silently get the NULL cases
-wrong. `NOT IN` is the classic trap: one NULL in the subquery result
-makes the whole predicate never-TRUE, and a NULL probe value is UNKNOWN
-(filtered) whenever the subquery is non-empty — a bare anti join gets
-both wrong (it keeps NULL-probe rows and ignores inner NULLs entirely).
+Spark SQL text supports correlated scalar subqueries natively, but the
+DataFrame API has no subquery expression — users composing plans
+programmatically end up hand-rolling the decorrelation join, and the
+classic trap is the COUNT rule: a probe whose correlated group is EMPTY
+compares against the aggregate's value over zero rows (0 for counts,
+NULL for sum/avg/min/max), not against a missing row. The helper
+encodes that rule in-plan and stays fully lazy (no driver action).
 
-These helpers encode the full truth table:
-
-    x IN (S):      TRUE  iff some s in S has x = s        -> keep
-                   never TRUE when x is NULL or s is NULL
-    x NOT IN (S):  S empty            -> TRUE for every x (even NULL)
-                   S contains NULL    -> never TRUE (no row survives)
-                   else               -> TRUE iff x not NULL and x not in S
-    EXISTS (corr): TRUE iff the correlated inner has a row; NULL
-                   correlation keys never match (equality 3VL)
-
-`not_in_filter` decides the S-empty / S-has-NULL branches with ONE tiny
-two-counter aggregate over the subquery (count star + count non-null) —
-the same runtime decision Spark's own NullAwareAntiJoin execution makes,
-collapsed to a driver scalar. At 100 TB the inner relation of a NOT IN
-is a key list (dims, denylists), so the aggregate is a metadata-sized
-action; the probe-side work stays a single distributed anti join either
-way.
-
-**Eagerness contract**: `not_in_filter`, `not_in_filter_rows`,
-`all_filter`, and `any_filter` are EAGER — they run that
-branch-deciding aggregate at CALL time (a Spark action), and the
-returned plan re-reads the inner relation in its join leg, so an
-uncached inner subplan is computed TWICE (once for the stats, once when
-the result executes) and the branch decision snapshots the inner's
-state at construction rather than execution time. For a bare table
-scan or key list (the intended 100 TB shape) both costs are noise; for
-an expensive inner subplan pass ``cache_inner=True``, which persists
-the projected value frame across the stats action and the join leg.
-Cache lifecycle: branches whose result does NOT reference the value
-frame (empty/NULL-short-circuit, predicate-only lowerings) unpersist
-it before returning; when the returned plan DOES read the cached frame
-the helper attaches it as ``result._cached_inner`` — call
-``result._cached_inner.unpersist()`` once the result is consumed, or
-let it age out of the storage pool. `in_filter` / `exists_filter` /
-`not_exists_filter` / `scalar_agg_filter` stay fully lazy.
-
-The module covers the complete classic subquery surface: single-column
-IN / NOT IN / EXISTS / NOT EXISTS, row-value (multi-column) IN / NOT IN
-(`in_filter_rows` / `not_in_filter_rows`), quantified comparisons
-``op ALL`` / ``op ANY`` (`all_filter` / `any_filter` — a shape Spark
-SQL text does not support at all), and correlated scalar-aggregate
-filters (`scalar_agg_filter`).
-
-Differential bar: `tests/test_differential_fuzz.py` pins every helper
-value-equal to Spark SQL's own planning where Spark supports the shape
-AND to DuckDB (natively, or via an explicit Kleene-OR formulation for
-row-value IN) over randomized null-injected cases.
+The catalog's `subquery_shapes` query (plans/advanced.py) runs its
+`correlated_count` leg through this helper, so the oracle grades it.
+Differential bar: `tests/test_differential_fuzz.py` pins it value-equal
+to Spark SQL's own planning AND to DuckDB over randomized
+null-injected cases.
 
 Reference parity note: the reference pipeline has no subquery surface
 (its one join is a pandas merge, `build_fact_fee_tax.py`); this module
@@ -70,308 +27,15 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _values(inner: DataFrame, inner_col: str | Column) -> DataFrame:
-    c = F.col(inner_col) if isinstance(inner_col, str) else inner_col
-    return inner.select(c.alias("__subq_v"))
-
-
-def _drop_cache(vals: DataFrame, cached: bool) -> None:
-    """Release the opt-in cache on branches whose result never reads it."""
-    if cached:
-        vals.unpersist()
-
-
-def _hand_off_cache(out: DataFrame, vals: DataFrame, cached: bool) -> DataFrame:
-    """The returned plan reads the cached frame — give the caller the
-    release handle the module docstring promises."""
-    if cached:
-        out._cached_inner = vals
-    return out
-
-
-def in_filter(
-    df: DataFrame, col: str | Column, inner: DataFrame, inner_col: str | Column
-) -> DataFrame:
-    """Rows of ``df`` where ``col IN (SELECT inner_col FROM inner)`` is
-    TRUE. Pure left-semi join: equality never matches a NULL on either
-    side, which IS the ANSI IN truth table's TRUE set — no driver
-    action, fully distributed, AQE free to broadcast the value side."""
-    probe = F.col(col) if isinstance(col, str) else col
-    rhs = _values(inner, inner_col).where(F.col("__subq_v").isNotNull()).distinct()
-    return df.join(rhs, on=probe == rhs["__subq_v"], how="left_semi")
-
-
-def not_in_filter(
-    df: DataFrame, col: str | Column, inner: DataFrame, inner_col: str | Column,
-    cache_inner: bool = False,
-) -> DataFrame:
-    """Rows of ``df`` where ``col NOT IN (SELECT inner_col FROM inner)``
-    is TRUE — the full 3VL: empty subquery keeps everything (NULL probes
-    included), a NULL in the subquery keeps nothing, otherwise anti join
-    plus a NOT NULL probe filter. The branch decision costs one
-    two-counter aggregate over the subquery (driver scalar).
-
-    EAGER (see module docstring): the aggregate runs at call time and
-    an uncached inner is computed twice; ``cache_inner=True`` persists
-    the value frame across both uses."""
-    probe = F.col(col) if isinstance(col, str) else col
-    vals = _values(inner, inner_col)
-    if cache_inner:
-        vals = vals.cache()
-    n, n_nonnull = vals.agg(
-        F.count(F.lit(1)), F.count(F.col("__subq_v"))
-    ).first()
-    if n == 0:
-        _drop_cache(vals, cache_inner)
-        return df  # NOT IN (empty) is TRUE for every probe, even NULL
-    if n_nonnull < n:
-        _drop_cache(vals, cache_inner)
-        return df.limit(0)  # a NULL in S: NOT IN is never TRUE
-    rhs = vals.distinct()
-    out = df.where(probe.isNotNull()).join(
-        rhs, on=probe == rhs["__subq_v"], how="left_anti"
-    )
-    return _hand_off_cache(out, vals, cache_inner)
-
-
-def exists_filter(df: DataFrame, inner: DataFrame, cond: Column) -> DataFrame:
-    """Correlated ``EXISTS``: rows of ``df`` with at least one ``inner``
-    row satisfying ``cond`` (a Column over both relations). Left-semi
-    join — NULL correlation keys never match, exactly ANSI equality."""
-    return df.join(inner, on=cond, how="left_semi")
-
-
-def not_exists_filter(df: DataFrame, inner: DataFrame, cond: Column) -> DataFrame:
-    """Correlated ``NOT EXISTS``: the left-anti dual of
-    :func:`exists_filter`. Unlike NOT IN, NOT EXISTS has no NULL trap —
-    an unmatched row passes whatever NULLs are involved — so a bare
-    anti join IS the exact semantics."""
-    return df.join(inner, on=cond, how="left_anti")
-
-
-def _cols(cs) -> list[Column]:
-    return [F.col(c) if isinstance(c, str) else c for c in cs]
-
-
-def in_filter_rows(
-    df: DataFrame, cols, inner: DataFrame, inner_cols
-) -> DataFrame:
-    """Row-value ``(a, b, ...) IN (SELECT x, y, ... FROM inner)``. A
-    row-value IN is TRUE only when EVERY component matches non-null, so
-    the exact lowering is still one hash semi join on all components —
-    null components on either side simply never produce a match."""
-    ps, ss = _cols(cols), _cols(inner_cols)
-    rhs = inner.select(
-        *[s.alias(f"__subq_{i}") for i, s in enumerate(ss)]
-    ).distinct()
-    cond = None
-    for i, p in enumerate(ps):
-        c = p == rhs[f"__subq_{i}"]
-        cond = c if cond is None else cond & c
-    return df.join(rhs, on=cond, how="left_semi")
-
-
-def not_in_filter_rows(
-    df: DataFrame, cols, inner: DataFrame, inner_cols,
-    cache_inner: bool = False,
-) -> DataFrame:
-    """Row-value ``NOT IN`` with the full ANSI 3VL — the subtle case:
-    a probe with a NULL component can still be TRUE (kept) when every
-    subquery row differs DEFINITIVELY on some other component, and an
-    inner row with a NULL component can make an otherwise-unmatched
-    probe UNKNOWN (dropped). Truth table: keep a probe row iff for
-    EVERY inner row some component pair is non-null on both sides and
-    differs.
-
-    Execution shape (the 100 TB posture): the bulk — all-non-null
-    probes against all-non-null inner rows — is ONE hash anti equi-join
-    (probe side never shuffles when the value side broadcasts). Only
-    the null-involved slices go through a condition join (Kleene
-    row-equality as a join predicate, planned as a broadcast
-    nested-loop): all probes vs the inner's null-containing rows, and
-    null-component probes vs the whole inner. Those slices are
-    dim-sized in practice; each is skipped entirely when its side is
-    empty (decided by one bounded aggregate).
-
-    EAGER (see module docstring): the bounded aggregate runs at call
-    time and an uncached inner is computed once per slice it feeds;
-    ``cache_inner=True`` persists the distinct value frame across all
-    of them."""
-    ps, ss = _cols(cols), _cols(inner_cols)
-    k = len(ps)
-    if k != len(ss):
-        raise ValueError(f"{k} probe columns vs {len(ss)} subquery columns")
-    vals = inner.select(
-        *[s.alias(f"__subq_{i}") for i, s in enumerate(ss)]
-    ).distinct()
-    if cache_inner:
-        vals = vals.cache()
-    sub = [F.col(f"__subq_{i}") for i in range(k)]
-    inner_any_null = F.lit(False)
-    for c in sub:
-        inner_any_null = inner_any_null | c.isNull()
-    n, n_withnull = vals.agg(
-        F.count(F.lit(1)),
-        F.count(F.when(inner_any_null, F.lit(1))),
-    ).first()
-    if n == 0:
-        _drop_cache(vals, cache_inner)
-        return df  # NOT IN (empty) is TRUE for every probe
-    # the broadcast hint is safe only because n is KNOWN here (the same
-    # aggregate that decided the branches); a huge distinct value set
-    # falls back to Catalyst's own strategy choice for the nested-loop
-    # slices rather than force-broadcasting past driver memory
-    bcast = F.broadcast if n <= 1_000_000 else (lambda d: d)
-    s_null = vals.where(inner_any_null)
-
-    probe_any_null = F.lit(False)
-    for p in ps:
-        probe_any_null = probe_any_null | p.isNull()
-
-    def _kleene_not_false(frame: DataFrame) -> Column:
-        # row-eq is TRUE or UNKNOWN (i.e. NOT definitively FALSE):
-        # every component pair is equal or null on either side. Anti
-        # join on this keeps exactly the rows where row-eq is FALSE
-        # against every inner row — the NOT IN TRUE set.
-        cond = None
-        for i, p in enumerate(ps):
-            c = p.isNull() | frame[f"__subq_{i}"].isNull() | (p == frame[f"__subq_{i}"])
-            cond = c if cond is None else cond & c
-        return cond
-
-    # bulk: clean probes vs clean inner — pure hash anti equi-join
-    s_clean = vals.where(~inner_any_null)
-    clean = df.where(~probe_any_null)
-    eq = None
-    for i, p in enumerate(ps):
-        c = p == s_clean[f"__subq_{i}"]
-        eq = c if eq is None else eq & c
-    clean = clean.join(s_clean, on=eq, how="left_anti")
-    if n_withnull:
-        # an inner null row can only leave a clean probe UNKNOWN, never
-        # matched — one more anti pass over the (tiny) null slice
-        clean = clean.join(bcast(s_null), on=_kleene_not_false(s_null), how="left_anti")
-
-    nullp = df.where(probe_any_null)
-    nullp = nullp.join(bcast(vals), on=_kleene_not_false(vals), how="left_anti")
-    return _hand_off_cache(clean.unionByName(nullp), vals, cache_inner)
-
-
-_ORDERED_OPS = {
+_CMP = {
     "<": lambda a, b: a < b,
     "<=": lambda a, b: a <= b,
     ">": lambda a, b: a > b,
     ">=": lambda a, b: a >= b,
+    "=": lambda a, b: a == b,
+    "<>": lambda a, b: a != b,
+    "!=": lambda a, b: a != b,
 }
-
-
-def _quant_stats(v: DataFrame):
-    """One bounded aggregate deciding every quantified-comparison branch:
-    (count, nulls, min, max, distinct-count) of the subquery values."""
-    return v.agg(
-        F.count(F.lit(1)),
-        F.count(F.lit(1)) - F.count("__subq_v"),
-        F.min("__subq_v"),
-        F.max("__subq_v"),
-        F.countDistinct("__subq_v"),
-    ).first()
-
-
-def all_filter(
-    df: DataFrame, col: str | Column, op: str, inner: DataFrame,
-    inner_col: str | Column, cache_inner: bool = False,
-) -> DataFrame:
-    """``col <op> ALL (SELECT inner_col FROM inner)`` kept where TRUE —
-    the quantified comparison Spark SQL does not support at all (ANSI
-    F561; DuckDB does, which is the differential oracle). Exact 3VL:
-    empty subquery is TRUE for every probe (NULL probes included); a
-    NULL in the subquery or a NULL probe can never be TRUE; otherwise
-    the ordered forms reduce to one comparison against the subquery's
-    max/min and ``=``/``<>`` to distinct-count logic. ONE bounded
-    aggregate (a driver scalar row), then a pure WHERE predicate — no
-    join at all, so at 100 TB the probe scan keeps its pushdown.
-
-    EAGER (see module docstring): the aggregate runs at call time; the
-    ``<>``/``!=`` form also re-reads the inner in its NOT IN join leg —
-    ``cache_inner=True`` persists the value frame across both."""
-    probe = F.col(col) if isinstance(col, str) else col
-    vals = _values(inner, inner_col)
-    if cache_inner:
-        vals = vals.cache()
-    n, n_null, vmin, vmax, n_dist = _quant_stats(vals)
-    if op in ("<>", "!="):
-        # <> ALL is NOT IN; reuse its exact lowering over the (possibly
-        # cached) value frame so the inner subplan is not re-read. Its
-        # early-return branches (empty inner / NULL in S) are decided by
-        # stats we already hold — take them HERE so the cache is released
-        # on branches whose result never reads the value frame (and the
-        # caller's df is never handed a _cached_inner it does not own).
-        if n == 0:
-            _drop_cache(vals, cache_inner)
-            return df  # NOT IN (empty) is TRUE for every probe
-        if n_null:
-            _drop_cache(vals, cache_inner)
-            return df.limit(0)  # a NULL in S: never TRUE
-        return _hand_off_cache(
-            not_in_filter(df, col, vals, "__subq_v"), vals, cache_inner
-        )
-    # every remaining lowering is a pure predicate — the cached frame
-    # served only the stats action and can be released now
-    _drop_cache(vals, cache_inner)
-    if n == 0:
-        return df  # vacuous truth, even for NULL probes
-    if n_null:
-        # TRUE is impossible; rows are FALSE or UNKNOWN -> none kept
-        return df.limit(0)
-    if op in _ORDERED_OPS:
-        bound = vmax if op in (">", ">=") else vmin
-        return df.where(_ORDERED_OPS[op](probe, F.lit(bound)))
-    if op == "=":
-        # = ALL: the subquery must be a single distinct value equal to x
-        if n_dist != 1:
-            return df.limit(0)
-        return df.where(probe == F.lit(vmin))
-    raise ValueError(f"unsupported quantified op {op!r}")
-
-
-def any_filter(
-    df: DataFrame, col: str | Column, op: str, inner: DataFrame,
-    inner_col: str | Column, cache_inner: bool = False,
-) -> DataFrame:
-    """``col <op> ANY (SELECT ...)`` kept where TRUE — the existential
-    dual of :func:`all_filter`: empty subquery keeps nothing, NULLs can
-    make rows UNKNOWN but never TRUE, ordered forms compare against the
-    subquery min/max, ``= ANY`` is IN, ``<> ANY`` is TRUE whenever the
-    subquery has two distinct values (or one differing from the probe).
-    Same execution shape: one bounded aggregate, then a predicate.
-
-    EAGER (see module docstring): the aggregate runs at call time; the
-    ``=`` form also re-reads the inner in its IN join leg —
-    ``cache_inner=True`` persists the value frame across both."""
-    probe = F.col(col) if isinstance(col, str) else col
-    vals = _values(inner, inner_col)
-    if cache_inner:
-        vals = vals.cache()
-    n, n_null, vmin, vmax, n_dist = _quant_stats(vals)
-    if op == "=":
-        # = ANY is IN — the one lowering whose plan reads the value frame
-        return _hand_off_cache(
-            in_filter(df, col, vals, "__subq_v"), vals, cache_inner
-        )
-    # every remaining lowering is a pure predicate — release the cache
-    _drop_cache(vals, cache_inner)
-    if n == 0 or n == n_null:
-        # no non-null witness can exist: FALSE (empty) or UNKNOWN
-        return df.limit(0)
-    if op in _ORDERED_OPS:
-        bound = vmin if op in (">", ">=") else vmax
-        return df.where(_ORDERED_OPS[op](probe, F.lit(bound)))
-    if op in ("<>", "!="):
-        if n_dist >= 2:
-            # some value must differ from any non-null probe
-            return df.where(probe.isNotNull())
-        return df.where(probe.isNotNull() & (probe != F.lit(vmin)))
-    raise ValueError(f"unsupported quantified op {op!r}")
 
 
 def scalar_agg_filter(
@@ -410,10 +74,7 @@ def scalar_agg_filter(
     count(*)/count(col) with probes hitting empty groups) by
     ``tests/test_differential_fuzz.py::test_correlated_scalar_agg_differential``
     / ``test_correlated_count_agg_differential``."""
-    cmp = dict(_ORDERED_OPS)
-    cmp["="] = lambda a, b: a == b
-    cmp["<>"] = cmp["!="] = lambda a, b: a != b
-    if op not in cmp:
+    if op not in _CMP:
         raise ValueError(f"unsupported comparison {op!r}")
     probe = F.col(col) if isinstance(col, str) else col
     ikeys = [ic for _, ic in on]
@@ -434,7 +95,7 @@ def scalar_agg_filter(
     scalar = F.when(
         F.col("__subq_matched").isNull(), F.col("__subq_empty")
     ).otherwise(F.col("__subq_agg"))
-    out = out.where(cmp[op](probe, scalar))
+    out = out.where(_CMP[op](probe, scalar))
     return out.drop(
         "__subq_agg", "__subq_matched", "__subq_empty",
         *[f"__subq_k{i}" for i in range(len(on))],

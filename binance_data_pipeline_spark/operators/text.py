@@ -143,28 +143,11 @@ def winnow_fingerprint_batch(n: int = 3, k: int = 4):
     return fp
 
 
-def fingerprint_md5(col: Column | str) -> Column:
-    """Exact-dup fingerprint: md5 of the raw text."""
-    return F.md5(col)
-
-
 def fingerprint_normalized(col: Column | str) -> Column:
     """Near-exact fingerprint: md5 of whitespace-normalized lowercase text
     (catches trivial formatting dups)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.md5(F.regexp_replace(F.trim(F.lower(c)), r"\s+", " "))
-
-
-def with_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the full feature set — one map-side pass."""
-    return (
-        df.withColumn("n_tokens", token_count(text_col))
-        .withColumn("n_chars_engine", char_count(text_col))
-        .withColumn("punct_ratio", punct_ratio(text_col))
-        .withColumn("quality", quality_score(text_col))
-        .withColumn("lang_guess", lang_guess(text_col))
-        .withColumn("fingerprint", fingerprint_md5(text_col))
-    )
 
 
 # --------------------------------------------------------------------------

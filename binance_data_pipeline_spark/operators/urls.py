@@ -19,7 +19,7 @@ the industry-standard tracking-parameter strip):
   the same parameters collapse (`?a=1&b=2` ≡ `?b=2&a=1`).
 
 `registered_domain` is the grouping key for per-site caps/budgets
-(sampling.cap_per_group / quality gates): the real Public Suffix List
+(quality gates): the real Public Suffix List
 algorithm (operators/psl.py — wildcards, exceptions, longest match,
 private hosting suffixes) over a packaged snapshot of the public list,
 with `rules=parse_psl(...)` accepting the full official file.

@@ -1,6 +1,5 @@
-"""Corpus vocabulary statistics: token / n-gram frequency tables, top-k
-vocabularies, and IDF weights — the counting passes that precede BPE
-vocab construction and TF-IDF featurization over a training corpus.
+"""Corpus vocabulary statistics: token / n-gram frequency tables — the
+counting pass that precedes vocab construction over a training corpus.
 
 Scale shape: one generator (posexplode of the per-doc token array,
 materialized in its own projection so the array is built once per doc,
@@ -22,7 +21,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from .text import BPE_ISH_PATTERN, tokens
 
@@ -82,60 +80,3 @@ def token_frequencies(
             F.approx_count_distinct("id").alias("doc_count"),
         )
     return out.where(F.col("count") >= min_count)
-
-
-def build_vocab(
-    df: DataFrame,
-    vocab_size: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    tokenizer: str = "bpe_ish",
-    min_count: int = 2,
-) -> DataFrame:
-    """Top-``vocab_size`` tokens by corpus frequency with deterministic
-    rank (count desc, token asc — ties can't reorder between runs).
-    Plans as TakeOrderedAndProject over the single-shuffle frequency
-    table: per-partition top-k, then a merge of k rows per partition —
-    never a full sort of the vocabulary. The token_id numbering window
-    runs AFTER the limit, over vocab_size rows only (a single small
-    partition by construction, not a corpus-wide single-partition
-    window)."""
-    freq = token_frequencies(
-        df, id_col=id_col, text_col=text_col, tokenizer=tokenizer,
-        min_count=min_count,
-    )
-    ranked = freq.orderBy(F.desc("count"), F.asc("token")).limit(vocab_size)
-    w = Window.orderBy(F.desc("count"), F.asc("token"))
-    return ranked.select(
-        "token",
-        "count",
-        "doc_count",
-        (F.row_number().over(w) - 1).cast("long").alias("token_id"),
-    )
-
-
-def idf_table(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    tokenizer: str = "whitespace",
-    min_doc_count: int = 1,
-) -> DataFrame:
-    """(token, doc_count, idf) with smoothed idf = ln((N+1)/(df+1)) + 1
-    (scikit-learn's smooth_idf convention, so results are comparable to
-    the standard implementation). N is one scalar count — O(1) driver
-    data."""
-    n_docs = df.select(id_col).count()
-    freq = token_frequencies(
-        df, id_col=id_col, text_col=text_col, tokenizer=tokenizer
-    )
-    return (
-        freq.where(F.col("doc_count") >= min_doc_count)
-        .select(
-            "token",
-            "doc_count",
-            F.round(
-                F.log((F.lit(float(n_docs + 1))) / (F.col("doc_count") + 1)) + 1.0, 6
-            ).alias("idf"),
-        )
-    )

@@ -13,15 +13,11 @@ The reference has no storage tier at all (blind appends,
 airflow/dags/ingest_binance_last_3_days.py:85-103); this module is part
 of the snapshot-table family's answer to interactive slicing at 100 TB.
 
-Relationship to ``operators/scale.py``'s ``z_value``/``zorder_write``
-(the earlier path-writing Z-order): that one quantizes NUMERIC columns
-(minmax or approxQuantile cells, values cast to double) and writes a
-plain parquet dir. This module generalizes the key to ANY orderable
-type (cuts are Python comparisons on a bounded sample; the bucket CASE
-uses the column's own ``<``) and returns a laid-out DataFrame, which is
-what ``compact_snapshot(zorder_by=…)`` needs — the write/commit stays
-the snapshot table's own. Use ``zorder_write`` for one-off numeric
-path writes; use this for snapshot tables and non-numeric keys.
+The key works for ANY orderable type (cuts are Python comparisons on a
+bounded sample; the bucket CASE uses the column's own ``<``), and the
+module returns a laid-out DataFrame, which is what
+``compact_snapshot(zorder_by=…)`` needs — the write/commit stays the
+snapshot table's own.
 
 Scale shape:
 - cut points come from ONE bounded sample (``sample_cap`` rows collected

@@ -47,10 +47,3 @@ def extended_queries():
     for mod in _EXTENDED_MODULES:
         merged.update(mod.QUERIES)
     return merged
-
-
-def extended_oracle_sql():
-    merged = all_oracle_sql()
-    for mod in _EXTENDED_MODULES:
-        merged.update(mod.ORACLE)
-    return merged

@@ -3,7 +3,6 @@
 json_envelope   parse/flatten the Binance combined-stream envelope (P1-P3)
 rest_backfill   REST fetch-grid batch source (S5), fetcher injected
 csv_rules       fee/tax rules dimension from CSV (S9)
-ws_bridge       RFC 6455 WebSocket→sink ingress bridge (S1), stdlib-only
 kafka_wire      Kafka wire-protocol socket harness (S2/S3 runtime leg)
 snapshot_source format("snapshot_table") DataSource: batch + streaming reads of snapshot tables
 """

@@ -17,7 +17,7 @@ All JVM-side; at 100 TB this is a pure map stage fused into the scan.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -110,8 +110,3 @@ def to_kafka_payload(df: DataFrame) -> DataFrame:
         F.col("symbol").alias("key"),
         F.to_json(F.struct(*[F.col(c) for c in df.columns])).alias("value"),
     )
-
-
-def epoch_ms_to_ts(col: Column | str) -> Column:
-    """Epoch-millis → UTC timestamp (F5, kafka_to_s3_bronze.py:50)."""
-    return F.timestamp_millis(F.col(col) if isinstance(col, str) else col)

@@ -25,8 +25,9 @@ full Structured Streaming source — ``sources/kafka_source.py`` exposes
 socket → Spark → bronze leg runs END TO END with no connector jar
 (tests/test_kafka_source.py); the old documented skip is gone.
 
-RFC 6455 precedent: sources/ws_bridge.py does the same for the
-WebSocket leg (S1).
+The engine's real-time path starts at this topic: any Kafka producer
+(the reference's WebSocket producer, S1) feeds it, and the topic's
+offsets are what make the stream replayable, hence exactly-once.
 """
 
 from __future__ import annotations

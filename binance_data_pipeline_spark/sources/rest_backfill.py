@@ -16,7 +16,6 @@ supply a deterministic fake; production would pass a requests-based one.
 
 from __future__ import annotations
 
-import json
 from collections.abc import Callable, Iterator
 from datetime import date, timedelta
 
@@ -130,8 +129,3 @@ def fake_fetcher_from_events(rows_per_cell: int = 50) -> Fetcher:
         return out
 
     return fetch
-
-
-def fake_fetcher_json(payload: str) -> list[dict]:
-    """Parse a canned aggTrades JSON payload (fixture files)."""
-    return json.loads(payload)

@@ -396,7 +396,7 @@ def _run_streaming_model(
 ) -> int | None:
     """Drain-available-and-stop leg of a streaming model (what
     ``run_models`` calls — dbt's run-to-completion contract over the
-    change feed). ``start_streaming_model`` is the always-on leg.
+    change feed).
 
     availableNow over the Python ``snapshot_table`` source degrades to
     SINGLE-BATCH execution (engine fallback, warning-only) — harmless
@@ -418,36 +418,6 @@ def _run_streaming_model(
             mode="overwrite", operation=f"model:{model.name}:init",
         )
     return post[-1] if post != pre else None
-
-
-def start_streaming_model(
-    spark: SparkSession,
-    models: dict[str, Model] | dict[str, str] | str,
-    name: str,
-    sources: dict,
-    target_dir: str,
-    trigger: str = "5 seconds",
-    env: dict | None = None,
-    vars: dict | None = None,
-):
-    """The ALWAYS-ON leg of ``materialized='streaming'``: starts the
-    model's change-feed → mart query with a processing-time trigger and
-    returns the running ``StreamingQuery`` (caller owns stop()). Shares
-    the checkpoint with ``run_models`` drains, so cadence runs and an
-    always-on deployment interleave exactly-once: whichever runs next
-    resumes after the other's last committed batch."""
-    if isinstance(models, str):
-        parsed = load_project(models)
-    else:
-        parsed = {
-            n: (m if isinstance(m, Model) else parse_model(n, m))
-            for n, m in models.items()
-        }
-    model = parsed[name]
-    writer, _schema = _streaming_model_writer(
-        spark, model, sources, f"{target_dir}/{name}", env, vars
-    )
-    return writer.trigger(processingTime=trigger).start()
 
 
 def run_models(

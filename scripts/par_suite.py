@@ -11,20 +11,20 @@ them per module.
 
 Isolation per worker (the hazards a shared box has):
 - ``--basetemp=/tmp/par_suite_w{i}`` — tmp_path trees never collide;
-- ``SPARK_WAREHOUSE_DIR=/tmp/par_suite_w{i}_wh`` — saveAsTable tests
-  (bucketed-join) write disjoint warehouses (session.py honors it);
+- ``SPARK_WAREHOUSE_DIR=/tmp/par_suite_w{i}_wh`` — any saveAsTable
+  writes land in disjoint warehouses (session.py honors it);
 - ``SPARK_GRAFT_CPUS`` split so the workers' local[k] threads sum to
   no more than the host's cores, ``session.local_cores``
   (oversubscription measurably slows the CPU-bound kernels);
 - ``SPARK_DRIVER_MEMORY`` split so the N heaps sum to no more than the
   heap one session would get on this host (``session.driver_memory``);
   fewer workers run when the host cannot hold N at Spark's minimum heap;
-- test servers (kafka wire, ws bridge) bind port 0 — already parallel-safe.
+- test servers (kafka wire) bind port 0 — already parallel-safe.
 
 Balancing: greedy LPT over per-module wall times measured by the LAST
 run (``scripts/suite_weights.json``, refreshed on every completed run).
-First run falls back to a pinned heavy-module list + uniform weights;
-the second run is balanced. A module is the partitioning atom, so
+A run without the weights file falls back to uniform weights; the next
+run is balanced. A module is the partitioning atom, so
 module-scoped fixtures never split.
 
 Usage:
@@ -51,24 +51,6 @@ from binance_data_pipeline_spark import session  # noqa: E402
 
 TESTS = os.path.join(REPO, "tests")
 WEIGHTS_PATH = os.path.join(REPO, "scripts", "suite_weights.json")
-
-# First-run fallback (no measured weights yet): modules BASELINE.md's
-# durations tables flagged as dominating the wall. Weight = rough
-# seconds; everything else defaults to 30.
-_FALLBACK_HEAVY = {
-    "test_pipeline.py": 265,
-    "test_retrieval.py": 231,
-    "test_differential_fuzz.py": 180,
-    "test_snapshots.py": 180,
-    "test_streaming.py": 150,
-    "test_kafka_source.py": 120,
-    "test_manifest_model.py": 100,
-    "test_crash_windows.py": 90,
-    "test_bpe.py": 90,
-    "test_tpch_parity.py": 90,
-    "test_oracle_parity.py": 90,
-}
-
 
 def load_weights() -> dict[str, float]:
     if os.path.exists(WEIGHTS_PATH):
@@ -105,7 +87,7 @@ def worker_sizing(workers: int, cpus_total: int | None = None) -> tuple[int, int
 def partition_modules(mods: list[str], n: int, weights: dict[str, float]):
     """Greedy LPT: heaviest module to the currently-lightest shard."""
     def w(m: str) -> float:
-        return weights.get(m) or _FALLBACK_HEAVY.get(m) or 30.0
+        return weights.get(m) or 30.0
 
     shards: list[list[str]] = [[] for _ in range(n)]
     loads = [0.0] * n

@@ -1,5 +1,5 @@
 """Corpus-composition operators: PII redaction, document chunking,
-deterministic sampling/mixing/shuffling."""
+deterministic sampling/shuffling."""
 
 from __future__ import annotations
 
@@ -11,8 +11,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from binance_data_pipeline_spark.operators.sampling import (
-    hash_sample,
-    mix_corpora,
     shuffle_deterministic,
     stratified_sample,
 )
@@ -80,18 +78,6 @@ def test_chunk_documents_windows_and_overlap(spark):
 
 # ------------------------------------------------------------- sampling
 
-def test_hash_sample_deterministic_and_calibrated(spark):
-    df = spark.range(20_000).withColumnRenamed("id", "doc_id")
-    a = {r["doc_id"] for r in hash_sample(df, "doc_id", 0.3, seed=7).collect()}
-    b = {r["doc_id"] for r in hash_sample(df.repartition(13), "doc_id", 0.3, seed=7).collect()}
-    assert a == b  # partitioning-independent
-    assert abs(len(a) / 20_000 - 0.3) < 0.02
-    c = {r["doc_id"] for r in hash_sample(df, "doc_id", 0.3, seed=8).collect()}
-    assert a != c  # seed changes the draw
-    # nested rates: a higher-rate draw at the same seed contains the lower
-    d = {r["doc_id"] for r in hash_sample(df, "doc_id", 0.5, seed=7).collect()}
-    assert a <= d
-
 
 def test_stratified_sample_rates(spark):
     df = spark.range(30_000).select(
@@ -103,19 +89,6 @@ def test_stratified_sample_rates(spark):
     assert abs(got["en"] / 10_000 - 0.5) < 0.03
     assert abs(got["de"] / 10_000 - 0.1) < 0.03
     assert "fr" not in got  # default_rate 0
-
-
-def test_mix_corpora_weights_and_upsampling(spark):
-    web = spark.range(10_000).withColumnRenamed("id", "doc_id").withColumn("src", F.lit("w"))
-    code = spark.range(4_000).withColumnRenamed("id", "doc_id").withColumn("src", F.lit("c"))
-    mixed = mix_corpora({"web": (web, 0.5), "code": (code, 2.5)}, "doc_id")
-    counts = {r["mix_source"]: r["count"] for r in mixed.groupBy("mix_source").count().collect()}
-    assert abs(counts["web"] / 10_000 - 0.5) < 0.03
-    # rate 2.5: two full epochs + ~half a third
-    assert abs(counts["code"] / 4_000 - 2.5) < 0.1
-    # repeats are distinguishable for downstream shuffling
-    epochs = {r["mix_epoch"] for r in mixed.where(F.col("mix_source") == "code").select("mix_epoch").distinct().collect()}
-    assert epochs == {0, 1, 2}
 
 
 def test_shuffle_deterministic_reproducible_permutation(spark):
@@ -140,43 +113,9 @@ def test_corpus_ops_are_map_only(spark):
         ("redact", redact_documents(df)),
         ("chunk", chunk_documents(df, chunk_tokens=8, overlap_tokens=2)),
         ("sample", stratified_sample(df, "doc_id", "lang", {"en": 0.5})),
-        ("hash_sample", hash_sample(df, "doc_id", 0.5)),
     ]:
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan, (name, plan)
-
-
-def test_pack_sequences_budget_and_determinism(spark):
-    from binance_data_pipeline_spark.operators.sampling import pack_sequences
-
-    rows = [(i, 40 + (i * 37) % 200) for i in range(2_000)]  # sizes 40..239
-    rows.append((9_999, 5_000))                              # oversize chunk
-    df = spark.createDataFrame(rows, "chunk_id long, n_tokens long")
-
-    packs = pack_sequences(df, "chunk_id", "n_tokens", budget=512, num_groups=8).collect()
-    normal = [p for p in packs if not p["oversize"]]
-    over = [p for p in packs if p["oversize"]]
-
-    # hard invariant: no non-oversize pack exceeds the budget
-    assert all(p["total_tokens"] <= 512 for p in normal)
-    assert [list(p["members"]) for p in over] == [[9_999]]
-
-    # every chunk lands in exactly one pack
-    packed = [m for p in packs for m in p["members"]]
-    assert sorted(packed) == sorted(r[0] for r in rows)
-
-    # FFD utilization: mean fill of non-final packs should be high
-    total_tokens = sum(n for _, n in rows[:-1])
-    min_possible = -(-total_tokens // 512)
-    assert len(normal) <= int(min_possible * 1.15)  # within 15% of the lower bound
-
-    # deterministic under repartitioning
-    again = pack_sequences(df.repartition(17), "chunk_id", "n_tokens", budget=512, num_groups=8).collect()
-    key = lambda p: (p["pack_id"], list(p["members"]), p["total_tokens"])
-    assert sorted(map(key, packs)) == sorted(map(key, again))
-
-    with pytest.raises(ValueError):
-        pack_sequences(df, "chunk_id", "n_tokens", budget=0)
 
 
 def test_contamination_report_finds_planted_probe(spark):
@@ -281,221 +220,3 @@ def test_repetition_ratio_scores(spark):
     # map-only
     plan = df.select(repetition_ratio("text"))._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
-
-
-def test_dedup_paragraphs_strips_boilerplate_keeps_order(spark):
-    from binance_data_pipeline_spark.operators.dedup import dedup_paragraphs
-
-    footer = "subscribe to our newsletter for updates"
-    docs = [
-        (1, "unique intro one\n\n" + footer + "\n\nunique body one"),
-        (2, "unique intro two\n\n" + footer + "\n\nunique body two"),
-        (3, "unique intro three\n\n" + footer),
-        (4, footer),                       # nothing but boilerplate
-        (5, "standalone doc with no shared paragraphs at all"),
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    out = {r["doc_id"]: r for r in dedup_paragraphs(df, max_occurrences=1).collect()}
-
-    assert out[1]["text"] == "unique intro one\n\nunique body one"  # order kept
-    assert out[1]["n_paras"] == 3 and out[1]["n_removed"] == 1
-    assert out[2]["text"] == "unique intro two\n\nunique body two"
-    assert out[3]["text"] == "unique intro three"
-    assert out[4]["text"] == "" and out[4]["n_removed"] == 1        # all boilerplate
-    assert out[5]["text"] == docs[4][1] and out[5]["n_removed"] == 0
-
-    # a paragraph repeated within ONE doc is not cross-doc boilerplate
-    solo = spark.createDataFrame(
-        [(9, "alpha\n\nalpha\n\nbeta")], "doc_id long, text string"
-    )
-    r = dedup_paragraphs(solo, max_occurrences=1).first()
-    assert r["text"] == "alpha\n\nalpha\n\nbeta" and r["n_removed"] == 0
-
-
-# ----------------------------------------------------------------------
-# leakage-safe corpus split
-# ----------------------------------------------------------------------
-
-def test_split_corpus_calibration_and_determinism(spark):
-    from binance_data_pipeline_spark.operators.sampling import split_corpus
-
-    df = spark.range(20000).select(F.col("id").alias("doc_id"))
-    out = split_corpus(df, "doc_id", {"train": 0.8, "val": 0.1, "test": 0.1}, seed=7)
-    shares = {r["split"]: r["n"] for r in out.groupBy("split").agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert set(shares) == {"train", "val", "test"}
-    assert abs(shares["train"] / 20000 - 0.8) < 0.02
-    assert abs(shares["val"] / 20000 - 0.1) < 0.01
-    # same seed → identical assignment under different partitioning
-    again = split_corpus(df.repartition(17), "doc_id", {"train": 0.8, "val": 0.1, "test": 0.1}, seed=7)
-    diff = out.join(again.withColumnRenamed("split", "s2"), "doc_id").where(F.col("split") != F.col("s2"))
-    assert diff.count() == 0
-
-
-def test_split_corpus_group_coherent(spark):
-    from binance_data_pipeline_spark.operators.sampling import split_corpus
-
-    # 1000 docs in 100 dedup clusters: no cluster may straddle splits
-    df = spark.range(1000).select(
-        F.col("id").alias("doc_id"), (F.col("id") % 100).alias("cluster")
-    )
-    out = split_corpus(df, "doc_id", {"train": 0.7, "test": 0.3}, group_col="cluster")
-    straddlers = (
-        out.groupBy("cluster").agg(F.countDistinct("split").alias("k")).where(F.col("k") > 1)
-    )
-    assert straddlers.count() == 0
-
-
-def test_split_corpus_is_map_only(spark):
-    from binance_data_pipeline_spark.operators.sampling import split_corpus
-
-    df = spark.range(100).select(F.col("id").alias("doc_id"))
-    out = split_corpus(df, "doc_id", {"train": 0.9, "test": 0.1})
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-
-
-def test_split_corpus_validates_fractions(spark):
-    from binance_data_pipeline_spark.operators.sampling import split_corpus
-
-    df = spark.range(10).select(F.col("id").alias("doc_id"))
-    with pytest.raises(ValueError, match="sum to 1"):
-        split_corpus(df, "doc_id", {"train": 0.5, "test": 0.4})
-    with pytest.raises(ValueError, match="at least one"):
-        split_corpus(df, "doc_id", {})
-
-
-def test_sample_token_budget_meets_budgets(spark):
-    """Per-domain token budgets met within a few percent, whole-domain
-    passthrough for unlisted/over-budgeted domains, deterministic draw."""
-    import numpy as np
-
-    from binance_data_pipeline_spark.operators.sampling import sample_token_budget
-
-    rng = np.random.default_rng(4)
-    rows = []
-    did = 0
-    for dom, n, mean in (("web", 4000, 120), ("code", 2000, 400), ("books", 300, 2000)):
-        for _ in range(n):
-            k = max(1, int(rng.lognormal(np.log(mean), 0.6)))
-            rows.append((did, dom, "tok " * k))
-            did += 1
-    docs = spark.createDataFrame(rows, "doc_id long, domain string, text string")
-    tok = F.size(F.split(F.trim(F.col("text")), r"\s+"))
-    totals = {
-        r["domain"]: r["t"]
-        for r in docs.groupBy("domain").agg(F.sum(tok).alias("t")).collect()
-    }
-
-    budgets = {"web": 150_000, "code": 200_000, "books": 10_000_000}  # books over-budget
-    sampled, report = sample_token_budget(
-        docs, "doc_id", "domain", budgets, refine_iters=2, tolerance=0.01
-    )
-    got = {
-        r["domain"]: r["t"]
-        for r in sampled.groupBy("domain").agg(F.sum(tok).alias("t")).collect()
-    }
-    assert abs(got["web"] - 150_000) / 150_000 < 0.05
-    assert abs(got["code"] - 200_000) / 200_000 < 0.05
-    assert got["books"] == totals["books"]          # budget ≥ total: whole domain
-    assert report["books"]["rate"] == 1.0
-    assert 0 < report["web"]["rate"] < 1
-
-    # determinism: same seed → identical row set, any partitioning
-    again, _ = sample_token_budget(
-        docs.repartition(13), "doc_id", "domain", budgets, refine_iters=2, tolerance=0.01
-    )
-    assert sorted(r["doc_id"] for r in sampled.select("doc_id").collect()) == \
-           sorted(r["doc_id"] for r in again.select("doc_id").collect())
-
-
-def test_sample_token_budget_unlisted_domain_passthrough(spark):
-    from binance_data_pipeline_spark.operators.sampling import sample_token_budget
-
-    docs = spark.createDataFrame(
-        [(1, "a", "x " * 50), (2, "b", "y " * 50)],
-        "doc_id long, domain string, text string",
-    )
-    sampled, report = sample_token_budget(docs, "doc_id", "domain", {"a": 10})
-    kept = {r["doc_id"] for r in sampled.collect()}
-    assert 2 in kept            # domain b unlisted: untouched
-    assert set(report) == {"a"}
-
-
-def test_sample_token_budget_final_filter_is_map_side(spark):
-    """The selection itself is one map-side filter (the threshold search
-    pays small aggs, the output plan carries no extra exchange)."""
-    from binance_data_pipeline_spark.operators.sampling import sample_token_budget
-
-    docs = spark.createDataFrame(
-        [(i, "a", "t " * 100) for i in range(500)],
-        "doc_id long, domain string, text string",
-    )
-    sampled, _ = sample_token_budget(docs, "doc_id", "domain", {"a": 5_000})
-    plan = sampled._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-
-
-def test_cap_per_group_exact_and_approx_paths(spark):
-    """Per-domain cap: small over-cap domains cut EXACTLY at the cap,
-    giant domains cut approximately via hash threshold, under-cap domains
-    untouched — all deterministic under repartitioning."""
-    from binance_data_pipeline_spark.operators.sampling import cap_per_group
-
-    rows = (
-        [(i, "small-over") for i in range(500)]
-        + [(1000 + i, "under") for i in range(50)]
-        + [(10_000 + i, "giant") for i in range(30_000)]
-    )
-    df = spark.createDataFrame(rows, "doc_id long, domain string")
-    capped = cap_per_group(
-        df, "doc_id", "domain", max_rows=100, exact_threshold=1000
-    )
-    got = {
-        r["domain"]: r["n"]
-        for r in capped.groupBy("domain").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    assert got["small-over"] == 100            # exact path
-    assert got["under"] == 50                  # passthrough
-    assert abs(got["giant"] - 100) <= 40       # hash-rate path, ~±1/sqrt(cap)
-
-    again = cap_per_group(
-        df.repartition(17), "doc_id", "domain", max_rows=100, exact_threshold=1000
-    )
-    assert sorted(r["doc_id"] for r in capped.collect()) == sorted(
-        r["doc_id"] for r in again.collect()
-    )
-
-
-def test_cap_per_group_counts_stay_in_plan(spark):
-    """Scale contract: over-cap groups enter the plan as a broadcast-
-    joined counts frame, NOT driver literals — the plan shows a
-    BroadcastHashJoin and no isin/keys list over group values, and a
-    non-string (long) group column joins on its real type."""
-    from binance_data_pipeline_spark.operators.sampling import cap_per_group
-
-    # high-cardinality long group col: 200 groups over cap, 800 under
-    rows = [(g * 100_000 + i, g) for g in range(1000) for i in range(12 if g < 200 else 3)]
-    df = spark.createDataFrame(rows, "doc_id long, host_id long")
-    capped = cap_per_group(df, "doc_id", "host_id", max_rows=5, exact_threshold=10**6)
-
-    got = {
-        r["host_id"]: r["n"]
-        for r in capped.groupBy("host_id").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    assert all(n == 5 for g, n in got.items() if g < 200)
-    assert all(n == 3 for g, n in got.items() if g >= 200)
-
-    plan = capped._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    # no group value may appear as a plan literal (isin list / create_map)
-    assert " IN (" not in plan
-    for probe in ("100000, 200000", "create_map", "keys: ["):
-        assert probe not in plan
-
-
-def test_cap_per_group_no_overcap_is_noop(spark):
-    from binance_data_pipeline_spark.operators.sampling import cap_per_group
-
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "doc_id long, domain string")
-    out = cap_per_group(df, "doc_id", "domain", max_rows=10)
-    assert out is df  # literally untouched: no joins, no plan growth

@@ -1230,152 +1230,6 @@ def test_null_cases_not_vacuous(duck):
     assert nonempty >= 0.6 * N_NULL_CASES
 
 
-# ---- subquery-shape differential (round 9) ----------------------------------
-# IN / NOT IN / EXISTS / NOT EXISTS / scalar subqueries with nulls
-# injected into the probe column AND the subquery values. NOT IN is the
-# classic 3VL trap (one inner NULL -> never TRUE; null probe -> UNKNOWN
-# whenever the subquery is non-empty). Each case runs THREE ways and
-# must agree: DuckDB SQL (oracle), Spark SQL text (Catalyst's own
-# null-aware anti join), and the operators.subqueries DataFrame helpers.
-
-from binance_data_pipeline_spark.operators.subqueries import (  # noqa: E402
-    exists_filter,
-    in_filter,
-    not_exists_filter,
-    not_in_filter,
-)
-
-
-def _gen_subq_case(rng):
-    return {
-        "shape": rng.choice(["in", "not_in", "exists", "not_exists", "scalar"]),
-        "inner_null_mod": rng.choice([None, 13, 97]),
-        "outer_null_mod": rng.choice([None, 11]),
-        "acct_min": rng.choice([-999.0, 1000.0, 4500.0, 8000.0]),
-        "mult": rng.choice([10, 30, 50]),
-    }
-
-
-def _subq_sql(case, orders="orders", customer="customer"):
-    om = case["outer_null_mod"]
-    ock = (f"CASE WHEN o_orderkey % {om} = 0 THEN NULL ELSE o_custkey END"
-           if om else "o_custkey")
-    outer = (f"(SELECT {ock} AS ock, o_orderstatus, o_totalprice "
-             f"FROM {orders}) o")
-    im = case["inner_null_mod"]
-    ick = (f"CASE WHEN c_custkey % {im} = 0 THEN NULL ELSE c_custkey END"
-           if im else "c_custkey")
-    inner = (f"SELECT {ick} FROM {customer} "
-             f"WHERE c_acctbal > {case['acct_min']}")
-    shape = case["shape"]
-    if shape == "in":
-        where = f"ock IN ({inner})"
-    elif shape == "not_in":
-        where = f"ock NOT IN ({inner})"
-    elif shape == "exists":
-        where = (f"EXISTS (SELECT 1 FROM {customer} c WHERE c.c_custkey = o.ock "
-                 f"AND c.c_acctbal > {case['acct_min']})")
-    elif shape == "not_exists":
-        where = (f"NOT EXISTS (SELECT 1 FROM {customer} c WHERE c.c_custkey = o.ock "
-                 f"AND c.c_acctbal > {case['acct_min']})")
-    else:  # scalar
-        where = (f"o_totalprice > (SELECT avg(c_acctbal) FROM {customer} "
-                 f"WHERE c_acctbal > {case['acct_min']}) * {case['mult']}")
-    return (f"SELECT o_orderstatus, count(*) AS n, "
-            f"round(sum(o_totalprice), 4) AS sum_p FROM {outer} "
-            f"WHERE {where} GROUP BY o_orderstatus")
-
-
-def _subq_outer(spark, case):
-    om = case["outer_null_mod"]
-    o = load_table(spark, SF_SMALL, "orders")
-    ock = (F.when(F.col("o_orderkey") % om == 0, F.lit(None))
-           .otherwise(F.col("o_custkey")) if om else F.col("o_custkey"))
-    return o.select(ock.alias("ock"), "o_orderstatus", "o_totalprice")
-
-
-def _subq_df(spark, case):
-    """Lowering through the operators.subqueries helpers."""
-    o = _subq_outer(spark, case)
-    c = load_table(spark, SF_SMALL, "customer")
-    pred = F.col("c_acctbal") > case["acct_min"]
-    im = case["inner_null_mod"]
-    ick = (F.when(F.col("c_custkey") % im == 0, F.lit(None))
-           .otherwise(F.col("c_custkey")) if im else F.col("c_custkey"))
-    inner_vals = c.where(pred).select(ick.alias("ick"))
-    shape = case["shape"]
-    if shape == "in":
-        flt = in_filter(o, "ock", inner_vals, "ick")
-    elif shape == "not_in":
-        flt = not_in_filter(o, "ock", inner_vals, "ick")
-    elif shape == "exists":
-        flt = exists_filter(
-            o, c.where(pred).select("c_custkey"),
-            F.col("ock") == F.col("c_custkey"))
-    elif shape == "not_exists":
-        flt = not_exists_filter(
-            o, c.where(pred).select("c_custkey"),
-            F.col("ock") == F.col("c_custkey"))
-    else:  # scalar: bounded driver scalar, same decision an uncorrelated
-        # scalar subquery plan makes
-        s = c.where(pred).agg(F.avg("c_acctbal")).first()[0]
-        flt = (o.where(F.col("o_totalprice") > float(s) * case["mult"])
-               if s is not None else o.limit(0))
-    return flt.groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.sum("o_totalprice"), 4).alias("sum_p"),
-    )
-
-
-N_SUBQ_CASES = 12
-SUBQ_CASES = [_gen_subq_case(random.Random(91000 + i)) for i in range(N_SUBQ_CASES)]
-# handcrafted edges: NOT IN over an EMPTY subquery keeps every row
-# (null probes included); NOT IN over a null-containing subquery keeps
-# none — both must hold on all three lowerings
-SUBQ_CASES.append({"shape": "not_in", "inner_null_mod": None,
-                   "outer_null_mod": 11, "acct_min": 99999.0, "mult": 10})
-SUBQ_CASES.append({"shape": "not_in", "inner_null_mod": 13,
-                   "outer_null_mod": 11, "acct_min": -999.0, "mult": 10})
-SUBQ_CASES.append({"shape": "not_exists", "inner_null_mod": None,
-                   "outer_null_mod": 11, "acct_min": 4500.0, "mult": 10})
-assert {c["shape"] for c in SUBQ_CASES} >= {"in", "not_in", "exists",
-                                            "not_exists", "scalar"}
-
-
-@pytest.fixture(scope="module")
-def subq_views(spark):
-    load_table(spark, SF_SMALL, "orders").createOrReplaceTempView("fz_orders")
-    load_table(spark, SF_SMALL, "customer").createOrReplaceTempView("fz_customer")
-
-
-@pytest.mark.parametrize("i", range(len(SUBQ_CASES)))
-def test_subquery_shape_differential(spark, duck, subq_views, i):
-    case = SUBQ_CASES[i]
-    sql = _subq_sql(case)
-    oracle = duck.sql(sql).df()
-    # leg 1: Spark SQL text (Catalyst's IN/NOT IN/EXISTS planning)
-    sdf = spark.sql(_subq_sql(case, orders="fz_orders", customer="fz_customer"))
-    errors = compare(sdf, oracle, f"subq-sql[{i}:{case['shape']}]")
-    assert not errors, f"spec={case}\nsql={sql}\n" + "\n".join(errors)
-    # leg 2: the DataFrame helpers
-    hdf = _subq_df(spark, case)
-    errors = compare(hdf, oracle, f"subq-df[{i}:{case['shape']}]")
-    assert not errors, f"spec={case}\nsql={sql}\n" + "\n".join(errors)
-
-
-def test_not_in_empty_subquery_keeps_null_probes(spark, duck, subq_views):
-    """The handcrafted empty-subquery NOT IN case must be NON-vacuous in
-    a specific way: it returns every outer row — null probes included —
-    while the null-containing variant returns zero rows."""
-    empty_case, null_case = SUBQ_CASES[-3], SUBQ_CASES[-2]
-    n_orders = duck.sql("SELECT count(*) AS n FROM orders").df()["n"][0]
-    got = duck.sql(_subq_sql(empty_case)).df()["n"].sum()
-    assert got == n_orders
-    assert len(duck.sql(_subq_sql(null_case)).df()) == 0
-    assert _subq_df(spark, empty_case).agg(F.sum("n")).first()[0] == n_orders
-    assert _subq_df(spark, null_case).count() == 0
-
-
 # ---- decimal-arithmetic differential (round 9) ------------------------------
 # Every numeric dimension above runs in DOUBLE. Money math runs in
 # DECIMAL, where the engines apply their own precision/scale promotion
@@ -1729,332 +1583,17 @@ def test_division_by_zero_divergence_and_alignment(spark, duck):
     assert not errors, "\n".join(errors)
 
 
-# ---- row-value (multi-column) IN / NOT IN ------------------------------------
-# The multi-column NOT IN truth table is stricter than single-col: a
-# null-component probe can still be TRUE (kept) when every inner row
-# differs definitively on another component. DuckDB has no row-value IN
-# subquery, so its oracle leg evaluates the Kleene OR over row-equality
-# explicitly (bool_or of eq / bool_or of eq-is-null) — an independent
-# formulation derived from the OR truth table, against BOTH Spark SQL's
-# native (ock, ost) NOT IN (...) planning and the DataFrame helpers.
-
-from binance_data_pipeline_spark.operators.subqueries import (  # noqa: E402
-    in_filter_rows,
-    not_in_filter_rows,
-)
-
-
-def _gen_rv_case(rng):
-    return {
-        "shape": rng.choice(["in", "not_in", "not_in", "not_in"]),  # weight NOT IN
-        "ock_mod": rng.choice([None, 11, 3]),
-        "ick_mod": rng.choice([None, 13, 5]),
-        "ist_mod": rng.choice([None, 7]),
-        "acct_min": rng.choice([-999.0, 1000.0, 8000.0]),
-    }
-
-
-def _rv_outer_sql(case, orders="orders"):
-    om = case["ock_mod"]
-    ock = (f"CASE WHEN o_orderkey % {om} = 0 THEN NULL ELSE o_custkey END"
-           if om else "o_custkey")
-    return (f"(SELECT {ock} AS ock, o_orderstatus AS ost, o_totalprice "
-            f"FROM {orders})")
-
-
-def _rv_inner_sql(case, customer="customer"):
-    im, sm = case["ick_mod"], case["ist_mod"]
-    ick = (f"CASE WHEN c_custkey % {im} = 0 THEN NULL ELSE c_custkey END"
-           if im else "c_custkey")
-    ist = "CASE WHEN c_acctbal > 4500 THEN 'O' ELSE 'F' END"
-    if sm:
-        ist = f"CASE WHEN c_custkey % {sm} = 0 THEN NULL ELSE {ist} END"
-    return (f"(SELECT {ick} AS ick, {ist} AS ist FROM {customer} "
-            f"WHERE c_acctbal > {case['acct_min']})")
-
-
-def _rv_duck_sql(case):
-    outer, inner = _rv_outer_sql(case), _rv_inner_sql(case)
-    req = "(o.ock = c.ick AND o.ost = c.ist)"
-    tri = (f"(SELECT CASE WHEN bool_or({req}) THEN 1 "
-           f"WHEN bool_or({req} IS NULL) THEN 2 ELSE 3 END "
-           f"FROM {inner} c)")
-    want = "= 1" if case["shape"] == "in" else "= 3"
-    return (f"SELECT ost, count(*) AS n, round(sum(o_totalprice), 4) AS sum_p "
-            f"FROM {outer} o WHERE coalesce({tri}, 3) {want} GROUP BY ost")
-
-
-def _rv_spark_sql(case):
-    outer = _rv_outer_sql(case, orders="fz_orders")
-    inner = _rv_inner_sql(case, customer="fz_customer")
-    op = "IN" if case["shape"] == "in" else "NOT IN"
-    return (f"SELECT ost, count(*) AS n, round(sum(o_totalprice), 4) AS sum_p "
-            f"FROM {outer} o WHERE (ock, ost) {op} "
-            f"(SELECT ick, ist FROM {inner}) GROUP BY ost")
-
-
-def _rv_df(spark, case):
-    om = case["ock_mod"]
-    o = load_table(spark, SF_SMALL, "orders")
-    ock = (F.when(F.col("o_orderkey") % om == 0, F.lit(None))
-           .otherwise(F.col("o_custkey")) if om else F.col("o_custkey"))
-    o = o.select(ock.alias("ock"), F.col("o_orderstatus").alias("ost"),
-                 "o_totalprice")
-    im, sm = case["ick_mod"], case["ist_mod"]
-    c = load_table(spark, SF_SMALL, "customer").where(
-        F.col("c_acctbal") > case["acct_min"])
-    ick = (F.when(F.col("c_custkey") % im == 0, F.lit(None))
-           .otherwise(F.col("c_custkey")) if im else F.col("c_custkey"))
-    ist = F.when(F.col("c_acctbal") > 4500, F.lit("O")).otherwise(F.lit("F"))
-    if sm:
-        ist = F.when(F.col("c_custkey") % sm == 0, F.lit(None)).otherwise(ist)
-    inner = c.select(ick.alias("ick"), ist.alias("ist"))
-    fn = in_filter_rows if case["shape"] == "in" else not_in_filter_rows
-    flt = fn(o, ["ock", "ost"], inner, ["ick", "ist"])
-    return flt.groupBy("ost").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.sum("o_totalprice"), 4).alias("sum_p"),
-    )
-
-
-N_RV_CASES = 10
-RV_CASES = [_gen_rv_case(random.Random(31000 + i)) for i in range(N_RV_CASES)]
-# edges: empty inner (NOT IN keeps everything incl. null probes);
-# null-heavy inner against null probes
-RV_CASES.append({"shape": "not_in", "ock_mod": 11, "ick_mod": None,
-                 "ist_mod": None, "acct_min": 99999.0})
-RV_CASES.append({"shape": "not_in", "ock_mod": 3, "ick_mod": 5,
-                 "ist_mod": 7, "acct_min": -999.0})
-assert {c["shape"] for c in RV_CASES} == {"in", "not_in"}
-
-
-@pytest.mark.parametrize("i", range(len(RV_CASES)))
-def test_row_value_in_differential(spark, duck, subq_views, i):
-    case = RV_CASES[i]
-    sql = _rv_duck_sql(case)
-    oracle = duck.sql(sql).df()
-    sdf = spark.sql(_rv_spark_sql(case))
-    errors = compare(sdf, oracle, f"rv-sql[{i}:{case['shape']}]")
-    assert not errors, f"spec={case}\nsql={sql}\n" + "\n".join(errors)
-    hdf = _rv_df(spark, case)
-    errors = compare(hdf, oracle, f"rv-df[{i}:{case['shape']}]")
-    assert not errors, f"spec={case}\nsql={sql}\n" + "\n".join(errors)
-
-
-def test_row_value_cases_not_vacuous(duck):
-    nonempty = sum(
-        1 for c in RV_CASES if len(duck.sql(_rv_duck_sql(c)).df()) > 0)
-    assert nonempty >= 0.6 * len(RV_CASES)
-
-
-# ---- quantified comparisons (ALL / ANY subqueries) ---------------------------
-# Spark SQL has no `op ALL/ANY (subquery)` at all; the helpers fill the
-# gap with one bounded aggregate + a pure predicate. DuckDB implements
-# the ANSI semantics natively and is the oracle.
-
-from binance_data_pipeline_spark.operators.subqueries import (  # noqa: E402
-    all_filter,
-    any_filter,
-)
-
-
-def _gen_quant_case(rng):
-    return {
-        "quant": rng.choice(["all", "any"]),
-        "op": rng.choice(["<", "<=", ">", ">=", "=", "<>"]),
-        "probe": rng.choice(["o_totalprice", "ock"]),
-        "outer_null_mod": rng.choice([None, 11]),
-        "inner_null_mod": rng.choice([None, 13]),
-        "acct_min": rng.choice([-999.0, 4500.0, 9000.0, 99999.0]),
-    }
-
-
-def _quant_inner_sql(case, customer="customer"):
-    im = case["inner_null_mod"]
-    if case["probe"] == "ock":
-        iv = "c_custkey % 500"  # small domain so '=' ALL can be non-vacuous
-    else:
-        iv = "c_acctbal * 40"   # overlaps o_totalprice's range
-    if im:
-        iv = f"CASE WHEN c_custkey % {im} = 0 THEN NULL ELSE {iv} END"
-    return f"SELECT {iv} FROM {customer} WHERE c_acctbal > {case['acct_min']}"
-
-
-def _quant_duck_sql(case):
-    om = case["outer_null_mod"]
-    ock = (f"CASE WHEN o_orderkey % {om} = 0 THEN NULL ELSE o_custkey END"
-           if om else "o_custkey")
-    outer = (f"(SELECT {ock} AS ock, o_orderstatus, o_totalprice "
-             f"FROM orders) o")
-    q = case["quant"].upper()
-    return (f"SELECT o_orderstatus, count(*) AS n, "
-            f"round(sum(o_totalprice), 4) AS sum_p FROM {outer} "
-            f"WHERE {case['probe']} {case['op']} {q} "
-            f"({_quant_inner_sql(case)}) GROUP BY o_orderstatus")
-
-
-def _quant_df(spark, case):
-    om = case["outer_null_mod"]
-    o = load_table(spark, SF_SMALL, "orders")
-    ock = (F.when(F.col("o_orderkey") % om == 0, F.lit(None))
-           .otherwise(F.col("o_custkey")) if om else F.col("o_custkey"))
-    o = o.select(ock.alias("ock"), "o_orderstatus", "o_totalprice")
-    c = load_table(spark, SF_SMALL, "customer").where(
-        F.col("c_acctbal") > case["acct_min"])
-    iv = (F.col("c_custkey") % 500 if case["probe"] == "ock"
-          else F.col("c_acctbal") * 40)
-    im = case["inner_null_mod"]
-    if im:
-        iv = F.when(F.col("c_custkey") % im == 0, F.lit(None)).otherwise(iv)
-    inner = c.select(iv.alias("iv"))
-    fn = all_filter if case["quant"] == "all" else any_filter
-    flt = fn(o, case["probe"], case["op"], inner, "iv")
-    return flt.groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.sum("o_totalprice"), 4).alias("sum_p"),
-    )
-
-
-N_QUANT_CASES = 16
-QUANT_CASES = [_gen_quant_case(random.Random(41000 + i))
-               for i in range(N_QUANT_CASES)]
-# edges: empty inner both quantifiers; null-polluted inner under ALL
-QUANT_CASES.append({"quant": "all", "op": ">", "probe": "o_totalprice",
-                    "outer_null_mod": 11, "inner_null_mod": None,
-                    "acct_min": 99999.0})
-QUANT_CASES.append({"quant": "any", "op": "<", "probe": "o_totalprice",
-                    "outer_null_mod": None, "inner_null_mod": None,
-                    "acct_min": 99999.0})
-QUANT_CASES.append({"quant": "all", "op": "<=", "probe": "ock",
-                    "outer_null_mod": 11, "inner_null_mod": 13,
-                    "acct_min": -999.0})
-QUANT_CASES.append({"quant": "all", "op": "<>", "probe": "ock",
-                    "outer_null_mod": 11, "inner_null_mod": None,
-                    "acct_min": 4500.0})
-QUANT_CASES.append({"quant": "any", "op": "<>", "probe": "ock",
-                    "outer_null_mod": None, "inner_null_mod": None,
-                    "acct_min": 4500.0})
-assert {c["quant"] for c in QUANT_CASES} == {"all", "any"}
-assert {c["op"] for c in QUANT_CASES} >= {"<", ">", "=", "<>"}
-
-
-@pytest.mark.parametrize("i", range(len(QUANT_CASES)))
-def test_quantified_comparison_differential(spark, duck, i):
-    case = QUANT_CASES[i]
-    sql = _quant_duck_sql(case)
-    oracle = duck.sql(sql).df()
-    df = _quant_df(spark, case)
-    errors = compare(df, oracle, f"quant[{i}:{case['quant']}:{case['op']}]")
-    assert not errors, f"spec={case}\nsql={sql}\n" + "\n".join(errors)
-
-
-def test_quantified_cases_not_vacuous(duck):
-    nonempty = sum(
-        1 for c in QUANT_CASES if len(duck.sql(_quant_duck_sql(c)).df()) > 0)
-    assert nonempty >= 0.5 * len(QUANT_CASES)
-
-
-# ---- quantified × extreme values (round 10) ----------------------------------
-# The min/max-scalar lowering of ALL/ANY must agree with DuckDB's native
-# quantified comparisons under IEEE specials. Both engines use the same
-# total order (NaN > +inf, NaN = NaN TRUE), but the lowering compresses
-# the subquery to one min/max bound — these cases prove the compression
-# preserves the semantics when the bound ITSELF is NaN/±inf, when the
-# probe is a special, and when NULLs mix in.
-
-_XQ_PROBE = [(1, float("nan")), (2, float("inf")), (3, float("-inf")),
-             (4, 1.5), (5, -2.5), (6, 0.0), (7, None)]
-_XQ_PROBE_DUCK = ("(VALUES (1, 'NaN'::DOUBLE), (2, 'Infinity'::DOUBLE), "
-                  "(3, '-Infinity'::DOUBLE), (4, 1.5::DOUBLE), "
-                  "(5, -2.5::DOUBLE), (6, 0.0::DOUBLE), "
-                  "(7, NULL::DOUBLE)) p(id, x)")
-
-_XQ_INNERS = {
-    "with_nan": ([float("nan"), 1.0, 2.0],
-                 "(VALUES ('NaN'::DOUBLE), (1.0::DOUBLE), (2.0::DOUBLE))"),
-    "all_nan": ([float("nan"), float("nan")],
-                "(VALUES ('NaN'::DOUBLE), ('NaN'::DOUBLE))"),
-    "inf_pair": ([float("inf"), float("-inf")],
-                 "(VALUES ('Infinity'::DOUBLE), ('-Infinity'::DOUBLE))"),
-    "nan_null": ([float("nan"), None, 3.0],
-                 "(VALUES ('NaN'::DOUBLE), (NULL::DOUBLE), (3.0::DOUBLE))"),
-    "finite": ([-1.0, 0.0, 2.5],
-               "(VALUES (-1.0::DOUBLE), (0.0::DOUBLE), (2.5::DOUBLE))"),
-}
-
-XQ_CASES = [
-    {"quant": q, "op": op, "inner": iv}
-    for q in ("all", "any")
-    for op in ("<", "<=", ">", ">=", "=", "<>")
-    for iv in ("with_nan", "all_nan", "inf_pair", "nan_null", "finite")
-]
-
-
-@pytest.mark.parametrize("i", range(len(XQ_CASES)))
-def test_quantified_extreme_differential(spark, duck, i):
-    case = XQ_CASES[i]
-    vals, duck_vals = _XQ_INNERS[case["inner"]]
-    q = case["quant"].upper()
-    sql = (f"SELECT id FROM {_XQ_PROBE_DUCK} "
-           f"WHERE x {case['op']} {q} (SELECT v FROM {duck_vals} s(v))")
-    oracle = duck.sql(sql).df()
-    probe = spark.createDataFrame(_XQ_PROBE, "id long, x double")
-    inner = spark.createDataFrame([(v,) for v in vals], "v double")
-    fn = all_filter if case["quant"] == "all" else any_filter
-    df = fn(probe, "x", case["op"], inner, "v").select("id")
-    errors = compare(df, oracle, f"xquant[{i}:{case['quant']}:{case['op']}:"
-                                 f"{case['inner']}]")
-    assert not errors, f"spec={case}\nsql={sql}\n" + "\n".join(errors)
-
-
-def test_quantified_extreme_not_vacuous(duck):
-    """At least a third of the extreme cases must keep SOME rows, so the
-    battery isn't all empty-result agreements."""
-    kept = 0
-    for case in XQ_CASES:
-        _, duck_vals = _XQ_INNERS[case["inner"]]
-        q = case["quant"].upper()
-        sql = (f"SELECT id FROM {_XQ_PROBE_DUCK} "
-               f"WHERE x {case['op']} {q} (SELECT v FROM {duck_vals} s(v))")
-        if len(duck.sql(sql).df()) > 0:
-            kept += 1
-    assert kept >= len(XQ_CASES) // 3, kept
-
-
-def test_quantified_decimal_differential(spark, duck):
-    """Quantified comparisons over DECIMAL(12,2) incl. the type's
-    boundary values — the min/max bound round-trips through a Python
-    Decimal into a literal; precision must survive exactly."""
-    from decimal import Decimal
-
-    probe_rows = [(1, Decimal("9999999999.99")), (2, Decimal("-9999999999.99")),
-                  (3, Decimal("0.01")), (4, Decimal("0.00")), (5, None)]
-    duck_probe = ("(VALUES (1, 9999999999.99::DECIMAL(12,2)), "
-                  "(2, -9999999999.99::DECIMAL(12,2)), "
-                  "(3, 0.01::DECIMAL(12,2)), (4, 0.00::DECIMAL(12,2)), "
-                  "(5, NULL::DECIMAL(12,2))) p(id, x)")
-    inner_rows = [(Decimal("0.01"),), (Decimal("9999999999.99"),)]
-    duck_inner = ("(VALUES (0.01::DECIMAL(12,2)), "
-                  "(9999999999.99::DECIMAL(12,2)))")
-    probe = spark.createDataFrame(probe_rows, "id long, x decimal(12,2)")
-    inner = spark.createDataFrame(inner_rows, "v decimal(12,2)")
-    for quant, op in (("all", "<="), ("all", "<"), ("any", ">="),
-                      ("any", "="), ("all", "<>"), ("any", "<>")):
-        q = quant.upper()
-        sql = (f"SELECT id FROM {duck_probe} "
-               f"WHERE x {op} {q} (SELECT v FROM {duck_inner} s(v))")
-        oracle = duck.sql(sql).df()
-        fn = all_filter if quant == "all" else any_filter
-        df = fn(probe, "x", op, inner, "v").select("id")
-        errors = compare(df, oracle, f"xquant-dec[{quant}:{op}]")
-        assert not errors, f"{quant} {op}\nsql={sql}\n" + "\n".join(errors)
-
-
 # ---- correlated scalar-aggregate subquery ------------------------------------
 
 from binance_data_pipeline_spark.operators.subqueries import (  # noqa: E402
     scalar_agg_filter,
 )
+
+
+@pytest.fixture(scope="module")
+def subq_views(spark):
+    load_table(spark, SF_SMALL, "orders").createOrReplaceTempView("fz_orders")
+    load_table(spark, SF_SMALL, "customer").createOrReplaceTempView("fz_customer")
 
 
 def _gen_csq_case(rng):

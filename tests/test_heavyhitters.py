@@ -115,41 +115,3 @@ def test_heavy_hitters_plan_is_arrow_batched(spark):
     assert not errors, errors
     plan = rollup._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan and "FlatMapGroupsInPandas" in plan
-
-
-def test_streaming_heavy_hitters_exactly_once(spark, tmp_path):
-    """Shared merge-state machinery: batches fold once, replays skip, the
-    streamed state matches a batch build over the same rows."""
-    import numpy as np
-
-    from binance_data_pipeline_spark.operators.heavyhitters import (
-        heavy_hitters_merge_batch,
-        streaming_heavy_hitters,
-    )
-    from binance_data_pipeline_spark.operators.state_swap import read_state
-
-    rng = np.random.default_rng(7)
-    rows = [("g1", it) for it in _zipf_items(rng, 8000)]
-    src = str(tmp_path / "src")
-    state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
-    df = spark.createDataFrame(rows, "g string, item string")
-    df.write.mode("overwrite").parquet(src)
-
-    stream = spark.readStream.schema("g string, item string").parquet(src)
-    q = streaming_heavy_hitters(stream, state, ckpt, ["g"], "item", k=64)
-    q.trigger(availableNow=True).start().awaitTermination(120)
-
-    # explicit replay of an already-committed batch id: must be a no-op
-    heavy_hitters_merge_batch(df, state, ["g"], "item", k=64, batch_id=0)
-
-    st = read_state(spark, state)
-    est = heavy_hitters_estimate(st, ["g"], top=5).collect()
-    from collections import Counter
-
-    truth = Counter(r[1] for r in rows)
-    n = len(rows)
-    assert st.collect()[0]["n_rows"] == n  # replay did not double-count
-    for r in est:
-        assert r["estimate"] <= truth[r["item"]] <= r["estimate"] + n / 64 + 1
-    assert est[0]["item"] == truth.most_common(1)[0][0]

@@ -376,26 +376,6 @@ def test_cluster_pairs_chain_of_1000_bounded_rounds(spark):
     assert len(got) == 1000 and set(got.values()) == {0}
 
 
-def test_materialize_dedup_corpus_job(spark, tmp_path):
-    """The corpus DAG on the real documents table: writes corpus + mapping
-    parquet, counts reconcile, mapping covers every input doc."""
-    from binance_data_pipeline_spark.jobs import materialize_dedup_corpus
-
-    out = str(tmp_path / "dedup_out")
-    kept_n, in_n = materialize_dedup_corpus(
-        spark, f"{SF}/documents.parquet", out, threshold=0.5
-    )
-    assert 0 < kept_n <= in_n == 500
-    mapping = spark.read.parquet(f"{out}/mapping.parquet")
-    assert mapping.count() == in_n
-    kept_ids = {r["doc_id"] for r in spark.read.parquet(f"{out}/corpus.parquet").select("doc_id").collect()}
-    mapped_keepers = {r["kept_doc_id"] for r in mapping.select("kept_doc_id").collect()}
-    assert mapped_keepers == kept_ids  # keepers in mapping ≡ docs in corpus
-    assert {r["reason"] for r in mapping.select("reason").distinct().collect()} <= {
-        "kept", "exact_dup", "near_dup"
-    }
-
-
 def test_cosine_kernels_match_hof_reference(spark):
     """The r12 Arrow cosine kernels (localized matmul scan, pair UDF)
     must reproduce the Catalyst HOF plans bit-for-bit — fast path and

@@ -9,7 +9,6 @@ import sys
 
 sys.path.insert(0, "/root/repo")
 
-import pytest
 from pyspark.sql import functions as F
 
 from binance_data_pipeline_spark.plans.pipeline import q_fact_fee_tax
@@ -186,161 +185,6 @@ def test_catalog_plans_are_scale_clean(spark):
     from pyspark.sql.functions import udf
     slow = a.select(udf(lambda x: x + 1, "long")("a"))
     assert any(f.code == "PY_ROW_EVAL" for f in audit_plan(slow))
-
-
-def test_subquery_filters_broadcast_small_inner(spark):
-    """The 3VL subquery helpers must keep the probe side shuffle-free
-    when the value side is dim-sized: semi/anti joins planned as
-    BroadcastHashJoin, never SortMergeJoin — at 100 TB the probe relation
-    is the fact and must not move."""
-    from binance_data_pipeline_spark.catalog import load_table
-    from binance_data_pipeline_spark.operators.subqueries import (
-        exists_filter, in_filter, not_in_filter,
-    )
-
-    o = load_table(spark, SF_SMALL, "orders")
-    c = load_table(spark, SF_SMALL, "customer").where(F.col("c_acctbal") > 0)
-
-    for df, kind in (
-        (in_filter(o, "o_custkey", c, "c_custkey"), "LeftSemi"),
-        (not_in_filter(o, "o_custkey", c, "c_custkey"), "LeftAnti"),
-        (exists_filter(o, c.select("c_custkey"),
-                       F.col("o_custkey") == F.col("c_custkey")), "LeftSemi"),
-    ):
-        plan = plan_of(df)
-        assert "BroadcastHashJoin" in plan and kind in plan, (kind, plan)
-        assert "SortMergeJoin" not in plan, (kind, plan)
-
-
-def test_row_value_not_in_bulk_is_hash_anti_join(spark):
-    """not_in_filter_rows' split execution: the clean-probe bulk must be
-    a hash anti join (BroadcastHashJoin LeftAnti); the Kleene condition
-    joins may appear only as broadcast nested loops (null slices are
-    dim-sized) — never a SortMergeJoin and never a cartesian product."""
-    from binance_data_pipeline_spark.catalog import load_table
-    from binance_data_pipeline_spark.operators.subqueries import not_in_filter_rows
-
-    o = load_table(spark, SF_SMALL, "orders").select(
-        F.col("o_custkey").alias("k"), F.col("o_orderstatus").alias("st"),
-        "o_totalprice")
-    c = load_table(spark, SF_SMALL, "customer").select(
-        F.when(F.col("c_custkey") % 13 == 0, F.lit(None))
-        .otherwise(F.col("c_custkey")).alias("ik"),
-        F.lit("O").alias("ist"))
-    df = not_in_filter_rows(o, ["k", "st"], c, ["ik", "ist"])
-    plan = plan_of(df)
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
-    assert "CartesianProduct" not in plan, plan
-
-
-def test_subquery_cache_inner_single_scan(spark):
-    """The eager helpers compute an uncached inner twice (documented
-    contract); cache_inner=True must instead read the value frame from
-    the cache in the join leg — the executed plan shows an in-memory
-    relation scan, not a second parquet scan — and results must be
-    identical either way."""
-    from binance_data_pipeline_spark.catalog import load_table
-    from binance_data_pipeline_spark.operators.subqueries import (
-        all_filter, not_in_filter,
-    )
-
-    o = load_table(spark, SF_SMALL, "orders")
-    c = load_table(spark, SF_SMALL, "customer").where(F.col("c_acctbal") > 0)
-
-    plain = not_in_filter(o, "o_custkey", c, "c_custkey")
-    cached = not_in_filter(o, "o_custkey", c, "c_custkey", cache_inner=True)
-    plan = plan_of(cached)
-    assert "InMemory" in plan, plan
-    assert plain.count() == cached.count()
-
-    # <> ALL reuses the same (cached) value frame for its NOT IN leg
-    ne_all = all_filter(o, "o_custkey", "<>", c, "c_custkey",
-                        cache_inner=True)
-    assert "InMemory" in plan_of(ne_all), plan_of(ne_all)
-    spark.catalog.clearCache()
-
-
-def test_subquery_cache_inner_lifecycle(spark):
-    """ADVICE r10: cache_inner must not strand unreachable cached frames.
-    Branches whose result never reads the value frame unpersist it
-    before returning; branches whose plan does read it attach the
-    release handle as result._cached_inner."""
-    from binance_data_pipeline_spark.catalog import load_table
-    from binance_data_pipeline_spark.operators.subqueries import (
-        all_filter, any_filter, not_in_filter, not_in_filter_rows,
-    )
-
-    spark.catalog.clearCache()
-    jsc = spark.sparkContext._jsc.sc()
-
-    def _ids() -> set:
-        out, it = set(), jsc.getPersistentRDDs().keysIterator()
-        while it.hasNext():
-            out.add(it.next())
-        return out
-
-    # measure by NEW persistent-RDD ids, not absolute counts: mid-suite,
-    # earlier modules legitimately hold localCheckpoint/persisted RDDs
-    # that clearCache() does not drop — and the ContextCleaner may
-    # asynchronously reap any of those stale entries WHILE this test
-    # runs (their Python handles are gone), which made an absolute
-    # base-count comparison flaky. The contract under test is only that
-    # these operators release the caches THEY create.
-    base_ids = _ids()
-
-    def n_cached() -> int:
-        return len(_ids() - base_ids)
-
-    base = 0
-
-    o = load_table(spark, SF_SMALL, "orders")
-    c = load_table(spark, SF_SMALL, "customer")
-    empty = c.where(F.lit(False))
-
-    # early-return branches: cache released before returning
-    assert not_in_filter(o, "o_custkey", empty, "c_custkey",
-                         cache_inner=True).count() == o.count()
-    assert not_in_filter_rows(o, ["o_custkey"], empty, ["c_custkey"],
-                              cache_inner=True).count() == o.count()
-    # predicate-only lowerings (ordered ALL/ANY): cache released too
-    all_filter(o, "o_custkey", "<=", c, "c_custkey", cache_inner=True)
-    any_filter(o, "o_custkey", ">", c, "c_custkey", cache_inner=True)
-    assert n_cached() == base, "early-return/predicate branches leaked cache"
-
-    # join-leg branches: handle attached, unpersist() releases
-    kept = not_in_filter(o, "o_custkey", c, "c_custkey", cache_inner=True)
-    assert hasattr(kept, "_cached_inner")
-    assert n_cached() == base + 1
-    kept._cached_inner.unpersist(blocking=True)
-    assert n_cached() == base
-
-    eq_any = any_filter(o, "o_custkey", "=", c, "c_custkey",
-                        cache_inner=True)
-    assert hasattr(eq_any, "_cached_inner")
-    eq_any._cached_inner.unpersist(blocking=True)
-    assert n_cached() == base
-
-    # ADVICE r11: <>-ALL's NOT IN delegation — early-return branches
-    # (empty inner / NULL in S) must release the cache AND must not
-    # mutate the caller's probe frame with a _cached_inner handle
-    out_empty = all_filter(o, "o_custkey", "<>", empty, "c_custkey",
-                           cache_inner=True)
-    assert out_empty.count() == o.count()
-    with_null = c.select(
-        F.when(F.col("c_custkey") == 1, F.lit(None))
-        .otherwise(F.col("c_custkey")).alias("c_custkey"))
-    out_null = all_filter(o, "o_custkey", "<>", with_null, "c_custkey",
-                          cache_inner=True)
-    assert out_null.count() == 0
-    assert n_cached() == base, "<>-ALL early returns leaked cache"
-    assert not hasattr(o, "_cached_inner"), "caller's frame was mutated"
-    # the join-leg branch still hands off the release handle
-    ne_all = all_filter(o, "o_custkey", "<>", c, "c_custkey",
-                        cache_inner=True)
-    assert hasattr(ne_all, "_cached_inner")
-    ne_all._cached_inner.unpersist(blocking=True)
-    assert n_cached() == base
 
 
 def test_scalar_agg_count_empty_value_leg_is_broadcast(spark):

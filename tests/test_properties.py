@@ -224,29 +224,6 @@ def test_chunking_reconstruction_property(spark, texts, chunk_tokens, overlap):
 
 @settings(max_examples=5, deadline=None)
 @given(
-    st.lists(st.integers(min_value=0, max_value=900), min_size=1, max_size=300),
-    st.integers(min_value=1, max_value=512),
-)
-def test_pack_sequences_invariants(spark, sizes, budget):
-    """For arbitrary chunk sizes and budgets: every input lands in exactly
-    one pack, no non-oversize pack exceeds the budget, and every oversize
-    pack is a singleton whose chunk alone exceeds the budget."""
-    from binance_data_pipeline_spark.operators.sampling import pack_sequences
-
-    df = spark.createDataFrame(list(enumerate(sizes)), "cid long, n long")
-    packs = pack_sequences(df, "cid", "n", budget=budget, num_groups=4).collect()
-    members = [m for p in packs for m in p["members"]]
-    assert sorted(members) == list(range(len(sizes)))
-    for p in packs:
-        if p["oversize"]:
-            assert len(p["members"]) == 1 and p["total_tokens"] > budget
-        else:
-            assert p["total_tokens"] <= budget
-        assert p["total_tokens"] == sum(sizes[m] for m in p["members"])
-
-
-@settings(max_examples=5, deadline=None)
-@given(
     st.lists(
         st.lists(st.text(alphabet="abc @.x-", min_size=0, max_size=12), min_size=0, max_size=20)
         .map(" ".join),
@@ -319,25 +296,3 @@ def test_mg_summary_error_invariant_any_split(items, cut):
     for item, est in merged["c"].items():
         assert est <= truth[item]
         assert truth[item] - est <= n / k + 1e-9
-
-
-@settings(max_examples=50, deadline=None)
-@given(
-    payload=st.binary(max_size=300),
-    opcode=st.sampled_from([1, 2, 8, 9, 10]),
-    mask=st.booleans(),
-    fin=st.booleans(),
-)
-def test_ws_frame_roundtrip_property(payload, opcode, mask, fin):
-    """Any payload/opcode/mask/fin survives the RFC 6455 frame codec
-    byte-exactly (no Spark: pure codec property)."""
-    import io
-
-    from binance_data_pipeline_spark.sources.ws_bridge import (
-        encode_frame,
-        read_frame,
-    )
-
-    raw = encode_frame(opcode, payload, mask=mask, fin=fin)
-    op, f, got = read_frame(io.BytesIO(raw))
-    assert (op, f, got) == (opcode, fin, payload)

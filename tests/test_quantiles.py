@@ -149,63 +149,3 @@ def test_quantile_matches_percentile_approx_ballpark(spark):
 
 
 # ----------------------------------------------------- streaming / merge state
-
-def test_merge_batch_exactly_once_and_replay_skip(spark, tmp_path):
-    """Sketch-merge state double-counts replays by nature — the committed
-    batch id (atomic with the swap) must turn a replay into a no-op."""
-    from binance_data_pipeline_spark.operators.quantiles import (
-        quantile_rollup_merge_batch,
-        read_quantile_state,
-    )
-
-    state = str(tmp_path / "qstate")
-    rng = np.random.default_rng(2)
-    b0 = spark.createDataFrame(
-        [("a", float(v)) for v in rng.normal(size=2000)], "g string, value double"
-    )
-    b1 = spark.createDataFrame(
-        [("a", float(v)) for v in rng.normal(size=3000)], "g string, value double"
-    )
-    quantile_rollup_merge_batch(b0, state, ["g"], "value", k=128, batch_id=0)
-    quantile_rollup_merge_batch(b1, state, ["g"], "value", k=128, batch_id=1)
-    # replay batch 1 (crash-after-commit scenario): must not double-count
-    quantile_rollup_merge_batch(b1, state, ["g"], "value", k=128, batch_id=1)
-    st = read_quantile_state(spark, state)
-    est = quantile_estimate(st, ["g"], [0.5]).collect()[0]
-    assert est["n_rows"] == 5000
-    assert abs(est["p50"]) < 0.15  # median of N(0,1) on 5k samples
-
-
-def test_streaming_quantile_rollup_end_to_end(spark, tmp_path):
-    """File-source stream → foreachBatch sketch merge → estimates match a
-    batch build over the same rows (stream-vs-batch equality, ST6 style)."""
-    from binance_data_pipeline_spark.operators.quantiles import (
-        read_quantile_state,
-        streaming_quantile_rollup,
-    )
-
-    src = str(tmp_path / "src")
-    state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
-    rng = np.random.default_rng(6)
-    rows = [("s1" if i % 2 else "s2", float(v)) for i, v in enumerate(rng.gamma(3.0, 2.0, 8000))]
-    df = spark.createDataFrame(rows, "g string, value double")
-    df.write.mode("overwrite").parquet(src)
-
-    stream = spark.readStream.schema("g string, value double").parquet(src)
-    q = streaming_quantile_rollup(stream, state, ckpt, ["g"], "value", k=256)
-    sq = q.trigger(availableNow=True).start()
-    sq.awaitTermination(120)
-
-    est = {
-        r["g"]: r
-        for r in quantile_estimate(
-            read_quantile_state(spark, state), ["g"], [0.5, 0.9]
-        ).collect()
-    }
-    pdf = df.toPandas()
-    assert sum(r["n_rows"] for r in est.values()) == 8000
-    for g, grp in pdf.groupby("g"):
-        vals = grp["value"].to_numpy()
-        assert _rank_error(vals, est[g]["p50"], 0.5) <= 0.05
-        assert _rank_error(vals, est[g]["p90"], 0.9) <= 0.05

@@ -1,175 +1,13 @@
-"""Scale-path operator tests: approximate sketches (error-bounded vs
-exact), compaction, bucketed exchange-free joins, salted aggregation."""
+"""Scale-path tests: checkpoint-barrier release, AQE's runtime skew-join
+split, and the explicit salted skew join."""
 
 from __future__ import annotations
 
-import glob
-import os
 import sys
 
 sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
-
-from binance_data_pipeline_spark.catalog import load_table
-from binance_data_pipeline_spark.operators.scale import (
-    approx_stats,
-    compact_partitions,
-    salted_agg,
-    write_bucketed,
-)
-
-
-def test_approx_stats_error_bounded(spark):
-    e = load_table(spark, "/root/testdata/sf0.01", "events")
-    got = approx_stats(e, ["event_type"], "user_id", rsd=0.05).collect()
-    exact = {
-        r["event_type"]: r["n"]
-        for r in e.groupBy("event_type").agg(F.countDistinct("user_id").alias("n")).collect()
-    }
-    for r in got:
-        err = abs(r["approx_distinct"] - exact[r["event_type"]]) / exact[r["event_type"]]
-        assert err < 0.15, f"{r['event_type']}: {err}"
-        assert len(r["approx_quantiles"]) == 3
-
-
-def test_compact_partitions(spark, tmp_path):
-    path = str(tmp_path / "many_files")
-    df = spark.range(2000).select(
-        "id", (F.col("id") % 3).cast("string").alias("part")
-    )
-    # deliberately fragment: 20 files per partition
-    df.repartition(60).write.partitionBy("part").parquet(path)
-    before = len(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
-    assert before > 10
-    after = compact_partitions(spark, path, ["part"], target_files_per_partition=1)
-    assert after <= 3  # one file per partition value
-    assert spark.read.parquet(path).count() == 2000
-
-
-def test_bucketed_join_no_shuffle_exchange(spark, tmp_path):
-    """Two tables bucketed on the join key join WITHOUT a shuffle exchange
-    (broadcast disabled so the sort-merge path — the 100 TB case where
-    neither side broadcasts — is what's planned)."""
-    import shutil
-
-    spark.sql("DROP TABLE IF EXISTS orders_b")
-    spark.sql("DROP TABLE IF EXISTS lineitem_b")
-    # a previous session's metastore is gone but its warehouse dirs remain;
-    # saveAsTable refuses to reuse an existing location
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    for t in ("orders_b", "lineitem_b"):
-        shutil.rmtree(os.path.join(wh, t), ignore_errors=True)
-    o = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-    li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-    write_bucketed(o, "orders_b", "o_orderkey", 4)
-    write_bucketed(li, "lineitem_b", "l_orderkey", 4)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table("orders_b").join(
-            spark.table("lineitem_b"),
-            F.col("o_orderkey") == F.col("l_orderkey"),
-        )
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" not in plan, (
-            f"bucketed join must not shuffle:\n{plan}"
-        )
-        assert "SortMergeJoin" in plan
-        assert joined.count() == li.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
-
-
-def test_salted_agg_matches_plain(spark):
-    e = load_table(spark, "/root/testdata/sf0.01", "events")
-    plain = {
-        (r["event_type"],): (round(r["s"], 4), r["c"], round(r["mn"], 4), round(r["mx"], 4))
-        for r in e.groupBy("event_type")
-        .agg(
-            F.sum("value").alias("s"),
-            F.count(F.lit(1)).alias("c"),
-            F.min("value").alias("mn"),
-            F.max("value").alias("mx"),
-        )
-        .collect()
-    }
-    salted = {
-        (r["event_type"],): (round(r["s"], 4), r["c"], round(r["mn"], 4), round(r["mx"], 4))
-        for r in salted_agg(
-            e,
-            ["event_type"],
-            {
-                "s": (F.sum("value"), F.sum),
-                "c": (F.count(F.lit(1)), F.sum),
-                "mn": (F.min("value"), F.min),
-                "mx": (F.max("value"), F.max),
-            },
-        ).collect()
-    }
-    assert plain == salted
-
-
-def test_z_value_interleaves_bits(spark):
-    """Known Morton pattern: (x=0b11, y=0b01) with 2 bits → z = 0b0111
-    (x bits at even positions, y bits at odd)."""
-    from binance_data_pipeline_spark.operators.scale import z_value
-
-    df = spark.createDataFrame([(0b11, 0b01)], "x LONG, y LONG")
-    got = df.select(z_value(["x", "y"], bits=2).alias("z")).first()["z"]
-    assert got == 0b0111, bin(got)
-
-
-def test_zorder_write_gives_both_columns_locality(spark, tmp_path):
-    """The point of Z-ORDER: after clustering on (x, y), EVERY file covers
-    a small min-max range of BOTH columns (→ parquet stats prune files for
-    filters on either). A plain sort by x would leave y's per-file range at
-    ~the global range."""
-    import pyarrow.parquet as pq
-
-    from binance_data_pipeline_spark.operators.scale import zorder_write
-
-    n = 20_000
-    df = spark.range(n).select(
-        (F.hash(F.col("id")) % 10_000).alias("x"),
-        (F.hash(F.col("id") + 1_000_000) % 10_000).alias("y"),
-    )
-    path = str(tmp_path / "zordered")
-    zorder_write(df, path, ["x", "y"], bits=8, num_files=16)
-
-    import glob
-    files = glob.glob(f"{path}/*.parquet")
-    assert len(files) >= 8
-
-    def avg_range(col):
-        spans = []
-        for f in files:
-            md = pq.read_metadata(f)
-            mn = min(md.row_group(i).column(0 if col == "x" else 1).statistics.min
-                     for i in range(md.num_row_groups))
-            mx = max(md.row_group(i).column(0 if col == "x" else 1).statistics.max
-                     for i in range(md.num_row_groups))
-            spans.append(mx - mn)
-        return sum(spans) / len(spans)
-
-    global_span = 20_000  # hash % 10_000 spans ±10_000
-    # 16 files on a 2-D curve ≈ 4×4 tiles → per-file span ≈ 1/4 global;
-    # allow generous slack for tile boundary crossings
-    assert avg_range("x") < 0.55 * global_span
-    assert avg_range("y") < 0.55 * global_span
-    # round-trip: clustering must not change the data
-    assert spark.read.parquet(path).count() == n
-
-
-def test_salted_agg_rejects_mergeless_exprs(spark):
-    """The old list API silently summed MIN/MAX partials — wrong results
-    with no error. The dict API makes that misuse fail loudly."""
-    import pytest
-
-    e = load_table(spark, "/root/testdata/sf0.001", "events")
-    with pytest.raises(TypeError, match="merge"):
-        salted_agg(e, ["event_type"], [F.min("value").alias("mn")])
-    with pytest.raises(TypeError, match="merge_fn"):
-        salted_agg(e, ["event_type"], {"mn": F.min("value")})
 
 
 # ----------------------------------------------------------- lifecycle
@@ -203,106 +41,6 @@ def test_release_barriers_frees_checkpoint_blocks(spark):
         assert inner.count() == 500
         assert persistent_rdd_count(spark) >= 1
     assert persistent_rdd_count(spark) == 0
-
-
-def test_compact_recovers_from_crash_between_renames(spark, tmp_path):
-    """A hard crash between 'set old aside' and 'promote tmp' leaves
-    table_path absent with data parked at __compact_old; the next
-    invocation must restore it and complete the compaction."""
-    import shutil
-
-    path = str(tmp_path / "t")
-    spark.range(100).select(
-        F.col("id"), (F.col("id") % 3).alias("p")
-    ).repartition(4).write.partitionBy("p").parquet(path)
-
-    # simulate the crashed state
-    shutil.move(path, path + "__compact_old")
-    assert not os.path.exists(path)
-
-    n_files = compact_partitions(spark, path, ["p"], target_files_per_partition=1)
-    assert n_files == 3  # one file per partition
-    assert spark.read.parquet(path).count() == 100
-    assert not os.path.exists(path + "__compact_old")
-
-
-def test_zorder_degenerate_inputs_fall_back(spark, tmp_path):
-    """Empty input and all-NULL z-columns must not TypeError on
-    float(None): both fall back to a plain complete overwrite write."""
-    import warnings as W
-
-    from binance_data_pipeline_spark.operators.scale import zorder_write
-
-    empty = spark.range(0).select(F.col("id").alias("x"), F.col("id").alias("y"))
-    p1 = str(tmp_path / "empty")
-    with W.catch_warnings(record=True) as caught:
-        W.simplefilter("always")
-        zorder_write(empty, p1, ["x", "y"])
-    assert any("degenerate" in str(w.message) for w in caught)
-    assert spark.read.parquet(p1).count() == 0
-
-    allnull = spark.range(50).select(
-        F.col("id").alias("x"), F.lit(None).cast("long").alias("y")
-    )
-    p2 = str(tmp_path / "allnull")
-    with W.catch_warnings(record=True) as caught:
-        W.simplefilter("always")
-        zorder_write(allnull, p2, ["x", "y"])
-    assert any("degenerate" in str(w.message) for w in caught)
-    assert spark.read.parquet(p2).count() == 50
-
-    # rank mode on a CONSTANT column is equally degenerate
-    const = spark.range(50).select(F.col("id").alias("x"), F.lit(7).alias("y"))
-    p3 = str(tmp_path / "const")
-    with W.catch_warnings(record=True) as caught:
-        W.simplefilter("always")
-        zorder_write(const, p3, ["x", "y"], quantize="rank")
-    assert any("degenerate" in str(w.message) for w in caught)
-    assert spark.read.parquet(p3).count() == 50
-
-
-def test_zorder_rank_quantization_beats_minmax_on_skew(spark, tmp_path):
-    """Skewed column: 95% of y mass sits in [0, 10] while outliers reach
-    1e6. Min-max quantization throws the whole bulk into one cell, so
-    parquet footer stats can't prune a selective filter on the bulk
-    region; rank quantization (equal-mass cells) spreads it. Measured as:
-    #files whose [min,max] admits y BETWEEN 3 AND 4 — rank must prune
-    strictly more files."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from binance_data_pipeline_spark.operators.scale import zorder_write
-
-    n = 20_000
-    df = spark.range(n).select(
-        (F.hash("id") % 10_000).alias("x"),
-        F.when(F.col("id") % 20 != 0, F.pmod(F.hash(F.col("id") + 7), F.lit(11)))
-        .otherwise(F.pmod(F.hash(F.col("id") + 13), F.lit(1_000_000)))
-        .cast("long")
-        .alias("y"),
-    )
-
-    def overlapping_files(path, lo, hi):
-        hits = 0
-        for f in glob.glob(f"{path}/*.parquet"):
-            md = pq.read_metadata(f)
-            ycol = md.schema.names.index("y")
-            mn = min(md.row_group(g).column(ycol).statistics.min for g in range(md.num_row_groups))
-            mx = max(md.row_group(g).column(ycol).statistics.max for g in range(md.num_row_groups))
-            if mx >= lo and mn <= hi:
-                hits += 1
-        return hits
-
-    p_mm = str(tmp_path / "mm")
-    p_rk = str(tmp_path / "rk")
-    zorder_write(df, p_mm, ["x", "y"], bits=6, num_files=16, quantize="minmax")
-    zorder_write(df, p_rk, ["x", "y"], bits=6, num_files=16, quantize="rank")
-
-    assert spark.read.parquet(p_rk).count() == n
-    mm_hits = overlapping_files(p_mm, 3, 4)
-    rk_hits = overlapping_files(p_rk, 3, 4)
-    assert rk_hits < mm_hits, (rk_hits, mm_hits)
 
 
 def test_aqe_skew_join_splits_hot_partition(spark):
@@ -344,42 +82,6 @@ def test_aqe_skew_join_splits_hot_partition(spark):
                 conf.unset(k)
             else:
                 conf.set(k, v)
-
-
-def test_skew_report_and_salt_recommendation(spark):
-    """skew_report surfaces the hot key and corpus stats; the salt
-    recommendation sizes buckets from the max group."""
-    from binance_data_pipeline_spark.operators.scale import (
-        recommend_salt_buckets,
-        skew_report,
-    )
-
-    rows = [(i, "hot") for i in range(900)] + [(i, f"k{i % 10}") for i in range(100)]
-    df = spark.createDataFrame(rows, "id long, k string")
-    rep = skew_report(df, ["k"], top_k=3).collect()
-    by_key = {r["key"]: r for r in rep}
-    assert len(rep) == 4  # 3 heavy hitters + summary
-    assert by_key["hot"]["key_count"] == 900
-    s = by_key["__summary__"]
-    assert s["key_count"] == 1000 and s["n_keys"] == 11
-    assert s["max_group"] == 900 and abs(s["max_key_share"] - 0.9) < 1e-6
-    # top-k ordering: hot first
-    assert rep[0]["key"] == "hot"
-
-    assert recommend_salt_buckets(df, ["k"], target_rows_per_group=100) == 9
-    assert recommend_salt_buckets(df, ["k"], target_rows_per_group=10_000) == 1
-    empty = spark.createDataFrame([], "id long, k string")
-    assert recommend_salt_buckets(empty, ["k"]) == 1
-
-
-def test_skew_report_single_aggregation(spark):
-    """The per-key count must aggregate with map-side partial combine —
-    the report must not itself melt on the skew it measures."""
-    from binance_data_pipeline_spark.operators.scale import skew_report
-
-    df = spark.createDataFrame([(1, "a")], "id long, k string")
-    plan = skew_report(df, ["k"])._jdf.queryExecution().executedPlan().toString()
-    assert "partial_count" in plan or plan.count("HashAggregate") >= 2
 
 
 def test_skew_join_inner_matches_plain(spark):

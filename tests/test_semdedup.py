@@ -142,211 +142,3 @@ def test_recall_on_seeded_dups_in_fixture(spark):
     # each recovered dup group kept exactly one member
     for a, b in recovered:
         assert rows[a]["keep"] != rows[b]["keep"]
-
-
-# ----------------------------------------------------------------------
-# incremental variant
-# ----------------------------------------------------------------------
-
-from binance_data_pipeline_spark.operators.semdedup import semantic_dedup_batch
-
-
-def _batch(spark, rows, id_type="long"):
-    return spark.createDataFrame(
-        rows, f"vec_id {id_type}, embedding array<double>"
-    )
-
-
-def test_incremental_sticky_across_batches(spark, tmp_path):
-    state = str(tmp_path / "state")
-    # batch 1: 1 and 2 are dups (keeper 1); 4 is alone
-    b1 = _batch(
-        spark,
-        [
-            (1, [1.0, 0.0, 0.0, 0.0]),
-            (2, [0.9995, 0.0316, 0.0, 0.0]),
-            (4, [0.0, 0.0, 1.0, 0.0]),
-        ],
-    )
-    kept1, map1 = semantic_dedup_batch(b1, state, threshold=0.97, k=2)
-    m1 = {r["doc_id"]: (r["kept_doc_id"], r["reason"]) for r in map1.collect()}
-    assert m1 == {1: (1, "kept"), 2: (1, "semantic_dup"), 4: (4, "kept")}
-    assert sorted(r["vec_id"] for r in kept1.collect()) == [1, 4]
-
-    # batch 2: 10 dups existing keeper 1 (sticky); 11 is new
-    b2 = _batch(
-        spark,
-        [
-            (10, [0.9999, 0.0141, 0.0, 0.0]),
-            (11, [0.0, 1.0, 0.0, 0.0]),
-        ],
-    )
-    kept2, map2 = semantic_dedup_batch(b2, state, threshold=0.97)
-    m2 = {r["doc_id"]: (r["kept_doc_id"], r["reason"]) for r in map2.collect()}
-    assert m2[10] == (1, "semantic_dup")  # absorbed into EXISTING keeper
-    assert m2[11] == (11, "kept")
-    assert sorted(r["vec_id"] for r in kept2.collect()) == [11]
-
-    # batch 3: dup of batch-2's kept doc
-    b3 = _batch(spark, [(20, [0.0141, 0.9999, 0.0, 0.0])])
-    _, map3 = semantic_dedup_batch(b3, state, threshold=0.97)
-    assert map3.first()["kept_doc_id"] == 11
-
-
-def test_incremental_within_batch_cluster_absorbs(spark, tmp_path):
-    state = str(tmp_path / "state")
-    semantic_dedup_batch(
-        _batch(spark, [(5, [1.0, 0.0, 0.0, 0.0])]), state, threshold=0.97, k=1
-    )
-    # 30 hits the corpus doc; 31 is only a dup of 30 — the CLUSTER
-    # absorbs, so 31 maps to 5 transitively
-    b = _batch(
-        spark,
-        [
-            (30, [0.9999, 0.0141, 0.0, 0.0]),
-            (31, [0.9999, 0.0140, 0.0001, 0.0]),
-        ],
-    )
-    kept, mapping = semantic_dedup_batch(b, state, threshold=0.97)
-    m = {r["doc_id"]: r["kept_doc_id"] for r in mapping.collect()}
-    assert m == {30: 5, 31: 5}
-    assert kept.count() == 0
-
-
-def test_incremental_state_layout_and_centroid_reuse(spark, tmp_path):
-    import glob
-    import os
-
-    state = str(tmp_path / "state")
-    semantic_dedup_batch(
-        _batch(spark, [(1, [1.0, 0.0, 0.0, 0.0]), (2, [0.0, 0.0, 1.0, 0.0])]),
-        state,
-        threshold=0.97,
-        k=2,
-    )
-    cent_files = sorted(glob.glob(f"{state}/centroids.parquet/*.parquet"))
-    stamps = [os.path.getmtime(f) for f in cent_files]
-    assert glob.glob(f"{state}/members.parquet/cell_id=*")  # hive layout
-    semantic_dedup_batch(
-        _batch(spark, [(3, [0.0, 1.0, 0.0, 0.0])]), state, threshold=0.97
-    )
-    # centroids were REUSED, not retrained/rewritten
-    assert [os.path.getmtime(f) for f in sorted(glob.glob(f"{state}/centroids.parquet/*.parquet"))] == stamps
-    members = spark.read.parquet(f"{state}/members.parquet")
-    assert sorted(r["id"] for r in members.collect()) == [1, 2, 3]
-
-
-def test_incremental_string_ids_roundtrip(spark, tmp_path):
-    state = str(tmp_path / "state")
-    b1 = _batch(spark, [("doc-a", [1.0, 0.0, 0.0, 0.0])], id_type="string")
-    semantic_dedup_batch(b1, state, threshold=0.97, k=1)
-    b2 = _batch(spark, [("doc-b", [0.9999, 0.0141, 0.0, 0.0])], id_type="string")
-    _, mapping = semantic_dedup_batch(b2, state, threshold=0.97)
-    row = mapping.first()
-    assert row["kept_doc_id"] == "doc-a" and row["reason"] == "semantic_dup"
-
-
-def test_incremental_hot_cell_cap_skips_corpus_compare(spark, tmp_path):
-    state = str(tmp_path / "state")
-    # corpus cell with 4 members
-    b1 = _batch(
-        spark,
-        [(i, [1.0, 0.001 * i, 0.0, 0.0]) for i in range(1, 5)],
-    )
-    semantic_dedup_batch(b1, state, threshold=2.0, k=1)  # keep all 4
-    probe = _batch(spark, [(50, [1.0, 0.0005, 0.0, 0.0])])
-    _, uncapped = semantic_dedup_batch(probe, state, threshold=0.99)
-    assert uncapped.first()["reason"] == "semantic_dup"
-
-    state2 = str(tmp_path / "state2")
-    semantic_dedup_batch(b1, state2, threshold=2.0, k=1)
-    _, capped = semantic_dedup_batch(
-        _batch(spark, [(50, [1.0, 0.0005, 0.0, 0.0])]),
-        state2,
-        threshold=0.99,
-        max_cell_size=3,  # corpus cell width 4 > cap: skipped
-    )
-    assert capped.first()["reason"] == "kept"
-
-
-def test_streaming_semantic_dedup_end_to_end(spark, tmp_path):
-    """File-source stream → foreachBatch semantic dedup: kept docs and
-    the audit mapping accumulate under out_path; a doc semantically
-    matching a batch-API-seeded member maps to that earlier keeper."""
-    import os
-
-    from binance_data_pipeline_spark.operators.semdedup import (
-        streaming_semantic_dedup,
-    )
-
-    src = str(tmp_path / "src")
-    state = str(tmp_path / "state")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(src)
-
-    # seed the state via the batch API (same state contract)
-    semantic_dedup_batch(
-        _batch(spark, [(1, [1.0, 0.0, 0.0, 0.0]), (2, [0.0, 0.0, 1.0, 0.0])]),
-        state,
-        threshold=0.97,
-        k=2,
-    )
-    _batch(
-        spark,
-        [(30, [0.9999, 0.0141, 0.0, 0.0]), (31, [0.0, 1.0, 0.0, 0.0])],
-    ).coalesce(1).write.mode("append").parquet(src)
-
-    stream = spark.readStream.schema("vec_id long, embedding array<double>").parquet(src)
-    q = streaming_semantic_dedup(
-        stream, state, out, ckpt, threshold=0.97
-    ).trigger(availableNow=True).start()
-    q.awaitTermination(120)
-
-    mapping = spark.read.parquet(f"{out}/mapping.parquet")
-    m = {r["doc_id"]: (r["kept_doc_id"], r["reason"]) for r in mapping.collect()}
-    assert m[30] == (1, "semantic_dup")  # matched the seeded member
-    assert m[31] == (31, "kept")
-    corpus = spark.read.parquet(f"{out}/corpus.parquet")
-    assert {r["vec_id"] for r in corpus.collect()} == {31}
-    assert "batch_id" in mapping.columns
-
-
-def test_streaming_semantic_dedup_replay_skips_committed(spark, tmp_path):
-    """Commit markers: re-delivering the same micro-batch (fresh
-    checkpoint, same source → same batch id) skips cleanly — no
-    duplicate corpus, mapping, or member-state rows."""
-    import os
-
-    from binance_data_pipeline_spark.operators.semdedup import (
-        streaming_semantic_dedup,
-    )
-
-    src = str(tmp_path / "src")
-    state = str(tmp_path / "state")
-    out = str(tmp_path / "out")
-    os.makedirs(src)
-    _batch(
-        spark, [(1, [1.0, 0.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0, 0.0])]
-    ).coalesce(1).write.mode("append").parquet(src)
-
-    def run(ckpt):
-        stream = spark.readStream.schema(
-            "vec_id long, embedding array<double>"
-        ).parquet(src)
-        q = streaming_semantic_dedup(
-            stream, state, out, str(tmp_path / ckpt), threshold=0.97
-        ).trigger(availableNow=True).start()
-        q.awaitTermination(120)
-
-    run("ckpt1")
-    kept = sorted(r["vec_id"] for r in spark.read.parquet(f"{out}/corpus.parquet").collect())
-    n_map = spark.read.parquet(f"{out}/mapping.parquet").count()
-    n_members = spark.read.parquet(f"{state}/members.parquet").count()
-
-    run("ckpt2")  # replay of committed batch 0
-    assert sorted(
-        r["vec_id"] for r in spark.read.parquet(f"{out}/corpus.parquet").collect()
-    ) == kept == [1, 2]
-    assert spark.read.parquet(f"{out}/mapping.parquet").count() == n_map
-    assert spark.read.parquet(f"{state}/members.parquet").count() == n_members

@@ -690,52 +690,6 @@ my_pipeline:
         threads_from_profiles(text, profile="nope")
 
 
-def test_streaming_model_always_on_query(spark, tmp_path):
-    """start_streaming_model: the always-on leg — a running query that
-    folds source commits as they land, sharing the checkpoint with
-    run_models drains (interleaved exactly-once)."""
-    import datetime as dt
-
-    from binance_data_pipeline_spark.operators.snapshots import (
-        commit_snapshot,
-        read_snapshot,
-    )
-    from binance_data_pipeline_spark.sql_models import start_streaming_model
-
-    src_table = str(tmp_path / "src")
-    commit_snapshot(
-        spark, src_table,
-        spark.createDataFrame([("x", 1, dt.datetime(2024, 1, 1))],
-                              "k string, v long, ts timestamp"),
-        mode="overwrite",
-    )
-    models = {
-        "m": "{{ config(materialized='streaming') }}\n"
-             "select k, v + 100 as v from {{ source('b', 'e') }}",
-    }
-    target = str(tmp_path / "wh")
-    q = start_streaming_model(
-        spark, models, "m", {"b.e": src_table}, target, trigger="1 seconds"
-    )
-    try:
-        q.processAllAvailable()
-        assert {r["v"] for r in read_snapshot(spark, f"{target}/m").collect()} == {101}
-        commit_snapshot(
-            spark, src_table,
-            spark.createDataFrame([("y", 2, dt.datetime(2024, 1, 2))],
-                                  "k string, v long, ts timestamp"),
-            mode="append",
-        )
-        q.processAllAvailable()
-        assert {r["v"] for r in read_snapshot(spark, f"{target}/m").collect()} == {101, 102}
-    finally:
-        q.stop()
-    # a later cadence drain through run_models resumes the SAME
-    # checkpoint: nothing re-folds, new commits still flow
-    r = run_models(spark, models, {"b.e": src_table}, target)
-    assert r["m"]["version"] is None and r["m"]["rows"] == 2
-
-
 def test_split_config_property_roundtrip():
     """Property: any python-literal kwargs (strings full of quotes,
     brackets, backslashes; nested dicts/lists; ints/bools) embedded as

@@ -1,7 +1,7 @@
 """Vocabulary statistics: frequency counts match a hand count and a
 DuckDB cross-check, exact vs approx doc frequency agree on small data,
-top-k vocab is deterministic, and the aggregation plans with map-side
-partial combine (the token-skew defense)."""
+and the aggregation plans with map-side partial combine (the token-skew
+defense)."""
 
 from __future__ import annotations
 
@@ -11,13 +11,8 @@ sys.path.insert(0, "/root/repo")
 
 import duckdb
 import pytest
-from pyspark.sql import functions as F
 
-from binance_data_pipeline_spark.operators.vocab import (
-    build_vocab,
-    idf_table,
-    token_frequencies,
-)
+from binance_data_pipeline_spark.operators.vocab import token_frequencies
 
 
 def _docs(spark):
@@ -85,24 +80,6 @@ def test_approx_doc_freq_close_to_exact(spark):
     }
     assert set(exact) == set(approx)
     assert all(abs(exact[t] - approx[t]) <= 1 for t in exact)
-
-
-def test_build_vocab_deterministic_topk(spark):
-    v = build_vocab(_docs(spark), vocab_size=3, tokenizer="whitespace", min_count=1)
-    rows = [(r["token"], r["token_id"]) for r in v.collect()]
-    assert rows == [("the", 0), ("a", 1), ("cat", 2)]  # count desc, token asc
-    again = [(r["token"], r["token_id"]) for r in v.collect()]
-    assert rows == again
-
-
-def test_idf_table_smoothed(spark):
-    import math
-
-    got = {r["token"]: r["idf"] for r in idf_table(_docs(spark)).collect()}
-    # "the" appears in 2 of 3 docs: idf = ln(4/3) + 1
-    assert got["the"] == pytest.approx(math.log(4 / 3) + 1, abs=1e-6)
-    # hapax in 1 doc: ln(4/2) + 1
-    assert got["dog"] == pytest.approx(math.log(2) + 1, abs=1e-6)
 
 
 def test_frequency_agg_has_partial_combine(spark):
