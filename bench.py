@@ -61,209 +61,13 @@ HEADLINE = [
 ]
 
 
-#: Reference wall time of the calibration query on a quiet host
-#: (min of repeated samples, this container, local[32]). The emitted
-#: ``host_drag`` = measured/ref; ``queries_normalized`` divides every
-#: per-query time by the COMBINED drag (max of host_drag and io_drag,
-#: floored at 1.0) so cross-round numbers are comparable without paired
-#: reruns on the same host state.
-CALIBRATION_REF_SEC = 0.41
-
-#: Reference for the IO calibration probe (sf0.1 lineitem scan+decode,
-#: min of samples): the r9 quiet-host point recorded in BASELINE.md.
-#: ``io_drag`` = measured/ref catches storage/memory-bandwidth tenancy
-#: the pure-CPU probe cannot see (VERDICT r10 task 1).
-IO_CALIBRATION_REF_SEC = 0.19
-
-#: Reference for the shuffle calibration probe (see
-#: ``shuffle_calibration_query``): quiet-host min recorded round 11.
-#: DIAGNOSTIC axis #3 — the r9/r10 quiet-floor inflation hit
-#: shuffle-heavy joins while BOTH the CPU and scan probes read fast, so
-#: the missing signal plausibly lives in shuffle write/read (local disk
-#: + serialization). Raw samples only until a reference is pinned.
-SHUFFLE_CALIBRATION_REF_SEC = None  # pinned after first quiet recording
-
-#: The IO probe reads the sf dir's OWN lineitem file, but its reference
-#: is pinned to the sf0.1 file — at any other scale factor the ratio
-#: measures dataset size, not host tenancy (ADVICE r11). io_drag is
-#: computed (and folded into combined_drag) only at this sf; elsewhere
-#: the raw sample is still emitted.
-IO_CALIBRATION_REF_SF = 0.1
-
-# ---------------------------------------------------------------------------
-# Episode classification (VERDICT r11 task 2): label each bench pass so
-# round records separate comparable (quiet) floors from host-weather
-# samples without the manual per-query adjudication r9-r11 needed.
-# ---------------------------------------------------------------------------
-
-#: Untouched TPC-H sentinel legs with their recorded QUIET per-query
-#: times (BASELINE.md: the r11 instrumented quiet sample — q7 0.730,
-#: q9 0.857, revenue_by_nation 0.749 at steal 0.005% — on code unchanged
-#: since; these are the legs every historical inflation band moved).
-#: Update when a new quiet floor is recorded AND the leg's plan changed.
-SENTINEL_QUIET_FLOORS = {
-    "q7_volume_shipping": 0.730,
-    "q9_product_profit": 0.857,
-    "revenue_by_nation": 0.749,
-}
-
-#: Median normalized-sentinel ratio above which a pass is an
-#: unattributed band. Calibrated on the recorded history: the r10
-#: driver sample (manually adjudicated "band") sits at 1.09 with quiet
-#: probes; the r9 driver sample (drag 1.28, normalizes to floor) at
-#: 1.05; the r11 mid-session quiet sample at ≤1.01.
-BAND_RATIO_THRESHOLD = 1.08
-
-#: Probe drag above which the probe itself testifies to tenancy.
-PROBE_QUIET_THRESHOLD = 1.08
-
-
-def classify_bench_sample(sample: dict) -> dict:
-    """Label one emitted bench sample:
-
-    - ``quiet``            — probes quiet, sentinels at floor: comparable.
-    - ``cpu-tenancy``      — CPU probe (or steal/PSI-cpu) inflated and the
-                             combined drag EXPLAINS the sentinel inflation.
-    - ``io-tenancy``       — same with the IO probe / iowait / PSI-io.
-    - ``unattributed-band``— sentinels inflated AFTER normalization: the
-                             r9-r11 ghost (page-cache/NUMA/frequency
-                             tenancy none of the probes see).
-    - ``no-sentinels``     — sample lacks the sentinel queries (alternate
-                             suites): probe evidence only, no band call.
-
-    Pure function of the sample dict, so it reruns over recorded
-    BENCH_r*.json history (pinned in tests/test_bench_classifier.py
-    against the manual r9/r10/r11 adjudications in BASELINE.md)."""
-    q = sample.get("queries") or {}
-    drag = sample.get("host_drag")
-    io_drag = sample.get("io_drag")
-    tele = sample.get("host_telemetry") or {}
-    steal = tele.get("steal_pct") or 0.0
-    iowait = tele.get("iowait_pct") or 0.0
-    combined = max(1.0, drag or 1.0, io_drag or 1.0)
-
-    # sentinel floors are sf0.1 quantities — at any other sf the band
-    # axis is undefined and only probe evidence remains
-    sf = sample.get("sf")
-    sf_matches = sf is not None and abs(sf - IO_CALIBRATION_REF_SF) < 1e-9
-    sentinels = {
-        k: round(q[k] / combined / f, 3)
-        for k, f in SENTINEL_QUIET_FLOORS.items()
-        if k in q
-    } if sf_matches else {}
-    cpu_evidence = (drag or 0.0) > PROBE_QUIET_THRESHOLD or steal > 0.5
-    io_evidence = (io_drag or 0.0) > PROBE_QUIET_THRESHOLD or iowait > 2.0
-
-    out = {
-        "sentinel_ratios_normalized": sentinels,
-        "combined_drag": combined,
-        "cpu_evidence": cpu_evidence,
-        "io_evidence": io_evidence,
-    }
-    if not sentinels:
-        out["verdict"] = "no-sentinels"
-        return out
-    vals = sorted(sentinels.values())
-    band = vals[len(vals) // 2] if len(vals) % 2 else (
-        (vals[len(vals) // 2 - 1] + vals[len(vals) // 2]) / 2
-    )
-    out["band_ratio"] = round(band, 3)
-    if band > BAND_RATIO_THRESHOLD:
-        out["verdict"] = "unattributed-band"
-    elif cpu_evidence and (not io_evidence or (drag or 0) >= (io_drag or 0)):
-        out["verdict"] = "cpu-tenancy"
-    elif io_evidence:
-        out["verdict"] = "io-tenancy"
-    else:
-        out["verdict"] = "quiet"
-    return out
-
-
-def calibration_query(spark):
-    """Fixed, data-independent workload with a pinned plan shape
-    (Range -> project -> 32-partition hash agg): no parquet, no sf
-    dependence, no caches — pure CPU + one small shuffle. Its wall time
-    moves ONLY with host conditions (CPU steal, kernel stalls, JVM
-    health), which is exactly the signal the normalization needs."""
-    from pyspark.sql import functions as F
-
-    df = spark.range(0, 40_000_000, 1, 32)
-    return (
-        df.select(
-            (F.col("id") % 4096).alias("g"),
-            F.xxhash64("id").alias("h1"),
-            F.xxhash64("id", F.lit(1)).alias("h2"),
-        )
-        .groupBy("g")
-        .agg(
-            # sums over modded hashes: ANSI mode faults on long overflow,
-            # so keep partials within signed-64 (the dedup.py discipline)
-            F.sum(F.col("h1") % 1000003).alias("s1"),
-            F.sum(F.col("h2") % 999983).alias("s2"),
-            F.count(F.lit(1)).alias("n"),
-        )
-    )
-
-
-def host_telemetry() -> dict:
-    """Kernel-side tenancy counters the calibration QUERIES cannot see
-    (r10/r11 ghost: TPC-H legs +25% with CPU, warm-scan IO, and shuffle
-    probes all reading fast): cumulative CPU ticks incl. STEAL from
-    /proc/stat, and PSI stall totals (us) from /proc/pressure. Emitted
-    as deltas over the measured window — steal_pct > ~1% or a nonzero
-    cpu-full PSI delta is hypervisor/cgroup tenancy, full stop."""
-    out = {}
-    try:
-        parts = open("/proc/stat").readline().split()
-        ticks = [int(x) for x in parts[1:11]]
-        out["cpu_total_ticks"] = sum(ticks)
-        out["cpu_steal_ticks"] = ticks[7] if len(ticks) > 7 else 0
-        out["cpu_iowait_ticks"] = ticks[4] if len(ticks) > 4 else 0
-    except Exception:
-        pass
-    for res in ("cpu", "io", "memory"):
-        try:
-            for line in open(f"/proc/pressure/{res}"):
-                kind, *kv = line.split()
-                tot = dict(p.split("=") for p in kv).get("total")
-                if tot is not None:
-                    out[f"psi_{res}_{kind}_us"] = int(tot)
-        except Exception:
-            pass
-    return out
-
-
-def telemetry_delta(t0: dict, t1: dict) -> dict:
-    d = {k: t1[k] - t0[k] for k in t0 if k in t1}
-    total = d.get("cpu_total_ticks", 0)
-    if total:
-        d["steal_pct"] = round(100.0 * d.get("cpu_steal_ticks", 0) / total, 3)
-        d["iowait_pct"] = round(100.0 * d.get("cpu_iowait_ticks", 0) / total, 3)
-    return d
-
-
-def shuffle_calibration_query(spark):
-    """Fixed workload dominated by shuffle write+read (local-disk spill
-    files + serialization): a 32->32 full repartition of 20M rows, then
-    a count. The CPU probe never touches shuffle files and the IO probe
-    only reads page-cache-warm parquet, so this is the axis that moves
-    with local-disk/tmpfs tenancy."""
-    from pyspark.sql import functions as F
-
-    return (
-        spark.range(0, 20_000_000, 1, 32)
-        .repartition(32, (F.col("id") % 997).cast("int"))
-        .agg(F.count(F.lit(1)))
-    )
-
-
 def scale_probe_query(spark):
-    """Shuffle-heavy probe at ~10× the shuffle-calibration volume
-    (VERDICT r12 task 2b): enough parallel work that its wall time
-    TRACKS the core count, unlike the sf0.1 catalog queries whose
-    sub-second walls sit on fixed scheduling floors and read flat
-    across 8 vs 32 cores. The driver's low/high-core bench pair can
-    read ``scale_probe_sec`` ratio directly as scaling evidence."""
+    """Shuffle-heavy probe (100M rows, 64 partitions; VERDICT r12 task
+    2b): enough parallel work that its wall time TRACKS the core count,
+    unlike the sf0.1 catalog queries whose sub-second walls sit on fixed
+    scheduling floors and read flat across 8 vs 32 cores. A low/high-core
+    pair of bench runs can read the ``scale_probe_sec`` ratio directly as
+    scaling evidence."""
     from pyspark.sql import functions as F
 
     df = spark.range(0, 100_000_000, 1, 64)
@@ -319,59 +123,18 @@ def tmp_state() -> str:
     return "warm" if any(glob.glob(os.path.join(t, p)) for p in pats) else "wiped"
 
 
-def emit_result(metric, timings, sf, cal_samples, io_samples,
-                shuffle_samples, telemetry=None, extra=None) -> None:
-    """One JSON line with every calibration axis. Normalization divides
-    by the COMBINED drag — max(host_drag, io_drag) floored at 1.0
-    (VERDICT r10 task 1) — so storage/memory tenancy invisible to the
-    CPU probe no longer reads as a code regression. The shuffle probe is
-    raw-diagnostic until its quiet reference is pinned."""
-    cal = min(cal_samples)
-    drag = round(cal / CALIBRATION_REF_SEC, 3)
-    io_sec = min(io_samples)
-    # io_drag is a tenancy ratio ONLY when the probe file is the one the
-    # reference was pinned on (sf0.1 lineitem); at any other sf the raw
-    # sample is emitted but never normalizes queries (ADVICE r11)
-    io_ref_applies = sf is not None and abs(sf - IO_CALIBRATION_REF_SF) < 1e-9
-    io_drag = round(io_sec / IO_CALIBRATION_REF_SEC, 3) if io_ref_applies else None
-    combined = round(max(1.0, drag, io_drag or 0.0), 3)
-    normalized = {n: round(t / combined, 3) for n, t in timings.items()}
+def emit_result(metric, timings, sf, extra=None) -> None:
+    """Print the one-line JSON result: the per-query walls, their total
+    and the suite's extra fields."""
     result = {
         "metric": metric,
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         "sf": sf,
-        # Calibration protocol (VERDICT r6 task 1 + r10 task 1):
-        # pinned synthetic probes whose time moves only with host
-        # state. drag > 1 -> host slower than the reference
-        # state; *_normalized rescale by the combined drag (never
-        # scaling UP a quiet-host run: floor 1.0).
-        "calibration_sec": cal,
-        "calibration_samples": cal_samples,
-        "calibration_ref_sec": CALIBRATION_REF_SEC,
-        "host_drag": drag,
-        "io_calibration_sec": io_sec,
-        "io_calibration_samples": io_samples,
-        "io_calibration_ref_sec": (
-            IO_CALIBRATION_REF_SEC if io_ref_applies else None
-        ),
-        "io_drag": io_drag,
-        "combined_drag": combined,
-        "shuffle_calibration_sec": min(shuffle_samples)
-        if shuffle_samples else None,
-        "shuffle_calibration_samples": shuffle_samples,
-        "shuffle_calibration_ref_sec": SHUFFLE_CALIBRATION_REF_SEC,
-        "host_telemetry": telemetry,
-        "value_normalized": round(sum(normalized.values()), 3),
-        "queries_normalized": normalized,
     }
     if extra:
         result.update(extra)
-    # per-pass adjudication (VERDICT r11 task 2): quiet / cpu-tenancy /
-    # io-tenancy / unattributed-band, from the calibration trio +
-    # steal/PSI + the normalized sentinel legs
-    result["episode"] = classify_bench_sample(result)
     line = json.dumps(result)
     # durable copy beside stdout (VERDICT r12 task 2a): a truncated
     # driver artifact capture can no longer null a round's comparison —
@@ -398,37 +161,16 @@ def timed(build, *args) -> float:
     return round(time.time() - t0, 3)
 
 
-def measure(spark, sf_dir, queries, names) -> dict:
-    """The bench protocol shared by every suite: calibration samples
-    (CPU after its own untimed warmup, IO twice, shuffle twice after its
-    own warmup), then two passes over ``names`` keeping the per-query
-    min, with a CPU sample after each pass. Pass 0 runs each query under
+def measure(spark, sf_dir, queries, names) -> dict[str, float]:
+    """The bench protocol shared by every suite: two passes over
+    ``names`` keeping the per-query min. Pass 0 runs each query under
     job group ``bench:<name>`` (read back by ``group_task_count``).
-    Returns ``emit_result``'s measurement arguments."""
-
-    def io_probe():
-        # scan+decode of the sf dir's lineitem file (page-cache warm
-        # after the first sample): moves with storage/memory-bandwidth
-        # tenancy, which the pure-CPU calibration query cannot see.
-        from pyspark.sql import functions as F
-
-        return spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).agg(
-            F.sum("l_extendedprice"), F.count(F.lit(1))
-        )
-
-    timed(calibration_query, spark)  # its own codegen warmup, untimed
-    cal_samples = [timed(calibration_query, spark)]
-    io_samples = [timed(io_probe), timed(io_probe)]
-    timed(shuffle_calibration_query, spark)  # its own warmup, untimed
-    shuffle_samples = [timed(shuffle_calibration_query, spark) for _ in range(2)]
-    tele0 = host_telemetry()
+    Returns query name -> seconds."""
     sc = spark.sparkContext
     timings: dict[str, float] = {}
     # Two passes, report per-query min: the container shows intermittent
     # multi-second kernel-time stalls (host jitter) that would otherwise
-    # randomly dominate a single measurement. The calibration query is
-    # sampled before, between, and after the passes; its MIN tracks the
-    # best host state the measured mins were taken under.
+    # randomly dominate a single measurement.
     for _pass in range(2):
         for name in names:
             if _pass == 0:
@@ -439,14 +181,7 @@ def measure(spark, sf_dir, queries, names) -> dict:
             timings[name] = min(dt, timings.get(name, dt))
             spark.catalog.clearCache()      # cached tables/DataFrames
             release_barriers(spark)         # eager localCheckpoint blocks
-        cal_samples.append(timed(calibration_query, spark))
-    return {
-        "timings": timings,
-        "cal_samples": cal_samples,
-        "io_samples": io_samples,
-        "shuffle_samples": shuffle_samples,
-        "telemetry": telemetry_delta(tele0, host_telemetry()),
-    }
+    return timings
 
 
 def main() -> None:
@@ -473,8 +208,8 @@ def main() -> None:
 
         names = sorted(_tpch.QUERIES)
         force(_tpch.QUERIES[names[0]](spark, sf_dir))  # warmup, untimed
-        emit_result("tpch_total_wall", sf=sf,
-                    **measure(spark, sf_dir, _tpch.QUERIES, names))
+        emit_result("tpch_total_wall",
+                    measure(spark, sf_dir, _tpch.QUERIES, names), sf)
         return
 
     queries = dict(all_queries())
@@ -550,7 +285,7 @@ def main() -> None:
         "scale_probe_sec": scale_probe_sec,
         "query_tasks": {n: group_task_count(sc, f"bench:{n}") for n in HEADLINE},
     }
-    emit_result("headline_total_wall", sf=sf, extra=extra, **measured)
+    emit_result("headline_total_wall", measured, sf, extra)
 
 
 if __name__ == "__main__":

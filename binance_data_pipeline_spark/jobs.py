@@ -122,92 +122,6 @@ def hourly_transform(spark: SparkSession, bronze_path: str, fact_path: str) -> J
     return JobReport(0, n, checks)
 
 
-def corpus_report(
-    spark: SparkSession,
-    corpus_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    domain_col: str | None = "lang",
-    top_items: int = 10,
-) -> dict:
-    """One-pass health report over a built corpus — the dashboard a data
-    team checks after ``build_training_corpus`` and before a training run.
-    Composes the sketch/rollup family so it stays one scan + small
-    shuffles at any corpus size (nothing here rescans raw per metric):
-
-      - token totals + length quantiles per domain (MRL sketch rollup)
-      - distinct-doc fingerprints per domain (HLL — residual exact-dup
-        rate = 1 − distinct/docs)
-      - heavy-hitter domains/langs (MG summaries)
-
-    Returns a plain dict (per-domain rows + global totals) — bounded by
-    domain cardinality, not data."""
-    from pyspark.sql import functions as F
-
-    from .operators.heavyhitters import heavy_hitters_estimate, heavy_hitters_rollup
-    from .operators.quantiles import quantile_estimate, quantile_rollup
-    from .operators.sketches import hll_estimate, hll_rollup
-    from .operators.text import fingerprint_normalized, token_count
-
-    docs = spark.read.parquet(corpus_path)
-    dom = domain_col if domain_col in docs.columns else None
-    gcols = [dom] if dom else []
-    base = docs.select(
-        *( [F.col(dom)] if dom else [] ),
-        F.col(id_col).alias("__id"),
-        token_count(text_col).cast("double").alias("__tok"),
-        fingerprint_normalized(text_col).alias("__fp"),
-    )
-    if not dom:
-        base = base.withColumn("__all", F.lit("all"))
-        gcols = ["__all"]
-
-    qroll = quantile_rollup(base, gcols, "__tok", k=256)
-    qest = {
-        tuple(r[c] for c in gcols): r
-        for r in quantile_estimate(qroll, gcols, [0.5, 0.95]).collect()
-    }
-    hll = {
-        tuple(r[c] for c in gcols): r
-        for r in hll_estimate(
-            hll_rollup(base, gcols, ["__fp"]), gcols, ["__fp"]
-        ).collect()
-    }
-    tok_totals = {
-        tuple(r[c] for c in gcols): r["__t"]
-        for r in base.groupBy(*gcols).agg(F.sum("__tok").alias("__t")).collect()
-    }
-    hh = heavy_hitters_estimate(
-        heavy_hitters_rollup(
-            base.withColumn("__g", F.lit(1)), ["__g"], gcols[0], k=64
-        ),
-        ["__g"],
-        top=top_items,
-    ).collect()
-
-    domains = {}
-    for key in qest:
-        name = key[0]
-        n_docs = hll[key]["n_rows"]
-        distinct_fp = hll[key]["__fp_distinct"]
-        domains[name] = {
-            "n_docs": int(n_docs),
-            "total_tokens": float(tok_totals[key]),
-            "p50_tokens": qest[key]["p50"],
-            "p95_tokens": qest[key]["p95"],
-            "distinct_fingerprints": int(distinct_fp),
-            "residual_dup_rate": max(0.0, 1.0 - distinct_fp / n_docs) if n_docs else 0.0,
-        }
-    return {
-        "domains": domains,
-        "top_domains": [
-            {"domain": r["item"], "docs_lower_bound": int(r["estimate"])} for r in hh
-        ],
-        "n_docs": int(sum(d["n_docs"] for d in domains.values())),
-        "total_tokens": float(sum(d["total_tokens"] for d in domains.values())),
-    }
-
-
 def build_training_corpus(
     spark: SparkSession,
     docs_path: str,

@@ -13,8 +13,7 @@ ivf              persisted IVF ANN index (fingerprinted, build-once/query-many)
 lsh_index        persisted multi-table LSH index (bucket-pruned serve kernel)
 pq               IVF-PQ: product-quantized ANN (M-byte codes, ADC scan, exact refine)
 text             text analysis (tokens, quality, language-ID, fingerprints, PII, chunking)
-urls             URL canonicalization, registered-domain, URL dedup, crawl domain stats
-psl              Public Suffix List snapshot + longest-match registrable-domain rules
+urls             URL canonicalization + URL dedup
 lm_score         CCNet-style n-gram LM fluency scoring (broadcast-join cross-entropy)
 quality_rules    Gopher/C4 structural rule bundles + per-domain gate
 quality_classifier  trainable hashed-n-gram logistic quality filter (FineWeb-Edu recipe)
@@ -23,13 +22,9 @@ vocab            token/n-gram frequency tables
 bm25             BM25 retrieval + persisted term-bucket index + RRF hybrid fusion
 retrieval        serving root: BM25+IVF build + RRF hybrid search + injectable rerank
 behavior         funnel conversion + cohort retention over event streams
-scd              SCD Type 2 dimension merge + point-in-time lookup join
-anomaly          rolling z-score / robust IQR / seasonal-residual flags
+scd              SCD Type 2 dimension merge
+anomaly          rolling z-score anomaly flags
 sampling         deterministic stratified sampling + shuffle
-sketches         HLL distinct + count-min frequency rollups (mergeable)
-quantiles        MRL/KLL quantile sketch rollups (mergeable)
-heavyhitters     Misra-Gries top-k rollups (mergeable)
-state_swap       exactly-once batch markers for append-only foreachBatch sinks
 metacache        serve-path index-metadata memo (listing-keyed, self-invalidating)
 profile          per-column table profiling (nulls, distinct, range, quantiles, top values)
 subqueries       correlated scalar-agg subquery filter with exact ANSI empty-group semantics

@@ -40,7 +40,7 @@ from .vocab import _token_array
 
 from ..session import local_rows
 
-__all__ = ["bm25_postings", "build_bm25_index", "bm25_query", "bm25_topk", "rrf_fuse", "append_to_bm25_index", "streaming_bm25_append"]
+__all__ = ["bm25_postings", "build_bm25_index", "bm25_query", "bm25_topk", "rrf_fuse"]
 
 
 def bm25_postings(
@@ -178,8 +178,8 @@ MAX_LOCAL_TERMS_BYTES = int(
 
 def _cached_term_idf(spark: SparkSession, index_path: str) -> dict | None:
     """term → idf for the whole dictionary, memoized per terms-dir
-    listing (operators/metacache — appends rewrite terms.parquet, so the
-    memo self-invalidates), or None when the dictionary exceeds
+    listing (operators/metacache — a rebuild rewrites terms.parquet, so
+    the memo self-invalidates), or None when the dictionary exceeds
     ``MAX_LOCAL_TERMS_BYTES`` (the distributed idf join stays).
 
     A serving tier resolves probe-term idf driver-side from this map, so
@@ -237,8 +237,8 @@ def bm25_query(
 
     Corpus stats and the bucket count are memoized per process keyed on
     the stats dir listing (operators/metacache) — repeat queries skip
-    the per-call driver jobs a serving tier would never re-pay; appends
-    rewrite stats.parquet, so the memo invalidates itself."""
+    the per-call driver jobs a serving tier would never re-pay; a rebuild
+    rewrites stats.parquet, so the memo invalidates itself."""
     stats_path = os.path.join(index_path, "stats.parquet")
     n_docs, avgdl = cached_meta(
         spark,
@@ -505,119 +505,3 @@ def rrf_fuse(
     if top_k is not None:
         ranked = ranked.where(F.col("rk") <= top_k)
     return ranked.select("query_id", "doc_id", "rrf_score", "rk")
-
-
-def append_to_bm25_index(
-    spark: SparkSession,
-    index_path: str,
-    new_docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    tokenizer: str = "whitespace",
-    fingerprint: str | None = None,
-    batch_id: int | None = None,
-) -> int:
-    """Grow a persisted BM25 index with NEW documents (ids must not
-    already be indexed — same contract as the ANN appends): their
-    postings append into the term buckets, and the term dictionary +
-    corpus stats are EXACTLY re-merged (df summed, idf recomputed from
-    the new N, avgdl re-weighted), so post-append scores equal a full
-    rebuild's bit-for-bit — pinned by tests. Returns docs appended
-    (0 on a skipped replay).
-
-    Ordering = crash posture: postings first, then terms/stats, then
-    the commit marker, then ``fingerprint`` (meta) LAST — a crash
-    anywhere leaves a stale fingerprint and the next gated call
-    rebuilds; a concurrent reader mid-append may briefly score with the
-    previous idf table (eventual consistency during the append window).
-    ``batch_id`` reuses the state_swap commit-marker recipe under
-    ``{index_path}/appends/`` for exactly-once streaming ingestion."""
-    from .state_swap import batch_committed, commit_batch
-
-    commits = f"{index_path.rstrip('/')}/appends"
-    if batch_id is not None and batch_committed(spark, commits, batch_id):
-        return 0
-    n_buckets = _index_buckets(spark, index_path)
-    postings, terms = bm25_postings(new_docs, id_col, text_col, tokenizer)
-    postings = postings.localCheckpoint(eager=True)  # one eval for 3 uses
-    new_n, new_avgdl = _corpus_stats(postings)
-    if new_n == 0:
-        if batch_id is not None:
-            commit_batch(spark, commits, batch_id)
-        return 0
-    tb = F.pmod(F.xxhash64(F.col("term")), F.lit(n_buckets)).cast("int").alias("tb")
-    postings.withColumn("tb", tb).repartition(n_buckets, "tb").write.mode(
-        "append"
-    ).partitionBy("tb").parquet(os.path.join(index_path, "postings.parquet"))
-
-    old = spark.read.parquet(os.path.join(index_path, "stats.parquet")).first()
-    n_docs = int(old["n_docs"]) + new_n
-    avgdl = (float(old["avgdl"]) * int(old["n_docs"]) + new_avgdl * new_n) / n_docs
-
-    old_terms = spark.read.parquet(os.path.join(index_path, "terms.parquet")).select(
-        "term", "df"
-    )
-    merged = (
-        old_terms.unionByName(terms)
-        .groupBy("term")
-        .agg(F.sum("df").alias("df"))
-    )
-    idf = F.log(
-        F.lit(1.0)
-        + (F.lit(float(n_docs)) - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-    ).alias("idf")
-    # the dictionary is vocabulary-sized (not corpus-sized): rewrite in
-    # place; readers between this overwrite and the stats write see a
-    # consistent dictionary with one-batch-stale stats at worst
-    merged.select("term", "df", idf).withColumn("tb", tb).repartition(
-        min(n_buckets, 8), "tb"
-    ).write.mode("overwrite").partitionBy("tb").parquet(
-        os.path.join(index_path, "terms.parquet")
-    )
-    local_rows(
-        spark, [(n_docs, avgdl)], "n_docs long, avgdl double"
-    ).write.mode("overwrite").parquet(
-        os.path.join(index_path, "stats.parquet")
-    )
-    if batch_id is not None:
-        commit_batch(spark, commits, batch_id)
-    if fingerprint is not None:
-        local_rows(
-            spark, [(fingerprint,)], "fingerprint STRING"
-        ).write.mode("overwrite").parquet(os.path.join(index_path, "meta.parquet"))
-    return new_n
-
-
-def streaming_bm25_append(
-    docs_stream,
-    index_path: str,
-    checkpoint: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    tokenizer: str = "whitespace",
-    trigger_seconds: int = 5,
-    available_now: bool = False,
-):
-    """Streaming search-index ingestion: each micro-batch of arriving
-    documents appends via ``append_to_bm25_index`` with the batch id as
-    the replay guard — exactly-once at the postings table even across
-    checkpoint loss (the ivf.streaming_ivf_append contract). The index
-    must already exist (bootstrap with build_bm25_index/bm25_topk over
-    the seed corpus — an empty index has no bucket layout to append
-    into)."""
-
-    def handle(batch_df, batch_id: int) -> None:
-        append_to_bm25_index(
-            batch_df.sparkSession, index_path, batch_df,
-            id_col=id_col, text_col=text_col, tokenizer=tokenizer,
-            batch_id=int(batch_id),
-        )
-
-    writer = docs_stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

@@ -508,93 +508,3 @@ def ivf_topk(
         .where(F.col("rk") <= k)
         .select("query_id", "neighbor_id", "sim", "rk")
     )
-
-
-def append_to_ivf_index(
-    spark: SparkSession,
-    index_path: str,
-    new_vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    fingerprint: str | None = None,
-    batch_id: int | None = None,
-) -> int:
-    """Grow a persisted IVF index WITHOUT retraining: assign the new
-    vectors to the existing centroids (one broadcast-argmin scan) and
-    append them into their cell partitions. Returns rows appended (0 on
-    a skipped replay).
-
-    The index-maintenance path for an arriving corpus: a full
-    `build_ivf_index` re-scans everything; an append touches only the
-    batch. Centroids drift from optimal as the distribution shifts —
-    the standard IVF operations trade-off; rebuild when recall decays.
-
-    ``fingerprint``: pass `corpus_fingerprint(grown_corpus, params)` and
-    a subsequent `ivf_topk(queries, grown_corpus, index_path=...)` will
-    serve the appended index instead of rebuilding. Written LAST, so a
-    crash mid-append leaves a stale fingerprint and the next build-gated
-    call rebuilds — wasted work, never wrong answers.
-
-    ``batch_id``: replay guard via a commit marker under
-    ``{index_path}/appends/`` (the state_swap.commit_batch recipe) —
-    a foreachBatch retry of an already-applied batch appends nothing,
-    so streaming maintenance is exactly-once at the cell-table level."""
-    from .state_swap import batch_committed, commit_batch
-
-    commits = f"{index_path.rstrip('/')}/appends"
-    if batch_id is not None and batch_committed(spark, commits, batch_id):
-        return 0
-    cent_rows = spark.read.parquet(os.path.join(index_path, "centroids.parquet")).collect()
-    centroids = [(r["cid"], [float(x) for x in r["vec"]]) for r in cent_rows]
-    assigned = _assign(_spread(new_vectors), id_col, vec_col, centroids).select(
-        F.col("id").alias("neighbor_id"), F.col("v").alias("cv"), F.col("cell_id")
-    )
-    assigned = assigned.localCheckpoint(eager=True)  # count + write, one eval
-    n = assigned.count()
-    if n:
-        assigned.repartition(len(centroids), "cell_id").write.mode("append").partitionBy(
-            "cell_id"
-        ).parquet(os.path.join(index_path, "cells.parquet"))
-    if batch_id is not None:
-        commit_batch(spark, commits, batch_id)
-    if fingerprint is not None:
-        spark.createDataFrame([(fingerprint,)], "fingerprint STRING").coalesce(
-            1
-        ).write.mode("overwrite").parquet(os.path.join(index_path, "meta.parquet"))
-    return n
-
-
-def streaming_ivf_append(
-    vectors_stream,
-    index_path: str,
-    checkpoint: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    trigger_seconds: int = 5,
-    available_now: bool = False,
-    appender=None,
-):
-    """Streaming index maintenance: each micro-batch of arriving vectors
-    appends into the persisted index via ``append_to_ivf_index`` with the
-    batch id as the replay guard — checkpoint replays re-deliver the
-    batch, the commit marker skips it, and the cell table stays
-    exactly-once. ``appender`` swaps in append_to_ivfpq_index (same
-    signature) for a PQ index. The index must already exist (bootstrap
-    with build_ivf_index / ivf_topk over the seed corpus — centroids
-    cannot be trained on an empty stream)."""
-    fn = appender or append_to_ivf_index
-
-    def handle(batch_df, batch_id: int) -> None:
-        fn(
-            batch_df.sparkSession, index_path, batch_df,
-            id_col=id_col, vec_col=vec_col, batch_id=int(batch_id),
-        )
-
-    writer = vectors_stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

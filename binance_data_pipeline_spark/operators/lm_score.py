@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from .vocab import _ngram_array, _token_array, token_frequencies
 
-__all__ = ["train_ngram_lm", "lm_cross_entropy", "filter_by_lm", "bucket_by_lm"]
+__all__ = ["train_ngram_lm", "lm_cross_entropy", "filter_by_lm"]
 
 
 def train_ngram_lm(
@@ -126,45 +126,3 @@ def filter_by_lm(
         F.col(id_col).alias("__keep_id")
     )
     return docs.join(keep, docs[id_col] == F.col("__keep_id"), "left_semi")
-
-
-def bucket_by_lm(
-    docs: DataFrame,
-    lm: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 1,
-    head_frac: float = 1 / 3,
-    tail_frac: float = 1 / 3,
-    rel_err: float = 0.001,
-    tokenizer: str = "whitespace",
-) -> DataFrame:
-    """CCNet's perplexity bucketing (Wenzek et al. §4.3): split the
-    corpus into ``head`` (most fluent under the reference LM),
-    ``middle``, and ``tail`` by cross-entropy quantiles — CCNet ships
-    the three as separate corpora so consumers choose their own
-    quality/volume trade-off, which filtering at a single threshold
-    can't offer.
-
-    Adds ``cross_entropy`` and ``lm_bucket`` to the scored docs
-    (unscoreable docs are absent, as in lm_cross_entropy). The two cut
-    points come from ONE approxQuantile aggregate (rank error
-    ``rel_err``); bucketing itself is a map-side comparison."""
-    if head_frac <= 0 or tail_frac <= 0 or head_frac + tail_frac >= 1:
-        raise ValueError(
-            f"head_frac/tail_frac must be > 0 and sum < 1, got {head_frac}+{tail_frac}"
-        )
-    scores = lm_cross_entropy(docs, lm, id_col, text_col, n, tokenizer)
-    lo, hi = scores.stat.approxQuantile(
-        "cross_entropy", [head_frac, 1.0 - tail_frac], rel_err
-    )
-    scored = docs.join(
-        scores.select(F.col(id_col).alias("__sid"), "cross_entropy"),
-        F.col(id_col) == F.col("__sid"),
-    ).drop("__sid")
-    bucket = (
-        F.when(F.col("cross_entropy") <= F.lit(lo), "head")
-        .when(F.col("cross_entropy") > F.lit(hi), "tail")
-        .otherwise("middle")
-    )
-    return scored.withColumn("lm_bucket", bucket)

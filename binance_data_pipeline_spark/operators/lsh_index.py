@@ -50,7 +50,7 @@ from .similarity import (
     rp_signatures_batch,
 )
 
-__all__ = ["build_lsh_index", "lsh_query", "lsh_topk", "append_to_lsh_index"]
+__all__ = ["build_lsh_index", "lsh_query", "lsh_topk"]
 
 
 def build_lsh_index(
@@ -308,67 +308,6 @@ def _lsh_query_join(
         .where(F.col("rk") <= k)
         .select("query_id", "neighbor_id", "sim", "rk")
     )
-
-
-def append_to_lsh_index(
-    spark: SparkSession,
-    index_path: str,
-    new_vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    fingerprint: str | None = None,
-    batch_id: int | None = None,
-) -> int:
-    """Grow a persisted LSH index incrementally: sign the new vectors
-    (one Arrow pass over the BATCH, not the corpus) and append them into
-    their ``(tbl, sig)`` bucket partitions. Returns vectors appended
-    (0 on a skipped replay). The append_to_ivf_index contract verbatim:
-
-    ``fingerprint`` — pass ``corpus_fingerprint(grown_corpus, params)``
-    and a later ``lsh_topk(..., index_path=...)`` serves the appended
-    index instead of rebuilding; written LAST, so a crash mid-append
-    degrades to a rebuild, never wrong answers.
-
-    ``batch_id`` — replay guard via a commit marker under
-    ``{index_path}/appends`` (state_swap recipe): a foreachBatch retry
-    of an applied batch appends nothing. Streaming maintenance reuses
-    ``ivf.streaming_ivf_append(appender=append_to_lsh_index)`` — the
-    signatures match by design.
-
-    meta.parquet is rewritten on EVERY append (carrying the old
-    fingerprint when none is given): it re-keys the serve path's
-    memoized bucket-existence set, so buckets that first appear in this
-    batch become probeable without a process restart."""
-    from .state_swap import batch_committed, commit_batch
-
-    commits = f"{index_path.rstrip('/')}/appends"
-    if batch_id is not None and batch_committed(spark, commits, batch_id):
-        return 0
-    meta_path = os.path.join(index_path, "meta.parquet")
-    m = spark.read.parquet(meta_path).collect()[0]
-    n_planes, n_tables, dim = int(m["n_planes"]), int(m["n_tables"]), int(m["dim"])
-    base = _spread(new_vectors).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("v")
-    )
-    base = base.localCheckpoint(eager=True)  # count + signature pass, one eval
-    n = base.count()
-    if n:
-        sig_udf = rp_signatures_batch(n_planes, n_tables, dim)
-        rows = base.select(
-            "neighbor_id", "v", F.posexplode(sig_udf("v")).alias("tbl", "sig")
-        )
-        n_buckets = min(n_tables * (1 << n_planes), 256)
-        rows.repartition(n_buckets, "tbl", "sig").write.mode("append").partitionBy(
-            "tbl", "sig"
-        ).parquet(os.path.join(index_path, "buckets.parquet"))
-    if batch_id is not None:
-        commit_batch(spark, commits, batch_id)
-    new_fp = fingerprint if fingerprint is not None else m["fingerprint"]
-    local_rows(
-        spark, [(new_fp, n_planes, n_tables, dim)],
-        "fingerprint string, n_planes int, n_tables int, dim int",
-    ).write.mode("overwrite").parquet(meta_path)
-    return n
 
 
 def lsh_topk(

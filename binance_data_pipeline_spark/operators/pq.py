@@ -42,7 +42,6 @@ vector operations. Build-once/atomic-swap identical to ivf.py.
 from __future__ import annotations
 
 import os
-import uuid
 
 import numpy as np
 import pandas as pd
@@ -50,25 +49,16 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from .ivf import (
-    _assign,
-    _estimate_rows,
-    _read_index_fingerprint,
-    corpus_fingerprint,
-    train_centroids,
-)
-from .metacache import _hadoop_fs
+from .ivf import _assign, _estimate_rows, train_centroids
 from .similarity import _spread, cosine
 
 from ..session import local_rows
 
 __all__ = [
     "train_pq_codebook",
-    "encode_pq",
     "adc_cosine",
     "build_ivfpq_index",
     "ivfpq_query",
-    "ivfpq_topk",
 ]
 
 
@@ -153,21 +143,6 @@ def _encode_udf(codebook: np.ndarray):
         return pd.Series(list(codes))
 
     return _encode
-
-
-def encode_pq(
-    df: DataFrame,
-    codebook: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, code): each vector's nearest sub-centroid per subspace — one
-    Arrow-batched map scan, no shuffle. Codes are array<smallint>:
-    M × 2 bytes on disk vs D × 4 for the raw vector (and
-    dictionary/RLE-friendly for parquet)."""
-    return df.select(
-        F.col(id_col).alias("id"), _encode_udf(codebook)(F.col(vec_col)).alias("code")
-    )
 
 
 def adc_cosine(codebook: np.ndarray):
@@ -375,136 +350,3 @@ def ivfpq_query(
         .where(F.col("rk") <= k)
         .select("query_id", "neighbor_id", "sim", "rk")
     )
-
-
-def ivfpq_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 3,
-    n_centroids: int = 16,
-    m: int = 8,
-    ksub: int = 16,
-    nprobe: int = 4,
-    refine_factor: int = 4,
-    iterations: int = 2,
-    pq_iterations: int = 5,
-    index_path: str | None = None,
-    sample_target: int | None = 4096,
-    refine: bool = True,
-    rerank_candidates: int | None = 1024,
-) -> DataFrame:
-    """IVF-PQ ANN top-k with the ivf_topk contract: with ``index_path``
-    the persisted index is built IF missing/stale (corpus fingerprint +
-    params, meta-last commit, unique-tmp + atomic rename — identical
-    race/crash posture to ivf.ivf_topk) and served from; without, a
-    one-shot build serves a single call. ``refine=True`` re-ranks the ADC
-    shortlist against the true vectors (recall ≈ IVF-flat at a fraction
-    of the index size); ``refine=False`` stays fully compressed-domain.
-    ``rerank_candidates`` (default 1024, the r12 recall fix — see
-    ivfpq_query) sizes the exact re-rank pool; None falls back to
-    ``refine_factor × k``."""
-    spark = corpus.sparkSession
-    refine_src = corpus if refine else None
-    if index_path is not None:
-        params = (
-            f"pq|k{n_centroids}|m{m}|ks{ksub}|it{iterations}|pit{pq_iterations}"
-            f"|s{sample_target}|{id_col}|{vec_col}"
-        )
-        want = corpus_fingerprint(corpus, params)
-        if _read_index_fingerprint(spark, index_path) != want:
-            tmp = f"{index_path}__build_{uuid.uuid4().hex[:8]}"
-            build_ivfpq_index(
-                corpus, tmp, id_col, vec_col, n_centroids, m, ksub,
-                iterations, pq_iterations, sample_target, fingerprint=want,
-            )
-            fs, dest = _hadoop_fs(spark, index_path)
-            _, tmp_p = _hadoop_fs(spark, tmp)
-            if fs.exists(dest):
-                fs.delete(dest, True)  # stale (or uncommitted) index
-            if not fs.rename(tmp_p, dest):
-                fs.delete(tmp_p, True)
-                if _read_index_fingerprint(spark, index_path) != want:
-                    raise RuntimeError(
-                        f"IVF-PQ index at {index_path} was concurrently "
-                        "replaced with a different corpus fingerprint"
-                    )
-        return ivfpq_query(
-            spark, index_path, queries, id_col, vec_col, k, nprobe,
-            refine_factor, refine_src, rerank_candidates,
-        )
-
-    tmp = None
-    try:
-        # one-shot path still goes through the on-disk layout (the encode +
-        # cell write IS the work; an in-memory twin would duplicate it)
-        import tempfile
-
-        tmp = tempfile.mkdtemp(prefix="ivfpq_oneshot_")
-        build_ivfpq_index(
-            corpus, tmp, id_col, vec_col, n_centroids, m, ksub,
-            iterations, pq_iterations, sample_target,
-        )
-        out = ivfpq_query(
-            spark, tmp, queries, id_col, vec_col, k, nprobe,
-            refine_factor, refine_src, rerank_candidates,
-        )
-        # materialize before the temp dir can be reclaimed by the caller
-        return out.localCheckpoint(eager=True)
-    finally:
-        if tmp is not None:
-            import shutil
-
-            shutil.rmtree(tmp, ignore_errors=True)
-
-
-def append_to_ivfpq_index(
-    spark: SparkSession,
-    index_path: str,
-    new_vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    fingerprint: str | None = None,
-    batch_id: int | None = None,
-) -> int:
-    """Grow a persisted IVF-PQ index without retraining (the ivf.py
-    append_to_ivf_index contract): assign new vectors to the existing
-    coarse centroids AND encode them against the existing codebook in
-    one scan, append the (neighbor_id, code) rows into their cell
-    partitions. Returns rows appended (0 on a skipped replay).
-
-    Codebook drift caveat is sharper than IVF-flat's: appended vectors
-    are quantized by codebooks trained on the ORIGINAL distribution, so
-    both cell routing and code fidelity decay as the distribution
-    shifts — rebuild when refined recall drops. ``fingerprint`` /
-    ``batch_id`` semantics match append_to_ivf_index (meta written last;
-    commit markers under {index_path}/appends/)."""
-    from .state_swap import batch_committed, commit_batch
-
-    commits = f"{index_path.rstrip('/')}/appends"
-    if batch_id is not None and batch_committed(spark, commits, batch_id):
-        return 0
-    cent_rows = spark.read.parquet(
-        os.path.join(index_path, "centroids.parquet")
-    ).collect()
-    centroids = [(r["cid"], [float(x) for x in r["vec"]]) for r in cent_rows]
-    codebook = _read_codebook(spark, index_path)
-    assigned = _assign(_spread(new_vectors), id_col, vec_col, centroids)
-    cells = assigned.select(
-        F.col("id").alias("neighbor_id"),
-        _encode_udf(codebook)(F.col("v")).alias("code"),
-        F.col("cell_id"),
-    ).localCheckpoint(eager=True)
-    n = cells.count()
-    if n:
-        cells.repartition(len(centroids), "cell_id").write.mode("append").partitionBy(
-            "cell_id"
-        ).parquet(os.path.join(index_path, "cells.parquet"))
-    if batch_id is not None:
-        commit_batch(spark, commits, batch_id)
-    if fingerprint is not None:
-        local_rows(
-            spark, [(fingerprint,)], "fingerprint STRING"
-        ).write.mode("overwrite").parquet(os.path.join(index_path, "meta.parquet"))
-    return n

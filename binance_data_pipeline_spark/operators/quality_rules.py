@@ -1,7 +1,7 @@
 """Heuristic quality-filter rule bundles and per-domain filtering — the
 Gopher/C4-style document gate a training-data pipeline runs before dedup.
 
-Three layers:
+Two layers:
 
 - ``gopher_flags`` / ``c4_flags``: named per-document boolean rule
   structs (word-count band, mean-word-length band, symbol ratio,
@@ -14,12 +14,10 @@ Three layers:
   one-size-fits-all — code corpora fail prose symbol ratios, forum text
   fails terminal punctuation). Rules are a tiny dict → broadcast-joined
   dim; unmatched domains fall back to the ``"*"`` default row.
-- ``quality_report``: per-domain × per-rule failure counts — the audit
-  artifact reviewed before committing a filter config to a 100 TB run.
 
 Scale shape: flag computation is pure map-side JVM expressions (no
 Python, no shuffle, pipelined with the scan); the domain-rule join is a
-broadcast of an O(#domains) dim; the report is one partial-agg shuffle.
+broadcast of an O(#domains) dim.
 
 No reference equivalent (the reference has no text processing; its only
 string ops are lower/concat, producer/binance_ws_to_kafka.py:65) — this
@@ -193,38 +191,3 @@ def filter_by_domain(
         & (~eff["require_c4"] | F.col("__c4"))
     )
     return kept.select(*df.columns)
-
-
-def quality_report(
-    df: DataFrame, domain_col: str = "source", text_col: str = "text"
-) -> DataFrame:
-    """Per-domain rule-failure audit: for every domain, the document
-    count and the number failing each Gopher/C4 rule — what a corpus
-    curator reads before choosing ``filter_by_domain`` thresholds.
-    One partial-agg shuffle on the domain key."""
-    g = gopher_flags(text_col)
-    c = c4_flags(text_col)
-    flagged = df.select(
-        F.col(domain_col).alias("domain"), g.alias("g"), c.alias("c")
-    )
-    gopher_fields = [f for f in ["word_count_ok", "mean_word_len_ok",
-                                 "symbol_ratio_ok", "bullet_lines_ok",
-                                 "ellipsis_lines_ok", "alpha_ratio_ok",
-                                 "stopword_ok"]]
-    c4_fields = ["sentences_ok", "terminal_punct_ok", "no_lorem",
-                 "no_js_marker", "no_braces"]
-    aggs = [F.count(F.lit(1)).alias("n_docs")]
-    aggs += [
-        F.sum(F.when(~F.col(f"g.{f}"), 1).otherwise(0)).alias(f"fail_{f}")
-        for f in gopher_fields
-    ]
-    aggs += [
-        F.sum(F.when(~F.col(f"c.{f}"), 1).otherwise(0)).alias(f"fail_{f}")
-        for f in c4_fields
-    ]
-    aggs.append(
-        F.sum(F.when(F.col("g.pass") & F.col("c.pass"), 1).otherwise(0)).alias(
-            "pass_all"
-        )
-    )
-    return flagged.groupBy("domain").agg(*aggs)

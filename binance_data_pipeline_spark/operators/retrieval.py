@@ -19,9 +19,9 @@ lexical search. Roots built with ``embed_dim`` are SELF-CONTAINED:
 passage and query embeddings are generated in-flight by the manifest's
 deterministic hash encoder (operators/embedder.py), so the vector leg
 needs no model and no embedding table on either side.
-`append_to_retrieval_root` grows all three artifacts without a rebuild
-(replay-safe per-leg commit markers under ``batch_id``);
-`rerank` adds an injectable cross-encoder second stage.
+A root changes only by a rebuild (`build_retrieval_index`, the
+``index`` CLI): no ingest path appends to it. `rerank` adds an
+injectable cross-encoder second stage.
 
 When chunking is on, embeddings must be keyed by PASSAGE id
 (``doc_id << chunking >> {doc}#{idx}`` — the chunk_documents
@@ -33,7 +33,6 @@ indexed so the reader can check.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable, Iterator
 
 import numpy as np
@@ -48,8 +47,6 @@ from ..session import local_rows
 
 __all__ = [
     "build_retrieval_index",
-    "append_to_retrieval_root",
-    "streaming_retrieval_append",
     "validate_retrieval_root",
     "hybrid_search",
     "rm3_search",
@@ -68,8 +65,7 @@ def _as_passages(
 ) -> DataFrame:
     """Docs → indexed text units: either the docs themselves or
     fixed-window chunks with ``{doc}#{idx}`` ids (the chunk_documents
-    convention). Shared by build and append so appended passages are
-    chunked IDENTICALLY to built ones."""
+    convention)."""
     if chunk_tokens is not None:
         from .text import chunk_documents
 
@@ -371,165 +367,16 @@ def rerank(
     )
 
 
-def append_to_retrieval_root(
-    spark: SparkSession,
-    root: str,
-    new_docs: DataFrame,
-    new_embeddings: DataFrame | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    emb_id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    batch_id: int | None = None,
-) -> dict[str, int]:
-    """Grow a serving root with NEW documents (ids must not already be
-    indexed — the bm25/ivf append contract) without a full rebuild:
-    passages append to the passage table, postings into their term
-    buckets (exact stats re-merge — post-append BM25 scores equal a
-    rebuild's), vectors into their IVF cells, and the manifest count is
-    rewritten LAST. Chunked roots chunk the new docs with the EXACT
-    build-time window (the manifest records chunk geometry); roots
-    built self-contained (``embed_dim``) embed the new passages
-    in-flight with the manifest's encoder — external-embedding roots
-    require ``new_embeddings`` (keyed by PASSAGE id when chunked).
-
-    ``batch_id`` makes the append replay-safe for streaming ingestion:
-    each leg (passages / bm25 / ann) carries its own commit marker, so
-    a crash between legs resumes exactly where it stopped and a full
-    replay of a committed batch is a no-op — the foreachBatch recipe::
-
-        stream.writeStream.foreachBatch(
-            lambda b, bid: append_to_retrieval_root(
-                b.sparkSession, root, b, batch_id=bid)
-        )
-
-    Serving during the append window is eventually consistent (a reader
-    may briefly see appended passages before their postings); the
-    manifest count is advisory. Returns per-leg appended counts
-    (zeros on a fully replayed batch)."""
-    from .bm25 import append_to_bm25_index
-    from .ivf import append_to_ivf_index
-    from .state_swap import batch_committed, commit_batch
-
-    base = root.rstrip("/")
-    try:
-        manifest = spark.read.parquet(f"{base}/manifest.parquet").first()
-    except Exception as e:
-        raise ValueError(f"no manifest under {root} — incomplete build") from e
-    m = manifest.asDict()
-    if m["has_ann"] and m.get("embed_dim") is None and new_embeddings is None:
-        # validate BEFORE any leg mutates state — a half-appended batch
-        # with no replay marker would re-append on retry
-        raise ValueError(
-            f"{root} has an external-embedding ANN index — pass new_embeddings"
-        )
-
-    passages = _as_passages(
-        new_docs, id_col, text_col, m.get("chunk_tokens"),
-        m.get("overlap_tokens") or 32,
-    )
-    # the batch is re-derived per leg (cheap map lineage); persist once
-    # so chunking/embedding don't recompute across the three appends
-    passages = passages.localCheckpoint(eager=True)
-    n_new = passages.count()
-    counts = {"passages_appended": 0, "bm25_appended": 0, "ann_appended": 0}
-
-    def leg(name: str, apply) -> int:
-        if batch_id is not None:
-            marker_dir = f"{base}/appends_{name}"
-            if batch_committed(spark, marker_dir, batch_id):
-                return 0
-            n = apply()
-            commit_batch(spark, marker_dir, batch_id)
-            return n
-        return apply()
-
-    def passages_leg() -> int:
-        passages.write.mode("append").parquet(f"{base}/passages.parquet")
-        return n_new
-
-    counts["passages_appended"] = leg("passages", passages_leg)
-    counts["bm25_appended"] = append_to_bm25_index(
-        spark, f"{base}/bm25", passages,
-        id_col=id_col, text_col=text_col, batch_id=batch_id,
-    )
-
-    if m["has_ann"]:
-        if m.get("embed_dim") is not None:
-            from .embedder import embed_texts, hash_encoder
-
-            vecs = embed_texts(
-                passages, text_col=text_col,
-                encoder=hash_encoder(int(m["embed_dim"]), seed=int(m["embed_seed"])),
-            ).select(F.col(id_col).alias(emb_id_col), F.col("embedding").alias(vec_col))
-        else:
-            vecs = new_embeddings  # presence validated up front
-        counts["ann_appended"] = append_to_ivf_index(
-            spark, f"{base}/ann", vecs,
-            id_col=emb_id_col, vec_col=vec_col, batch_id=batch_id,
-        )
-
-    if any(counts.values()):
-        # self-healing count: a crash between legs leaves the manifest
-        # stale; the resuming replay re-counts the ACTUAL passage table
-        # (the skipped-leg markers guarantee no leg double-applied)
-        n_total = spark.read.parquet(f"{base}/passages.parquet").count()
-        _write_manifest(
-            spark, base,
-            unit=m["unit"], n_passages=n_total,
-            has_ann=m["has_ann"], embed_dim=m.get("embed_dim"),
-            embed_seed=m.get("embed_seed"), chunk_tokens=m.get("chunk_tokens"),
-            overlap_tokens=m.get("overlap_tokens"),
-        )
-    return counts
-
-
-def streaming_retrieval_append(
-    docs_stream,
-    root: str,
-    checkpoint: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    trigger_seconds: int = 5,
-    available_now: bool = False,
-):
-    """Streaming serving-root maintenance: each micro-batch of arriving
-    documents grows the root via ``append_to_retrieval_root`` with the
-    batch id as the replay guard (per-leg commit markers → checkpoint
-    replays of committed batches are no-ops). Only self-contained or
-    lexical-only roots can ride a document stream — an
-    external-embedding root has no way to embed arriving docs (the
-    first micro-batch raises). The root must already exist (bootstrap
-    with build_retrieval_index over the seed corpus)."""
-
-    def handle(batch_df, batch_id: int) -> None:
-        append_to_retrieval_root(
-            batch_df.sparkSession, root, batch_df,
-            id_col=id_col, text_col=text_col, batch_id=int(batch_id),
-        )
-
-    writer = docs_stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
-
-
 def validate_retrieval_root(
     spark: SparkSession,
     root: str,
     id_col: str = "doc_id",
 ) -> dict[str, int | bool]:
     """Consistency audit of a serving root — the operational probe to
-    run after appends or before promoting a root to serving:
+    run after a rebuild or before promoting a root to serving:
 
         n_passages            rows in the passage table
-        manifest_count_ok     manifest n_passages == actual (advisory
-                              count can lag only if a writer crashed
-                              between legs)
+        manifest_count_ok     manifest n_passages == actual
         n_unindexed_lexical   passages with NO posting row (un-searchable
                               through the BM25 leg; empty/stopword-free
                               texts legitimately land here)

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-__all__ = ["scd2_merge", "scd2_lookup"]
+__all__ = ["scd2_merge"]
 
 
 def scd2_merge(
@@ -121,44 +121,4 @@ def scd2_merge(
         closed_rows.unionByName(untouched_open)
         .unionByName(closed_now)
         .unionByName(new_rows)
-    )
-
-
-def scd2_lookup(
-    facts: DataFrame,
-    dim: DataFrame,
-    key_cols: list[str],
-    fact_ts_col: str,
-    valid_from: str = "valid_from",
-    valid_to: str = "valid_to",
-    how: str = "left",
-) -> DataFrame:
-    """Join each fact to the dimension version in effect at the fact's
-    timestamp: ``valid_from <= ts < valid_to`` (open versions match
-    everything from valid_from on). The point-in-time join every SCD2
-    table exists to serve; facts before a key's first version get NULL
-    attributes under ``how='left'``.
-
-    The predicate is an equi-join on the keys plus a range filter — at
-    warehouse scale dimensions are broadcastable (even with history,
-    they are orders of magnitude smaller than facts), so the plan is a
-    BroadcastHashJoin with the range as a post-join filter: the fact
-    table is never shuffled. The broadcast is hinted, not left to the
-    planner: a dimension too big to broadcast needs a bucketed range
-    join instead of this lookup."""
-    from pyspark.sql import functions as F
-
-    ts = F.col(f"__f.{fact_ts_col}")
-    cond = None
-    for k in key_cols:
-        c = F.col(f"__f.{k}") == F.col(f"__d.{k}")
-        cond = c if cond is None else (cond & c)
-    cond = cond & (ts >= F.col(f"__d.{valid_from}")) & (
-        F.col(f"__d.{valid_to}").isNull() | (ts < F.col(f"__d.{valid_to}"))
-    )
-    dim_cols = [c for c in dim.columns if c not in key_cols]
-    out = facts.alias("__f").join(F.broadcast(dim.alias("__d")), cond, how)
-    return out.select(
-        *[F.col(f"__f.{c}") for c in facts.columns],
-        *[F.col(f"__d.{c}").alias(c) for c in dim_cols],
     )

@@ -15,7 +15,7 @@ load-bearing core — over plain partitioned parquet:
 A commit writes its data dir first (invisible — readers resolve a
 manifest before listing anything), then renames a manifest temp dir to
 the next version number. The rename is the commit point and is atomic
-per the Hadoop FS contract (the ivf.py/state_swap.py discipline), so:
+per the Hadoop FS contract (the ivf.py discipline), so:
 
 - a crash anywhere leaves either version N or version N+1, never a
   torn table; orphaned data/temp dirs are invisible and vacuumable;
@@ -80,10 +80,7 @@ __all__ = [
     "snapshot_tail",
     "tail_cursor",
     "read_snapshot_range",
-    "read_snapshot_ranges",
     "snapshot_lookup",
-    "snapshot_lookup_keys",
-    "register_snapshot_view",
     "set_snapshot_constraints",
     "get_snapshot_constraints",
     "drop_snapshot_constraint",
@@ -1183,42 +1180,6 @@ def read_snapshot_range(
     return df
 
 
-def read_snapshot_ranges(
-    spark: SparkSession,
-    table: str,
-    ranges: dict[str, tuple],
-    version: int | None = None,
-) -> DataFrame:
-    """``read_snapshot_range`` over a CONJUNCTION of columns: ``ranges``
-    = {col: (lo, hi)} (either bound may be None), a dir survives only if
-    EVERY column's recorded [min,max] can meet its interval — the prunes
-    stack multiplicatively, so a time-AND-key slice of a 100 TB table
-    lists the few dirs in the intersection. Same exactness contract as
-    the single-column form: stats-less dirs always scan, residual
-    BETWEEN filters apply row-level (pushed to parquet footers, which a
-    Z-ordered layout then prunes file-by-file on the same columns)."""
-    if not ranges:
-        raise ValueError("ranges must be a non-empty {col: (lo, hi)} dict")
-    v = _resolve_version(spark, table, version, None)
-    entries = _live_entries(spark, table, v)
-    for col, (lo, hi) in ranges.items():
-        keep = set(
-            _prune_entries(entries, col, _json_scalar(lo), _json_scalar(hi))
-        )
-        entries = [e for e in entries if e[0] in keep]
-    if not entries:
-        return read_snapshot(spark, table, version=v).limit(0)
-    df = spark.read.option("mergeSchema", "true").parquet(
-        *[p for p, _ in entries]
-    )
-    for col, (lo, hi) in ranges.items():
-        if lo is not None:
-            df = df.where(F.col(col) >= F.lit(lo))
-        if hi is not None:
-            df = df.where(F.col(col) <= F.lit(hi))
-    return df
-
-
 def snapshot_lookup(
     spark: SparkSession,
     table: str,
@@ -1266,84 +1227,6 @@ def snapshot_lookup(
     df = spark.read.option("mergeSchema", "true").parquet(*dirs)
     return df.where(F.col(col).isin(values) if None not in values
                     else (F.col(col).isin(non_null) | F.col(col).isNull()))
-
-
-def snapshot_lookup_keys(
-    spark: SparkSession,
-    table: str,
-    keys: list[dict],
-    version: int | None = None,
-) -> DataFrame:
-    """Composite-key point lookup: rows matching ANY of the given key
-    dicts (all dicts must share one column set — e.g. ``[{"sym": "BTC",
-    "day": 3}, ...]``). The same two metadata prunes as the
-    single-column form, per key column: min/max range stats against each
-    column's value span, then the per-dir Blooms for every bloom-indexed
-    key column — a dir survives only if every usable prune keeps it.
-    Residual exact row filter (null-safe per-key conjunction, OR across
-    keys) applies after, so the prunes stay superset-exact. At 100 TB a
-    composite-id fetch opens the dirs the manifest cannot rule out, not
-    the table."""
-    if not keys:
-        raise ValueError("keys must be a non-empty list of {col: value} dicts")
-    cols = sorted(keys[0])
-    if not cols or any(sorted(k) != cols for k in keys):
-        raise ValueError("every key dict must share one non-empty column set")
-    v = _resolve_version(spark, table, version, None)
-    entries = _live_entries(spark, table, v)
-    for c in cols:
-        vals = [k[c] for k in keys if k[c] is not None]
-        if vals and len(vals) == len(keys):
-            keep = set(
-                _prune_entries(
-                    entries, c, _json_scalar(min(vals)), _json_scalar(max(vals))
-                )
-            )
-            entries = [e for e in entries if e[0] in keep]
-    if entries:
-        from pyspark.sql import types as T
-
-        head = read_snapshot(spark, table, version=v, merge_schema=True)
-        for c in cols:
-            if c not in head.columns:
-                raise ValueError(f"key column {c!r} not in {table}")
-        schema = T.StructType(
-            [T.StructField(c, head.schema[c].dataType, True) for c in cols]
-        )
-        probe = spark.createDataFrame(
-            [tuple(k[c] for c in cols) for k in keys], schema=schema
-        )
-        dirs = _bloom_prune_dirs(probe.dropDuplicates(cols), cols, entries)
-    else:
-        dirs = []
-    if not dirs:
-        return read_snapshot(spark, table, version=v).limit(0)
-    df = spark.read.option("mergeSchema", "true").parquet(*dirs)
-    cond = None
-    for k in keys:
-        kc = None
-        for c in cols:
-            t = F.col(c).eqNullSafe(F.lit(k[c]))
-            kc = t if kc is None else (kc & t)
-        cond = kc if cond is None else (cond | kc)
-    return df.where(cond)
-
-
-def register_snapshot_view(
-    spark: SparkSession,
-    table: str,
-    name: str,
-    version: int | None = None,
-    as_of: float | None = None,
-) -> None:
-    """Expose a snapshot (latest, pinned version, or as-of timestamp) to
-    SQL users as a temp view — `spark.sql(f"SELECT ... FROM {name}")`
-    over the manifest-resolved live set. The view binds the live-dir
-    list at registration time (the snapshot-isolation read contract);
-    re-register to pick up later commits."""
-    read_snapshot(spark, table, version=version, as_of=as_of).createOrReplaceTempView(
-        name
-    )
 
 
 def snapshot_history(spark: SparkSession, table: str) -> DataFrame:
@@ -1457,8 +1340,8 @@ def snapshot_append_batch(
 ) -> int | None:
     """Append one micro-batch as a snapshot version, exactly once: the
     batch id rides the manifest's ``operation`` field, so data and
-    applied-id commit in the SAME atomic rename (the state_swap.py
-    recipe, here for free because the manifest already is the commit).
+    applied-id commit in the SAME atomic rename (no separate batch
+    marker: the manifest already is the commit).
     A replayed batch (id ≤ the recorded max) appends nothing — a crash
     between data-dir write and manifest rename leaves an invisible,
     vacuumable orphan and the replay writes fresh. Single stream writer

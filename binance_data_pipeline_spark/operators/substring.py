@@ -51,7 +51,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["duplicate_spans_report", "dedup_substrings"]
+__all__ = ["dedup_substrings"]
 
 
 def _window_table(docs: DataFrame, id_col: str, text_col: str, min_len: int) -> DataFrame:
@@ -73,35 +73,6 @@ def _window_table(docs: DataFrame, id_col: str, text_col: str, min_len: int) -> 
             ).alias("w"),
         )
         .select("id", F.col("w.start").alias("start"), F.col("w.h").alias("h"))
-    )
-
-
-def duplicate_spans_report(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_len: int = 20,
-) -> DataFrame:
-    """Audit view: every duplicated ``min_len``-token window hash with its
-    occurrence count, distinct-doc count, and the canonical keeper
-    occurrence. The decision table behind dedup_substrings — run it alone
-    to size the problem before rewriting anything."""
-    w = _window_table(docs, id_col, text_col, min_len)
-    return (
-        w.groupBy("h")
-        .agg(
-            F.count(F.lit(1)).alias("n_occurrences"),
-            F.countDistinct("id").alias("n_docs"),
-            F.min(F.struct("id", "start")).alias("keeper"),
-        )
-        .where(F.col("n_occurrences") > 1)
-        .select(
-            "h",
-            "n_occurrences",
-            "n_docs",
-            F.col("keeper.id").alias("keeper_id"),
-            F.col("keeper.start").alias("keeper_start"),
-        )
     )
 
 

@@ -17,12 +17,6 @@ the industry-standard tracking-parameter strip):
 - query parameters: known tracking params removed (utm_*, gclid, ...),
   empty fragments of "&&" removed, remainder SORTED so permutations of
   the same parameters collapse (`?a=1&b=2` ≡ `?b=2&a=1`).
-
-`registered_domain` is the grouping key for per-site caps/budgets
-(quality gates): the real Public Suffix List
-algorithm (operators/psl.py — wildcards, exceptions, longest match,
-private hosting suffixes) over a packaged snapshot of the public list,
-with `rules=parse_psl(...)` accepting the full official file.
 """
 
 from __future__ import annotations
@@ -36,10 +30,8 @@ __all__ = [
     "url_port",
     "url_path",
     "url_query",
-    "registered_domain",
     "canonicalize_url",
     "dedup_by_url",
-    "domain_stats",
     "DEFAULT_TRACKING_PARAMS",
 ]
 
@@ -82,58 +74,6 @@ def url_path(col: Column | str) -> Column:
 def url_query(col: Column | str) -> Column:
     """Raw query string without the '?', '' when absent."""
     return F.regexp_extract(_c(col), r"\?([^#]*)", 1)
-
-
-def registered_domain(host: Column | str, rules=None) -> Column:
-    """The registrable domain of a hostname per the Public Suffix List
-    algorithm (operators/psl.py: exceptions beat all, longest rule wins,
-    default ``*`` rule otherwise): public suffix + one more label. So
-    ``a.github.io`` and ``b.github.io`` are DIFFERENT domains (private
-    hosting suffix), ``city.kawasaki.jp`` is itself a registrable domain
-    (exception rule), and ``foo.bar.ck`` groups under ``foo.bar.ck``
-    (wildcard TLD). A host that IS a public suffix, and IPv4 literals,
-    pass through whole — the right grouping key either way. All
-    map-side literal-array checks, zero Python, zero joins; pass
-    ``rules=psl.parse_psl(open("public_suffix_list.dat").read())`` to
-    serve the full official list instead of the packaged snapshot."""
-    from .psl import public_suffix_parts
-
-    h = _c(host)
-    labels = F.split(h, r"\.")
-    n = F.size(labels)
-    ps_parts = public_suffix_parts(h, rules)
-    reg_parts = ps_parts + F.lit(1)
-    reg = F.array_join(F.slice(labels, n - reg_parts + 1, reg_parts), ".")
-    is_ip = h.rlike(r"^[0-9]+\.[0-9]+\.[0-9]+\.[0-9]+$")
-    return F.when(is_ip | (n <= ps_parts), h).otherwise(reg)
-
-
-def attach_registered_domain(
-    df, host: str, rules, out_col: str = "domain"):
-    """``registered_domain`` at full Public Suffix List cardinality —
-    the broadcast-join variant (``psl.attach_public_suffix_parts``): the
-    ~9k-rule official file becomes a handful of KB-scale broadcast
-    relations, the corpus takes one BroadcastHashJoin probe per rule
-    depth and never shuffles, and the registrable-domain slice is the
-    same expression as the column form. Use this when serving
-    ``parse_psl(open('public_suffix_list.dat').read())`` whole; the
-    column form (``registered_domain``) stays the right shape for
-    trimmed rule sets (zero joins at all).
-
-    Returns ``df`` plus ``out_col``; equivalence with the column form
-    is pinned in tests/test_urls.py."""
-    from .psl import attach_public_suffix_parts
-
-    h = F.col(host)
-    labels = F.split(h, r"\.")
-    n = F.size(labels)
-    with_ps = attach_public_suffix_parts(df, host, rules, out_col="__ps_parts")
-    reg_parts = F.col("__ps_parts") + F.lit(1)
-    reg = F.array_join(F.slice(labels, n - reg_parts + 1, reg_parts), ".")
-    is_ip = h.rlike(r"^[0-9]+\.[0-9]+\.[0-9]+\.[0-9]+$")
-    return with_ps.withColumn(
-        out_col, F.when(is_ip | (n <= F.col("__ps_parts")), h).otherwise(reg)
-    ).drop("__ps_parts")
 
 
 def canonicalize_url(
@@ -195,27 +135,3 @@ def dedup_by_url(
     return kept.unionByName(
         with_key.where(F.col("__canon_url").isNull())
     ).drop("__canon_url")
-
-
-def domain_stats(
-    df: DataFrame, url_col: str = "url", strip_params: list[str] | None = None
-) -> DataFrame:
-    """Per-registered-domain crawl profile: total URLs, distinct
-    canonical URLs (the dup mass is the gap between the two), distinct
-    hosts. One hash aggregate; count_distinct expands to the standard
-    two-phase plan."""
-    host = url_host(F.col(url_col))
-    return (
-        df.select(
-            registered_domain(host).alias("domain"),
-            host.alias("host"),
-            canonicalize_url(F.col(url_col), strip_params).alias("canon"),
-        )
-        .where(F.col("canon").isNotNull())
-        .groupBy("domain")
-        .agg(
-            F.count(F.lit(1)).alias("n_urls"),
-            F.countDistinct("canon").alias("n_canonical"),
-            F.countDistinct("host").alias("n_hosts"),
-        )
-    )

@@ -10,11 +10,9 @@ Axes:
   3. recall at 100x       — scripts/scale_smoke.py --mult 100
                             --families ivf_build,lsh_build,ivfpq_build,recall_at_scale
                             (floors mirror plans/northstar)
-  4. quiet bench          — bench.py twice, pairwise-min per query;
-                            each pass adjudicated (quiet / cpu-tenancy /
-                            io-tenancy / unattributed-band) by
-                            bench.classify_bench_sample, and
-                            comparable_floor = min over QUIET passes
+  4. bench                — bench.py run --bench-passes times (default
+                            2): raw totals and the per-query min over
+                            the passes
 
 Usage:
     python scripts/round_close.py --round 10 \
@@ -176,7 +174,7 @@ def main() -> int:
         if rc != 0 or not floors_ok:
             ok = False
 
-    # ---- axis 4: quiet bench ---------------------------------------------
+    # ---- axis 4: bench ---------------------------------------------------
     samples = []
     for _ in range(args.bench_passes):
         rc, text = _run([sys.executable, "bench.py"], timeout=1800)
@@ -186,20 +184,6 @@ def main() -> int:
             break
         samples.append(j)
     if samples:
-        # per-pass adjudication (VERDICT r11 task 2): bench.py emits an
-        # "episode" verdict per sample; re-derive here for samples from
-        # older bench versions so the block is always populated
-        sys.path.insert(0, REPO)
-        from bench import classify_bench_sample
-
-        episodes = [
-            s.get("episode") or classify_bench_sample(s) for s in samples
-        ]
-        verdicts = [e.get("verdict") for e in episodes]
-        quiet_totals = [
-            s["value"] for s, e in zip(samples, episodes)
-            if e.get("verdict") == "quiet"
-        ]
         qmin = {
             q: min(s["queries"][q] for s in samples)
             for q in samples[0]["queries"]
@@ -207,21 +191,6 @@ def main() -> int:
         out["bench"] = {
             "passes": len(samples),
             "pairwise_min_total_sec": round(sum(qmin.values()), 3),
-            "pass_verdicts": verdicts,
-            "episodes": episodes,
-            # the number rounds compare: min over QUIET passes only —
-            # null when no pass was quiet (tenancy/band sessions are
-            # recorded but never become the floor)
-            "comparable_floor": (
-                round(min(quiet_totals), 3) if quiet_totals else None
-            ),
-            "host_drag": [s.get("host_drag") for s in samples],
-            "io_drag": [s.get("io_drag") for s in samples],
-            "combined_drag": [s.get("combined_drag") for s in samples],
-            "io_calibration_sec": [s.get("io_calibration_sec")
-                                   for s in samples],
-            "shuffle_calibration_sec": [s.get("shuffle_calibration_sec")
-                                        for s in samples],
             "raw_totals": [s.get("value") for s in samples],
             "queries_min": qmin,
         }

@@ -299,9 +299,9 @@ def main() -> None:
             # re-rank against the corpus (refine_source). r11 measured
             # 0.868 @100x at the old R=40 shortlist — ADC ties among
             # near-identical vectors overflow a small pool. r12 (VERDICT
-            # task 1) sizes the exact re-rank pool at R=1024 (the
-            # ivfpq_topk default): measured 1.0 @100x at the same wall
-            # time (25 s vs 34 s), so the floor moves 0.6 → 0.95.
+            # task 1) sizes the exact re-rank pool at R=1024
+            # (rerank_candidates below): measured 1.0 @100x at the same
+            # wall time (25 s vs 34 s), so the floor moves 0.6 → 0.95.
             ("ann_ivfpq", lambda: ivfpq_query(
                 spark, pqidx, q, k=10, nprobe=8, refine_source=emb,
                 rerank_candidates=1024), 0.95),

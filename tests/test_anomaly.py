@@ -1,5 +1,4 @@
-"""Anomaly detectors: planted spikes flagged, self-masking avoided,
-robust baseline survives a contaminated window, seasonal residuals,
+"""Anomaly detector: planted spikes flagged, self-masking avoided,
 warm-up NULLs, and a DuckDB cross-check of the z-score arithmetic."""
 
 from __future__ import annotations
@@ -8,13 +7,7 @@ import sys
 
 sys.path.insert(0, "/root/repo")
 
-import pytest
-
-from binance_data_pipeline_spark.operators.anomaly import (
-    robust_anomalies,
-    seasonal_residuals,
-    zscore_anomalies,
-)
+from binance_data_pipeline_spark.operators.anomaly import zscore_anomalies
 
 
 def _series(spark, values, key="s"):
@@ -54,40 +47,6 @@ def test_baseline_excludes_current_row(spark):
     # preceding-window baseline has zero variance -> NULL (can't score),
     # but crucially the row's own value contributed nothing
     assert out[5]["baseline_std"] == 0.0 and out[5]["zscore"] is None
-
-
-def test_robust_survives_contaminated_baseline(spark):
-    """A spike INSIDE the baseline window wrecks mean/std but not
-    median/IQR: the robust detector still flags the second spike."""
-    vals = [10, 10.4, 9.7, 10.1, 500.0, 9.9, 10.2, 10.0, 9.8, 480.0]
-    z = {
-        r["t"]: r
-        for r in zscore_anomalies(
-            _series(spark, vals), "x", "t", ["series"], window=8, min_baseline=4
-        ).collect()
-    }
-    r_ = {
-        r["t"]: r
-        for r in robust_anomalies(
-            _series(spark, vals), "x", "t", ["series"], window=8, min_baseline=4
-        ).collect()
-    }
-    assert r_[9]["is_anomaly"] is True       # robust: flagged
-    assert z[9]["is_anomaly"] is False       # std inflated by t=4 spike: missed
-    assert r_[4]["is_anomaly"] is True       # the first spike itself
-
-
-def test_seasonal_residuals(spark):
-    vals = [1, 2, 3, 1, 2, 3, 1, 2, 9]
-    out = {
-        r["t"]: r
-        for r in seasonal_residuals(_series(spark, vals), "x", "t", 3, ["series"]).collect()
-    }
-    for t in (0, 1, 2):
-        assert out[t]["seasonal_baseline"] is None
-    assert out[5]["residual"] == 0.0 and out[8]["residual"] == 6.0
-    with pytest.raises(ValueError, match="season"):
-        seasonal_residuals(_series(spark, vals), "x", "t", 0)
 
 
 def test_zscore_matches_duckdb(spark):

@@ -229,79 +229,6 @@ def test_files_per_bucket_salting(spark, tmp_path):
         build_bm25_index(docs, str(tmp_path / "bad"), files_per_bucket=0)
 
 
-def test_append_matches_full_rebuild_exactly(spark, tmp_path):
-    """Appending new docs re-merges df/N/avgdl exactly, so post-append
-    scores equal an index built over the union corpus bit-for-bit."""
-    from binance_data_pipeline_spark.operators.bm25 import append_to_bm25_index
-
-    old = spark.createDataFrame(CORPUS, "doc_id string, text string")
-    new = spark.createDataFrame(
-        [("d5", "the cat studied quantum electrodynamics"),
-         ("d6", "another mat for another cat")],
-        "doc_id string, text string",
-    )
-    queries = spark.createDataFrame(
-        [("q1", "cat mat"), ("q2", "quantum the")], "query_id string, text string"
-    )
-
-    idx = str(tmp_path / "grown")
-    bm25_topk(queries, old, k=6, index_path=idx, n_buckets=8).collect()
-    assert append_to_bm25_index(spark, idx, new, batch_id=1) == 2
-    grown = {
-        (r["query_id"], r["doc_id"]): (r["score"], r["rk"])
-        for r in bm25_query(spark, idx, queries, k=6).collect()
-    }
-
-    rebuilt = {
-        (r["query_id"], r["doc_id"]): (r["score"], r["rk"])
-        for r in bm25_topk(
-            queries, old.unionByName(new), k=6, index_path=str(tmp_path / "fresh"),
-            n_buckets=8,
-        ).collect()
-    }
-    assert grown == rebuilt
-
-    # replay: nothing appended, scores unchanged
-    assert append_to_bm25_index(spark, idx, new, batch_id=1) == 0
-    again = {
-        (r["query_id"], r["doc_id"]): (r["score"], r["rk"])
-        for r in bm25_query(spark, idx, queries, k=6).collect()
-    }
-    assert again == grown
-
-
-def test_streaming_bm25_append_exactly_once(spark, tmp_path):
-    from binance_data_pipeline_spark.operators.bm25 import streaming_bm25_append
-
-    old = spark.createDataFrame(CORPUS, "doc_id string, text string")
-    queries = spark.createDataFrame([("q", "cat telescope")], "query_id string, text string")
-    idx = str(tmp_path / "stream_idx")
-    bm25_topk(queries, old, k=5, index_path=idx, n_buckets=8).collect()
-
-    src = str(tmp_path / "arrivals")
-    spark.createDataFrame(
-        [("s1", "a telescope watches the cat"), ("s2", "telescope lenses and mirrors")],
-        "doc_id string, text string",
-    ).write.parquet(src)
-    stream = spark.readStream.schema("doc_id string, text string").parquet(src)
-    q = streaming_bm25_append(stream, idx, str(tmp_path / "ck1"), available_now=True)
-    q.awaitTermination(120)
-
-    hits = {r["doc_id"] for r in bm25_query(spark, idx, queries, k=5).collect()}
-    assert {"s1", "s2"} <= hits
-    n_docs = spark.read.parquet(os.path.join(idx, "stats.parquet")).first()["n_docs"]
-    assert n_docs == 6
-
-    # checkpoint loss: batch 0 re-delivered under a fresh checkpoint is
-    # skipped by the commit marker — stats unchanged, no double postings
-    stream2 = spark.readStream.schema("doc_id string, text string").parquet(src)
-    q2 = streaming_bm25_append(stream2, idx, str(tmp_path / "ck2"), available_now=True)
-    q2.awaitTermination(120)
-    assert spark.read.parquet(os.path.join(idx, "stats.parquet")).first()["n_docs"] == 6
-    postings = spark.read.parquet(os.path.join(idx, "postings.parquet"))
-    assert postings.where(F.col("doc") == "s1").count() == len(set("a telescope watches the cat".split()))
-
-
 def test_serve_plan_drops_terms_scan_and_pins_exchange_shapes(spark, tmp_path):
     """Round-13 serve-path pins: (a) a localized probe resolves idf from
     the memoized term dictionary, so the serve plan reads ONLY the
@@ -367,25 +294,25 @@ def test_serve_plan_drops_terms_scan_and_pins_exchange_shapes(spark, tmp_path):
 
 
 def test_memoized_idf_invalidates_on_append(spark, tmp_path):
-    """The term-dictionary memo keys on the terms-dir listing: an append
-    rewrites terms.parquet, so the NEXT serve call must score with the
-    re-merged df/idf (not the stale map)."""
+    """The term-dictionary memo keys on the terms-dir listing: rebuilding
+    the index at the same path over a grown corpus rewrites
+    terms.parquet, so the NEXT serve call must score with the new df/idf
+    (not the stale map)."""
     from binance_data_pipeline_spark.operators.bm25 import (
         _cached_term_idf,
-        append_to_bm25_index,
+        build_bm25_index,
     )
 
     docs = spark.createDataFrame(CORPUS, "doc_id string, text string")
-    queries = spark.createDataFrame([("q", "cat")], "query_id string, text string")
-    idx = str(tmp_path / "bm25_idx_append")
-    bm25_topk(queries, docs, k=4, index_path=idx, n_buckets=8).collect()
+    idx = str(tmp_path / "bm25_idx_grown")
+    build_bm25_index(docs, idx, n_buckets=8)
     idf_before = _cached_term_idf(spark, idx)["cat"]
 
-    new = spark.createDataFrame(
+    grown = docs.unionByName(spark.createDataFrame(
         [("d5", "another cat appears"), ("d6", "no feline here")],
         "doc_id string, text string",
-    )
-    append_to_bm25_index(spark, idx, new)
+    ))
+    build_bm25_index(grown, idx, n_buckets=8)
     idf_after = _cached_term_idf(spark, idx)["cat"]
     assert idf_after != idf_before  # df 3->4, N 4->6: idf must move
 

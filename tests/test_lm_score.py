@@ -111,42 +111,3 @@ def test_filter_by_lm_and_plan(spark, ref_lm):
     assert not errors, errors
     plan = scores._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan and "EvalPython" not in plan
-
-
-def test_bucket_by_lm_quantile_split(spark):
-    """CCNet bucketing on a continuous fluency gradient: buckets are
-    ordered by cross-entropy, sized ~ the requested thirds, and invalid
-    fractions are rejected. (Exact thirds on heavily-TIED scores are
-    ambiguous by nature — the gradient makes the quantiles clean.)"""
-    import pytest as _pytest
-
-    from binance_data_pipeline_spark.operators.lm_score import bucket_by_lm, train_ngram_lm
-
-    fluent_words = "the quick brown fox jumps over the lazy dog near the river bank".split()
-    ref = spark.createDataFrame(
-        [(i, " ".join(fluent_words)) for i in range(20)], "doc_id long, text string"
-    )
-    lm = train_ngram_lm(ref)
-
-    junk_words = ["zxqv", "wfpt", "blorg", "qqnnx", "vrm", "zzkt"]
-    rows = []
-    for i in range(30):  # doc i: i junk tokens out of 30 -> CE rises with i
-        toks = [fluent_words[j % len(fluent_words)] for j in range(30 - i)] + [
-            junk_words[j % len(junk_words)] for j in range(i)
-        ]
-        rows.append((i, " ".join(toks)))
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: (r["cross_entropy"], r["lm_bucket"]) for r in bucket_by_lm(docs, lm).collect()}
-    assert len(out) == 30
-    by_bucket = {}
-    for ce, b in out.values():
-        by_bucket.setdefault(b, []).append(ce)
-    assert set(by_bucket) == {"head", "middle", "tail"}
-    assert max(by_bucket["head"]) <= min(by_bucket["middle"]) <= min(by_bucket["tail"])
-    for b in by_bucket:
-        assert 7 <= len(by_bucket[b]) <= 13, (b, len(by_bucket[b]))
-    # the gradient maps to the buckets: most-fluent doc in head, most-junk in tail
-    assert out[0][1] == "head" and out[29][1] == "tail"
-
-    with _pytest.raises(ValueError, match="head_frac"):
-        bucket_by_lm(docs, lm, head_frac=0.7, tail_frac=0.5)

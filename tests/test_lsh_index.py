@@ -141,65 +141,3 @@ def test_empty_query_batch_returns_typed_empty(spark, tmp_path):
     out = lsh_query(spark, idx, e.where(F.col("vec_id") < 0), k=3)
     assert out.count() == 0
     assert out.columns == ["query_id", "neighbor_id", "sim", "rk"]
-
-
-def test_append_grows_index_without_rebuild_and_replay_skips(spark, tmp_path):
-    from binance_data_pipeline_spark.operators.ivf import (
-        _read_index_fingerprint,
-        corpus_fingerprint,
-    )
-    from binance_data_pipeline_spark.operators.lsh_index import append_to_lsh_index
-
-    src = str(tmp_path / "corpus.parquet")
-    load_table(spark, SF, "embeddings").where(F.col("vec_id") < 150).write.parquet(src)
-    e = spark.read.parquet(src)
-    idx = str(tmp_path / "lsh")
-    q0 = e.where(F.col("vec_id") < 3)
-    lsh_topk(q0, e, k=2, index_path=idx).collect()
-
-    # grow the corpus: append a clone of vector 1 under a new id; pass the
-    # grown corpus's fingerprint so the serve gate stays closed
-    clone = e.where(F.col("vec_id") == 1).withColumn("vec_id", F.lit(999_999).cast("long"))
-    clone.write.mode("append").parquet(src)
-    grown = spark.read.parquet(src)
-    fp = corpus_fingerprint(grown, "p4|t12|d64|vec_id|embedding")
-    n = append_to_lsh_index(spark, idx, clone, fingerprint=fp, batch_id=7)
-    assert n == 1
-
-    # sentinel: a rebuild atomically replaces the index dir, deleting this
-    open(os.path.join(idx, "__sentinel"), "w").close()
-    got = lsh_topk(grown.where(F.col("vec_id") == 1), grown, k=2, index_path=idx)
-    top = got.where("rk = 1").first()
-    # the appended clone is vector 1's exact duplicate: top hit, sim 1.0
-    assert top["neighbor_id"] == 999_999 and top["sim"] == pytest.approx(1.0, abs=1e-4)
-    assert os.path.exists(os.path.join(idx, "__sentinel")), "index was rebuilt"
-    assert _read_index_fingerprint(spark, idx) == fp
-
-    # replay of the same batch id appends nothing and changes no rows
-    before = spark.read.parquet(os.path.join(idx, "buckets.parquet")).count()
-    assert append_to_lsh_index(spark, idx, clone, fingerprint=fp, batch_id=7) == 0
-    after = spark.read.parquet(os.path.join(idx, "buckets.parquet")).count()
-    assert before == after
-
-
-def test_append_new_buckets_become_probeable_same_process(spark, tmp_path):
-    """An appended vector can open a (tbl, sig) bucket dir that did not
-    exist at build time; the meta rewrite must re-key the memoized
-    existence set so the SAME process probes it."""
-    from binance_data_pipeline_spark.operators.lsh_index import append_to_lsh_index
-
-    base = spark.createDataFrame(
-        [(int(i), [1.0] * 64) for i in range(5)], "vec_id long, embedding array<double>"
-    )
-    idx = str(tmp_path / "lsh")
-    build_lsh_index(base, idx)
-    # an orthogonal-ish vector lands in different buckets than the all-ones
-    newv = spark.createDataFrame(
-        [(100, [1.0] + [-1.0] * 63)], "vec_id long, embedding array<double>"
-    )
-    # prime the memo with the PRE-append listing, then append
-    lsh_query(spark, idx, newv, k=1).collect()
-    append_to_lsh_index(spark, idx, newv)
-    got = lsh_query(spark, idx, newv, k=1, exclude_self=False)
-    top = got.first()
-    assert top is not None and top["neighbor_id"] == 100 and top["sim"] == pytest.approx(1.0, abs=1e-4)

@@ -40,10 +40,9 @@ def test_hit_miss_and_rewrite_invalidation(spark, tmp_path):
 
 def test_cached_retrieval_equals_cold(spark, tmp_path):
     """hybrid_search twice against one root: the second (memoized) call
-    must return the identical ranking; appending must invalidate so the
-    new doc is servable."""
+    must return the identical ranking; rebuilding the root with a new
+    doc must invalidate so the new doc is servable."""
     from binance_data_pipeline_spark.operators.retrieval import (
-        append_to_retrieval_root,
         build_retrieval_index,
         hybrid_search,
     )
@@ -72,7 +71,10 @@ def test_cached_retrieval_equals_cold(spark, tmp_path):
         [("d4", "offshore wind turbines harvest stronger wind energy")],
         "doc_id string, text string",
     )
-    append_to_retrieval_root(spark, root, new)
+    build_retrieval_index(
+        spark, docs.unionByName(new), root, embed_dim=32, n_term_buckets=4,
+        n_centroids=2,
+    )
     after = [r["doc_id"] for r in
              hybrid_search(spark, root, q, k=4).orderBy("rk").collect()]
-    assert "d4" in after  # stale memo would have hidden the appended doc
+    assert "d4" in after  # stale memo would have hidden the added doc

@@ -26,7 +26,7 @@ def test_every_operator_module_imports_and_is_indexed():
     import binance_data_pipeline_spark.operators as ops
 
     mods = [m.name for m in pkgutil.iter_modules(ops.__path__)]
-    assert len(mods) >= 35
+    assert len(mods) == 34
     for m in mods:
         importlib.import_module(f"binance_data_pipeline_spark.operators.{m}")
     missing = [m for m in mods if m not in (ops.__doc__ or "")]
@@ -176,36 +176,11 @@ _UNCALLED_ALLOWED = {
     "catalog:register_testdata",
     "lifecycle:persistent_rdd_count",
     "plans/audit:assert_scale_clean",
+    "operators/asof:asof_join",
     "operators/embedder:stub_encoder",
     "operators/metacache:invalidate_meta",
     "operators/retrieval:stub_scorer",
     "sources/csv_rules:rules_from_rows",
-    # next deletion: operator surface no query, job or script calls
-    "jobs:corpus_report",
-    "operators/anomaly:robust_anomalies",
-    "operators/anomaly:seasonal_residuals",
-    "operators/asof:asof_join",
-    "operators/lm_score:bucket_by_lm",
-    "operators/pq:encode_pq",
-    "operators/pq:ivfpq_topk",
-    "operators/quality_rules:quality_report",
-    "operators/scd:scd2_lookup",
-    "operators/sketches:cms_query",
-    "operators/sketches:cms_rollup",
-    "operators/snapshots:read_snapshot_ranges",
-    "operators/snapshots:register_snapshot_view",
-    "operators/snapshots:snapshot_lookup_keys",
-    "operators/substring:duplicate_spans_report",
-    "operators/urls:attach_registered_domain",
-    "operators/urls:domain_stats",
-    # next deletion: the index-append family (incremental appends into the
-    # retrieval indexes, with state_swap's batch markers; no ingest path
-    # feeds them)
-    "operators/bm25:streaming_bm25_append",
-    "operators/ivf:streaming_ivf_append",
-    "operators/lsh_index:append_to_lsh_index",
-    "operators/pq:append_to_ivfpq_index",
-    "operators/retrieval:streaming_retrieval_append",
 }
 
 _WORD = re.compile(r"[A-Za-z_]\w*")

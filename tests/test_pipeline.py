@@ -596,36 +596,6 @@ def test_build_training_corpus_semantic_stage(spark, tmp_path):
     assert exported == {kept_of_pair, 3, 4}
 
 
-def test_corpus_report_composes_sketch_families(spark, tmp_path):
-    """corpus_report: token quantiles (KLL), residual-dup rate (HLL over
-    normalized fingerprints), heavy-hitter domains (MG) — one dict, no
-    per-metric rescan. Checked against exact computation on a corpus with
-    a known planted duplicate."""
-    from binance_data_pipeline_spark.jobs import corpus_report
-
-    rows = (
-        [(i, "en", "unique english document number %d with several tokens" % i)
-         for i in range(40)]
-        + [(100, "en", "dup body exactly the same"), (101, "en", "dup body exactly the same")]
-        + [(200 + i, "de", "deutsches dokument nummer %d mit etlichen worten" % i)
-           for i in range(10)]
-    )
-    src = str(tmp_path / "corpus.parquet")
-    spark.createDataFrame(rows, "doc_id long, lang string, text string").write.parquet(src)
-
-    rep = corpus_report(spark, src, domain_col="lang")
-    assert rep["n_docs"] == 52
-    en, de = rep["domains"]["en"], rep["domains"]["de"]
-    assert en["n_docs"] == 42 and de["n_docs"] == 10
-    # planted exact dup: 42 docs, 41 distinct fingerprints (HLL ±2% at this size)
-    assert 0.0 < en["residual_dup_rate"] < 0.1
-    assert de["residual_dup_rate"] < 0.05
-    assert en["p50_tokens"] >= 5 and en["p95_tokens"] >= en["p50_tokens"]
-    # heavy hitters rank en first
-    assert rep["top_domains"][0]["domain"] == "en"
-    assert rep["total_tokens"] > 0
-
-
 def test_build_training_corpus_lm_gate(spark, tmp_path):
     """Optional CCNet fluency gate: gibberish docs fall at the quality
     stage; fluent docs survive to export."""

@@ -37,15 +37,11 @@ def test_behavior_plans_are_scale_clean(spark):
 
 
 def test_anomaly_plans_are_scale_clean(spark):
-    from binance_data_pipeline_spark.operators.anomaly import (
-        robust_anomalies,
-        zscore_anomalies,
-    )
+    from binance_data_pipeline_spark.operators.anomaly import zscore_anomalies
 
     ts = spark.createDataFrame(
         [("a", float(i), float(i % 7)) for i in range(50)],
         "series string, t double, v double",
     )
     _clean(zscore_anomalies(ts, "v", "t", group_cols=["series"], window=10))
-    _clean(robust_anomalies(ts, "v", "t", group_cols=["series"], window=10))
 

@@ -1,10 +1,9 @@
-"""IVF-PQ tests: codebook determinism, reconstruction quality, code
-compression, recall vs brute (refined and compressed-domain), persisted
-build-once index, and the Arrow-only plan audit."""
+"""IVF-PQ tests: codebook determinism and geometry checks, recall vs
+brute (refined and compressed-domain) served from the persisted index,
+and the Arrow-only plan audit."""
 
 from __future__ import annotations
 
-import os
 import sys
 
 sys.path.insert(0, "/root/repo")
@@ -17,9 +16,7 @@ from binance_data_pipeline_spark.catalog import load_table
 from binance_data_pipeline_spark.operators import similarity as S
 from binance_data_pipeline_spark.operators.pq import (
     build_ivfpq_index,
-    encode_pq,
     ivfpq_query,
-    ivfpq_topk,
     train_pq_codebook,
 )
 from binance_data_pipeline_spark.plans.audit import audit_plan
@@ -29,6 +26,16 @@ SF = "/root/testdata/sf0.001"
 
 def _emb(spark):
     return load_table(spark, SF, "embeddings")
+
+
+def _serve(e, queries, idx, refine=True, **kw):
+    """Build the persisted index over ``e`` and serve ``queries`` from
+    it, re-ranking against ``e`` unless ``refine`` is off."""
+    build_ivfpq_index(e, idx)
+    return ivfpq_query(
+        e.sparkSession, idx, queries, k=3, refine_source=e if refine else None,
+        **kw,
+    )
 
 
 def test_codebook_shape_and_determinism(spark):
@@ -50,39 +57,7 @@ def test_codebook_rejects_bad_geometry(spark):
         train_pq_codebook(e, m=8, ksub=100_000)
 
 
-def test_encode_reconstruction_beats_global_mean(spark):
-    """PQ reconstruction must beat the degenerate 1-centroid quantizer:
-    mean squared residual of encoded vectors well under the variance
-    around the global mean (unit-normalized space)."""
-    e = _emb(spark)
-    cb = train_pq_codebook(e, m=8, ksub=16, iterations=5)
-    codes = {r["id"]: list(r["code"]) for r in encode_pq(e, cb).collect()}
-    raw = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64) for r in e.collect()}
-    X = np.stack([raw[i] for i in sorted(raw)])
-    X = X / np.linalg.norm(X, axis=1, keepdims=True)
-    recon = np.stack(
-        [np.concatenate([cb[m, c] for m, c in enumerate(codes[i])]) for i in sorted(raw)]
-    )
-    pq_mse = ((X - recon) ** 2).sum(axis=1).mean()
-    mean_mse = ((X - X.mean(axis=0)) ** 2).sum(axis=1).mean()
-    # near-iid synthetic vectors are PQ's worst case; rate-distortion for
-    # 16 centroids in 8-dim predicts ~k^(-2/d) ≈ 0.5 of the variance
-    assert pq_mse < 0.7 * mean_mse, (pq_mse, mean_mse)
-    # every code entry addresses a real codebook row
-    flat = np.array([c for v in codes.values() for c in v])
-    assert flat.min() >= 0 and flat.max() < 16
-
-
-def test_code_is_compressed(spark):
-    """The whole point: cells store M smallints (16 B at m=8), not D
-    floats (256 B at d=64)."""
-    e = _emb(spark)
-    cb = train_pq_codebook(e, m=8, ksub=16)
-    row = encode_pq(e, cb).first()
-    assert len(row["code"]) == 8  # vs 64-dim raw vector
-
-
-def test_ivfpq_recall_refined_vs_brute(spark):
+def test_ivfpq_recall_refined_vs_brute(spark, tmp_path):
     e = _emb(spark)
     queries = e.where(F.col("vec_id") < 20)
     brute = {
@@ -91,8 +66,9 @@ def test_ivfpq_recall_refined_vs_brute(spark):
     }
     pq = {
         (r["query_id"], r["neighbor_id"])
-        for r in ivfpq_topk(
-            queries, e, k=3, n_centroids=16, nprobe=6, refine_factor=8
+        for r in _serve(
+            e, queries, str(tmp_path / "idx"), nprobe=6, refine_factor=8,
+            rerank_candidates=1024,
         ).collect()
     }
     recall = len(pq & brute) / len(brute)
@@ -103,7 +79,7 @@ def test_ivfpq_recall_refined_vs_brute(spark):
     assert all(v == 3 for v in per_q.values())
 
 
-def test_ivfpq_compressed_domain_still_finds_neighbors(spark):
+def test_ivfpq_compressed_domain_still_finds_neighbors(spark, tmp_path):
     """refine=False never touches a full vector after the probe — ADC
     ranks alone. Recall floor is looser (quantization noise) but must
     stay far above chance (3 of 499 ≈ 0.006)."""
@@ -115,15 +91,16 @@ def test_ivfpq_compressed_domain_still_finds_neighbors(spark):
     }
     pq = {
         (r["query_id"], r["neighbor_id"])
-        for r in ivfpq_topk(
-            queries, e, k=3, n_centroids=16, nprobe=6, refine=False
+        for r in _serve(
+            e, queries, str(tmp_path / "idx"), refine=False, nprobe=6,
+            rerank_candidates=1024,
         ).collect()
     }
     recall = len(pq & brute) / len(brute)
     assert recall >= 0.2, f"compressed-domain recall {recall} too low"
 
 
-def test_ivfpq_rerank_pool_makes_search_exact(spark):
+def test_ivfpq_rerank_pool_makes_search_exact(spark, tmp_path):
     """The r12 recall fix (VERDICT r11 task 1): with every cell probed and
     a re-rank pool covering all candidates, the exact-dot re-rank must
     reproduce brute-force top-k EXACTLY — ADC only shortlists, the final
@@ -137,59 +114,12 @@ def test_ivfpq_rerank_pool_makes_search_exact(spark):
     }
     pq = {
         (r["query_id"], r["neighbor_id"])
-        for r in ivfpq_topk(
-            queries, e, k=3, n_centroids=16, nprobe=16, rerank_candidates=1000
+        for r in _serve(
+            e, queries, str(tmp_path / "idx"), nprobe=16,
+            rerank_candidates=1000,
         ).collect()
     }
     assert pq == brute
-
-
-def test_ivfpq_persisted_index_build_once(spark, tmp_path):
-    e = _emb(spark)
-    queries = e.where(F.col("vec_id") < 10)
-    idx = str(tmp_path / "ivfpq_index")
-
-    first = {
-        (r["query_id"], r["neighbor_id"], r["rk"])
-        for r in ivfpq_topk(queries, e, k=3, nprobe=6, index_path=idx).collect()
-    }
-    # committed layout: meta last, cells partitioned by cell_id, codebook present
-    assert os.path.exists(os.path.join(idx, "meta.parquet"))
-    assert os.path.exists(os.path.join(idx, "codebook.parquet"))
-    assert any(
-        p.startswith("cell_id=") for p in os.listdir(os.path.join(idx, "cells.parquet"))
-    )
-    mtime = os.path.getmtime(os.path.join(idx, "meta.parquet"))
-
-    again = {
-        (r["query_id"], r["neighbor_id"], r["rk"])
-        for r in ivfpq_topk(queries, e, k=3, nprobe=6, index_path=idx).collect()
-    }
-    assert first == again
-    # unchanged corpus + params -> no rebuild (meta untouched)
-    assert os.path.getmtime(os.path.join(idx, "meta.parquet")) == mtime
-
-    # direct query against the persisted index, refined by the corpus
-    # (rerank_candidates matches ivfpq_topk's default pool)
-    direct = {
-        (r["query_id"], r["neighbor_id"], r["rk"])
-        for r in ivfpq_query(
-            spark, idx, queries, k=3, nprobe=6, refine_source=e,
-            rerank_candidates=1024,
-        ).collect()
-    }
-    assert first == direct
-
-
-def test_ivfpq_param_change_rebuilds(spark, tmp_path):
-    e = _emb(spark)
-    queries = e.where(F.col("vec_id") < 5)
-    idx = str(tmp_path / "ivfpq_index")
-    ivfpq_topk(queries, e, k=3, nprobe=6, index_path=idx).collect()
-    mtime = os.path.getmtime(os.path.join(idx, "meta.parquet"))
-    # ksub is part of the fingerprint params -> rebuild
-    ivfpq_topk(queries, e, k=3, nprobe=6, ksub=8, index_path=idx).collect()
-    assert os.path.getmtime(os.path.join(idx, "meta.parquet")) != mtime
 
 
 def test_ivfpq_plan_is_scale_clean(spark, tmp_path):
@@ -197,8 +127,6 @@ def test_ivfpq_plan_is_scale_clean(spark, tmp_path):
     row-at-a-time eval, in both build inputs and the query plan."""
     e = _emb(spark)
     queries = e.where(F.col("vec_id") < 5)
-    idx = str(tmp_path / "ivfpq_index")
-    ivfpq_topk(queries, e, k=3, nprobe=6, index_path=idx).collect()
-    plan = ivfpq_query(spark, idx, queries, k=3, nprobe=6, refine_source=e)
+    plan = _serve(e, queries, str(tmp_path / "ivfpq_index"), nprobe=6)
     findings = [f for f in audit_plan(plan) if f.code in ("PY_ROW_EVAL", "CARTESIAN")]
     assert findings == [], findings

@@ -244,55 +244,3 @@ def test_redaction_never_throws_and_is_idempotent(spark, texts):
     b = {r["doc_id"]: r["t"] for r in twice.collect()}
     assert a == b
 
-
-# ------------------------------------------------- sketch algebra properties
-
-@settings(max_examples=40, deadline=None)
-@given(
-    a=st.lists(st.floats(min_value=-1e6, max_value=1e6, allow_nan=False), max_size=400),
-    b=st.lists(st.floats(min_value=-1e6, max_value=1e6, allow_nan=False), max_size=400),
-    c=st.lists(st.floats(min_value=-1e6, max_value=1e6, allow_nan=False), max_size=400),
-)
-def test_quantile_sketch_merge_counts_and_bounds(a, b, c):
-    """Merge algebra invariants for any inputs: n adds exactly; every
-    estimate lies within the min/max of the merged data; merge order
-    never changes n or violates the range (associativity up to error)."""
-    from binance_data_pipeline_spark.operators.quantiles import (
-        sketch_build,
-        sketch_merge,
-        sketch_quantiles,
-    )
-
-    ka, kb, kc = (sketch_build(x, k=32) for x in (a, b, c))
-    left = sketch_merge(sketch_merge(ka, kb), kc)
-    right = sketch_merge(ka, sketch_merge(kb, kc))
-    allv = a + b + c
-    assert left["n"] == right["n"] == len(allv)
-    if allv:
-        lo, hi = min(allv), max(allv)
-        for sk in (left, right):
-            for est in sketch_quantiles(sk, [0.0, 0.5, 1.0]):
-                assert lo <= est <= hi
-
-
-@settings(max_examples=40, deadline=None)
-@given(
-    items=st.lists(st.sampled_from([f"i{j}" for j in range(30)]), max_size=600),
-    cut=st.integers(min_value=1, max_value=599),
-)
-def test_mg_summary_error_invariant_any_split(items, cut):
-    """For ANY item stream and ANY split point, the merged MG summary
-    obeys the per-item guarantee true − n/k ≤ est ≤ true."""
-    from collections import Counter
-
-    from binance_data_pipeline_spark.operators.heavyhitters import mg_build, mg_merge
-
-    k = 8
-    cut = min(cut, len(items))
-    merged = mg_merge(mg_build(items[:cut], k=k), mg_build(items[cut:], k=k))
-    truth = Counter(items)
-    n = len(items)
-    assert merged["n"] == n
-    for item, est in merged["c"].items():
-        assert est <= truth[item]
-        assert truth[item] - est <= n / k + 1e-9

@@ -1,7 +1,6 @@
 """Gopher/C4 quality-rule bundles and per-domain filtering: rule flags
 fire on the right pathologies, domain thresholds override the default,
-the gate is broadcast-join + map-side only, and the report counts match
-hand-computed failures."""
+and the gate is broadcast-join + map-side only."""
 
 from __future__ import annotations
 
@@ -16,7 +15,6 @@ from binance_data_pipeline_spark.operators.quality_rules import (
     c4_flags,
     filter_by_domain,
     gopher_flags,
-    quality_report,
 )
 
 GOOD = (
@@ -104,18 +102,6 @@ def test_filter_by_domain_is_broadcast_map_only(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
     assert "Exchange hashpartitioning" not in plan and "Exchange rangepartitioning" not in plan
-
-
-def test_quality_report_counts(spark):
-    df = _docs(
-        spark,
-        [(1, GOOD, "a"), (2, BULLETY, "a"), (3, GOOD, "b"), (4, CODE, "b")],
-    )
-    rep = {r["domain"]: r.asDict() for r in quality_report(df).collect()}
-    assert rep["a"]["n_docs"] == 2 and rep["b"]["n_docs"] == 2
-    assert rep["a"]["fail_bullet_lines_ok"] == 1
-    assert rep["b"]["fail_no_braces"] == 1
-    assert rep["a"]["pass_all"] == 1 and rep["b"]["pass_all"] == 1
 
 
 def test_filter_on_real_documents_table(spark):

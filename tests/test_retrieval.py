@@ -241,140 +241,11 @@ def test_self_contained_root_seed_is_pinned(spark, tmp_path):
     assert rows and rows[0]["doc_id"] == "d1"  # exact text match wins both legs
 
 
-def test_append_grows_self_contained_root(spark, tmp_path):
-    """append_to_retrieval_root on a self-contained root: the new doc
-    becomes searchable through BOTH legs (its embedding generated with
-    the manifest's encoder), the manifest count grows, and a replay of
-    the same batch_id is a complete no-op."""
-    from binance_data_pipeline_spark.operators.retrieval import (
-        append_to_retrieval_root,
-    )
-
-    docs = spark.createDataFrame(DOCS, "doc_id string, text string")
-    root = str(tmp_path / "grow")
-    build_retrieval_index(
-        spark, docs, root, embed_dim=64, n_term_buckets=8, n_centroids=2,
-    )
-    new = spark.createDataFrame(
-        [("d5", "geothermal plants tap underground heat for electricity")],
-        "doc_id string, text string",
-    )
-    counts = append_to_retrieval_root(spark, root, new, batch_id=0)
-    assert counts == {"passages_appended": 1, "bm25_appended": 1, "ann_appended": 1}
-    m = spark.read.parquet(root + "/manifest.parquet").first()
-    assert m["n_passages"] == 5
-
-    queries = spark.createDataFrame(
-        [("q1", "geothermal plants tap underground heat for electricity")],
-        "query_id string, text string",
-    )
-    rows = sorted(hybrid_search(spark, root, queries, k=3).collect(),
-                  key=lambda r: r["rk"])
-    assert rows[0]["doc_id"] == "d5"
-    assert rows[0]["rrf_score"] > 1.0 / 61  # found by BOTH legs
-
-    # replay: same batch id → nothing appended anywhere
-    replay = append_to_retrieval_root(spark, root, new, batch_id=0)
-    assert replay == {"passages_appended": 0, "bm25_appended": 0, "ann_appended": 0}
-    assert spark.read.parquet(root + "/passages.parquet").count() == 5
-    assert spark.read.parquet(root + "/manifest.parquet").first()["n_passages"] == 5
-
-
-def test_append_chunked_root_reuses_build_geometry(spark, tmp_path):
-    """A chunked root chunks appended docs with the EXACT build-time
-    window (manifest-recorded), producing doc#idx passage ids."""
-    from binance_data_pipeline_spark.operators.retrieval import (
-        append_to_retrieval_root,
-    )
-
-    docs = spark.createDataFrame(DOCS, "doc_id string, text string")
-    root = str(tmp_path / "chunked")
-    build_retrieval_index(
-        spark, docs, root, chunk_tokens=4, overlap_tokens=1,
-        n_term_buckets=8,
-    )
-    new = spark.createDataFrame(
-        [("d9", "one two three four five six seven")],
-        "doc_id string, text string",
-    )
-    counts = append_to_retrieval_root(spark, root, new)
-    assert counts["passages_appended"] >= 2  # 7 tokens, window 4 step 3
-    ids = {r["doc_id"] for r in
-           spark.read.parquet(root + "/passages.parquet").collect()}
-    assert "d9#0" in ids and "d9#1" in ids
-
-
-def test_append_external_embedding_root_requires_vectors(spark, tmp_path):
-    from binance_data_pipeline_spark.operators.retrieval import (
-        append_to_retrieval_root,
-    )
-
-    root, _ = _build(spark, tmp_path)  # external EMB table
-    new = spark.createDataFrame(
-        [("d5", "geothermal plants tap underground heat")],
-        "doc_id string, text string",
-    )
-    with pytest.raises(ValueError, match="new_embeddings"):
-        append_to_retrieval_root(spark, root, new)
-    counts = append_to_retrieval_root(
-        spark, root, new,
-        new_embeddings=spark.createDataFrame(
-            [("d5", [0.5, 0.5, 0.1])], "vec_id string, embedding array<double>"
-        ),
-    )
-    assert counts["ann_appended"] == 1
-
-
-def test_streaming_retrieval_append_exactly_once(spark, tmp_path):
-    """Document stream → serving root: arriving docs become searchable;
-    a checkpoint-loss replay of the committed batch is a no-op (per-leg
-    commit markers), so passages/postings/cells stay exactly-once."""
-    from binance_data_pipeline_spark.operators.retrieval import (
-        streaming_retrieval_append,
-    )
-
-    docs = spark.createDataFrame(DOCS, "doc_id string, text string")
-    root = str(tmp_path / "streamroot")
-    build_retrieval_index(
-        spark, docs, root, embed_dim=64, n_term_buckets=8, n_centroids=2,
-    )
-
-    src = str(tmp_path / "arrivals")
-    spark.createDataFrame(
-        [("d5", "geothermal plants tap underground heat for electricity")],
-        "doc_id string, text string",
-    ).write.parquet(src)
-    stream = spark.readStream.schema("doc_id string, text string").parquet(src)
-    q = streaming_retrieval_append(
-        stream, root, str(tmp_path / "ck1"), available_now=True
-    )
-    q.awaitTermination(120)
-    assert spark.read.parquet(root + "/passages.parquet").count() == 5
-
-    # checkpoint loss: fresh checkpoint re-delivers batch 0 → markers skip
-    stream2 = spark.readStream.schema("doc_id string, text string").parquet(src)
-    q2 = streaming_retrieval_append(
-        stream2, root, str(tmp_path / "ck2"), available_now=True
-    )
-    q2.awaitTermination(120)
-    assert spark.read.parquet(root + "/passages.parquet").count() == 5
-
-    queries = spark.createDataFrame(
-        [("q1", "geothermal plants tap underground heat")],
-        "query_id string, text string",
-    )
-    rows = sorted(hybrid_search(spark, root, queries, k=2).collect(),
-                  key=lambda r: r["rk"])
-    assert rows[0]["doc_id"] == "d5"
-
-
-def test_validate_retrieval_root_clean_and_after_append(spark, tmp_path):
+def test_validate_retrieval_root_clean_and_orphaned(spark, tmp_path):
     """validate_retrieval_root: a freshly built self-contained root is
-    fully consistent; after an append it still is (count updated, every
-    passage indexed in both legs); a manually orphaned vector is
-    detected."""
+    fully consistent; a passage removed behind the manifest's back is
+    detected as a count mismatch and an orphan vector."""
     from binance_data_pipeline_spark.operators.retrieval import (
-        append_to_retrieval_root,
         validate_retrieval_root,
     )
 
@@ -390,25 +261,15 @@ def test_validate_retrieval_root_clean_and_after_append(spark, tmp_path):
         "n_orphan_vectors": 0,
     }
 
-    new = spark.createDataFrame(
-        [("d5", "geothermal plants tap underground heat for electricity")],
-        "doc_id string, text string",
-    )
-    append_to_retrieval_root(spark, root, new, batch_id=0)
+    # drop d4's passage row: its indexed vector is now an orphan
+    kept = spark.read.parquet(root + "/passages.parquet").where(
+        F.col("doc_id") != "d4"
+    ).collect()
+    spark.createDataFrame(kept, "doc_id string, text string").write.mode(
+        "overwrite"
+    ).parquet(root + "/passages.parquet")
     rep = validate_retrieval_root(spark, root)
-    assert rep["n_passages"] == 5 and rep["manifest_count_ok"]
-    assert rep["n_unindexed_lexical"] == 0 and rep["n_unindexed_vector"] == 0
-
-    # plant an orphan vector (id indexed in ANN with no passage row)
-    from binance_data_pipeline_spark.operators.ivf import append_to_ivf_index
-
-    append_to_ivf_index(
-        spark, root + "/ann",
-        spark.createDataFrame(
-            [("ghost", [0.1] * 64)], "vec_id string, embedding array<double>"
-        ),
-    )
-    rep = validate_retrieval_root(spark, root)
+    assert rep["n_passages"] == 3 and not rep["manifest_count_ok"]
     assert rep["n_orphan_vectors"] == 1
 
 
@@ -467,38 +328,3 @@ def test_weighted_terms_unit_weights_match_plain_bm25(spark, tmp_path):
                 bm25_query(spark, root + "/bm25", queries, k=4,
                            weighted_terms=wt).collect()}
     assert plain == weighted
-
-
-def test_append_resume_after_mid_crash_heals_manifest(spark, tmp_path):
-    """Crash window: the passages leg committed but the run died before
-    bm25/ann/manifest. The replayed batch skips the committed leg,
-    applies the rest, and the manifest is re-counted from the ACTUAL
-    passage table — the root ends fully consistent."""
-    from binance_data_pipeline_spark.operators.retrieval import (
-        append_to_retrieval_root,
-        validate_retrieval_root,
-    )
-    from binance_data_pipeline_spark.operators.state_swap import commit_batch
-
-    docs = spark.createDataFrame(DOCS, "doc_id string, text string")
-    root = str(tmp_path / "crashroot")
-    build_retrieval_index(
-        spark, docs, root, embed_dim=64, n_term_buckets=8, n_centroids=2,
-    )
-    new = spark.createDataFrame(
-        [("d5", "geothermal plants tap underground heat for electricity")],
-        "doc_id string, text string",
-    )
-    # simulate the crash: passages appended + marker committed, nothing else
-    new.write.mode("append").parquet(root + "/passages.parquet")
-    commit_batch(spark, root + "/appends_passages", 9)
-    assert spark.read.parquet(root + "/manifest.parquet").first()["n_passages"] == 4
-
-    counts = append_to_retrieval_root(spark, root, new, batch_id=9)
-    assert counts == {"passages_appended": 0, "bm25_appended": 1, "ann_appended": 1}
-    rep = validate_retrieval_root(spark, root)
-    assert rep == {
-        "n_passages": 5, "manifest_count_ok": True,
-        "n_unindexed_lexical": 0, "n_unindexed_vector": 0,
-        "n_orphan_vectors": 0,
-    }

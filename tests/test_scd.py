@@ -121,30 +121,3 @@ def test_multi_key_and_validation(spark):
     assert {r["cust_id"] for r in rows} == {1, 2, 3} and len(rows) == 4
     with pytest.raises(ValueError, match="non-empty"):
         scd2_merge(None, _updates(spark, []), [], ["tier"])
-
-
-def test_scd2_lookup_point_in_time(spark):
-    from binance_data_pipeline_spark.operators.scd import scd2_lookup
-
-    d1 = scd2_merge(
-        None,
-        _updates(spark, [(1, "gold", "rome", _ts(1)), (1, "silver", "rome", _ts(10))]),
-        ["cust_id"], ["tier", "city"],
-    )
-    facts = spark.createDataFrame(
-        [(100, 1, _ts(5)), (101, 1, _ts(10)), (102, 1, _ts(20)),
-         (103, 2, _ts(5)),                       # unknown key
-         (104, 1, dt.datetime(2023, 12, 1))],    # before first version
-        "order_id long, cust_id long, order_ts timestamp",
-    )
-    got = {
-        r["order_id"]: r["tier"]
-        for r in scd2_lookup(facts, d1, ["cust_id"], "order_ts").collect()
-    }
-    # boundary: ts == valid_to of gold == valid_from of silver -> silver
-    assert got == {100: "gold", 101: "silver", 102: "silver", 103: None, 104: None}
-
-    from binance_data_pipeline_spark.plans.audit import plan_text
-
-    plan = scd2_lookup(facts, d1, ["cust_id"], "order_ts")
-    assert "BroadcastHashJoin" in plan_text(plan)  # facts never shuffled

@@ -87,60 +87,6 @@ def test_cli_detail_and_dry_run(spark, tmp_path, capsys):
     assert read_snapshot(spark, t, version=0).count() == 5
 
 
-def test_read_snapshot_ranges_conjunctive_pruning(spark, tmp_path):
-    """Multi-column ranged read: dir pruning stacks per column, results
-    equal the plain filtered read, and the scan lists strictly fewer
-    dirs than the table holds when the stats can prove it."""
-    from binance_data_pipeline_spark.operators.snapshots import (
-        read_snapshot_ranges,
-    )
-
-    t = str(tmp_path / "t")
-    # 4 dirs tiling a 2x2 (a, b) grid: only ONE dir can hold (a<50, b<50)
-    for alo, blo in [(0, 0), (0, 50), (50, 0), (50, 50)]:
-        df = spark.range(25).selectExpr(
-            f"cast(id % 5 + {alo} as int) as a",
-            f"cast(id div 5 + {blo} as int) as b",
-        )
-        commit_snapshot(spark, t, df, stats_cols=["a", "b"])
-    got = read_snapshot_ranges(spark, t, {"a": (0, 10), "b": (0, 10)})
-    want = read_snapshot(spark, t).where("a between 0 and 10 and b between 0 and 10")
-    assert sorted((r["a"], r["b"]) for r in got.collect()) == sorted(
-        (r["a"], r["b"]) for r in want.collect()
-    )
-    all_files = read_snapshot(spark, t).inputFiles()
-    assert 0 < len(got.inputFiles()) <= len(all_files) // 4
-    # disjoint conjunction: typed-empty result
-    assert read_snapshot_ranges(spark, t, {"a": (0, 10), "b": (200, None)}).count() == 0
-
-
-def test_snapshot_lookup_keys_composite(spark, tmp_path):
-    """Composite-key fetch: exact rows for each (sym, day) pair, bloom +
-    stats pruned, null-safe for NULL key fields."""
-    from binance_data_pipeline_spark.operators.snapshots import (
-        snapshot_lookup_keys,
-    )
-
-    t = str(tmp_path / "t")
-    for day in (1, 2):
-        df = spark.createDataFrame(
-            [("BTC", day, 1.0 * day), ("ETH", day, 2.0 * day), (None, day, 9.9)],
-            "sym string, day int, px double",
-        )
-        commit_snapshot(spark, t, df, stats_cols=["day"], bloom_cols=["sym"])
-    got = snapshot_lookup_keys(
-        spark, t, [{"sym": "BTC", "day": 2}, {"sym": None, "day": 1}]
-    )
-    rows = sorted(
-        ((r["sym"], r["day"], r["px"]) for r in got.collect()), key=str
-    )
-    assert rows == sorted([(None, 1, 9.9), ("BTC", 2, 2.0)], key=str)
-    with pytest.raises(ValueError, match="share one"):
-        snapshot_lookup_keys(spark, t, [{"sym": "BTC"}, {"day": 1}])
-    with pytest.raises(ValueError, match="non-empty"):
-        snapshot_lookup_keys(spark, t, [])
-
-
 def test_streaming_append_auto_compacts_every_n_batches(spark, tmp_path):
     """compact_every: the ingest loop tidies its own small files — after
     each committed batch an incremental compaction commit can follow the

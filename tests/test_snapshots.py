@@ -773,26 +773,12 @@ def test_merge_then_diff_randomized_model_check(spark, tmp_path):
         assert got == expected, f"seed {seed}"
 
 
-def test_register_snapshot_view_and_cli_range(spark, tmp_path, capsys):
+def test_snapshot_cli_range(spark, tmp_path, capsys):
     from binance_data_pipeline_spark.__main__ import main
-    from binance_data_pipeline_spark.operators.snapshots import (
-        register_snapshot_view,
-    )
 
     t = str(tmp_path / "t")
     commit_snapshot(spark, t, _df(spark, 0, 10), stats_cols=["id"])
     commit_snapshot(spark, t, _df(spark, 10, 20, "b"))
-    register_snapshot_view(spark, t, "snap_all")
-    register_snapshot_view(spark, t, "snap_v0", version=0)
-    assert spark.sql("SELECT count(*) n FROM snap_all").first()["n"] == 20
-    assert spark.sql(
-        "SELECT count(*) n FROM snap_v0 WHERE tag = 'a'"
-    ).first()["n"] == 10
-    # snapshot isolation: a later commit is invisible until re-registered
-    commit_snapshot(spark, t, _df(spark, 20, 22, "c"))
-    assert spark.sql("SELECT count(*) n FROM snap_all").first()["n"] == 20
-    register_snapshot_view(spark, t, "snap_all")
-    assert spark.sql("SELECT count(*) n FROM snap_all").first()["n"] == 22
 
     assert main(["snapshot", "--table", t, "--range", "id", "3", "12"]) == 0
     assert "range id in [3, 12]: 10 rows" in capsys.readouterr().out

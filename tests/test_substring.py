@@ -12,10 +12,7 @@ sys.path.insert(0, "/root/repo")
 import pytest
 from pyspark.sql import functions as F
 
-from binance_data_pipeline_spark.operators.substring import (
-    dedup_substrings,
-    duplicate_spans_report,
-)
+from binance_data_pipeline_spark.operators.substring import dedup_substrings
 
 BOILER = "this license text is duplicated verbatim across many documents " * 2
 # 20 tokens exactly (8 words × 2 = 16... adjust): build a 20-token span
@@ -81,19 +78,6 @@ def test_short_docs_cannot_match(spark):
     cleaned, report = dedup_substrings(docs, min_len=20)
     assert {r["text"] for r in cleaned.collect()} == {"same short text"}
     assert report.count() == 0
-
-
-def test_report_counts_and_keeper(spark):
-    shared = " ".join(f"s{i}" for i in range(20))
-    docs = _docs(
-        spark,
-        [(5, f"a {shared}"), (9, f"b {shared}"), (2, f"c {shared}")],
-    )
-    rep = duplicate_spans_report(docs, min_len=20).collect()
-    assert len(rep) == 1
-    r = rep[0]
-    assert r["n_occurrences"] == 3 and r["n_docs"] == 3
-    assert r["keeper_id"] == 2 and r["keeper_start"] == 1
 
 
 def test_extra_columns_and_order_preserved(spark):

@@ -1,4 +1,4 @@
-"""URL canonicalization / registered-domain / URL dedup: exact expected
+"""URL canonicalization / URL dedup: exact expected
 forms on handcrafted URLs, a DuckDB cross-check of the dedup counts, and
 the map-only plan audit."""
 
@@ -8,15 +8,7 @@ import sys
 
 sys.path.insert(0, "/root/repo")
 
-from pyspark.sql import functions as F
-
-from binance_data_pipeline_spark.operators.urls import (
-    canonicalize_url,
-    dedup_by_url,
-    domain_stats,
-    registered_domain,
-    url_host,
-)
+from binance_data_pipeline_spark.operators.urls import canonicalize_url, dedup_by_url
 
 
 def _canon(spark, urls, **kw):
@@ -68,148 +60,6 @@ def test_custom_strip_params_and_case_insensitive_keys(spark):
     assert got == ["https://e.com/p?a=1", "https://e.com/p?UTM_SOURCE=x&a=1"]
 
 
-def test_registered_domain(spark):
-    rows = [
-        ("https://news.bbc.co.uk/x", "bbc.co.uk"),        # multi-suffix
-        ("https://a.b.example.com/x", "example.com"),     # deep subdomain
-        ("https://example.com/x", "example.com"),         # exact
-        ("https://localhost/x", "localhost"),             # single label
-        ("http://192.168.0.1:8080/x", "192.168.0.1"),     # IPv4 passthrough
-        ("https://shop.com.au/x", "shop.com.au"),         # suffix w/ 3 labels... registrable
-    ]
-    df = spark.createDataFrame(rows, "url string, want string")
-    got = df.select(
-        registered_domain(url_host("url")).alias("d"), "want"
-    ).collect()
-    for r in got:
-        assert r["d"] == r["want"], (r["d"], r["want"])
-
-
-def test_registered_domain_psl_semantics(spark):
-    """Real PSL shapes: private hosting suffixes, wildcard TLDs, and
-    exception rules — the cases the old two-level table grouped wrong."""
-    rows = [
-        # private-section suffix: each github.io subdomain is its own site
-        ("a.github.io", "a.github.io"),
-        ("deep.a.github.io", "a.github.io"),
-        ("github.io", "github.io"),            # is itself a public suffix
-        ("x.blogspot.com", "x.blogspot.com"),
-        # wildcard TLD *.ck: every second-level label is a suffix
-        ("foo.bar.ck", "foo.bar.ck"),
-        ("bar.ck", "bar.ck"),                  # is itself a public suffix
-        # ...except the exception rule !www.ck
-        ("www.ck", "www.ck"),
-        ("sub.www.ck", "www.ck"),
-        # *.kawasaki.jp wildcard with the !city.kawasaki.jp exception
-        ("city.kawasaki.jp", "city.kawasaki.jp"),
-        ("ward.city.kawasaki.jp", "city.kawasaki.jp"),
-        ("corp.kawasaki.jp", "corp.kawasaki.jp"),   # suffix by wildcard
-        ("x.corp.kawasaki.jp", "x.corp.kawasaki.jp"),
-        # longest-rule-wins ordinary cases
-        ("www.city.nagoya.jp", "city.nagoya.jp"),  # exception ps=nagoya.jp
-        ("city.nagoya.jp", "city.nagoya.jp"),
-        ("a.co.jp", "a.co.jp"),
-        ("b.a.co.jp", "a.co.jp"),
-    ]
-    df = spark.createDataFrame(rows, "host string, want string")
-    got = df.select(registered_domain("host").alias("d"), "want").collect()
-    for r in got:
-        assert r["d"] == r["want"], (r["d"], r["want"])
-
-
-def test_vendored_psl_snapshot_and_loader(spark, tmp_path, monkeypatch):
-    """The vendored snapshot (VERDICT r11 task 8): DEFAULT_RULES parses
-    from the package-data .dat file (official format, ~1.5k real
-    entries), and load_rules prefers explicit path > $BDP_PSL_PATH >
-    snapshot."""
-    from binance_data_pipeline_spark.operators.psl import (
-        DEFAULT_RULES,
-        PSL_PATH_ENV,
-        _SNAPSHOT_PATH,
-        load_rules,
-    )
-    import os
-
-    # the snapshot file is real package data in the official format
-    assert os.path.exists(_SNAPSHOT_PATH)
-    head = open(_SNAPSHOT_PATH).read(400)
-    assert "publicsuffix.org" in head and "Mozilla Public License" in head
-    # scale and shape: ~1.5k rules covering every algorithm branch
-    assert len(DEFAULT_RULES.exact) > 1000
-    for e in ("co.uk", "github.io", "k12.va.us", "com.au"):
-        assert e in DEFAULT_RULES.exact, e
-    assert "ck" in DEFAULT_RULES.wildcard and "kawasaki.jp" in DEFAULT_RULES.wildcard
-    assert "www.ck" in DEFAULT_RULES.exceptions
-    assert "city.kawasaki.jp" in DEFAULT_RULES.exceptions
-
-    # loader preference chain
-    custom = tmp_path / "mini.dat"
-    custom.write_text("// mini\nfoo.test\n*.wild.test\n!ok.wild.test\n")
-    r = load_rules(str(custom))  # explicit path wins
-    assert r.exact == ["foo.test"] and r.wildcard == ["wild.test"]
-    assert r.exceptions == ["ok.wild.test"]
-    monkeypatch.setenv(PSL_PATH_ENV, str(custom))
-    assert load_rules().exact == ["foo.test"]  # env var next
-    monkeypatch.delenv(PSL_PATH_ENV)
-    assert len(load_rules().exact) == len(DEFAULT_RULES.exact)  # snapshot last
-
-
-def test_registered_domain_real_psl_entries(spark):
-    """Families only the vendored file (not the old in-code subset)
-    carries: US state school districts, CN provinces, BR second-levels,
-    dynamic-DNS private suffixes."""
-    rows = [
-        ("school.k12.va.us", "school.k12.va.us"),
-        ("www.school.k12.va.us", "school.k12.va.us"),
-        ("library.lib.tx.us", "library.lib.tx.us"),
-        ("site.sh.cn", "site.sh.cn"),
-        ("www.site.sh.cn", "site.sh.cn"),
-        ("loja.blog.br", "loja.blog.br"),
-        ("myhost.duckdns.org", "myhost.duckdns.org"),
-        ("deep.myhost.duckdns.org", "myhost.duckdns.org"),
-        ("b.blogspot.com.br", "b.blogspot.com.br"),
-    ]
-    df = spark.createDataFrame(rows, "host string, want string")
-    got = df.select(registered_domain("host").alias("d"), "want").collect()
-    for r in got:
-        assert r["d"] == r["want"], (r["d"], r["want"])
-
-
-def test_psl_parser_official_format(spark):
-    """parse_psl reads the official dat format (comments, sections,
-    wildcards, exceptions) so the full public file drops in."""
-    from binance_data_pipeline_spark.operators.psl import parse_psl
-
-    rules = parse_psl(
-        """
-// ===BEGIN ICANN DOMAINS===
-// ck : https://en.wikipedia.org/wiki/.ck
-*.ck
-!www.ck
-
-uk
-co.uk
-
-// ===END ICANN DOMAINS===
-// ===BEGIN PRIVATE DOMAINS===
-github.io
-// ===END PRIVATE DOMAINS===
-"""
-    )
-    assert rules.wildcard == ["ck"]
-    assert rules.exceptions == ["www.ck"]
-    assert rules.exact == ["co.uk", "github.io"]  # bare "uk" → default rule
-
-    df = spark.createDataFrame([("x.www.ck",), ("y.z.ck",)], "host string")
-    got = {
-        r["host"]: r["d"]
-        for r in df.select(
-            "host", registered_domain("host", rules=rules).alias("d")
-        ).collect()
-    }
-    assert got == {"x.www.ck": "www.ck", "y.z.ck": "y.z.ck"}
-
-
 def test_dedup_by_url_keeps_min_id_and_unparseable(spark):
     rows = [
         (1, "https://example.com/p?b=2&a=1"),
@@ -247,23 +97,6 @@ def test_dedup_by_url_keeps_min_id_and_unparseable(spark):
     assert got_groups == want_groups == 2
 
 
-def test_domain_stats_counts(spark):
-    rows = [
-        (1, "https://a.example.com/x?utm_source=t"),
-        (2, "https://a.example.com/x"),            # same canonical as 1
-        (3, "https://b.example.com/y"),
-        (4, "https://news.bbc.co.uk/z"),
-        (5, "bad url"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, url string")
-    got = {r["domain"]: r for r in domain_stats(df, "url").collect()}
-    assert set(got) == {"example.com", "bbc.co.uk"}
-    assert got["example.com"]["n_urls"] == 3
-    assert got["example.com"]["n_canonical"] == 2
-    assert got["example.com"]["n_hosts"] == 2
-    assert got["bbc.co.uk"]["n_urls"] == 1
-
-
 def test_canonicalize_is_map_only(spark):
     """The column ops must stay inside the scan's projection — no
     Exchange, no Python eval (the text.py posture)."""
@@ -295,125 +128,3 @@ def test_idempotent_on_canonical_output(spark):
 # ---------------------------------------------------------------------------
 # round 8: broadcast-join PSL variant at full-file cardinality
 # ---------------------------------------------------------------------------
-
-
-def _psl_reference(host: str, exact: set, wild: set, exc: set) -> str:
-    """Pure-Python PSL oracle (spec: exceptions beat all; else longest
-    rule; else default '*'), used to pin the join variant at synthetic
-    full-file cardinality."""
-    labels = host.split(".")
-    n = len(labels)
-    exc_len = None
-    for k in range(2, n + 1):
-        sfx = ".".join(labels[n - k:])
-        if sfx in exc:
-            exc_len = k - 1
-    best = 1
-    for k in range(2, n + 1):
-        sfx = ".".join(labels[n - k:])
-        base = ".".join(labels[n - (k - 1):]) if k >= 2 else ""
-        if sfx in exact or (base in wild and n >= k):
-            best = k
-    ps = exc_len if exc_len is not None else best
-    if n <= ps:
-        return host
-    return ".".join(labels[n - ps - 1:])
-
-
-def test_attach_registered_domain_equivalent_to_expression(spark):
-    """The broadcast-join variant and the literal-array expression agree
-    on every PSL shape the snapshot covers (incl. wildcards, exceptions,
-    private suffixes, IPs, hosts that ARE suffixes)."""
-    from binance_data_pipeline_spark.operators.urls import attach_registered_domain
-    from binance_data_pipeline_spark.operators.psl import DEFAULT_RULES
-
-    hosts = [
-        "news.bbc.co.uk", "a.b.example.com", "example.com", "localhost",
-        "192.168.0.1", "shop.com.au", "a.github.io", "deep.a.github.io",
-        "github.io", "x.blogspot.com", "foo.bar.ck", "bar.ck", "www.ck",
-        "sub.www.ck", "city.kawasaki.jp", "ward.city.kawasaki.jp",
-        "corp.kawasaki.jp", "x.corp.kawasaki.jp", "www.city.nagoya.jp",
-        "a.co.jp", "b.a.co.jp", "tokyo.jp", "x.tokyo.jp", "s3.amazonaws.com",
-        "bucket.s3.amazonaws.com",
-    ]
-    df = spark.createDataFrame([(h,) for h in hosts], "host string")
-    expr = {r["host"]: r["d"] for r in df.select(
-        "host", registered_domain("host").alias("d")).collect()}
-    join = {r["host"]: r["domain"] for r in attach_registered_domain(
-        df, "host", DEFAULT_RULES).collect()}
-    assert expr == join
-
-
-def test_attach_registered_domain_full_file_cardinality(spark):
-    """Synthetic 12k-rule PSL (official-file scale, depths to 5,
-    wildcards + exceptions) through the join variant: results match a
-    pure-Python reference of the spec, and the corpus plan carries NO
-    shuffle — broadcast hash joins only. The expression variant refuses
-    rule sets this deep; this is the documented full-file path."""
-    import random
-
-    import pytest
-
-    from binance_data_pipeline_spark.operators.psl import (
-        PslRules,
-        attach_public_suffix_parts,
-        public_suffix_parts,
-    )
-    from binance_data_pipeline_spark.operators.urls import attach_registered_domain
-
-    rng = random.Random(8)
-    tlds = [f"t{i}" for i in range(120)]
-    seconds = ["co", "org", "net", "ac", "gov", "web", "xx", "yy"]
-    exact = {f"{s}.{t}" for t in tlds for s in seconds}            # 960
-    exact |= {f"l3{i}.{s}.{t}" for i in range(4) for s in seconds[:5]
-              for t in tlds}                                        # +2400
-    exact |= {f"d4.{i}.co.{t}" for i in range(30) for t in tlds}    # depth 4
-    exact |= {f"d5.a.{i}.co.{t}" for i in range(8) for t in tlds}   # depth 5
-    wild = {f"w{i}.{t}" for i in range(10) for t in tlds}           # wildcard bases
-    exc = {f"ok.w0.{t}" for t in tlds}                              # exceptions
-    rules = PslRules(sorted(exact), sorted(wild), sorted(exc))
-    n_rules = len(exact) + len(wild) + len(exc)
-    assert n_rules > 9000  # official-file scale
-
-    # the expression variant refuses depths past its literal arrays
-    with pytest.raises(AssertionError, match="too deep"):
-        public_suffix_parts(F.col("host"), rules=rules)
-
-    hosts = []
-    for _ in range(400):
-        t = rng.choice(tlds)
-        shape = rng.random()
-        if shape < 0.3:
-            hosts.append(f"site{rng.randrange(99)}.{rng.choice(seconds)}.{t}")
-        elif shape < 0.5:
-            hosts.append(f"a.b.w{rng.randrange(12)}.{t}")   # some match wildcards
-        elif shape < 0.6:
-            hosts.append(f"x.ok.w0.{t}")                     # exception path
-        elif shape < 0.75:
-            hosts.append(f"s.d5.a.{rng.randrange(10)}.co.{t}")  # deep rules
-        else:
-            hosts.append(f"plain{rng.randrange(99)}.{t}")
-    df = spark.createDataFrame([(h,) for h in hosts], "host string")
-    out = attach_registered_domain(df, "host", rules)
-
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert "Exchange hashpartitioning" not in plan  # corpus never shuffles
-
-    got = {r["host"]: r["domain"] for r in out.collect()}
-    for h in hosts:
-        want = _psl_reference(h, exact, wild, exc)
-        assert got[h] == want, (h, got[h], want)
-
-    # ps_parts surface too (the primitive other operators compose)
-    ps = attach_public_suffix_parts(df, "host", rules, out_col="p")
-    for r in ps.collect():
-        h = r["host"]
-        want_dom = _psl_reference(h, exact, wild, exc)
-        n = len(h.split("."))
-        want_ps = n if want_dom == h and "." in want_dom else len(want_dom.split(".")) - 1
-        # hosts that ARE suffixes report their own label count as parts
-        if want_dom == h:
-            assert r["p"] in (n, n - 1)  # host == suffix, or host == suffix+1 w/ n==ps+1
-        else:
-            assert r["p"] == len(want_dom.split(".")) - 1, (h, r["p"], want_dom)
