@@ -61,37 +61,6 @@ HEADLINE = [
 ]
 
 
-def scale_probe_query(spark):
-    """Shuffle-heavy probe (100M rows, 64 partitions; VERDICT r12 task
-    2b): enough parallel work that its wall time TRACKS the core count,
-    unlike the sf0.1 catalog queries whose sub-second walls sit on fixed
-    scheduling floors and read flat across 8 vs 32 cores. A low/high-core
-    pair of bench runs can read the ``scale_probe_sec`` ratio directly as
-    scaling evidence."""
-    from pyspark.sql import functions as F
-
-    df = spark.range(0, 100_000_000, 1, 64)
-    return (
-        df.repartition(64, (F.col("id") % 9973).cast("int"))
-        .select(
-            (F.col("id") % 8191).alias("g"),
-            # three hash chains per row: enough map-side compute that the
-            # wall is core-bound, not shuffle-disk-bound (measured: the
-            # single-hash form scaled only 2.0x across 8->32 cores)
-            F.xxhash64("id").alias("h1"),
-            F.xxhash64("id", F.lit(1)).alias("h2"),
-            F.xxhash64(F.xxhash64("id", F.lit(2))).alias("h3"),
-        )
-        .groupBy("g")
-        .agg(
-            F.sum(F.col("h1") % 1000003).alias("s1"),
-            F.sum(F.col("h2") % 999983).alias("s2"),
-            F.sum(F.col("h3") % 999979).alias("s3"),
-            F.count(F.lit(1)).alias("n"),
-        )
-    )
-
-
 def group_task_count(sc, group: str) -> int:
     """Total tasks of every job submitted under ``group`` (status-tracker
     walk; UI store retains well past one bench pass). Per-query task
@@ -273,16 +242,11 @@ def main() -> None:
 
     measured = measure(spark, sf_dir, queries, HEADLINE)
 
-    # scale probe: timed once, after the measured passes (its 100M-row
-    # shuffle would perturb nothing but still runs outside the windows)
-    scale_probe_sec = timed(scale_probe_query, spark)
-
     extra = {
         "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0)
         or sc.defaultParallelism,
         "default_parallelism": sc.defaultParallelism,
         "tmp_state": state,
-        "scale_probe_sec": scale_probe_sec,
         "query_tasks": {n: group_task_count(sc, f"bench:{n}") for n in HEADLINE},
     }
     emit_result("headline_total_wall", measured, sf, extra)

@@ -8,8 +8,6 @@ Airflow tasks, as plain commands:
              unless --kafka-ish endpoints are wired in production)
   transform  hourly staging -> incremental fact -> quality gate
   revenue    fee/tax revenue fact for a date (§3.4)
-  corpus     training-corpus build (redact -> quality/LM/classifier gates ->
-             dedup -> decontaminate -> DSIR select -> chunk -> shuffle)
   index      build a retrieval serving root (passages + BM25 [+ IVF ANN];
              --embed-dim makes it self-contained from raw text)
   search     hybrid search (BM25 + ANN, RRF-fused; --rerank for the
@@ -74,30 +72,6 @@ def main(argv: list[str] | None = None) -> int:
     pr.add_argument("--silver", required=True)
     pr.add_argument("--rules-csv", required=True)
     pr.add_argument("--out", required=True)
-
-    pc = sub.add_parser("corpus", help="training-corpus build (jobs.build_training_corpus)")
-    pc.add_argument("--config", default=None,
-                    help="YAML of build_training_corpus kwargs; overrides all other flags")
-    pc.add_argument("--docs", help="input documents parquet")
-    pc.add_argument("--out", help="output dir (corpus/mapping/stats)")
-    pc.add_argument("--min-quality", type=float, default=0.5)
-    pc.add_argument("--dedup-threshold", type=float, default=0.85)
-    pc.add_argument("--max-repetition", type=float, default=None)
-    pc.add_argument("--chunk-tokens", type=int, default=None)
-    pc.add_argument("--substring-min-len", type=int, default=None)
-    pc.add_argument("--probes", default=None, help="benchmark parquet for decontamination")
-    pc.add_argument("--embeddings", default=None, help="embeddings parquet for semantic dedup")
-    pc.add_argument("--lm-ref", default=None, help="trusted parquet for the CCNet LM gate")
-    pc.add_argument("--lm-max-ce", type=float, default=10.0)
-    pc.add_argument("--clf-labeled", default=None, help="labeled parquet for the classifier gate")
-    pc.add_argument("--clf-min-prob", type=float, default=0.5)
-    pc.add_argument("--dsir-target", default=None, help="target parquet for DSIR selection")
-    pc.add_argument("--dsir-k", type=int, default=None)
-    pc.add_argument("--embed-dim", type=int, default=None,
-                    help="semantic dedup on IN-FLIGHT hash embeddings (no --embeddings needed)")
-    pc.add_argument("--seed", type=int, default=0)
-    pc.add_argument("--snapshot", action="store_true",
-                    help="publish the corpus as an atomic snapshot version")
 
     px = sub.add_parser("index", help="build a retrieval serving root (BM25 [+ ANN])")
     px.add_argument("--docs", required=True, help="documents parquet (doc_id, text)")
@@ -364,41 +338,6 @@ def main(argv: list[str] | None = None) -> int:
             silver, read_rules(spark, args.rules_csv), date.fromisoformat(args.date), args.out
         )
         print(f"rows={fact.count()}")
-        return 0
-
-    if args.cmd == "corpus":
-        from .jobs import build_training_corpus
-
-        if args.config is not None:
-            from .jobs import build_training_corpus_from_config
-
-            counts = build_training_corpus_from_config(spark, args.config)
-            print(" ".join(f"{k}={v}" for k, v in counts.items()))
-            return 0
-        if not args.docs or not args.out:
-            p.error("corpus requires --docs and --out (or --config)")
-        counts = build_training_corpus(
-            spark,
-            args.docs,
-            args.out,
-            min_quality=args.min_quality,
-            dedup_threshold=args.dedup_threshold,
-            max_repetition=args.max_repetition,
-            chunk_tokens=args.chunk_tokens,
-            substring_min_len=args.substring_min_len,
-            probes_path=args.probes,
-            embeddings_path=args.embeddings,
-            lm_ref_path=args.lm_ref,
-            lm_max_cross_entropy=args.lm_max_ce,
-            clf_labeled_path=args.clf_labeled,
-            clf_min_prob=args.clf_min_prob,
-            dsir_target_path=args.dsir_target,
-            dsir_k=args.dsir_k,
-            embed_dim=args.embed_dim,
-            shuffle_seed=args.seed,
-            snapshot=args.snapshot,
-        )
-        print(" ".join(f"{k}={v}" for k, v in counts.items()))
         return 0
 
     if args.cmd == "index":

@@ -3,8 +3,7 @@
 cleaning         bronze→staging clean/cast (P1-P6)
 incremental      high-watermark incremental materialization (P8/ST5)
 dedup            MinHash-LSH / SimHash / n-gram-Jaccard dedup + clustering
-semdedup         semantic (embedding-cell) dedup
-substring        exact-substring span dedup (distributed ExactSubstr)
+semdedup         semantic (embedding-cell) near-duplicate pairs
 similarity       embedding similarity search (brute-force + RP-LSH ANN)
 embedder         text → embedding generation (hash encoder default, model-injectable)
 clustering       topic discovery: k-means clusters + c-TF-IDF cluster keywords
@@ -12,19 +11,12 @@ evaluation       retrieval metrics: recall/precision@k, MRR, nDCG (TREC defs)
 ivf              persisted IVF ANN index (fingerprinted, build-once/query-many)
 lsh_index        persisted multi-table LSH index (bucket-pruned serve kernel)
 pq               IVF-PQ: product-quantized ANN (M-byte codes, ADC scan, exact refine)
-text             text analysis (tokens, quality, language-ID, fingerprints, PII, chunking)
-urls             URL canonicalization + URL dedup
-lm_score         CCNet-style n-gram LM fluency scoring (broadcast-join cross-entropy)
-quality_rules    Gopher/C4 structural rule bundles + per-domain gate
-quality_classifier  trainable hashed-n-gram logistic quality filter (FineWeb-Edu recipe)
-dsir             DSIR importance resampling (target-distribution matching, Gumbel top-k)
-vocab            token/n-gram frequency tables
+text             text analysis (tokenizers, quality, language-ID, fingerprints, chunking)
 bm25             BM25 retrieval + persisted term-bucket index + RRF hybrid fusion
 retrieval        serving root: BM25+IVF build + RRF hybrid search + injectable rerank
 behavior         funnel conversion + cohort retention over event streams
 scd              SCD Type 2 dimension merge
 anomaly          rolling z-score anomaly flags
-sampling         deterministic stratified sampling + shuffle
 metacache        serve-path index-metadata memo (listing-keyed, self-invalidating)
 profile          per-column table profiling (nulls, distinct, range, quantiles, top values)
 subqueries       correlated scalar-agg subquery filter with exact ANSI empty-group semantics

@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from .ivf import _read_index_fingerprint, corpus_fingerprint
 from .metacache import _hadoop_fs, cached_meta, local_relation
-from .vocab import _token_array
+from .text import _token_array
 
 from ..session import local_rows
 

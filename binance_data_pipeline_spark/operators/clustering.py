@@ -2,11 +2,9 @@
 c-TF-IDF cluster keywords (the BERTopic recipe, Grootendorst 2022,
 re-expressed as DataFrame aggregates).
 
-Why it belongs in a training-data engine: domain/topic composition
-drives mixing weights, per-domain
-quality gates (operators/quality_rules) and dedup cell layouts — and a
-crawl rarely arrives with usable domain labels. Clustering synthesises
-them from content.
+Why it belongs in the engine: topic composition describes a document
+set and drives dedup cell layouts — and a crawl rarely arrives with
+usable domain labels. Clustering synthesises them from content.
 
 Scale design (100 TB):
 - embeddings come from ``operators/embedder`` (one Arrow map stage) or
@@ -126,8 +124,7 @@ def discover_topics(
 ) -> tuple[DataFrame, DataFrame]:
     """One-call topic discovery from raw text:
     (assignments (id, cluster_id), keywords (cluster_id, term, score,
-    rk)). The assignments frame feeds sampling/mixing/gating as a
-    synthesized domain column."""
+    rk)). The assignments frame is a synthesized domain column."""
     assignments = cluster_corpus(
         docs, id_col=id_col, text_col=text_col, k=k,
         embed_dim=embed_dim, seed=seed,

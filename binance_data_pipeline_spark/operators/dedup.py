@@ -782,161 +782,3 @@ def dedup_corpus(
         "left_semi",
     )
     return kept, mapping
-
-
-# --------------------------------------------------------------------------
-# Benchmark-contamination detection
-# --------------------------------------------------------------------------
-
-def contamination_report(
-    corpus: DataFrame,
-    probes: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    probe_id_col: str = "doc_id",
-    probe_text_col: str = "text",
-    n: int = 8,
-    min_overlap: float = 0.05,
-) -> DataFrame:
-    """Which training docs contain verbatim n-gram runs from a probe set
-    (benchmark/test questions) — the contamination scan every training
-    corpus needs before release.
-
-    Long shingles (default n=8 tokens) make incidental collisions
-    vanishingly rare, so SHARING EVEN A FEW is a verbatim-inclusion
-    signal; `min_overlap` is the matched fraction of the probe's shingles
-    (1.0 ≈ the probe appears wholly inside the doc).
-
-    Scale shape: both sides map to hashed-shingle sets (O(len) per doc,
-    same kernel as the dedup pipeline), explode to (shingle → id) and
-    equi-join on the 64-bit shingle hash — the join is |matching
-    shingles|-sized, never |corpus × probes|; the probe side is tiny and
-    broadcasts. Returns (doc_id, probe_id, matched_shingles,
-    probe_shingles, overlap) sorted-ready for triage."""
-    c_sh = shingle_table(corpus, id_col, text_col, n).select(
-        F.col("id").alias("c_id"), F.explode("sh").alias("g")
-    )
-    p_tbl = shingle_table(probes, probe_id_col, probe_text_col, n)
-    p_sizes = p_tbl.select(F.col("id").alias("p_id"), F.size("sh").alias("p_n"))
-    p_sh = p_tbl.select(F.col("id").alias("p_id"), F.explode("sh").alias("g"))
-    hits = (
-        c_sh.join(F.broadcast(p_sh), "g")
-        .groupBy("c_id", "p_id")
-        .agg(F.count(F.lit(1)).alias("matched_shingles"))
-    )
-    return (
-        hits.join(F.broadcast(p_sizes), "p_id")
-        .withColumn("overlap", F.round(F.col("matched_shingles") / F.col("p_n"), 4))
-        .where(F.col("overlap") >= min_overlap)
-        .select(
-            F.col("c_id").alias(id_col),
-            F.col("p_id").alias("probe_id"),
-            "matched_shingles",
-            F.col("p_n").alias("probe_shingles"),
-            "overlap",
-        )
-    )
-
-
-def contamination_report_bloom(
-    corpus: DataFrame,
-    probes: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    probe_id_col: str = "doc_id",
-    probe_text_col: str = "text",
-    n: int = 8,
-    min_overlap: float = 0.05,
-    bits_per_item: int = 12,
-    num_probes: int = 6,
-) -> DataFrame:
-    """``contamination_report`` for LARGE probe sets (full benchmark
-    suites: millions of shingles), same output exactly.
-
-    The plain scan broadcasts every probe shingle and joins the whole
-    corpus shingle table against it. Here a Bloom filter pre-filters the
-    corpus side MAP-SIDE first, so the join only ever sees corpus
-    shingles that (probably) occur in some probe:
-
-      build : probe shingles → ``num_probes`` hash positions each →
-              groupBy(bitmap word) → bit_or — a distributed bitmap
-              build, collapsed to ONE row holding a sparse
-              map<word, bits> (set words only; ≤ set-bit count entries,
-              ~``bits_per_item``·n_shingles/64 longs ≈ KBs-MBs).
-      filter: the 1-row map broadcast-crossJoins onto the exploded
-              corpus shingles (the repo's 1-row pattern); membership =
-              AND over k probes of ``element_at(map, word) >> bit & 1``
-              — pure JVM expressions inside codegen, no UDF.
-      verify: survivors take the normal equi-join + per-probe overlap
-              agg — Bloom false positives die here, so the report is
-              byte-identical to ``contamination_report``; the join is
-              shuffle-based (no broadcast of the big probe side).
-
-    ``bits_per_item`` 12 / ``num_probes`` 6 ≈ 0.3 % false-positive rate;
-    at 10 M probe shingles the map is ~18 MB — broadcastable where the
-    raw shingle broadcast would be hundreds of MB."""
-    c_sh = shingle_table(corpus, id_col, text_col, n).select(
-        F.col("id").alias("c_id"), F.explode("sh").alias("g")
-    )
-    p_tbl = shingle_table(probes, probe_id_col, probe_text_col, n)
-    p_sizes = p_tbl.select(F.col("id").alias("p_id"), F.size("sh").alias("p_n"))
-    p_sh = _materialize(
-        p_tbl.select(F.col("id").alias("p_id"), F.explode("sh").alias("g"))
-    )
-
-    n_items = p_sh.select(F.countDistinct("g").alias("n")).first()["n"] or 1
-    m_bits = max(64, int(n_items) * int(bits_per_item))
-
-    # distributed bitmap build: k positions per shingle → word → bit_or
-    pos_legs = [
-        p_sh.select(
-            F.pmod(F.xxhash64(F.col("g"), F.lit(i)), F.lit(m_bits)).alias("p")
-        )
-        for i in range(int(num_probes))
-    ]
-    positions = pos_legs[0]
-    for leg in pos_legs[1:]:
-        positions = positions.union(leg)
-    bloom = (
-        positions.select(
-            (F.col("p") / 64).cast("long").alias("w"),
-            F.expr("shiftleft(1L, int(p % 64))").alias("b"),
-        )
-        .groupBy("w")
-        .agg(F.expr("bit_or(b)").alias("bits"))
-        .agg(F.map_from_entries(F.collect_list(F.struct("w", "bits"))).alias("__bloom"))
-    )
-
-    member = F.lit(True)
-    for i in range(int(num_probes)):
-        p = F.pmod(F.xxhash64(F.col("g"), F.lit(i)), F.lit(m_bits))
-        word = F.coalesce(
-            F.element_at(F.col("__bloom"), (p / 64).cast("long")), F.lit(0)
-        )
-        member = member & (
-            word.bitwiseAND(F.expr(f"shiftleft(1L, int(pmod(xxhash64(g, {i}), {m_bits}) % 64))"))
-            != 0
-        )
-    candidates = (
-        c_sh.crossJoin(F.broadcast(bloom))  # 1-row bitmap, the repo pattern
-        .where(member)
-        .select("c_id", "g")
-    )
-
-    hits = (
-        candidates.join(p_sh, "g")  # exact verify: false positives die here
-        .groupBy("c_id", "p_id")
-        .agg(F.count(F.lit(1)).alias("matched_shingles"))
-    )
-    return (
-        hits.join(F.broadcast(p_sizes), "p_id")
-        .withColumn("overlap", F.round(F.col("matched_shingles") / F.col("p_n"), 4))
-        .where(F.col("overlap") >= min_overlap)
-        .select(
-            F.col("c_id").alias(id_col),
-            F.col("p_id").alias("probe_id"),
-            "matched_shingles",
-            F.col("p_n").alias("probe_shingles"),
-            "overlap",
-        )
-    )

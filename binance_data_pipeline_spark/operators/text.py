@@ -1,5 +1,6 @@
-"""Text analysis operators for the documents table — token counting,
-quality scoring, language-ID heuristic, document fingerprinting.
+"""Text analysis operators for the documents table — tokenizers, token
+counting, quality scoring, language-ID heuristic, document
+fingerprinting, chunking.
 
 All hot-path logic is built-in `pyspark.sql.functions` (JVM codegen,
 higher-order array functions) — map-side operators: no shuffle, fully
@@ -91,6 +92,18 @@ def quality_score(col: Column | str) -> Column:
 BPE_ISH_PATTERN = r"[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]"
 
 
+def _token_array(text_col: str, tokenizer: str) -> Column:
+    """Token array of ``text_col`` under the named tokenizer:
+    ``whitespace`` (``tokens``) or ``bpe_ish`` (``BPE_ISH_PATTERN``)."""
+    if tokenizer == "whitespace":
+        return tokens(text_col)
+    if tokenizer == "bpe_ish":
+        return F.regexp_extract_all(
+            F.col(text_col), F.lit(BPE_ISH_PATTERN), 0
+        )
+    raise ValueError(f"tokenizer must be 'whitespace' or 'bpe_ish', got {tokenizer!r}")
+
+
 def bpe_ish_token_count(col: Column | str) -> Column:
     """Token count under the BPE-ish pre-tokenizer — the unit a training
     pipeline budgets by, vs. whitespace words."""
@@ -151,58 +164,6 @@ def fingerprint_normalized(col: Column | str) -> Column:
 
 
 # --------------------------------------------------------------------------
-# PII redaction (training-data scrubbing) — all map-side regexp_replace,
-# whole-stage codegen; no reference equivalent (LLM-pipeline extension).
-# --------------------------------------------------------------------------
-
-#: redaction patterns, applied in order: pattern → replacement token.
-#: Email before URL (an address inside a mailto: URL should read EMAIL);
-#: IP before phone (dotted quads would otherwise half-match phone shapes).
-PII_PATTERNS: list[tuple[str, str, str]] = [
-    ("email", r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}", "<EMAIL>"),
-    ("url", r"(?:https?://|www\.)[^\s]+", "<URL>"),
-    ("ip", r"\b(?:\d{1,3}\.){3}\d{1,3}\b", "<IP>"),
-    (
-        "phone",
-        r"(?<![\d.])(?:\+?\d{1,3}[ .-]?)?(?:\(\d{2,4}\)[ .-]?)?\d{3,4}[ .-]\d{3,4}(?:[ .-]\d{2,4})?(?![\d.])",
-        "<PHONE>",
-    ),
-]
-
-
-def redact_pii(col: Column | str) -> Column:
-    """Text with emails/URLs/IPs/phone-shaped spans replaced by typed
-    tokens. Pattern-based (the honest ceiling without an NER model);
-    applied in PII_PATTERNS order so earlier redactions shield their
-    spans from later patterns."""
-    c = F.col(col) if isinstance(col, str) else col
-    for _, pat, repl in PII_PATTERNS:
-        c = F.regexp_replace(c, pat, repl)
-    return c
-
-
-def pii_counts(col: Column | str) -> Column:
-    """struct of per-type match counts (email/url/ip/phone) — the audit
-    metric a scrubbing pass reports. Counts follow the same shielding
-    order as redact_pii (each pattern counts on the already-redacted
-    text, so an email inside a URL is counted once, as email)."""
-    c = F.col(col) if isinstance(col, str) else col
-    fields = []
-    for name, pat, repl in PII_PATTERNS:
-        fields.append(F.size(F.regexp_extract_all(c, F.lit(pat), F.lit(0))).alias(name))
-        c = F.regexp_replace(c, pat, repl)
-    return F.struct(*fields)
-
-
-def redact_documents(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Scrubbing pass: text redacted in place + `pii` audit struct
-    appended. One map-side projection, no shuffle."""
-    return df.withColumn("pii", pii_counts(text_col)).withColumn(
-        text_col, redact_pii(text_col)
-    )
-
-
-# --------------------------------------------------------------------------
 # Document chunking (context-window packing prep)
 # --------------------------------------------------------------------------
 
@@ -252,20 +213,3 @@ def chunk_documents(
         F.concat_ws(" ", piece).alias("chunk_text"),
         F.size(piece).cast("long").alias("n_tokens"),
     )
-
-
-def repetition_ratio(col: Column | str, n: int = 3) -> Column:
-    """Intra-doc repetition: 1 − (distinct n-grams / total n-grams) in
-    [0, 1). Boilerplate/looping generations score high; normal prose sits
-    near 0. Map-side expression over the token array (the n-gram slide is
-    one transform; docs shorter than n score 0)."""
-    tk = tokens(col)
-    m = F.size(tk)
-    idx = F.when(m >= n, F.sequence(F.lit(1), m - (n - 1))).otherwise(
-        F.array().cast("array<int>")
-    )
-    grams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(tk, i, n)))
-    total = F.size(grams)
-    return F.when(
-        total > 0, F.round(1.0 - F.size(F.array_distinct(grams)) / total, 4)
-    ).otherwise(F.lit(0.0))

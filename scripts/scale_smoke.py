@@ -5,9 +5,9 @@ Synthesizes an N-times-sf0.1 dataset (default --mult 10: 50k documents,
 half of each copy's docs drift by one token so BOTH the exact- and
 near-dup pipelines get work) and runs the families whose 100 TB posture
 rests on design arguments: MinHash/SimHash near-dup, IVF build + serve,
-dedup_corpus, the minimal build_training_corpus DAG, and snapshot
-commit + stats-pruned copy-on-write MERGE. Wall times and per-phase
-shuffle volumes come from the Spark stages REST API, so the output pins
+dedup_corpus, and snapshot commit + stats-pruned copy-on-write MERGE.
+Wall times and per-phase shuffle volumes come from the Spark stages
+REST API, so the output pins
 (a) the wall-clock scaling RATIO vs the sf0.1 bench numbers and (b)
 that no stage's shuffle grows quadratically or moves driver-side.
 
@@ -378,22 +378,7 @@ def main() -> None:
 
     smoke("dedup_corpus", run_dedup_corpus)
 
-    # 5. minimal training-corpus DAG
-    from binance_data_pipeline_spark.jobs import build_training_corpus
-
-    def run_corpus():
-        rep = build_training_corpus(
-            spark,
-            f"{base}/documents.parquet",
-            f"{base}/corpus_out",
-            min_quality=0.3,
-            dedup_threshold=0.85,
-        )
-        return {k: int(v) for k, v in rep.items() if isinstance(v, (int, float))}
-
-    smoke("build_training_corpus", run_corpus)
-
-    # 6. snapshot commits (mult dirs) + stats-pruned copy-on-write MERGE
+    # 5. snapshot commits (mult dirs) + stats-pruned copy-on-write MERGE
     from binance_data_pipeline_spark.operators.snapshots import (
         commit_snapshot,
         read_snapshot,
@@ -504,7 +489,7 @@ def main() -> None:
 
     smoke("snapshot_merge", run_merge)
 
-    # 7. bloom-indexed table: point lookup + bloom-pruned merge discovery.
+    # 6. bloom-indexed table: point lookup + bloom-pruned merge discovery.
     # Keys are uuid-style (hash-scrambled) so every dir's [min,max] spans
     # the key space and the range prune can do NOTHING — the bloom is the
     # only thing standing between a 3-row merge and a full discovery scan.
@@ -560,7 +545,7 @@ def main() -> None:
 
     smoke("bloom_merge", run_bloom_merge)
 
-    # 8. materialized view: bootstrap over the snapshot table, then a
+    # 7. materialized view: bootstrap over the snapshot table, then a
     # delta refresh after one more commit — steady-state must cost the
     # delta, not the source
     from binance_data_pipeline_spark.operators.mview import (
@@ -590,7 +575,7 @@ def main() -> None:
 
     smoke("mview_delta_refresh", run_mview_delta)
 
-    # 9. Z-order compaction of the multi-dir table: both clustered
+    # 8. Z-order compaction of the multi-dir table: both clustered
     # columns' per-file spans must shrink (the multi-column pruning
     # property), and the rewrite is the only heavy phase.
     def run_zorder_compact():

@@ -1,65 +1,11 @@
-"""The `corpus` CLI subcommand drives jobs.build_training_corpus end to
-end and prints the per-stage counts."""
+"""The CLI subcommands driven end to end through ``__main__.main``:
+``index`` builds a serving root, ``search`` queries it (hybrid,
+``--rerank`` and ``--rm3``), ``validate`` audits it, and ``audit``
+plans the whole query catalog."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from binance_data_pipeline_spark.__main__ import main
-
-
-def test_cli_corpus_build(spark, tmp_path, capsys):
-    src = str(tmp_path / "docs.parquet")
-    rows = [
-        (1, "the quick brown fox jumps over the lazy dog by the river", "en"),
-        (2, "the quick brown fox jumps over the lazy dog by the river", "en"),  # dup
-        (3, "completely different text about mountains and weather patterns", "en"),
-    ]
-    spark.createDataFrame(rows, "doc_id long, text string, lang string").write.parquet(src)
-    out = str(tmp_path / "corpus")
-
-    rc = main([
-        "corpus", "--docs", src, "--out", out,
-        "--min-quality", "0.0", "--dedup-threshold", "0.9",
-    ])
-    assert rc == 0
-    printed = capsys.readouterr().out
-    assert "input=3" in printed and "exported=2" in printed
-    assert spark.read.parquet(f"{out}/corpus.parquet").count() == 2
-    assert spark.read.parquet(f"{out}/mapping.parquet").count() >= 1
-
-
-def test_config_driven_corpus_build(spark, tmp_path):
-    from binance_data_pipeline_spark.jobs import build_training_corpus_from_config
-
-    src = str(tmp_path / "docs.parquet")
-    spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta", "en"),
-         (2, "alpha beta gamma delta epsilon zeta", "en"),
-         (3, "totally different words about other things", "en")],
-        "doc_id long, text string, lang string",
-    ).write.parquet(src)
-    out = str(tmp_path / "corpus")
-    cfg = tmp_path / "corpus.yaml"
-    cfg.write_text(
-        f"docs_path: {src}\nout_path: {out}\nmin_quality: 0.0\ndedup_threshold: 0.9\n"
-    )
-    counts = build_training_corpus_from_config(spark, str(cfg))
-    assert counts["input"] == 3 and counts["exported"] == 2
-
-    # typo'd keys fail loudly before any Spark work
-    bad = tmp_path / "bad.yaml"
-    bad.write_text(f"docs_path: {src}\nout_path: {out}\ndedup_treshold: 0.9\n")
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="dedup_treshold"):
-        build_training_corpus_from_config(spark, str(bad))
-    missing = tmp_path / "missing.yaml"
-    missing.write_text("min_quality: 0.5\n")
-    with _pytest.raises(ValueError, match="docs_path"):
-        build_training_corpus_from_config(spark, str(missing))
 
 
 def test_cli_index_and_search_roundtrip(spark, tmp_path, capsys):
@@ -135,31 +81,8 @@ def test_cli_search_rm3(spark, tmp_path, capsys):
 def test_cli_audit_exits_zero_on_clean_catalog(spark, capsys):
     """The audit subcommand plans every catalog query and exits 0 when
     no non-exempt scale error is found (the CI gate as a command)."""
-    from binance_data_pipeline_spark.__main__ import main
-
     rc = main(["audit", "--sf-dir", "/root/testdata/sf0.001"])
     printed = capsys.readouterr().out
     assert rc == 0
     assert "audited=50 errors=0" in printed
     assert "embed_knn_brute\tEXEMPT" in printed
-
-
-def test_cli_corpus_snapshot_publish(spark, tmp_path, capsys):
-    from binance_data_pipeline_spark.operators.snapshots import read_snapshot
-
-    src = str(tmp_path / "docs.parquet")
-    rows = [
-        (1, "the quick brown fox jumps over the lazy dog by the river", "en"),
-        (2, "completely different text about mountains and weather patterns", "en"),
-    ]
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string"
-    ).write.parquet(src)
-    out = str(tmp_path / "corpus")
-    rc = main([
-        "corpus", "--docs", src, "--out", out,
-        "--min-quality", "0.0", "--dedup-threshold", "0.9", "--snapshot",
-    ])
-    assert rc == 0
-    assert "exported=2" in capsys.readouterr().out
-    assert read_snapshot(spark, f"{out}/corpus").count() == 2

@@ -26,7 +26,7 @@ def test_every_operator_module_imports_and_is_indexed():
     import binance_data_pipeline_spark.operators as ops
 
     mods = [m.name for m in pkgutil.iter_modules(ops.__path__)]
-    assert len(mods) == 34
+    assert len(mods) == 26
     for m in mods:
         importlib.import_module(f"binance_data_pipeline_spark.operators.{m}")
     missing = [m for m in mods if m not in (ops.__doc__ or "")]

@@ -220,27 +220,3 @@ def test_chunking_reconstruction_property(spark, texts, chunk_tokens, overlap):
         for _, t, _ in cs[1:]:
             toks += t.split()[overlap:]
         assert toks == text.lower().split()
-
-
-@settings(max_examples=5, deadline=None)
-@given(
-    st.lists(
-        st.lists(st.text(alphabet="abc @.x-", min_size=0, max_size=12), min_size=0, max_size=20)
-        .map(" ".join),
-        min_size=1,
-        max_size=20,
-    )
-)
-def test_redaction_never_throws_and_is_idempotent(spark, texts):
-    """Arbitrary junk text: the redaction pass must not raise, and
-    redacting twice equals redacting once (replacement tokens contain no
-    redactable spans)."""
-    from binance_data_pipeline_spark.operators.text import redact_pii
-
-    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
-    once = df.select("doc_id", redact_pii("text").alias("t"))
-    twice = once.select("doc_id", redact_pii("t").alias("t"))
-    a = {r["doc_id"]: r["t"] for r in once.collect()}
-    b = {r["doc_id"]: r["t"] for r in twice.collect()}
-    assert a == b
-
