@@ -3,7 +3,7 @@
 cleaning         bronze→staging clean/cast (P1-P6)
 incremental      high-watermark incremental materialization (P8/ST5)
 dedup            MinHash-LSH / SimHash / n-gram-Jaccard dedup + clustering
-semdedup         semantic (embedding-cell) near-duplicate pairs
+semdedup         semantic (embedding-cell) dedup
 similarity       embedding similarity search (brute-force + RP-LSH ANN)
 embedder         text → embedding generation (hash encoder default, model-injectable)
 clustering       topic discovery: k-means clusters + c-TF-IDF cluster keywords

@@ -1,30 +1,36 @@
-"""Semantic near-duplicate pairs — embedding-cluster-bounded cosine
-pairing (the candidate stage of the SemDeDup recipe: Abbas et al. 2023,
-arXiv:2303.09540).
+"""Semantic deduplication — embedding-cluster-bounded cosine pruning
+(the SemDeDup recipe: Abbas et al. 2023, arXiv:2303.09540).
 
 MinHash/SimHash (operators/dedup.py) catch near-verbatim text; semantic
 dups — paraphrases, translations, template rewrites — share an embedding
 neighborhood but few shingles. The published recipe bounds the O(n²)
 cosine comparison by k-means clustering: pairs are only scored INSIDE a
-cluster.
+cluster, and within each connected dup-group one representative is kept
+(canonically the member FARTHEST from its cluster centroid — keeping the
+least prototypical member preserves diversity).
 
 Spark shape, stage by stage:
 
   1. centroids: deterministic sampled k-means (reused from
      operators/ivf.py — same trainer the ANN index uses);
-  2. assignment (``assign_clusters``): one broadcast-centroid map pass
-     per row (no shuffle), keeping the centroid cosine;
-  3. candidate pairs (``semantic_pairs``): self-join keyed on cell_id —
-     the shuffle is corpus-sized, the join fan-out is bounded by cell
-     width, never corpus width. Oversized cells (skew: near-constant
-     embeddings, zero vectors) are SUBDIVIDED by id-hash into
-     ≤``max_cluster_size`` sub-cells rather than dropped — pairs across
-     sub-cell boundaries are the (documented) recall cost of the skew
-     guard.
+  2. assignment: one broadcast-centroid map pass per row (no shuffle),
+     keeping the centroid cosine for the keeper policy;
+  3. candidate pairs: self-join keyed on cell_id — the shuffle is
+     corpus-sized, the join fan-out is bounded by cell width, never
+     corpus width. Oversized cells (skew: near-constant embeddings,
+     zero vectors) are SUBDIVIDED by id-hash into ≤``max_cluster_size``
+     sub-cells rather than dropped — pairs across sub-cell boundaries
+     are the (documented) recall cost of the skew guard;
+  4. dup groups: connected components via the shared
+     ``dedup.cluster_pairs`` (pointer-jumping min-label, O(log d)
+     rounds);
+  5. keeper: per group, argmin centroid-cosine (ties → smallest id),
+     or plain smallest-id for a cheaper fully-order-free variant.
 
 At 100 TB: no stage touches more than one corpus-sized shuffle; the
-quadratic term is Σ w_i² over capped cell widths. Same posture as the
-MinHash path — bucketed, not all-pairs.
+quadratic term is Σ w_i² over capped cell widths; components shuffle
+edges, not rows. Same posture as the MinHash path — bucketed, not
+all-pairs.
 """
 
 from __future__ import annotations
@@ -32,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import cluster_pairs
 from .ivf import _centroid_array_col, train_centroids
 from .similarity import _spread, cosine, pair_cosine_udf
 
@@ -103,4 +110,56 @@ def semantic_pairs(
         .withColumn("sim", F.round(pair_cosine_udf()(F.col("va"), F.col("vb")), 4))
         .where(F.col("sim") >= threshold)
         .select("id_a", "id_b", "sim")
+    )
+
+
+def semantic_dedup(
+    corpus: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    k: int = 16,
+    threshold: float = 0.9,
+    keeper: str = "centroid_far",
+    max_cluster_size: int | None = None,
+    iterations: int = 2,
+    sample_target: int | None = 4096,
+    centroids: list[tuple[int, list[float]]] | None = None,
+) -> DataFrame:
+    """Per-document keeper decision table:
+    (id, cell_id, centroid_sim, group_id, keep).
+
+    ``keeper="centroid_far"`` keeps each dup-group's member least similar
+    to its cluster centroid (SemDeDup's diversity-preserving choice, ties
+    broken by smallest id); ``keeper="min_id"`` keeps the smallest id.
+    Documents in no dup group keep themselves (group_id = own id)."""
+    if keeper not in ("centroid_far", "min_id"):
+        raise ValueError(f"unknown keeper policy {keeper!r}")
+
+    assigned = assign_clusters(
+        corpus, id_col, vec_col, k, iterations, sample_target, centroids
+    )
+    pairs = semantic_pairs(assigned, threshold, max_cluster_size)
+    groups = cluster_pairs(pairs)  # (id, cluster_id) for ids in ≥1 pair
+
+    docs = assigned.select("id", "cell_id", "centroid_sim")
+    labeled = docs.join(groups.withColumnRenamed("cluster_id", "group_id"), "id", "left")
+    labeled = labeled.withColumn("group_id", F.coalesce(F.col("group_id"), F.col("id")))
+
+    if keeper == "min_id":
+        keepers = labeled.groupBy("group_id").agg(F.min("id").alias("keeper_id"))
+    else:
+        keepers = labeled.groupBy("group_id").agg(
+            F.min_by(
+                F.col("id"), F.struct(F.col("centroid_sim"), F.col("id"))
+            ).alias("keeper_id")
+        )
+    return (
+        labeled.join(keepers, "group_id")
+        .select(
+            "id",
+            "cell_id",
+            "centroid_sim",
+            "group_id",
+            (F.col("id") == F.col("keeper_id")).alias("keep"),
+        )
     )

@@ -5,7 +5,8 @@ Synthesizes an N-times-sf0.1 dataset (default --mult 10: 50k documents,
 half of each copy's docs drift by one token so BOTH the exact- and
 near-dup pipelines get work) and runs the families whose 100 TB posture
 rests on design arguments: MinHash/SimHash near-dup, IVF build + serve,
-dedup_corpus, and snapshot commit + stats-pruned copy-on-write MERGE.
+dedup_corpus, semantic_dedup, and snapshot commit + stats-pruned
+copy-on-write MERGE.
 Wall times and per-phase shuffle volumes come from the Spark stages
 REST API, so the output pins
 (a) the wall-clock scaling RATIO vs the sf0.1 bench numbers and (b)
@@ -377,6 +378,17 @@ def main() -> None:
         return {"kept": kept.count(), "mapping": mapping.count()}
 
     smoke("dedup_corpus", run_dedup_corpus)
+
+    # 4b. semantic_dedup (k-means cells + within-cell pairs + connected
+    # components + per-group keeper): the perturbed embedding copies are
+    # the dup groups
+    from binance_data_pipeline_spark.operators.semdedup import semantic_dedup
+
+    def run_semantic_dedup():
+        decision = semantic_dedup(emb, k=64, threshold=0.9)
+        return {"kept": decision.where(F.col("keep")).count()}
+
+    smoke("semantic_dedup", run_semantic_dedup)
 
     # 5. snapshot commits (mult dirs) + stats-pruned copy-on-write MERGE
     from binance_data_pipeline_spark.operators.snapshots import (
